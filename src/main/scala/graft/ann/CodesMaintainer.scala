@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Scheduled maintenance for a STORED compressed-codes index (SQ, BQ,
   * PQ, IVF-SQ, IVF-PQ) under streaming upserts/deletes — the
-  * codes-table generalization of [[graft.ann.lsh.LshMaintainer]],
-  * sharing its LSM machinery (seq-stamped logs, persistent sequence,
-  * compaction fence, watermark accounting) through
-  * [[graft.ann.LsmStore]]. Every compressed family persists one codes
-  * table at `$path/codes` plus small frozen-model dirs; the family
-  * differences are captured by two constructor closures:
+  * codes-table generalization of [[graft.ann.lsh.LshMaintainer]]. The
+  * LSM protocol, kill rule, batch step and cadence live in
+  * [[LsmStore]] and [[VectorLsmStore]]. Every compressed family
+  * persists one codes table at `$path/codes` plus small frozen-model
+  * dirs; the family differences are captured by two constructor
+  * closures:
   *
   *   - `encode`: the FROZEN-model transform taking (vec_id, embedding)
   *     arrivals to code rows — each family's `model.transform` /
@@ -23,74 +23,44 @@ import org.apache.spark.sql.functions._
   *     layout before every partitioned write so each partition dir
   *     stays one file per write, not one per upstream task.
   *
-  * LSM legs (one shared implementation — [[graft.ann.LsmStore]] — so
-  * the two maintainers cannot drift): appends land seq-stamped in
-  * `codes_delta`; deletes append to the `tombstones` log; a tombstone
-  * kills rows of that id from STRICTLY EARLIER batches (base rows are
-  * seq 0), so same-batch delete+arrival is an upsert; [[liveCodes]]
-  * assembles the serving view (base ∪ unfenced delta, anti-join the
-  * broadcast log) — feed it to the family's index constructor
-  * (`new SqIndex(model, m.liveCodes)`); every `compactEvery` batches
-  * [[compactNow]] folds everything into `$path/codes`, stamps the
-  * fence, drops the logs. The occupancy watermark warns when at-rest
-  * growth outruns the fit-time base — for the frozen models the
-  * inflation is per-family drift (SQ bounds saturate, PQ codebooks go
-  * stale, IVF cells crowd), so the warning's action is refit/retrain,
-  * not compact harder; compaction keeps the fit reference.
-  *
-  * Driver-side state is one Int; everything heavy is DataFrame jobs —
-  * safe as a `foreachBatch` body.
+  * Arrivals land seq-stamped in `codes_delta`; [[liveCodes]] is the
+  * serving view — feed it to the family's index constructor
+  * (`new SqIndex(model, m.liveCodes)`); [[compactNow]] folds it into
+  * `$path/codes`. The occupancy watermark counts the codes table: for
+  * the frozen models the inflation is per-family drift (SQ bounds
+  * saturate, PQ codebooks go stale, IVF cells crowd), so the warning's
+  * action is refit/retrain ([[refitAndSwap]]), not compact harder;
+  * compaction keeps the fit reference.
   */
 final class CodesMaintainer(
     spark: SparkSession,
     path: String,
     encode: DataFrame => DataFrame,
-    compactEvery: Int = LsmStore.DefaultCompactEvery,
+    protected val compactEvery: Int = LsmStore.DefaultCompactEvery,
     partitionCols: Seq[String] = Nil,
-    occupancyWatermark: Double = 0.0,
-    driftCheck: Option[DriftCheck] = None,
-    refitAfterBreaches: Int = 3) extends LsmStore {
-
-  require(compactEvery > 0, s"compactEvery $compactEvery must be positive")
-  require(refitAfterBreaches > 0,
-    s"refitAfterBreaches $refitAfterBreaches must be positive")
+    protected val occupancyWatermark: Double = 0.0,
+    protected val driftCheck: Option[DriftCheck] = None,
+    protected val refitAfterBreaches: Int = 3) extends VectorLsmStore {
 
   // the frozen-model transform future batches encode through —
   // replaced atomically by [[refitAndSwap]]
   private var encodeFn: DataFrame => DataFrame = encode
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   override protected def lsmSpark: SparkSession = spark
   override protected def lsmPath: String = path
   override protected def lsmLogDirs: Seq[String] =
     Seq("codes_delta", "tombstones", "batch_commits")
-
-  private def base: DataFrame = spark.read.parquet(s"$path/codes")
-
-  private var batches = recoverSeq()
-
-  /** (max shift in fit-MADs, max spread fold) of the most recent
-    * batch's arrivals vs the fit stats — None until a batch with both
-    * a configured [[DriftCheck]] and arrivals has run. Exposed so
-    * callers (and specs) can act on the measurement, not just the log
-    * line. */
-  @volatile var lastDrift: Option[(Double, Double)] = None
-
-  /** Batches applied over the store's lifetime (persistent: recovered
-    * from the logs and the compaction fence, so a reconstructed
-    * maintainer agrees with the live one). */
-  def batchesSeen: Int = batches
-
-  /** True when the NEXT [[onBatch]] call triggers compaction. The
-    * cadence is measured from the LAST compaction (the fence), not by
-    * seq divisibility — a failed attempt burns its seq, and a burned
-    * multiple must defer the fold by one batch, not a whole cycle. */
-  def compactionDue: Boolean = (batches + 1) - readFence() >= compactEvery
-
-  private def tombstones: DataFrame =
-    visibleFilter(readOr("tombstones", emptySeqIds))
-      .select("vec_id", "seq")
+  override protected def countedTable: String = "codes"
+  override protected def storeLabel: String = "stored codes table"
+  override protected def driftAdvice: String =
+    "The frozen model is quantizing against stale geometry (SQ bounds " +
+      "saturate, PQ codebooks misassign, IVF cells crowd) — refit " +
+      "(refitAndSwap); compaction never re-fits."
+  override protected def occupancyAdvice: String =
+    "the model's drift envelope (SQ bound saturation / PQ codebook " +
+      "staleness / IVF cell crowding — see each family's append " +
+      "scaladoc) has likely been outgrown. Refit/retrain; compaction " +
+      "drops tombstoned rows but never re-fits the model."
 
   /** Write `df` to `$path/$sub`, repartitioned on the family layout so
     * a partitioned write emits one file per partition dir per write
@@ -104,81 +74,22 @@ final class CodesMaintainer(
       .parquet(s"$path/$sub")
   }
 
-  /** The serving view: persisted base + unfenced delta log, minus
-    * tombstoned rows (t.seq > row.seq; base rows are seq 0). Pass to
-    * the family's index constructor. */
-  def liveCodes: DataFrame = {
-    val all = base.withColumn("seq", lit(0))
-      .unionByName(visibleFilter(readOr("codes_delta",
-        base.limit(0).withColumn("seq", lit(0)))))
-    val t = broadcast(tombstones)
-    all.join(t, all("vec_id") === t("vec_id") && t("seq") > all("seq"),
-        "left_anti")
-      .drop("seq")
-  }
+  /** The serving view ([[LsmStore.liveViews]] over the codes table).
+    * Pass to the family's index constructor. */
+  def liveCodes: DataFrame =
+    liveViews()(spark.read.parquet(s"$path/codes") -> "codes_delta").head
 
   /** One maintenance step. `arrivals` rows are (vec_id, embedding);
     * `deletes` rows are (vec_id). An id in both is an upsert. */
   def onBatch(arrivals: Option[DataFrame],
-              deletes: Option[DataFrame]): Unit = {
-    val seq = batches + 1
-    // the seq is BURNED up front: a failed attempt's partial log rows
-    // stay at a seq no retry reuses, so markBatchCommitted can never
-    // bless a failed attempt's orphans (LsmStore doc)
-    batches = seq
-    // counts snapshot BEFORE this batch's delta lands (counting after
-    // the write would double-count the batch)
-    if (occupancyWatermark > 0) ensureCounts(
-      base.count(), readOr("codes_delta", emptySeqIds).count())
-    arrivals.foreach { a =>
-      writeCodes(encodeFn(a).withColumn("seq", lit(seq)),
-        "codes_delta", "append")
+              deletes: Option[DataFrame]): Unit =
+    runBatch(deletes) { seq =>
+      arrivals.foreach { a =>
+        writeCodes(encodeFn(a).withColumn("seq", lit(seq)),
+          "codes_delta", "append")
+      }
+      arrivals
     }
-    deletes.foreach { d =>
-      d.select(col("vec_id"), lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/tombstones")
-    }
-    // the batch becomes visible ATOMICALLY here: a crash above leaves
-    // a partial batch that visibleFilter ignores (LsmStore doc)
-    markBatchCommitted(seq)
-    if (occupancyWatermark > 0)
-      arrivals.foreach(a => atRestRows += a.count())
-    // Distribution watermark (the cause the occupancy warning can only
-    // name, measured): grade this batch's embeddings against the
-    // persisted fit stats — one aggregate over the BATCH, the corpus is
-    // never re-read. Mind DriftCheck's small-batch noise caveat.
-    // Reassigned only when this batch HAS arrivals: lastDrift is "the
-    // most recent batch's ARRIVALS" by contract, so a deletes-only
-    // batch must not clobber the last measured drift with None.
-    val batchDrift = for (dc <- driftCheck; a <- arrivals) yield dc.maxDrift(a)
-    batchDrift.foreach(d => lastDrift = Some(d))
-    batchDrift.foreach { case (shift, fold) =>
-      val dc = driftCheck.get
-      val breached = shift > dc.shiftWatermark || fold > dc.ratioWatermark
-      // one clean batch resets the run: refitDue means SUSTAINED drift
-      // (a new distribution the model must re-fit), not one noisy
-      // batch — the DriftCheck small-batch noise caveat as scheduling
-      val run = recordDriftBreach(breached)
-      if (breached) log.warn(
-        f"stored codes table '$path' batch $seq arrivals have drifted " +
-          f"from the fit distribution: max location shift $shift%.2f " +
-          f"fit-MADs (watermark ${dc.shiftWatermark}), max spread fold " +
-          f"$fold%.2f (watermark ${dc.ratioWatermark}); consecutive " +
-          s"drifted batches: $run/$refitAfterBreaches before refitDue. " +
-          "The frozen model is quantizing against stale geometry (SQ " +
-          "bounds saturate, PQ codebooks misassign, IVF cells crowd) — " +
-          "refit (refitAndSwap); compaction never re-fits.")
-    }
-    if (batches - readFence() >= compactEvery) compactNow()
-    else if (pastWatermark(occupancyWatermark)) log.warn(
-      s"stored codes table '$path' holds $atRestRows rows at rest " +
-        f"($atRestGrowth%.1fx the $fitRows-row base its frozen model " +
-        s"was fit for) after $batches batches: the model's drift " +
-        "envelope (SQ bound saturation / PQ codebook staleness / IVF " +
-        "cell crowding — see each family's append scaladoc) has likely " +
-        "been outgrown. Refit/retrain; compaction drops tombstoned " +
-        "rows but never re-fits the model.")
-  }
 
   /** Fold the logs into the base codes table (family layout preserved
     * via `partitionCols`): the folded base lands in the compaction
@@ -194,20 +105,9 @@ final class CodesMaintainer(
     val folded = live.count()
     onCompacted(folded)
     if (log.isInfoEnabled) log.info(
-      s"stored codes table '$path' compacted after $batches batches " +
+      s"$storeLabel '$path' compacted after $batches batches " +
         s"($folded live rows)")
   }
-
-  /** True when the drift watermark has been breached by
-    * `refitAfterBreaches` CONSECUTIVE measured batches — the refit
-    * twin of [[compactionDue]] (and of
-    * [[graft.retrieval.PostingsStore.compactionDue]]'s cadence style):
-    * persistent across restarts via the `_drift_breaches` marker, so
-    * an operator loop can poll it and call [[refitAndSwap]] exactly
-    * when the drift warnings stop being noise and start being a new
-    * distribution. */
-  def refitDue: Boolean =
-    driftCheck.nonEmpty && driftBreaches >= refitAfterBreaches
 
   /** The drift warning's prescribed action, as code — the
     * [[graft.ann.lsh.LshMaintainer.refitNow]] of the codes stores:
@@ -263,7 +163,7 @@ final class CodesMaintainer(
     val n = live.count()
     onRefit(n)
     if (log.isInfoEnabled) log.info(
-      s"stored codes table '$path' refit on $n live vectors after " +
+      s"$storeLabel '$path' refit on $n live vectors after " +
         s"$batches batches (model swapped; drift-breach run reset)")
   }
 }

@@ -4,15 +4,19 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared LSM plumbing for maintained index stores —
-  * [[graft.ann.lsh.LshMaintainer]] (bucket layout) and
-  * [[CodesMaintainer]] (compressed code tables). One implementation of
-  * the semantics both maintainers' suites pin, so they cannot drift:
+/** The LSM store every maintained index mixes in:
+  * [[graft.ann.lsh.LshMaintainer]], [[graft.ann.lsh.LabeledLshMaintainer]]
+  * and [[CodesMaintainer]] (through [[VectorLsmStore]]),
+  * [[graft.retrieval.PostingsStore]], [[graft.text.DedupGate]] and
+  * [[GraphMaintainer]]. It is the one place that knows the LSM
+  * decisions, so the stores cannot drift apart:
   *
-  *   - **seq-stamped logs**: delta appends and tombstones carry the
-  *     batch sequence; a tombstone kills rows of its id from STRICTLY
-  *     EARLIER batches (base rows are seq 0), making same-batch
-  *     delete+arrival an upsert;
+  *   - **seq-stamped logs and the kill rule** ([[liveViews]]): delta
+  *     appends and tombstones carry the batch sequence; base rows sit at
+  *     seq 0 under the visible deltas, and a tombstone kills rows of its
+  *     key from STRICTLY EARLIER seqs, making same-batch delete+arrival
+  *     an upsert. Every store except GraphMaintainer (whose arrivals
+  *     revive ids) builds its serving view through [[liveViews]];
   *   - **persistent sequence**: recovered at construction as
   *     max(compaction fence, max seq across the logs) — a restarted
   *     counter would let an old tombstone kill a new arrival (old
@@ -23,7 +27,8 @@ import org.apache.spark.sql.functions._
   *     [[visibleFilter]] drops them from every view — so a crash between
   *     the fence write and the log deletion re-serves correctly (the
   *     surviving rows are fenced off; the next compaction deletes
-  *     them);
+  *     them). The cadence is measured from the fence
+  *     ([[compactionDueAt]]);
   *   - **crash-safe compaction commit** ([[commitCompaction]] /
   *     [[recoverCompaction]]): the folded base is written to TEMP
   *     subdirs first, then a pre-commit marker (`_lsm_precommit`,
@@ -35,11 +40,10 @@ import org.apache.spark.sql.functions._
   *     (orphan temp dirs from a pre-marker crash are inert and
   *     overwritten by the next compaction); a marker means every
   *     remaining step is deterministic, so the reopen FINISHES the
-  *     commit instead of serving duplicates — the round-11 "residual
-  *     crash window" is now self-healing, not a documented manual
-  *     dedup. Every step is idempotent (rename skipped when the temp
-  *     is gone, fence monotone, log/marker deletes no-ops), so a crash
-  *     during recovery itself re-heals on the next open;
+  *     commit instead of serving duplicates. Every step is idempotent
+  *     (rename skipped when the temp is gone, fence monotone,
+  *     log/marker deletes no-ops), so a crash during recovery itself
+  *     re-heals on the next open;
   *   - **occupancy-watermark accounting**: `fitRows` is the base
   *     snapshot the frozen model was fit against (counted once,
   *     lazily), `atRestRows` adds delta rows INCLUDING tombstoned ones
@@ -48,6 +52,10 @@ import org.apache.spark.sql.functions._
   *     the original fit, so growth-since-fit keeps accumulating and
   *     repeated post-compaction warnings correctly say "refit"; only a
   *     refit (which retrains) resets the reference.
+  *
+  * The batch step, the drift watermark and the compaction/refit
+  * cadence of the three frozen-model vector stores live in
+  * [[VectorLsmStore]].
   */
 private[graft] trait LsmStore {
 
@@ -65,8 +73,10 @@ private[graft] trait LsmStore {
     if (lsmFs.exists(new Path(p))) lsmSpark.read.parquet(p) else empty
   }
 
-  protected final def emptySeqIds: DataFrame =
-    lsmSpark.range(0).select(col("id").as("vec_id"), lit(0).as("seq"))
+  protected final def emptySeqIds: DataFrame = emptySeqKeys("vec_id")
+
+  private def emptySeqKeys(key: String): DataFrame =
+    lsmSpark.range(0).select(col("id").as(key), lit(0).as("seq"))
 
   // ---- compaction fence ----
 
@@ -174,6 +184,55 @@ private[graft] trait LsmStore {
       .where(col("seq") === 0 || col("c_ok"))
       .drop("c_seq", "c_ok")
   }
+
+  // ---- the live view ----
+
+  /** The visible tombstone log as (`key`, seq). */
+  protected final def visibleTombstones(key: String): DataFrame =
+    visibleFilter(readOr("tombstones", emptySeqKeys(key))).select(key, "seq")
+
+  /** `base` (carrying `seq`) ∪ the visible rows of the delta log at
+    * `deltaSub`, projected to the base's columns. */
+  protected final def withVisibleDelta(base: DataFrame,
+                                       deltaSub: String): DataFrame = {
+    val cols = base.columns.toSeq.map(col)
+    base.unionByName(
+      visibleFilter(readOr(deltaSub, base.limit(0)).select(cols: _*)))
+  }
+
+  /** The kill rule as a join: a row of `rows` is killed by a tombstone
+    * of `tombs` on the same `key` at a STRICTLY later seq. `how` is
+    * "left_anti" (the survivors) or "left_semi" (the killed rows). */
+  protected final def killJoin(rows: DataFrame, tombs: DataFrame,
+                               key: String, how: String): DataFrame =
+    rows.join(tombs,
+      rows(key) === tombs(key) && tombs("seq") > rows("seq"), how)
+
+  /** The serving views: for each (base, delta log) leg, base rows at
+    * seq 0 ∪ the visible delta, minus the rows a visible tombstone on
+    * `key` kills — one tombstone read (broadcast) shared by every leg.
+    * With `keepSeq` the base carries its own `seq` column and the
+    * views keep it (stores whose rows keep their seq through
+    * compaction); otherwise `seq` is dropped. */
+  protected final def liveViews(key: String = "vec_id",
+                                keepSeq: Boolean = false)(
+      legs: (DataFrame, String)*): Seq[DataFrame] = {
+    val t = broadcast(visibleTombstones(key))
+    legs.map { case (base, deltaSub) =>
+      val all = withVisibleDelta(
+        if (keepSeq) base else base.withColumn("seq", lit(0)), deltaSub)
+      val live = killJoin(all, t, key, "left_anti")
+      if (keepSeq) live else live.drop("seq")
+    }
+  }
+
+  /** The compaction cadence: true when a store whose latest seq is
+    * `seq` has gone `every` batches since the LAST compaction (the
+    * fence). Measured from the fence, not by seq divisibility — a
+    * failed attempt burns its seq, and a burned multiple must defer
+    * the fold by one batch, not a whole cycle. */
+  protected final def compactionDueAt(seq: Int, every: Int): Boolean =
+    seq - readFence() >= every
 
   // ---- consecutive-drift-breach run (the refitDue signal) ----
 
@@ -437,6 +496,137 @@ private[graft] trait LsmStore {
   protected final def onRefit(n: Long): Unit = {
     fitRows = n
     atRestRows = n
+  }
+}
+
+/** The batch step and cadence shared by the frozen-model vector
+  * stores — [[graft.ann.lsh.LshMaintainer]],
+  * [[graft.ann.lsh.LabeledLshMaintainer]] and [[CodesMaintainer]].
+  * [[runBatch]] is their one `onBatch` template: burn the seq, take the
+  * occupancy snapshot, let the family write its arrivals, append the
+  * tombstones, commit the batch, grade drift, then compact or warn. A
+  * family supplies only what differs: how its arrivals are written and
+  * which frame is counted and drift-checked, the table the occupancy
+  * watermark counts, its log wording, and what [[compactNow]] rewrites.
+  * PostingsStore and DedupGate share the cadence test
+  * ([[LsmStore.compactionDueAt]]) but not this trait: they have no
+  * drift check or refit, and its public members would be new API on
+  * them.
+  *
+  * Driver-side state is one Int (the batch counter); everything heavy
+  * is DataFrame jobs, so a maintainer is safe as a `foreachBatch` body.
+  */
+private[graft] trait VectorLsmStore extends LsmStore {
+
+  protected def compactEvery: Int
+  protected def occupancyWatermark: Double
+  protected def driftCheck: Option[DriftCheck]
+  protected def refitAfterBreaches: Int
+  /** The table the occupancy watermark counts: the base at
+    * `$lsmPath/<table>`, its delta log at `<table>_delta`. */
+  protected def countedTable: String
+  /** How log lines name the store, e.g. "stored LSH index". */
+  protected def storeLabel: String
+  /** The remedy the drift warning prescribes. */
+  protected def driftAdvice: String
+  /** What the occupancy warning says has inflated, and the remedy. */
+  protected def occupancyAdvice: String
+
+  /** Fold the logs into the base through [[commitCompaction]]. */
+  def compactNow(): Unit
+
+  require(compactEvery > 0, s"compactEvery $compactEvery must be positive")
+  require(refitAfterBreaches > 0,
+    s"refitAfterBreaches $refitAfterBreaches must be positive")
+
+  protected final val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The LSM sequence is PERSISTENT state, recovered at construction
+    * ([[recoverSeq]]). */
+  protected var batches: Int = recoverSeq()
+
+  /** (max shift in fit-MADs, max spread fold) of the most recent
+    * batch's arrivals vs the fit stats — None until a batch with both
+    * a configured [[DriftCheck]] and arrivals has run. Exposed so
+    * callers (and specs) can act on the measurement, not just the log
+    * line. */
+  @volatile var lastDrift: Option[(Double, Double)] = None
+
+  /** Batches applied over the store's lifetime (persistent: recovered
+    * from the logs and the compaction fence, so a reconstructed
+    * maintainer agrees with the live one). */
+  def batchesSeen: Int = batches
+
+  /** True when the NEXT `onBatch` call triggers compaction
+    * ([[compactionDueAt]]). */
+  def compactionDue: Boolean = compactionDueAt(batches + 1, compactEvery)
+
+  /** True when the drift watermark has been breached by
+    * `refitAfterBreaches` CONSECUTIVE measured batches — the refit
+    * twin of [[compactionDue]], persistent across restarts via the
+    * `_drift_breaches` marker ([[driftBreaches]]), so an operator loop
+    * can poll it and refit exactly when the drift warnings stop being
+    * noise and start being a new distribution. The refit resets the
+    * run. */
+  def refitDue: Boolean =
+    driftCheck.nonEmpty && driftBreaches >= refitAfterBreaches
+
+  /** One maintenance step. `writeArrivals(seq)` appends the family's
+    * seq-stamped arrival rows and returns the frame the occupancy
+    * watermark counts and the drift check grades (None without
+    * arrivals); `deletes` rows are (vec_id). An id in both is an
+    * upsert. */
+  protected final def runBatch(deletes: Option[DataFrame])(
+      writeArrivals: Int => Option[DataFrame]): Unit = {
+    val seq = batches + 1
+    // the seq is BURNED up front: a failed attempt's partial log rows
+    // stay at a seq no retry reuses, so markBatchCommitted can never
+    // bless a failed attempt's orphans
+    batches = seq
+    // counts snapshot BEFORE this batch's delta lands (counting after
+    // the write would double-count the batch); the base is counted
+    // from its parquet directly — loading the model just to count
+    // rows would collect a forest's node table to the driver
+    if (occupancyWatermark > 0) ensureCounts(
+      lsmSpark.read.parquet(s"$lsmPath/$countedTable").count(),
+      readOr(s"${countedTable}_delta", emptySeqIds).count())
+    val counted = writeArrivals(seq)
+    deletes.foreach { d =>
+      d.select(col("vec_id"), lit(seq).as("seq"))
+        .write.mode("append").parquet(s"$lsmPath/tombstones")
+    }
+    // the batch becomes visible ATOMICALLY here: a crash above leaves
+    // a partial batch that visibleFilter ignores
+    markBatchCommitted(seq)
+    if (occupancyWatermark > 0)
+      counted.foreach(a => atRestRows += a.count())
+    // Distribution watermark (the cause the occupancy warning can only
+    // name, measured): one aggregate over the BATCH against the
+    // persisted fit stats — the corpus is never re-read. Reassigned
+    // only when this batch HAS arrivals: lastDrift is "the most recent
+    // batch's ARRIVALS" by contract, so a deletes-only batch must not
+    // clobber the last measured drift with None.
+    for (dc <- driftCheck; a <- counted) {
+      val (shift, fold) = dc.maxDrift(a)
+      lastDrift = Some((shift, fold))
+      val breached = shift > dc.shiftWatermark || fold > dc.ratioWatermark
+      // one clean batch resets the run: refitDue means SUSTAINED drift
+      // (a new distribution the model must re-fit), not one noisy
+      // batch — the DriftCheck small-batch noise caveat as scheduling
+      val run = recordDriftBreach(breached)
+      if (breached) log.warn(
+        f"$storeLabel '$lsmPath' batch $seq arrivals have drifted " +
+          f"from the fit distribution: max location shift $shift%.2f " +
+          f"fit-MADs (watermark ${dc.shiftWatermark}), max spread fold " +
+          f"$fold%.2f (watermark ${dc.ratioWatermark}); consecutive " +
+          s"drifted batches: $run/$refitAfterBreaches before refitDue. " +
+          driftAdvice)
+    }
+    if (compactionDueAt(batches, compactEvery)) compactNow()
+    else if (pastWatermark(occupancyWatermark)) log.warn(
+      s"$storeLabel '$lsmPath' holds $atRestRows rows at rest " +
+        f"($atRestGrowth%.1fx the $fitRows-row base its frozen model " +
+        s"was fit for) after $batches batches: $occupancyAdvice")
   }
 }
 

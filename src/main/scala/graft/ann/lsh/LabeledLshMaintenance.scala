@@ -5,63 +5,55 @@ import org.apache.spark.sql.functions._
 
 /** Scheduled maintenance for a STORED label-partitioned LSH index
   * under streaming upserts/deletes — the [[LshMaintainer]] twin over
-  * the [[LabeledLshIndex.save]] layout at `path`, sharing the same
-  * [[graft.ann.LsmStore]] log/fence/sequence machinery:
+  * the [[LabeledLshIndex.save]] layout at `path`. The LSM protocol,
+  * kill rule, batch step and cadence live in [[graft.ann.LsmStore]] and
+  * [[graft.ann.VectorLsmStore]]; what is label-specific:
   *
-  *   - appends are DELTAS: labeled arrivals `(vec_id, embedding,
-  *     label)` hash through the frozen persisted forest (map-side) and
-  *     land in `vectors_delta` / `buckets_delta` (composite
-  *     `(label, tree_id, hash, vec_id)` rows) stamped with the batch
-  *     sequence — the [[LabeledLshIndex.append]] dedup rules applied
-  *     per batch (one vector row per vec_id, one bucket row per
-  *     `(vec_id, label)`);
-  *   - deletes are the shared tombstone log; same-batch delete+arrival
-  *     is an UPSERT (a tombstone kills strictly earlier rows only);
-  *   - [[index]] assembles the serving [[LabeledLshIndex]] over
-  *     (base ∪ unfenced deltas) ∖ tombstones with the PERSISTED
-  *     centroid sidecar — which makes the sidecar-staleness contract
-  *     crash-safe and cadenced instead of ad hoc: between compactions
-  *     the serve ranks against the last compaction's centroids (an
-  *     arrival into an already-probed `(label, bucket)` serves
-  *     immediately; one OPENING a new pair is unreachable — the
-  *     [[LabeledLshIndex.append]] directory rule), and every
-  *     `compactEvery` batches [[compactNow]] folds the logs AND
-  *     recomputes the sidecar in the same crash-safe commit — the
-  *     "fold the refresh into the base index's maintenance cadence"
-  *     scaladoc, as code;
-  *   - the drift watermark and [[refitNow]] close the OPERATE loop:
-  *     refit retrains the forest on the live vectors, rebuilds the
-  *     labeled store from the live `(vec_id, label)` pairs (recovered
-  *     from the bucket rows — labels are never stored twice), and
-  *     swaps atomically.
+  *   - labeled arrivals `(vec_id, embedding, label)` hash through the
+  *     frozen persisted forest (map-side) and land in `vectors_delta` /
+  *     `buckets_delta` (composite `(label, tree_id, hash, vec_id)`
+  *     rows) — the [[LabeledLshIndex.append]] dedup rules applied per
+  *     batch (one vector row per vec_id, one bucket row per
+  *     `(vec_id, label)`); the occupancy watermark and the drift check
+  *     read the deduped vector rows;
+  *   - [[index]] serves the live view with the PERSISTED centroid
+  *     sidecar — which makes the sidecar-staleness contract crash-safe
+  *     and cadenced instead of ad hoc: between compactions the serve
+  *     ranks against the last compaction's centroids (an arrival into
+  *     an already-probed `(label, bucket)` serves immediately; one
+  *     OPENING a new pair is unreachable — the
+  *     [[LabeledLshIndex.append]] directory rule), and [[compactNow]]
+  *     folds the logs AND recomputes the sidecar in the same
+  *     crash-safe commit;
+  *   - [[refitNow]] retrains the forest on the live vectors, rebuilds
+  *     the labeled store from the live `(vec_id, label)` pairs
+  *     (recovered from the bucket rows — labels are never stored
+  *     twice), and swaps atomically.
   *
-  * Driver-side state is one Int; everything heavy is DataFrame jobs —
-  * safe as a `foreachBatch` body, and the sixth leg of
-  * [[graft.streaming.IngestPipeline]]. Stream==batch identity and the
-  * staleness boundary are pinned by LabeledLshMaintainerSpec. */
+  * The sixth leg of [[graft.streaming.IngestPipeline]]. Stream==batch
+  * identity and the staleness boundary are pinned by
+  * LabeledLshMaintainerSpec. */
 final class LabeledLshMaintainer(
     spark: SparkSession,
     path: String,
-    compactEvery: Int = graft.ann.LsmStore.DefaultCompactEvery,
-    occupancyWatermark: Double = 0.0,
-    driftCheck: Option[graft.ann.DriftCheck] = None,
-    refitAfterBreaches: Int = 3)
-  extends graft.ann.LsmStore {
-
-  /** Most recent measured batch drift (see
-    * [[LshMaintainer.lastDrift]]). */
-  @volatile var lastDrift: Option[(Double, Double)] = None
-
-  require(compactEvery > 0, s"compactEvery $compactEvery must be positive")
-  require(refitAfterBreaches > 0,
-    s"refitAfterBreaches $refitAfterBreaches must be positive")
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    protected val compactEvery: Int = graft.ann.LsmStore.DefaultCompactEvery,
+    protected val occupancyWatermark: Double = 0.0,
+    protected val driftCheck: Option[graft.ann.DriftCheck] = None,
+    protected val refitAfterBreaches: Int = 3)
+  extends graft.ann.VectorLsmStore {
 
   override protected def lsmSpark: SparkSession = spark
   override protected def lsmPath: String = path
   override protected def lsmLogDirs: Seq[String] =
     Seq("vectors_delta", "buckets_delta", "tombstones", "batch_commits")
+  override protected def countedTable: String = "vectors"
+  override protected def storeLabel: String = "labeled LSH store"
+  override protected def driftAdvice: String =
+    "refitNow retrains the forest AND rebuilds the label partitions + " +
+      "sidecar."
+  override protected def occupancyAdvice: String =
+    "per-probe cost inflates by the same factor, and the STALE sidecar " +
+      "no longer ranks the newest mass. refitNow, or compact more often."
 
   /** The frozen forest, loaded once (the [[LshMaintainer.model]]
     * rationale); replaced only by [[refitNow]]. */
@@ -81,55 +73,24 @@ final class LabeledLshMaintainer(
     centroidTreesCache
   }
 
-  private var batches = recoverSeq()
-
-  /** Batches applied over the store's lifetime (persistent). */
-  def batchesSeen: Int = batches
-
-  /** True when the NEXT [[onBatch]] triggers compaction (fence-based —
-    * the [[LshMaintainer.compactionDue]] rule). */
-  def compactionDue: Boolean = (batches + 1) - readFence() >= compactEvery
-
-  /** True when [[refitNow]] is due on sustained drift (the
-    * [[LshMaintainer.refitDue]] contract). */
-  def refitDue: Boolean =
-    driftCheck.nonEmpty && driftBreaches >= refitAfterBreaches
-
-  private def tombstones: DataFrame =
-    visibleFilter(readOr("tombstones", emptySeqIds))
-      .select("vec_id", "seq")
-
   /** The [[LabeledLshIndex.save]] layout's subdirs, as
     * compaction-commit renames. */
   private def storeRenames: Seq[(String, String)] =
     Seq("model", "vectors", "buckets", "centroids", "labeled_meta")
       .map(sub => s"$CompactTmpDir/$sub" -> sub)
 
-  /** The serving view: base + unfenced deltas minus tombstoned rows,
-    * with the PERSISTED (last-compaction) centroid sidecar — the
-    * crash-safe form of the staleness contract (class doc). Partition
-    * columns are cast back per [[LabeledLshIndex.load]]'s rules. */
+  /** The serving view ([[graft.ann.LsmStore.liveViews]]) with the
+    * PERSISTED (last-compaction) centroid sidecar — the crash-safe form
+    * of the staleness contract (class doc). Partition columns are cast
+    * back per [[LabeledLshIndex.load]]'s rules. */
   def index: LabeledLshIndex = {
-    val baseVectors = spark.read.parquet(s"$path/vectors")
-    val baseBuckets = spark.read.parquet(s"$path/buckets")
-      .select(col("label").cast("string").as("label"),
-        col("tree_id").cast("int").as("tree_id"), col("hash"),
-        col("vec_id"))
-    val vecs = baseVectors.withColumn("seq", lit(0))
-      .unionByName(visibleFilter(
-        readOr("vectors_delta", baseVectors.limit(0)
-          .withColumn("seq", lit(0)))
-        .select("vec_id", "embedding", "seq")))
-    val bks = baseBuckets.withColumn("seq", lit(0))
-      .unionByName(visibleFilter(
-        readOr("buckets_delta", baseBuckets.limit(0)
-          .withColumn("seq", lit(0)))
-        .select("label", "tree_id", "hash", "vec_id", "seq")))
-    val t = broadcast(tombstones)
-    def live(df: DataFrame) = df.join(t,
-        df("vec_id") === t("vec_id") && t("seq") > df("seq"), "left_anti")
-      .drop("seq")
-    new LabeledLshIndex(model, live(vecs), live(bks), centroidTrees,
+    val Seq(vecs, bks) = liveViews()(
+      spark.read.parquet(s"$path/vectors") -> "vectors_delta",
+      spark.read.parquet(s"$path/buckets")
+        .select(col("label").cast("string").as("label"),
+          col("tree_id").cast("int").as("tree_id"), col("hash"),
+          col("vec_id")) -> "buckets_delta")
+    new LabeledLshIndex(model, vecs, bks, centroidTrees,
       Some(spark.read.parquet(s"$path/centroids")
         .select(col("label").cast("string").as("label"),
           col("tree_id").cast("int").as("tree_id"), col("hash"),
@@ -140,69 +101,35 @@ final class LabeledLshMaintainer(
     * embedding, label)` (multi-label arrivals as one row per label);
     * `deletes` rows are `(vec_id)`. An id in both is an upsert. */
   def onBatch(arrivals: Option[DataFrame],
-              deletes: Option[DataFrame]): Unit = {
-    val seq = batches + 1
-    batches = seq // burned up front (LsmStore doc)
-    if (occupancyWatermark > 0) ensureCounts(
-      spark.read.parquet(s"$path/vectors").count(),
-      readOr("vectors_delta", emptySeqIds).count())
-    // the LabeledLshIndex.append dedup rules, per delta batch —
-    // CHECKPOINTED ONCE: dropDuplicates is nondeterministic per action
-    // when a batch carries conflicting embeddings for one id, and the
-    // vectors write, the hash transform, the occupancy count, and the
-    // drift aggregate below MUST all read the same snapshot (a
-    // vectors_delta row paired with another embedding's bucket hashes
-    // would be durable store corruption); the checkpoint also stops
-    // the dedup shuffle re-running per consumer
-    val vecsOpt = arrivals.map(a0 =>
-      a0.select("vec_id", "embedding").dropDuplicates("vec_id")
-        .localCheckpoint())
-    arrivals.zip(vecsOpt).foreach { case (a0, vecs) =>
-      val lbls = a0.select(col("vec_id"),
-          col("label").cast("string").as("label"))
-        .dropDuplicates("vec_id", "label")
-      vecs.withColumn("seq", lit(seq))
-        .write.mode("append").parquet(s"$path/vectors_delta")
-      model.transform(vecs, "vec_id", "embedding")
-        .join(lbls, "vec_id")
-        .select(col("label"), col("tree_id"), col("hash"), col("vec_id"),
-          lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/buckets_delta")
+              deletes: Option[DataFrame]): Unit =
+    runBatch(deletes) { seq =>
+      // the LabeledLshIndex.append dedup rules, per delta batch —
+      // CHECKPOINTED ONCE: dropDuplicates is nondeterministic per
+      // action when a batch carries conflicting embeddings for one id,
+      // and the vectors write, the hash transform, the occupancy count,
+      // and the drift aggregate MUST all read the same snapshot (a
+      // vectors_delta row paired with another embedding's bucket hashes
+      // would be durable store corruption); the checkpoint also stops
+      // the dedup shuffle re-running per consumer. The count and the
+      // drift check read VECTOR rows, not label rows: a multi-label
+      // arrival is one vectors_delta row, and occupancy tracks the
+      // at-rest vector table the frozen forest was fit for.
+      arrivals.map { a0 =>
+        val vecs = a0.select("vec_id", "embedding").dropDuplicates("vec_id")
+          .localCheckpoint()
+        val lbls = a0.select(col("vec_id"),
+            col("label").cast("string").as("label"))
+          .dropDuplicates("vec_id", "label")
+        vecs.withColumn("seq", lit(seq))
+          .write.mode("append").parquet(s"$path/vectors_delta")
+        model.transform(vecs, "vec_id", "embedding")
+          .join(lbls, "vec_id")
+          .select(col("label"), col("tree_id"), col("hash"), col("vec_id"),
+            lit(seq).as("seq"))
+          .write.mode("append").parquet(s"$path/buckets_delta")
+        vecs
+      }
     }
-    deletes.foreach { d =>
-      d.select(col("vec_id"), lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/tombstones")
-    }
-    markBatchCommitted(seq)
-    if (occupancyWatermark > 0)
-      // count VECTOR rows, not label rows: a multi-label arrival is
-      // one vectors_delta row (the dedup above), and occupancy tracks
-      // the at-rest vector table the frozen forest was fit for
-      vecsOpt.foreach(vecs => atRestRows += vecs.count())
-    val batchDrift = for (dc <- driftCheck; vecs <- vecsOpt)
-      yield dc.maxDrift(vecs)
-    batchDrift.foreach(d => lastDrift = Some(d))
-    batchDrift.foreach { case (shift, fold) =>
-      val dc = driftCheck.get
-      val breached = shift > dc.shiftWatermark || fold > dc.ratioWatermark
-      val run = recordDriftBreach(breached)
-      if (breached) log.warn(
-        f"labeled LSH store '$path' batch $seq arrivals have drifted " +
-          f"from the fit distribution: max location shift $shift%.2f " +
-          f"fit-MADs (watermark ${dc.shiftWatermark}), max spread fold " +
-          f"$fold%.2f (watermark ${dc.ratioWatermark}); consecutive " +
-          s"drifted batches: $run/$refitAfterBreaches before refitDue. " +
-          "refitNow retrains the forest AND rebuilds the label " +
-          "partitions + sidecar.")
-    }
-    if (batches - readFence() >= compactEvery) compactNow()
-    else if (pastWatermark(occupancyWatermark)) log.warn(
-      s"labeled LSH store '$path' holds $atRestRows rows at rest " +
-        f"($atRestGrowth%.1fx the $fitRows-row base its frozen forest " +
-        s"was fit for) after $batches batches: per-probe cost inflates " +
-        "by the same factor, and the STALE sidecar no longer ranks the " +
-        "newest mass. refitNow, or compact more often.")
-  }
 
   /** Fold the logs into the base AND recompute the centroid sidecar —
     * one crash-safe commit, so the staleness window is exactly the
@@ -219,7 +146,7 @@ final class LabeledLshMaintainer(
     val folded = v.count()
     onCompacted(folded)
     if (log.isInfoEnabled) log.info(
-      s"labeled LSH store '$path' compacted after $batches batches " +
+      s"$storeLabel '$path' compacted after $batches batches " +
         s"($folded live vectors, sidecar refreshed)")
   }
 
@@ -243,7 +170,7 @@ final class LabeledLshMaintainer(
     val n = v.count()
     onRefit(n)
     if (log.isInfoEnabled) log.info(
-      s"labeled LSH store '$path' refit on $n live vectors after " +
+      s"$storeLabel '$path' refit on $n live vectors after " +
         s"$batches batches (fresh forest, rebuilt partitions + sidecar)")
   }
 }

@@ -52,6 +52,11 @@ final class LshModel(val config: LshConfig, val trees: Array[TreeNode])
 
   import LshModel._
 
+  /** The fitted dimension: every plane's normal has this length. -1 for
+    * a forest of leaves, which has no planes and hashes any length. */
+  private[lsh] lazy val dims: Int =
+    trees.collectFirst { case Split(p, _, _) => p.normal.length }.getOrElse(-1)
+
   /** All per-tree hashes of one (already double-widened) vector —
     * normalizes first in angular mode (reference getHashes,
     * hasher.go:191-219: pass-through when norm <= tol). */
@@ -917,18 +922,19 @@ object Lsh {
       else df.sample(withReplacement = false,
         fraction = config.sampleCap.toDouble / total, seed = config.seed)
     val vecs = graft.ann.FitSample.collectVectors(sampled, vecCol)
+    // every plane must span every dimension — a ragged sample would
+    // split on a prefix and hash later rows from reads past their end
+    require(vecs.forall(_ != null) && vecs.map(_.length).distinct.length <= 1,
+      "embedding dimensions are ragged or contain nulls")
     // trees are independent: build them concurrently (the reference's
     // goroutine-per-tree, hasher.go:179-186) — each still seeded
-    // deterministically, so the forest is identical to a serial build
+    // deterministically, so the forest is identical to a serial build;
+    // ParallelFit rethrows a failed tree instead of leaving a null slot
     val trees = new Array[Forest.TreeNode](config.nTrees)
-    val threads = (0 until config.nTrees).map { ti =>
-      val t = new Thread(() => {
-        trees(ti) = Forest.buildTree(vecs.toSeq, config.kMinVecs,
-          config.angular, config.seed + ti)
-      })
-      t.start(); t
+    graft.ann.ParallelFit.run(config.nTrees) { ti =>
+      trees(ti) = Forest.buildTree(vecs.toSeq, config.kMinVecs,
+        config.angular, config.seed + ti)
     }
-    threads.foreach(_.join())
     new LshModel(config, trees)
   }
 

@@ -50,8 +50,16 @@ private[lsh] trait LshModelExpression extends UnaryExpression with ExpectsInputT
 
   protected def evalData(a: ArrayData): Array[Long]
 
-  override def nullSafeEval(av: Any): Any =
-    new GenericArrayData(evalData(av.asInstanceOf[ArrayData]))
+  // Nullable even for non-null input: a vector whose length differs
+  // from the fitted dimension yields NULL (the distance kernels' rule),
+  // never a hash read past the end of its array or from a prefix
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(av: Any): Any = {
+    val a = av.asInstanceOf[ArrayData]
+    if (model.dims >= 0 && a.numElements() != model.dims) null
+    else new GenericArrayData(evalData(a))
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bref = ctx.addReferenceObj("lshBcast", bcast,
@@ -60,9 +68,18 @@ private[lsh] trait LshModelExpression extends UnaryExpression with ExpectsInputT
     // one value() fetch per operator instance, not per row
     val mref = ctx.addMutableState(modelCls, "lshModel",
       v => s"$v = ($modelCls) $bref.value();")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $mref.$methodName($a, $isFloat));""".stripMargin)
+    nullSafeCodeGen(ctx, ev, a => {
+      val hash =
+        s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+           |  $mref.$methodName($a, $isFloat));""".stripMargin
+      if (model.dims < 0) hash
+      else
+        s"""if ($a.numElements() != ${model.dims}) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  $hash
+           |}""".stripMargin
+    })
   }
 }
 

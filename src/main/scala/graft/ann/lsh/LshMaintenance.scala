@@ -4,75 +4,50 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scheduled maintenance for a STORED LSH index under streaming
-  * upserts/deletes — the LSH twin of [[graft.ann.GraphMaintainer]],
-  * organized as a miniature LSM store over the [[LshIndex.save]]
-  * layout at `path` (the shared log/fence/sequence/watermark machinery
-  * lives in [[graft.ann.LsmStore]], one implementation for this class
-  * and [[graft.ann.CodesMaintainer]]):
+  * upserts/deletes — the LSH twin of [[graft.ann.GraphMaintainer]], a
+  * miniature LSM store over the [[LshIndex.save]] layout at `path`. The
+  * log/fence/sequence protocol, the tombstone kill rule, the batch step
+  * and the compaction/drift cadence live in [[graft.ann.LsmStore]] and
+  * [[graft.ann.VectorLsmStore]]; what is LSH-specific:
   *
-  *   - appends are DELTAS: arrivals hash through the frozen persisted
-  *     forest ([[LshModel.transform]] — map-side) and land in
-  *     append-mode parquet under `vectors_delta`/`buckets_delta`,
-  *     stamped with the batch sequence number — no existing file is
-  *     ever rewritten on the hot path;
-  *   - deletes are a TOMBSTONE LOG (`tombstones`, append-only
-  *     (vec_id, seq) rows). A tombstone kills rows of that id from
-  *     STRICTLY EARLIER batches (base rows are seq 0), so an id in
-  *     both `arrivals` and `deletes` of one batch is an UPSERT: the
-  *     old row dies, the same-batch arrival survives — the LSM
-  *     sequencing that makes [[LshIndex.upsert]] expressible as log
-  *     records instead of a view chain;
-  *   - [[index]] assembles the serving view: (base ∪ unfenced deltas)
-  *     anti-join the broadcast tombstone log on (vec_id,
-  *     t.seq > v.seq) — a map-side view over an ordinary [[LshIndex]],
-  *     so search, filtered search, and candidate-pairs all compose;
-  *   - every `compactEvery` batches, [[compactNow]] folds everything
-  *     into the base: the live view is materialized (localCheckpoint —
-  *     Spark refuses to overwrite files still being read), rewritten
-  *     via [[LshIndex.save]], the compaction fence is stamped, and the
-  *     logs are dropped — bounded log size, one rewrite amortized over
-  *     N batches, crash-safe per the [[graft.ann.LsmStore]] fence
-  *     protocol;
-  *   - between compactions an occupancy watermark warns (loud, cheap,
-  *     non-fatal — the [[Lsh.fit]] pattern) when the at-rest row count
-  *     (base + delta logs, INCLUDING tombstoned rows, which cost every
-  *     probe until compacted out) grows past `occupancyWatermark`× the
-  *     fit-time base: frozen planes still hash arrivals correctly, but
-  *     bucket occupancy — and so per-probe search cost — inflates by
-  *     the growth factor. Counts are tracked incrementally (one base
-  *     count at first use, += arrivals per batch, only when the
-  *     watermark is enabled); [[refitNow]] is the warning's prescribed
-  *     action.
+  *   - arrivals hash through the frozen persisted forest
+  *     ([[LshModel.transform]] — map-side) and land in
+  *     `vectors_delta`/`buckets_delta`; [[index]] serves both tables
+  *     through the shared live view — a map-side view over an ordinary
+  *     [[LshIndex]], so search, filtered search, and candidate-pairs
+  *     all compose;
+  *   - [[compactNow]] rewrites the live view via [[LshIndex.save]],
+  *     keeping the frozen planes;
+  *   - the occupancy watermark counts the vector table: frozen planes
+  *     still hash arrivals correctly, but bucket occupancy — and so
+  *     per-probe search cost — inflates by the growth factor;
+  *     [[refitNow]] is the prescribed action, and the only step that
+  *     re-splits buckets.
   *
-  * Driver-side state is one Int (the batch counter), safe inside
-  * `foreachBatch` (runs on the driver); everything heavy is DataFrame
-  * jobs. Stream==batch identity is pinned by StreamingLshLifecycleSpec.
+  * Stream==batch identity is pinned by StreamingLshLifecycleSpec.
   */
 final class LshMaintainer(
     spark: SparkSession,
     path: String,
-    compactEvery: Int = graft.ann.LsmStore.DefaultCompactEvery,
-    occupancyWatermark: Double = 0.0,
-    driftCheck: Option[graft.ann.DriftCheck] = None,
-    refitAfterBreaches: Int = 3)
-  extends graft.ann.LsmStore {
-
-  /** (max shift in fit-MADs, max spread fold) of the most recent
-    * batch's arrivals vs the fit stats — None until a batch with both
-    * a configured [[graft.ann.DriftCheck]] and arrivals has run (the
-    * [[graft.ann.CodesMaintainer.lastDrift]] contract). */
-  @volatile var lastDrift: Option[(Double, Double)] = None
-
-  require(compactEvery > 0, s"compactEvery $compactEvery must be positive")
-  require(refitAfterBreaches > 0,
-    s"refitAfterBreaches $refitAfterBreaches must be positive")
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    protected val compactEvery: Int = graft.ann.LsmStore.DefaultCompactEvery,
+    protected val occupancyWatermark: Double = 0.0,
+    protected val driftCheck: Option[graft.ann.DriftCheck] = None,
+    protected val refitAfterBreaches: Int = 3)
+  extends graft.ann.VectorLsmStore {
 
   override protected def lsmSpark: SparkSession = spark
   override protected def lsmPath: String = path
   override protected def lsmLogDirs: Seq[String] =
     Seq("vectors_delta", "buckets_delta", "tombstones", "batch_commits")
+  override protected def countedTable: String = "vectors"
+  override protected def storeLabel: String = "stored LSH index"
+  override protected def driftAdvice: String =
+    "Frozen planes split the OLD density — occupancy will skew; refitNow."
+  override protected def occupancyAdvice: String =
+    "expected bucket occupancy — and per-probe search cost — has " +
+      "inflated by the same factor. Refit the forest (refitNow), or " +
+      "serve through cappedBuckets/maxCandidates (compaction drops " +
+      "tombstoned rows but never re-splits buckets)."
 
   /** The frozen forest, loaded once — the class contract is that
     * arrivals hash through the PERSISTED model, so re-reading it per
@@ -83,137 +58,44 @@ final class LshMaintainer(
     modelCache
   }
 
-  /** The LSM sequence is PERSISTENT state, recovered at construction
-    * (see [[graft.ann.LsmStore.recoverSeq]]). */
-  private var batches = recoverSeq()
-
-  /** Batches applied over the store's lifetime (persistent: recovered
-    * from the logs and the compaction fence, so a reconstructed
-    * maintainer agrees with the live one). */
-  def batchesSeen: Int = batches
-
-  /** True when the NEXT [[onBatch]] call triggers compaction. The
-    * cadence is measured from the LAST compaction (the fence), not by
-    * seq divisibility — a failed attempt burns its seq, and a burned
-    * multiple must defer the fold by one batch, not a whole cycle. */
-  def compactionDue: Boolean = (batches + 1) - readFence() >= compactEvery
-
-  private def tombstones: DataFrame =
-    visibleFilter(readOr("tombstones", emptySeqIds))
-      .select("vec_id", "seq")
-
-  /** True when the drift watermark has been breached by
-    * `refitAfterBreaches` CONSECUTIVE measured batches — the refit
-    * twin of [[compactionDue]], persistent across restarts via the
-    * `_drift_breaches` marker ([[graft.ann.LsmStore.driftBreaches]]);
-    * [[refitNow]] is the prescribed action and resets the run. */
-  def refitDue: Boolean =
-    driftCheck.nonEmpty && driftBreaches >= refitAfterBreaches
-
   /** The [[LshIndex.save]] layout's three subdirs, as compaction-commit
     * renames (temp → final). */
   private def storeRenames: Seq[(String, String)] =
     Seq("model", "vectors", "buckets")
       .map(sub => s"$CompactTmpDir/$sub" -> sub)
 
-  /** The serving view: persisted base + unfenced delta logs, minus
-    * tombstoned rows (t.seq > row.seq). Anti-joins broadcast the
-    * (small) log. Uses the once-loaded frozen [[model]] — `Lsh.load`
-    * here would collect the forest's node table to the driver on EVERY
-    * serving call (a per-micro-batch tax a foreachBatch loop pays for
-    * nothing: the model is frozen by the class contract, and compaction
-    * rewrites it byte-identically). */
+  /** The serving view ([[graft.ann.LsmStore.liveViews]] over the
+    * vector and bucket tables). Uses the once-loaded frozen [[model]] —
+    * `Lsh.load` here would collect the forest's node table to the
+    * driver on EVERY serving call (a per-micro-batch tax a foreachBatch
+    * loop pays for nothing: the model is frozen by the class contract,
+    * and compaction rewrites it byte-identically). */
   def index: LshIndex = {
-    val baseVectors = spark.read.parquet(s"$path/vectors")
-    val baseBuckets = spark.read.parquet(s"$path/buckets")
-      .select(col("tree_id").cast("int").as("tree_id"), col("hash"),
-        col("vec_id"))
-    val vecs = baseVectors.withColumn("seq", lit(0))
-      .unionByName(visibleFilter(
-        readOr("vectors_delta", baseVectors.limit(0)
-          .withColumn("seq", lit(0)))
-        .select("vec_id", "embedding", "seq")))
-    val bks = baseBuckets.withColumn("seq", lit(0))
-      .unionByName(visibleFilter(
-        readOr("buckets_delta", baseBuckets.limit(0)
-          .withColumn("seq", lit(0)))
-        .select("tree_id", "hash", "vec_id", "seq")))
-    val t = broadcast(tombstones)
-    def live(df: DataFrame) = df.join(t,
-        df("vec_id") === t("vec_id") && t("seq") > df("seq"), "left_anti")
-      .drop("seq")
-    new LshIndex(model, live(vecs), live(bks))
+    val Seq(vecs, bks) = liveViews()(
+      spark.read.parquet(s"$path/vectors") -> "vectors_delta",
+      spark.read.parquet(s"$path/buckets")
+        .select(col("tree_id").cast("int").as("tree_id"), col("hash"),
+          col("vec_id")) -> "buckets_delta")
+    new LshIndex(model, vecs, bks)
   }
 
   /** One streaming maintenance step. `arrivals` rows are
     * (vec_id, embedding); `deletes` rows are (vec_id). An id in both is
-    * an upsert (see class doc). */
+    * an upsert. */
   def onBatch(arrivals: Option[DataFrame],
-              deletes: Option[DataFrame]): Unit = {
-    val seq = batches + 1
-    // the seq is BURNED up front: a failed attempt's partial log rows
-    // stay at a seq no retry reuses (LsmStore doc)
-    batches = seq
-    // counts snapshot BEFORE this batch's delta lands (counting after
-    // the write would double-count the batch); base counted from its
-    // parquet directly — Lsh.load would collect the forest's node
-    // table to the driver just to count vectors
-    if (occupancyWatermark > 0) ensureCounts(
-      spark.read.parquet(s"$path/vectors").count(),
-      readOr("vectors_delta", emptySeqIds).count())
-    arrivals.foreach { a0 =>
-      val a = a0.select("vec_id", "embedding")
-      a.withColumn("seq", lit(seq))
-        .write.mode("append").parquet(s"$path/vectors_delta")
-      model.transform(a, "vec_id", "embedding")
-        .select(col("tree_id"), col("hash"), col("vec_id"),
-          lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/buckets_delta")
+              deletes: Option[DataFrame]): Unit =
+    runBatch(deletes) { seq =>
+      arrivals.foreach { a0 =>
+        val a = a0.select("vec_id", "embedding")
+        a.withColumn("seq", lit(seq))
+          .write.mode("append").parquet(s"$path/vectors_delta")
+        model.transform(a, "vec_id", "embedding")
+          .select(col("tree_id"), col("hash"), col("vec_id"),
+            lit(seq).as("seq"))
+          .write.mode("append").parquet(s"$path/buckets_delta")
+      }
+      arrivals
     }
-    deletes.foreach { d =>
-      d.select(col("vec_id"), lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/tombstones")
-    }
-    // atomic visibility: a crash above leaves a partial batch (e.g.
-    // vectors written, buckets not) that visibleFilter ignores
-    markBatchCommitted(seq)
-    if (occupancyWatermark > 0)
-      arrivals.foreach(a => atRestRows += a.count())
-    // Distribution watermark — same contract as CodesMaintainer: one
-    // batch-sized aggregate vs the persisted fit stats; the frozen
-    // planes keep HASHING drifted arrivals correctly, but the tree
-    // splits stop matching the data's density, so occupancy skews and
-    // per-probe cost concentrates. refitNow is the prescribed action.
-    // Reassigned only when this batch HAS arrivals (deletes-only
-    // batches must not clobber the last measured drift — the
-    // CodesMaintainer.lastDrift contract).
-    val batchDrift = for (dc <- driftCheck; a <- arrivals) yield dc.maxDrift(a)
-    batchDrift.foreach(d => lastDrift = Some(d))
-    batchDrift.foreach { case (shift, fold) =>
-      val dc = driftCheck.get
-      val breached = shift > dc.shiftWatermark || fold > dc.ratioWatermark
-      // a clean batch resets the run: refitDue fires on SUSTAINED
-      // drift, not one noisy batch (DriftCheck's small-batch caveat)
-      val run = recordDriftBreach(breached)
-      if (breached) log.warn(
-        f"stored LSH index '$path' batch $seq arrivals have drifted " +
-          f"from the fit distribution: max location shift $shift%.2f " +
-          f"fit-MADs (watermark ${dc.shiftWatermark}), max spread fold " +
-          f"$fold%.2f (watermark ${dc.ratioWatermark}); consecutive " +
-          s"drifted batches: $run/$refitAfterBreaches before refitDue. " +
-          "Frozen planes split the OLD density — occupancy will skew; " +
-          "refitNow.")
-    }
-    if (batches - readFence() >= compactEvery) compactNow()
-    else if (pastWatermark(occupancyWatermark)) log.warn(
-      s"stored LSH index '$path' holds $atRestRows rows at rest " +
-        f"($atRestGrowth%.1fx the $fitRows-row base its frozen forest " +
-        s"was fit for) after $batches batches: expected bucket " +
-        "occupancy — and per-probe search cost — has inflated by the " +
-        "same factor. Refit the forest (refitNow), or serve through " +
-        "cappedBuckets/maxCandidates (compaction drops tombstoned rows " +
-        "but never re-splits buckets).")
-  }
 
   /** Fold the logs into the base: rewrite the store from the live view
     * into the compaction temp dir, then run the crash-safe
@@ -230,7 +112,7 @@ final class LshMaintainer(
     val folded = v.count()
     onCompacted(folded)
     if (log.isInfoEnabled) log.info(
-      s"stored LSH index '$path' compacted after $batches batches " +
+      s"$storeLabel '$path' compacted after $batches batches " +
         s"($folded live vectors)")
   }
 
@@ -254,7 +136,7 @@ final class LshMaintainer(
     val n = v.count()
     onRefit(n)
     if (log.isInfoEnabled) log.info(
-      s"stored LSH index '$path' refit on $n live vectors after " +
+      s"$storeLabel '$path' refit on $n live vectors after " +
         s"$batches batches (occupancy restored to the config envelope)")
   }
 }

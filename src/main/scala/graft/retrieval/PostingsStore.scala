@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   *     avgdl = tdl/n in both build and refit, bit-equal to the inline
   *     pipelines' double-sum avg() for any corpus whose token total
   *     fits 2^53 (and MORE exact past it);
-  *   - LSM logs (shared [[graft.ann.LsmStore]] machinery): `tfs_delta`,
-  *     `doclens_delta`, `tombstones`, `batch_commits`.
+  *   - LSM logs (the [[graft.ann.LsmStore]] protocol, kill rule and
+  *     cadence): `tfs_delta`, `doclens_delta`, `tombstones`,
+  *     `batch_commits`.
   *
   * Serving ([[sparse]]/[[bm25]]) computes w/tscore at probe time:
   * live rows ⨝ broadcast(stats) with the canonical expressions below —
@@ -101,36 +102,23 @@ final class PostingsStore(
   @volatile var lastOovRatio: Option[Double] = None
 
   def batchesSeen: Int = batches
-  /** Cadence measured from the LAST compaction (the fence), not seq
-    * divisibility — a failed attempt burns its seq, and a burned
-    * multiple must defer the fold by one batch, not a whole cycle. */
-  def compactionDue: Boolean = (batches + 1) - readFence() >= compactEvery
+  /** True when the NEXT [[onBatch]] call triggers compaction
+    * ([[graft.ann.LsmStore.compactionDueAt]]). */
+  def compactionDue: Boolean = compactionDueAt(batches + 1, compactEvery)
 
-  private def emptySeqDocs: DataFrame =
-    spark.range(0).select(col("id").as("doc_id"), lit(0).as("seq"))
+  private def withDelta(baseSub: String): DataFrame =
+    withVisibleDelta(spark.read.parquet(s"$path/$baseSub"), s"${baseSub}_delta")
 
-  private def tombstonesAll: DataFrame =
-    visibleFilter(readOr("tombstones", emptySeqDocs)).select("doc_id", "seq")
-
-  /** The LSM kill rule on a seq-carrying row table: a tombstone kills
-    * rows of its doc from STRICTLY earlier seqs (same-batch
-    * delete+arrival is an upsert; a later re-insert revives). */
-  private def killDead(all: DataFrame): DataFrame = {
-    val t = broadcast(tombstonesAll
-      .select(col("doc_id").as("t_doc"), col("seq").as("tseq")))
-    all.join(t, all("doc_id") === col("t_doc") && col("tseq") > all("seq"),
-      "left_anti")
-  }
-
-  private def withDelta(baseSub: String): DataFrame = {
-    val base = spark.read.parquet(s"$path/$baseSub")
-    base.unionByName(visibleFilter(readOr(s"${baseSub}_delta", base.limit(0))))
-  }
+  /** The shared live view ([[graft.ann.LsmStore.liveViews]]) over a
+    * base table whose rows keep their `seq` through compaction. */
+  private def live(baseSub: String): DataFrame =
+    liveViews("doc_id", keepSeq = true)(
+      spark.read.parquet(s"$path/$baseSub") -> s"${baseSub}_delta").head
 
   /** Live raw postings (doc_id, term, tf, dl, seq). */
-  private[retrieval] def liveTfs: DataFrame = killDead(withDelta("tfs"))
+  private[retrieval] def liveTfs: DataFrame = live("tfs")
   /** Live doc-length sidecar (doc_id, dl, seq) — one row per live doc. */
-  private[retrieval] def liveDoclens: DataFrame = killDead(withDelta("doclens"))
+  private[retrieval] def liveDoclens: DataFrame = live("doclens")
 
   /** The live DOCUMENT set (doc_id, dl) — membership, not scoring: a
     * freshly-appended doc whose terms are all OOV since the stats
@@ -212,7 +200,7 @@ final class PostingsStore(
     // written, doclens not — or a delete without its upsert arrival)
     // that visibleFilter ignores instead of serving diverged views
     markBatchCommitted(seq)
-    if (batches - readFence() >= compactEvery) compactNow()
+    if (compactionDueAt(batches, compactEvery)) compactNow()
   }
 
   // ---- O(drift) stats refit ----
@@ -341,22 +329,17 @@ final class PostingsStore(
           "already-folded rows. Rebuild (PostingsStore.build).")
     }
     val newFence = batches
-    val tombs = tombstonesAll.persist()
+    val tombs = visibleTombstones("doc_id").persist()
     try {
-      val newT = broadcast(tombs.where(col("seq") > sf)
-        .select(col("doc_id").as("t_doc"), col("seq").as("tseq")))
-      val oldT = broadcast(tombs.where(col("seq") <= sf)
-        .select(col("doc_id").as("t_doc"), col("seq").as("tseq")))
+      val newT = broadcast(tombs.where(col("seq") > sf))
+      val oldT = broadcast(tombs.where(col("seq") <= sf))
       // fenced rows that died SINCE the fence: counted in stats, must
       // decrement. Rows already dead AT the fence were decremented by
       // the refit that advanced it (or physically dropped by
       // compaction) — the old-tombstone anti-join keeps them out.
-      def deadOld(all: DataFrame): DataFrame = all
-        .where(col("seq") <= sf)
-        .join(oldT, all("doc_id") === oldT("t_doc") &&
-          oldT("tseq") > all("seq"), "left_anti")
-        .join(newT, all("doc_id") === newT("t_doc") &&
-          newT("tseq") > all("seq"), "left_semi")
+      def deadOld(all: DataFrame): DataFrame = killJoin(
+        killJoin(all.where(col("seq") <= sf), oldT, "doc_id", "left_anti"),
+        newT, "doc_id", "left_semi")
       val deadTf = deadOld(withDelta("tfs"))
       val deadDl = deadOld(withDelta("doclens"))
       // live rows the stats don't cover yet (arrivals since the fence;

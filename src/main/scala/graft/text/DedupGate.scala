@@ -27,13 +27,12 @@ import org.apache.spark.sql.functions._
   * (the incremental join excludes them), so re-arrivals — including a
   * crashed batch's replay — re-admit instead of self-colliding.
   *
-  * LSM legs (shared [[graft.ann.LsmStore]] machinery): admitted band
-  * rows land seq-stamped in `bands_delta`; deletes append to the
-  * `tombstones` log (a tombstone kills band rows of its id from
-  * strictly earlier batches, so a deleted doc stops blocking future
-  * arrivals); a batch-commit record makes each batch atomic; every
-  * `compactEvery` batches the serving view folds into `$path/bands`
-  * through the crash-safe commit.
+  * LSM legs (the [[graft.ann.LsmStore]] protocol, kill rule and
+  * cadence): admitted band rows land seq-stamped in `bands_delta`;
+  * deletes append to the `tombstones` log (a deleted doc stops
+  * blocking future arrivals); a batch-commit record makes each batch
+  * atomic; every `compactEvery` batches the serving view folds into
+  * `$path/bands` through the crash-safe commit.
   *
   * Scale shape: gating cost is per-BATCH — arrivals band map-side and
   * broadcast into the stored band table (never shuffling it), the
@@ -97,24 +96,10 @@ final class DedupGate(
     * from the logs and the compaction fence). */
   def batchesSeen: Int = batches
 
-  private def emptySeqDocs: DataFrame =
-    spark.range(0).select(col("id").as("doc_id"), lit(0).as("seq"))
-
-  private def tombstones: DataFrame =
-    visibleFilter(readOr("tombstones", emptySeqDocs))
-      .select("doc_id", "seq")
-
-  /** The serving band index: persisted base + unfenced committed delta,
-    * minus tombstoned docs (t.seq > row.seq; base rows are seq 0). */
-  def servingBands: DataFrame = {
-    val all = base.withColumn("seq", lit(0))
-      .unionByName(visibleFilter(readOr("bands_delta",
-        base.limit(0).withColumn("seq", lit(0)))))
-    val t = broadcast(tombstones)
-    all.join(t, all("doc_id") === t("doc_id") && t("seq") > all("seq"),
-        "left_anti")
-      .drop("seq")
-  }
+  /** The serving band index: the shared live view
+    * ([[graft.ann.LsmStore.liveViews]]) keyed on doc_id. */
+  def servingBands: DataFrame =
+    liveViews("doc_id")(base -> "bands_delta").head
 
   /** One gated maintenance step. `arrivals` rows carry (`idCol`,
     * `textCol`, …) — extra columns ride through to `admitted`
@@ -181,7 +166,7 @@ final class DedupGate(
     // the batch becomes visible ATOMICALLY here (LsmStore doc): a crash
     // above leaves a partial batch that visibleFilter ignores
     markBatchCommitted(seq)
-    if (batches - readFence() >= compactEvery) compactNow()
+    if (compactionDueAt(batches, compactEvery)) compactNow()
     DedupGate.Result(admitted, rejected)
   }
 

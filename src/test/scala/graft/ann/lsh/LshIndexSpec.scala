@@ -179,6 +179,22 @@ class LshIndexSpec extends AnyFunSuite with SparkSpecBase {
     assert(agg === window)
   }
 
+  test("ragged or null embeddings fail the fit with a named error") {
+    val cfg = LshConfig(nTrees = 3, kMinVecs = 1, seed = 5L)
+    val ragged = Seq((1L, Seq(1.0f, 2.0f)), (2L, Seq(1.0f)))
+      .toDF("vec_id", "embedding")
+    val e1 = intercept[IllegalArgumentException] {
+      Lsh.fit(ragged, "embedding", cfg)
+    }
+    assert(e1.getMessage.contains("ragged"))
+    val withNull = Seq((1L, Some(Seq(1.0f, 2.0f))), (2L, None))
+      .toDF("vec_id", "embedding")
+    val e2 = intercept[IllegalArgumentException] {
+      Lsh.fit(withNull, "embedding", cfg)
+    }
+    assert(e2.getMessage.contains("null"))
+  }
+
   test("bucket rows: nTrees entries per vector, stats are consistent") {
     val cfg = LshConfig(nTrees = 7, kMinVecs = 2, seed = 3L)
     val idx = Lsh.train(miniDf, "vec_id", "embedding", cfg)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpecBase
 import graft.ann.ExactNN
-import graft.ann.lsh.{Lsh, LshConfig, LshMaintainer}
+import graft.ann.lsh.{Lsh, LshConfig, LshMaintainer, LshModel}
 
 /** LSH index MAINTENANCE on an upsert/delete stream — the LSH twin of
   * StreamingGraphInsertSpec, over [[LshMaintainer]]'s LSM layout
@@ -148,6 +148,73 @@ class StreamingLshLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     m2.onBatch(Some(Seq(490L -> v490).toDF("vec_id", "embedding")), None)
     assert(m2.index.vectors.where($"vec_id" === 490L).count() === 1,
       "re-added id killed by a pre-restart tombstone")
+  }
+
+  test("a partial batch (no commit record) is invisible; a retry lands at a fresh seq") {
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+      .select($"vec_id", $"embedding")
+    val base = emb.where($"vec_id" < 480)
+    val path = java.nio.file.Files
+      .createTempDirectory("lsh_lsm_atomic").toString + "/idx"
+    // single-leaf forest: candidates are total, so a search sees every
+    // served row
+    Lsh.train(base, "vec_id", "embedding",
+      LshConfig(nTrees = 2, kMinVecs = 4096, seed = 7L)).save(spark, path)
+    def vecRows(m: LshMaintainer) = m.index.vectors.select("vec_id")
+      .as[Long].collect().sorted.toSeq
+    def bucketRows(m: LshMaintainer) = m.index.buckets
+      .select("tree_id", "hash", "vec_id").as[(Int, Long, Long)]
+      .collect().sorted.toSeq
+    val queries = emb.where($"vec_id".isin(3L, 486L))
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    def served(m: LshMaintainer) = m.index.searchAll(queries, 3, 1e9, ExactNN.L2)
+      .select("vec_id").as[Long].collect().toSet
+
+    // batch 1 commits normally
+    val m = new LshMaintainer(spark, path, compactEvery = 100)
+    m.onBatch(Some(emb.where($"vec_id".between(480, 484))), None)
+    val vecs1 = vecRows(m)
+    val buckets1 = bucketRows(m)
+    assert(vecs1 === (0L until 485L))
+
+    // batch 2 CRASHES mid-write: rows land in BOTH delta tables and
+    // the tombstone log, but the commit record never does — simulate
+    // by writing the logs in onBatch's format directly
+    val arrivals2 = emb.where($"vec_id".between(485, 489))
+    arrivals2.withColumn("seq", lit(2))
+      .write.mode("append").parquet(s"$path/vectors_delta")
+    LshModel.load(spark, s"$path/model")
+      .transform(arrivals2, "vec_id", "embedding")
+      .select($"tree_id", $"hash", $"vec_id", lit(2).as("seq"))
+      .write.mode("append").parquet(s"$path/buckets_delta")
+    Seq((3L, 2)).toDF("vec_id", "seq")
+      .write.mode("append").parquet(s"$path/tombstones")
+    // invisible: no uncommitted vector or bucket row is served, and the
+    // uncommitted tombstone kills nothing
+    assert(vecRows(m) === vecs1, "uncommitted vectors_delta rows served")
+    assert(bucketRows(m) === buckets1, "uncommitted buckets_delta rows served")
+    val served1 = served(m)
+    assert(served1.contains(3L) && served1.forall(_ < 485L),
+      s"search served: $served1")
+
+    // a reconstructed maintainer counts the orphan seq, so the retry
+    // cannot collide with the partial rows
+    val m2 = new LshMaintainer(spark, path, compactEvery = 100)
+    assert(m2.batchesSeen === 2, s"seq: ${m2.batchesSeen}")
+    assert(vecRows(m2) === vecs1)
+    m2.onBatch(Some(arrivals2), Some(Seq(3L).toDF("vec_id")))
+    assert(m2.batchesSeen === 3)
+    val expected = (0L until 490L).filter(_ != 3L)
+    // each id exactly once: the orphan seq-2 rows stay invisible beside
+    // the retried seq-3 rows
+    assert(vecRows(m2) === expected, "retried batch wrong")
+    assert(bucketRows(m2).map(_._3).sorted === expected.flatMap(i => Seq(i, i)))
+    val served2 = served(m2)
+    assert(served2.contains(486L) && !served2.contains(3L), s"$served2")
+    // compaction folds only the committed truth (orphans dropped)
+    m2.compactNow()
+    assert(Lsh.load(spark, path).vectors.select("vec_id").as[Long]
+      .collect().sorted.toSeq === expected)
   }
 
   test("refitNow retrains on the live view and restores the occupancy envelope") {
