@@ -143,7 +143,7 @@ object AutoTune {
     val (gt, ownGt) = gtOpt match {
       case Some(g) => (g.select("query_id", "vec_id"), false)
       case None =>
-        val g = ExactNN.topKAgg(queries, corpus, k, metric)
+        val g = ExactNN.topK(queries, corpus, k, metric)
           .select("query_id", "vec_id").persist()
         g.count()
         (g, true)
@@ -256,7 +256,7 @@ object AutoTune {
     graft.ann.TopK.perQueryTopK(
       scored.where(col("probe_rank") < p)
         .select("query_id", "vec_id", "dist"),
-      k, viaAggregator = true)
+      k)
 
   /** EVERY arm's predictions of the shared-scan sweep as ONE frame
     * (arm, query_id, vec_id, dist) — the certification-dump form: the
@@ -423,7 +423,7 @@ object AutoTune {
       arms.map(m => TopK.perQueryTopK(
           scored.where(col("min_rank") < m)
             .select("query_id", "vec_id", "dist"),
-          k, viaAggregator = true)
+          k)
         .withColumn("arm", lit(m)))
         .reduce(_ unionByName _)
         .select(col("arm"), col("query_id"), col("vec_id"), col("dist")))

@@ -14,18 +14,15 @@ private[ann] object CandidateScoring {
 
   def scoreTopK(cands: DataFrame, vectors: DataFrame, queries: DataFrame,
                 k: Int, threshold: Option[Double], metric: ExactNN.Metric,
-                roundTo: Int, topKViaAggregator: Boolean): DataFrame = {
+                roundTo: Int): DataFrame = {
     val scored0 = cands
       .join(vectors, "vec_id")
       .join(broadcast(queries.select(col("query_id"), col("qv"))), "query_id")
       .select(col("query_id"), col("vec_id"),
         round(metric.dist(col("qv"), col("embedding")), roundTo).as("dist"))
     val scored = threshold.fold(scored0)(t => scored0.where(col("dist") <= t))
-    // The bounded TopK partial aggregation is the default tail —
     // per-query shuffle capped at numPartitions * k instead of every
-    // scored candidate, the form that survives a 100x candidate
-    // scale-up; viaAggregator=false restores the row_number() window
-    // (row-identical, TopKSpec) for plan comparison.
-    TopK.perQueryTopK(scored, k, topKViaAggregator)
+    // scored candidate — the form that survives a 100x candidate scale-up
+    TopK.perQueryTopK(scored, k)
   }
 }

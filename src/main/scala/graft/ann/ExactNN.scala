@@ -12,10 +12,11 @@ import graft.functions.exprs
   * Spark-first shape: the (small) query set is **broadcast**, the corpus
   * scan stays distributed, so the cross join is a
   * BroadcastNestedLoopJoin with no shuffle of the corpus; the only shuffle
-  * is the per-query top-k window, which moves at most
-  * `numQueries * perPartitionCandidates` rows. At 100 TB this is the
-  * pattern that survives: corpus-partition-parallel distance evaluation,
-  * tiny state per query.
+  * is the bounded per-query top-k ([[TopK.perQueryTopK]]): each corpus
+  * partition keeps at most k candidates per query map-side, so the
+  * shuffle moves `numPartitions * k` rows per query, not the scored
+  * corpus. At 100 TB this is the pattern that survives:
+  * corpus-partition-parallel distance evaluation, tiny state per query.
   *
   * Determinism: ties broken by `vec_id` (the reference leaves ties
   * heap-order-arbitrary, lsh/lsh.go:192-195 — we pin them so results are
@@ -46,15 +47,6 @@ object ExactNN {
   def topK(queries: DataFrame, corpus: DataFrame, k: Int, metric: Metric = L2,
            threshold: Option[Double] = None, roundTo: Int = 6): DataFrame =
     TopK.perQueryTopK(scored(queries, corpus, metric, threshold, roundTo), k)
-
-  /** Same result via the [[TopK]] partial aggregation: each corpus
-    * partition keeps at most k candidates per query map-side, so the
-    * per-query shuffle is `numPartitions * k` rows instead of the whole
-    * scored corpus — the form that survives a 100x corpus scale-up. */
-  def topKAgg(queries: DataFrame, corpus: DataFrame, k: Int, metric: Metric = L2,
-              threshold: Option[Double] = None, roundTo: Int = 6): DataFrame =
-    TopK.perQueryTopK(scored(queries, corpus, metric, threshold, roundTo), k,
-      viaAggregator = true)
 
   private def scored(queries: DataFrame, corpus: DataFrame, metric: Metric,
                      threshold: Option[Double], roundTo: Int): DataFrame = {

@@ -533,7 +533,7 @@ final class GraphMaintainer(
         Some(TopK.perQueryTopK(
             rescore(bridges).select(col("src").as("query_id"),
               col("dst").as("vec_id"), col("dist")),
-            maxReverseDegree, viaAggregator = true)
+            maxReverseDegree)
           .select(col("query_id").as("src"), col("vec_id").as("dst"))
           .localCheckpoint())
       }
@@ -545,7 +545,7 @@ final class GraphMaintainer(
     val cut = TopK.perQueryTopK(
         scored.select(col("src").as("query_id"), col("dst").as("vec_id"),
           col("dist")),
-        k, viaAggregator = true)
+        k)
       .select(col("query_id").as("src"), col("vec_id").as("dst"),
         col("dist"))
     val refined = NnDescent.refine(cut, live, idCol, vecCol, k, metric,
@@ -635,7 +635,7 @@ final class GraphMaintainer(
     * Untouched subgraph rows are BYTE-IDENTICAL afterwards — nothing
     * outside the region is rewritten (GraphScopedRefineSpec pins it),
     * and both compute and write cost scale with the region, not the
-    * corpus (GraphRefineScaleProbe measures it). READ cost is
+    * corpus (measured in SCALE.md §Index lifecycle). READ cost is
     * region-scaled too when the region fits under [[scopePruneMax]]:
     * the region ids are collected (bounded) and every edge-table pass
     * — the hop expansions, the reverse-hop seed scan, the touched
@@ -692,7 +692,7 @@ final class GraphMaintainer(
     // UNBOUNDED driver-side literal stays intact.
     // Size dispatch (the FilteredSearch idiom): pruning trades per-hop
     // bounded collects + InSet planning for scan bytes. Measured at 1M
-    // (GraphRefineScaleProbe --compare, same process, twin stores,
+    // (SCALE.md §Index lifecycle, same process, twin stores,
     // ~0.25 GB table): the page-cached full scans are FASTER than the
     // collect overhead (scoped refine 12.5 s vs 13.9 s at batch=100,
     // 17.1 s vs 22.3 s at 1k) — so below `scopePruneMinBytes` the
@@ -859,7 +859,7 @@ final class GraphMaintainer(
         Some(TopK.perQueryTopK(
             rescore(bridges).select(col("src").as("query_id"),
               col("dst").as("vec_id"), col("dist")),
-            maxReverseDegree, viaAggregator = true)
+            maxReverseDegree)
           .select(col("query_id").as("src"), col("vec_id").as("dst"))
           .localCheckpoint(eager = false))
       }
@@ -873,7 +873,7 @@ final class GraphMaintainer(
     val cut = TopK.perQueryTopK(
         rescore(candEdges).select(col("src").as("query_id"),
           col("dst").as("vec_id"), col("dist")),
-        k, viaAggregator = true)
+        k)
       .select(col("query_id").as("src"), col("vec_id").as("dst"),
         col("dist"))
     val refined = NnDescent.refine(cut, vecsNeeded, idCol, vecCol, k,
@@ -1007,7 +1007,7 @@ object GraphMaintainer {
     * (the fence), checked right after each scheduled scoped refine —
     * the [[LsmStore.DefaultCompactEvery]] treatment applied to the
     * graph store, read off the measured serve-latency-vs-log-depth
-    * curve (GraphFoldDepthProbe at 200k × 64-d, SCALE.md): beam serves
+    * curve (200k × 64-d, SCALE.md §Index lifecycle): beam serves
     * degrade gently but monotonically with unfolded batches (6.1 s at
     * depth 0 → 7.3 s at 16 → 8.0 s at 32 → 8.2 s at 64; the folded
     * store serves the same set at 5.4 s), so the walk compute hides
@@ -1034,7 +1034,7 @@ object GraphMaintainer {
   /** Minimum stored-table size before the scoped refine switches to
     * the pruned-scan form — the prune-vs-scan dispatch threshold.
     * Pruning costs a few bounded driver collects + InSet planning per
-    * refine (measured ~1.4-5 s at 1M, GraphRefineScaleProbe --compare)
+    * refine (measured ~1.4-5 s at 1M, SCALE.md §Index lifecycle)
     * and saves scan BYTES (scopeHops + 2 table passes per refine).
     * On a ~0.25 GB page-cached local table the scans cost less than
     * the collects, so the semi-join form wins (12.5 s vs 13.9 s at

@@ -147,7 +147,7 @@ object GraphSearch {
     val revEdges = TopK.perQueryTopK(
         outEdges.select(col("dst").as("query_id"), col("src").as("vec_id"),
           col("dist")),
-        maxReverseDegree, viaAggregator = true)
+        maxReverseDegree)
       .select(col("query_id").as("src"), col("vec_id").as("dst"), col("dist"))
     graph.select(col("src"), col("dst"), col("dist"))
       .unionByName(outEdges)
@@ -290,7 +290,8 @@ object GraphSearch {
     * polylog). Production graph serving seeds the walk from a coarse
     * index instead — LSH bucket probes or IVF cells supply each query a
     * locally-relevant entry set, and the graph walk expands/refines it
-    * (the DiskANN-style composition; measured in GraphScaleProbe:
+    * (the DiskANN-style composition; measured in SCALE.md §k-NN-graph
+    * scale probe:
     * LSH-seeded entries at 100k restore recall 1.000 at ~23-37 ms/query
     * batched, vs 0.02 for 32 global entries on the same graph and
     * protocol).
@@ -336,7 +337,7 @@ object GraphSearch {
     * SMALL relative to the bucket count. A batch of 1000 queries ×
     * beam 32 hits every bucket of a 64-bucket 1M-node store and pays
     * the per-hop collects + InSet planning for nothing — measured
-    * 143 s vs 12 s full-scan (BeamPruneProbe). Keep the default 0
+    * 143 s vs 12 s full-scan (SCALE.md §Index lifecycle). Keep the default 0
     * (off) for batched serving; consider it only for few-query
     * low-latency lookups against stores whose bucket count dwarfs
     * queries × beamWidth (and measure — the refine-side twin,
@@ -512,7 +513,8 @@ object GraphSearch {
           // frontier×degree dst set can reach hundreds of thousands of
           // ids, and an In expression that size costs more in analysis
           // + task-closure shipping than the scan it prunes (measured,
-          // BeamPruneProbe) — past the cap only the edge read prunes
+          // SCALE.md §Index lifecycle) — past the cap only the edge
+          // read prunes
           val dstIds = collectIds(slice.select(col("dst")), pruneScanMax)
           (slice, dstIds.map(d => (d ++ ids).distinct))
         case None => (und, None)
@@ -839,7 +841,7 @@ object GraphSearch {
       val excl = excluded.fold(subset)(t =>
         subset.join(broadcast(t.select(col("vec_id"))), Seq("vec_id"),
           "left_anti"))
-      ExactNN.topKAgg(queries.select(col("query_id"), col("qv")), excl, k,
+      ExactNN.topK(queries.select(col("query_id"), col("qv")), excl, k,
         metric, roundTo = roundTo)
     } else beamFrom(graph, vectors, idCol, vecCol, queries, entries, k,
       beamWidth, hops, metric, roundTo, symmetrize, excluded, Some(allowed))

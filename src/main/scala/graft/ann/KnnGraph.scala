@@ -49,7 +49,7 @@ object KnnGraph {
       .where(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
         round(metric.dist(col("sv"), col("dv")), roundTo).as("dist"))
-    TopK.perQueryTopK(scored, k, viaAggregator = true)
+    TopK.perQueryTopK(scored, k)
       .select(col("query_id").as("src"), col("vec_id").as("dst"), col("dist"))
   }
 
@@ -76,7 +76,7 @@ object KnnGraph {
       .select(col("vec_a").as("query_id"), col("vec_b").as("vec_id"), col("dist"))
       .unionByName(scoredPairs
         .select(col("vec_b").as("query_id"), col("vec_a").as("vec_id"), col("dist")))
-    TopK.perQueryTopK(sym, k, viaAggregator = true)
+    TopK.perQueryTopK(sym, k)
       .select(col("query_id").as("src"), col("vec_id").as("dst"), col("dist"))
   }
 
@@ -117,7 +117,7 @@ object KnnGraph {
       .select(col("vec_a").as("query_id"), col("vec_b").as("vec_id"), col("dist"))
       .unionByName(scoredPairs
         .select(col("vec_b").as("query_id"), col("vec_a").as("vec_id"), col("dist")))
-    TopK.perQueryTopK(sym, k, viaAggregator = true)
+    TopK.perQueryTopK(sym, k)
       .select(col("query_id").as("src"), col("vec_id").as("dst"), col("dist"))
   }
 

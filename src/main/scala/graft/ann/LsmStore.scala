@@ -632,7 +632,7 @@ private[graft] trait VectorLsmStore extends LsmStore {
 
 object LsmStore {
   /** Default compaction cadence, read off the measured serve-latency-
-    * vs-log-depth curve (LifecycleScaleProbe at 1M×64-d, SCALE.md):
+    * vs-log-depth curve (1M×64-d, SCALE.md §Index lifecycle):
     * view searches are FLAT through ~25 batches of logs (3.0 → 3.4 s),
     * then small-fragment overhead compounds (5.0 s at 50, 7.4 s at
     * 100, vs a 2.0 s compacted baseline). 32 sits at the knee: serve

@@ -55,13 +55,13 @@ object Matryoshka {
       slice(col("qv"), 1, prefixDims).as("qv"))
     val tc = corpus.select(col("vec_id"),
       slice(col("embedding"), 1, prefixDims).as("embedding"))
-    val cands = ExactNN.topKAgg(tq, tc, rerankDepth, metric, None, roundTo)
+    val cands = ExactNN.topK(tq, tc, rerankDepth, metric, None, roundTo)
       .select("query_id", "vec_id")
     val rescored = corpus
       .join(broadcast(cands), "vec_id")
       .join(broadcast(queries), "query_id")
       .select(col("query_id"), col("vec_id"),
         round(metric.dist(col("qv"), col("embedding")), roundTo).as("dist"))
-    TopK.perQueryTopK(rescored, k, viaAggregator = true)
+    TopK.perQueryTopK(rescored, k)
   }
 }

@@ -82,7 +82,7 @@ object NnDescent {
       val rev = TopK.perQueryTopK(
           graph.select(col("dst").as("query_id"), col("src").as("vec_id"),
             col("dist")),
-          revCap, viaAggregator = true)
+          revCap)
         .select(col("query_id").as("center"), col("vec_id").as("member"))
       // 2. General neighbors: center -> member, both directions.
       val gen = graph.select(col("src").as("center"), col("dst").as("member"))
@@ -106,7 +106,7 @@ object NnDescent {
       val merged = graph.unionByName(scored)
         .select(col("src").as("query_id"), col("dst").as("vec_id"),
           col("dist"))
-      graph = TopK.perQueryTopK(merged, k, viaAggregator = true)
+      graph = TopK.perQueryTopK(merged, k)
         .select(col("query_id").as("src"), col("vec_id").as("dst"),
           col("dist"))
       it += 1

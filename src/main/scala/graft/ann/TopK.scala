@@ -2,23 +2,25 @@ package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-/** Distributed per-key top-k as a partial aggregation instead of a window
-  * sort — the 100 TB-scale form of the reference's min-heap top-k
+/** Distributed per-key top-k as a partial aggregation — the engine's one
+  * top-k, the 100 TB-scale form of the reference's min-heap top-k
   * (lsh/lsh.go:22-45,192-195; SURVEY.md §2 O13f "v2").
   *
-  * `row_number() OVER (PARTITION BY query ORDER BY dist)` must shuffle
-  * EVERY scored candidate row to sort it; this Aggregator keeps a bounded
-  * buffer of the best k per (partition, query) map-side, so the shuffle
-  * moves at most `numPartitions * k` rows per query regardless of corpus
-  * size. At 1000 executors over 100 TB that is the difference between
-  * shuffling the corpus and shuffling kilobytes.
+  * A `row_number() OVER (PARTITION BY query ORDER BY dist)` window must
+  * shuffle EVERY scored candidate row to sort it; this Aggregator keeps a
+  * bounded buffer of the best k per (partition, query) map-side, so the
+  * shuffle moves at most `numPartitions * k` rows per query regardless of
+  * corpus size — a local top-k per partition, then one global merge.
   *
   * Determinism: ordering is (dist, vec_id) everywhere — including the
   * capacity eviction — so the result is identical to the window
-  * formulation (ties pinned by vec_id, SURVEY.md §7.4).
+  * formulation (ties pinned by vec_id, SURVEY.md §7.4; TopKSpec keeps
+  * the window as its reference). A pair whose distance is NULL (the
+  * distance kernels' answer for a NULL or different-length vector) is
+  * not a neighbour and is skipped.
   *
   * The buffer is a pair of primitive arrays (ids, dists) kept sorted,
   * mutated in place: Spark holds a TypedImperativeAggregate's buffer as a
@@ -31,6 +33,10 @@ import org.apache.spark.sql.functions._
 object TopK {
 
   final case class Neighbor(vec_id: Long, dist: Double)
+
+  /** Aggregator input: the distance is boxed so a NULL stays NULL
+    * instead of arriving as 0.0. */
+  final case class Scored(vec_id: Long, dist: java.lang.Double)
 
   /** Mutable bounded buffer: the first `size` slots of (ids, dists) are
     * filled, sorted ascending by (dist, id). */
@@ -47,7 +53,7 @@ object TopK {
     *   re-insert fails the same rank test), so merge order cannot
     *   resurrect or double-count anything. */
   final class TopKAggregator(k: Int, dedupPairs: Boolean = false)
-      extends Aggregator[Neighbor, Buf, Seq[Neighbor]] {
+      extends Aggregator[Scored, Buf, Seq[Neighbor]] {
 
     override def zero: Buf = Buf(0, new Array[Long](k), new Array[Double](k))
 
@@ -88,8 +94,8 @@ object TopK {
       }
     }
 
-    override def reduce(b: Buf, n: Neighbor): Buf = {
-      add(b, n.vec_id, n.dist)
+    override def reduce(b: Buf, n: Scored): Buf = {
+      if (n.dist != null) add(b, n.vec_id, n.dist)
       b
     }
 
@@ -112,7 +118,7 @@ object TopK {
   /** Column form: `topK(k)(vec_id, dist)` aggregates to
     * `array<struct<vec_id, dist>>` ascending by (dist, vec_id). */
   def topK(k: Int): (Column, Column) => Column = {
-    val agg = udaf(new TopKAggregator(k), Encoders.product[Neighbor])
+    val agg = udaf(new TopKAggregator(k), Encoders.product[Scored])
     (id: Column, dist: Column) => agg(id, dist)
   }
 
@@ -122,33 +128,28 @@ object TopK {
     * tail, where every hop otherwise pays a dedicated dedup exchange. */
   def topKDistinct(k: Int): (Column, Column) => Column = {
     val agg = udaf(new TopKAggregator(k, dedupPairs = true),
-      Encoders.product[Neighbor])
+      Encoders.product[Scored])
     (id: Column, dist: Column) => agg(id, dist)
   }
 
   /** Per-query top-k over a scored (query_id, vec_id, dist) frame — the
-    * shared tail of every search (exact, LSH, IVF). Both forms return
-    * row-identical results (ties pinned by vec_id):
-    *
-    *   - `viaAggregator = false`: `row_number()` window. Relies on
-    *     WindowGroupLimit pushdown to prune; shuffles every scored row.
-    *   - `viaAggregator = true`: the [[TopKAggregator]] partial
-    *     aggregation — per-query shuffle bounded at `numPartitions * k`
-    *     rows, the form that survives a 100x candidate-count scale-up.
-    */
+    * shared tail of every search (exact, LSH, IVF, the quantized scans):
+    * (query_id, vec_id, dist), at most k rows per query ascending by
+    * (dist, vec_id). */
+  def perQueryTopK(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .groupBy("query_id")
+      .agg(topK(k)(col("vec_id"), col("dist")).as("nn"))
+      .select(col("query_id"), explode(col("nn")).as("n"))
+      .select(col("query_id"), col("n.vec_id").as("vec_id"),
+        col("n.dist").as("dist"))
+
+  /** Compatibility forwarder that exists only for the benchmark harness
+    * (`lshbench/`), which still passes the retired window/aggregator
+    * flag. The flag is ignored: the aggregator is the only form. */
+  @deprecated("the aggregator is the only form; call perQueryTopK(scored, k)",
+    "0.1.0")
   def perQueryTopK(scored: DataFrame, k: Int,
-                   viaAggregator: Boolean = false): DataFrame =
-    if (viaAggregator)
-      scored
-        .groupBy("query_id")
-        .agg(topK(k)(col("vec_id"), col("dist")).as("nn"))
-        .select(col("query_id"), explode(col("nn")).as("n"))
-        .select(col("query_id"), col("n.vec_id").as("vec_id"),
-          col("n.dist").as("dist"))
-    else {
-      val w = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-      scored.withColumn("rn", row_number().over(w))
-        .where(col("rn") <= k)
-        .select("query_id", "vec_id", "dist")
-    }
+                   viaAggregator: Boolean): DataFrame =
+    perQueryTopK(scored, k)
 }

@@ -122,14 +122,13 @@ final class BqIndex(val model: BqModel, val codes: DataFrame) {
   def searchHamming(queries: DataFrame, k: Int,
                     codesFilter: Option[Column] = None): DataFrame = {
     val qc = queries.select(col("query_id"), model.encodeCol(col("qv")).as("qc"))
-    codesFilter.fold(codes)(f => codes.where(f)).crossJoin(broadcast(qc))
+    val scored = codesFilter.fold(codes)(f => codes.where(f))
+      .crossJoin(broadcast(qc))
       .select(col("query_id"), col("vec_id"),
         model.hammingCol(col("qc"), col("codes")).cast(DoubleType).as("dist"))
-      .groupBy("query_id")
-      .agg(TopK.topK(k)(col("vec_id"), col("dist")).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("n"))
-      .select(col("query_id"), col("n.vec_id").as("vec_id"),
-        col("n.dist").cast(LongType).as("hamming"))
+    TopK.perQueryTopK(scored, k)
+      .select(col("query_id"), col("vec_id"),
+        col("dist").cast(LongType).as("hamming"))
   }
 
   /** The BQ deployment shape: Hamming scan retrieves `rerankDepth`
@@ -156,11 +155,7 @@ final class BqIndex(val model: BqModel, val codes: DataFrame) {
       .join(broadcast(queries.select(col("query_id"), col("qv"))), "query_id")
       .select(col("query_id"), col("vec_id"),
         round(metric.dist(col("qv"), col("embedding")), roundTo).as("dist"))
-    exact.groupBy("query_id")
-      .agg(TopK.topK(k)(col("vec_id"), col("dist")).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("n"))
-      .select(col("query_id"), col("n.vec_id").as("vec_id"),
-        col("n.dist").as("dist"))
+    TopK.perQueryTopK(exact, k)
   }
 
   /** Serve-time delete view (tombstone pattern, semantics and scale

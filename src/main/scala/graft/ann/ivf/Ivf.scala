@@ -224,14 +224,11 @@ final class IvfIndex(
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Batch ANN search: probe nProbe cells per query, exact distance over
-    * the candidates, per-query top-k (deterministic vec_id tiebreak).
-    * The bounded TopK partial aggregation is the default tail (per-query
-    * shuffle capped at numPartitions * k — the 100x-scale form);
-    * `topKViaAggregator = false` restores the row_number() window,
-    * row-identical per TopKSpec (see [[graft.ann.TopK.perQueryTopK]]). */
+    * the candidates, bounded per-query top-k
+    * ([[graft.ann.TopK.perQueryTopK]]: per-query shuffle capped at
+    * numPartitions * k; deterministic vec_id tiebreak). */
   def searchAll(queries: DataFrame, k: Int,
                 metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
-                topKViaAggregator: Boolean = true,
                 allowed: Option[DataFrame] = None): DataFrame = {
     val cands = probedCandidates(queries)
     // Constrained search: the allow-list filter sits between cell
@@ -249,7 +246,7 @@ final class IvfIndex(
     // density-aware dispatch).
     val filtered = allowed.fold(cands)(a =>
       filterCandidates(cands, a.select("vec_id")))
-    scoreTopK(filtered, queries, k, metric, roundTo, topKViaAggregator)
+    scoreTopK(filtered, queries, k, metric, roundTo)
   }
 
   /** Candidate retrieval (cell probe join) — shared with the
@@ -268,10 +265,9 @@ final class IvfIndex(
       .dropDuplicates("query_id", "vec_id")
 
   private def scoreTopK(cands: DataFrame, queries: DataFrame, k: Int,
-                        metric: ExactNN.Metric, roundTo: Int,
-                        topKViaAggregator: Boolean): DataFrame =
+                        metric: ExactNN.Metric, roundTo: Int): DataFrame =
     graft.ann.CandidateScoring.scoreTopK(cands, vectors, queries, k, None,
-      metric, roundTo, topKViaAggregator)
+      metric, roundTo)
 
   /** Label-partitioned view of this index (see [[LabeledIvfIndex]] and
     * the [[graft.ann.lsh.LshIndex.withLabels]] twin): the SAME fitted
@@ -326,12 +322,11 @@ final class IvfIndex(
     * Results are allowed-only by construction. */
   def searchAllScoped(queries: DataFrame, allowed: DataFrame, k: Int,
                       metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
-                      nProbe: Int = 0,
-                      topKViaAggregator: Boolean = true): DataFrame =
+                      nProbe: Int = 0): DataFrame =
     scopedTo(allowed).searchAllLabeled(
       queries.withColumn("label",
         lit(graft.ann.FilteredSearch.ScopedLabel)),
-      k, metric, roundTo, topKViaAggregator, nProbe = nProbe)
+      k, metric, roundTo, nProbe = nProbe)
 
   /** Per-query count of ALLOWED rows among the query's `beamWidth`
     * NEAREST candidates in its own (nearest) cell — the IVF density
@@ -466,7 +461,7 @@ final class IvfIndex(
     // pass and the own-cell estimator entirely — the call only routes.
     val ids = allowed.select("vec_id").dropDuplicates("vec_id")
     def exactSubset: DataFrame =
-      ExactNN.topKAgg(queries, vectors.join(ids, "vec_id"), k, metric,
+      ExactNN.topK(queries, vectors.join(ids, "vec_id"), k, metric,
         roundTo = roundTo)
     // one ladder, via the pre-deduped twin (the LshIndex rule)
     val d = decision.getOrElse(

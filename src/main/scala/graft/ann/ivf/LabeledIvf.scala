@@ -86,7 +86,6 @@ final class LabeledIvfIndex(
     * mass. Same scoring tail as [[IvfIndex.searchAll]]. */
   def searchAllLabeled(queries: DataFrame, k: Int,
                        metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
-                       topKViaAggregator: Boolean = true,
                        probes: Option[DataFrame] = None,
                        nProbe: Int = 0): DataFrame = {
     val pr = probes.getOrElse(scopedProbeRows(queries, nProbe, metric))
@@ -96,7 +95,7 @@ final class LabeledIvfIndex(
       .select("query_id", "vec_id")
       .dropDuplicates("query_id", "vec_id")
     CandidateScoring.scoreTopK(cands, vectors, queries, k, None, metric,
-      roundTo, topKViaAggregator)
+      roundTo)
   }
 
   /** Serve-time delete view (the tombstone pattern; sidecar-staleness

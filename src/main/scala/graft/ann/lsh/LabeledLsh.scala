@@ -124,7 +124,6 @@ final class LabeledLshIndex(
     * frame (the oracle-row pattern); otherwise they are derived here. */
   def searchAllLabeled(queries: DataFrame, k: Int, distanceThreshold: Double,
                        metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
-                       topKViaAggregator: Boolean = true,
                        probes: Option[DataFrame] = None,
                        maxProbeBuckets: Int =
                          LabeledLshIndex.DefaultMaxProbeBuckets): DataFrame = {
@@ -136,7 +135,7 @@ final class LabeledLshIndex(
       .select("query_id", "vec_id")
       .dropDuplicates("query_id", "vec_id")
     CandidateScoring.scoreTopK(cands, vectors, queries, k,
-      Some(distanceThreshold), metric, roundTo, topKViaAggregator)
+      Some(distanceThreshold), metric, roundTo)
   }
 
   /** Serve-time delete view (the [[LshIndex.withDeletes]] tombstone

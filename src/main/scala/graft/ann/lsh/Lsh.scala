@@ -224,8 +224,9 @@ final class LshIndex(
     *      point, SURVEY.md §4);
     *   3. dedup (query_id, vec_id) — reference closestSet (lsh.go:169-171);
     *   4. vec join + distance + threshold filter (lsh.go:172-177);
-    *   5. per-query top-k window (reference min-heap pop, lsh.go:192-195),
-    *      ties pinned by vec_id for determinism.
+    *   5. bounded per-query top-k ([[graft.ann.TopK.perQueryTopK]], the
+    *      reference min-heap pop, lsh.go:192-195), ties pinned by vec_id
+    *      for determinism.
     *
     * Deviation (SURVEY.md §7.4): the reference's `MaxCandidates` early
     * exit is nondeterministic (Go map iteration order decides which
@@ -241,7 +242,6 @@ final class LshIndex(
   def searchAll(queries: DataFrame, k: Int, distanceThreshold: Double,
                 metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
                 maxCandidates: Option[Int] = None,
-                topKViaAggregator: Boolean = true,
                 allowed: Option[DataFrame] = None): DataFrame = {
     val uncapped = probedCandidates(queries)
     // Constrained (metadata-filtered) search: the (vec_id) allow-list —
@@ -276,8 +276,7 @@ final class LshIndex(
       filtered.withColumn("crn", row_number().over(cw))
         .where(col("crn") <= cap).drop("crn")
     }
-    scoreTopK(cands, queries, k, distanceThreshold, metric, roundTo,
-      topKViaAggregator)
+    scoreTopK(cands, queries, k, distanceThreshold, metric, roundTo)
   }
 
   /** Candidate retrieval — steps 1-3 of [[searchAll]]'s pipeline,
@@ -319,10 +318,9 @@ final class LshIndex(
     * [[graft.ann.CandidateScoring.scoreTopK]] shared tail. */
   private def scoreTopK(cands: DataFrame, queries: DataFrame, k: Int,
                         distanceThreshold: Double, metric: ExactNN.Metric,
-                        roundTo: Int,
-                        topKViaAggregator: Boolean): DataFrame =
+                        roundTo: Int): DataFrame =
     graft.ann.CandidateScoring.scoreTopK(cands, vectors, queries, k,
-      Some(distanceThreshold), metric, roundTo, topKViaAggregator)
+      Some(distanceThreshold), metric, roundTo)
 
   /** Label-partitioned view of this index — the IN-FAMILY remediation
     * the density dispatch's `probe_starved` / bimodal warnings name
@@ -395,12 +393,11 @@ final class LshIndex(
                       distanceThreshold: Double,
                       metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
                       maxProbeBuckets: Int =
-                        LabeledLshIndex.DefaultMaxProbeBuckets,
-                      topKViaAggregator: Boolean = true): DataFrame =
+                        LabeledLshIndex.DefaultMaxProbeBuckets): DataFrame =
     scopedTo(allowed).searchAllLabeled(
       queries.withColumn("label",
         lit(graft.ann.FilteredSearch.ScopedLabel)),
-      k, distanceThreshold, metric, roundTo, topKViaAggregator,
+      k, distanceThreshold, metric, roundTo,
       maxProbeBuckets = maxProbeBuckets)
 
   /** Per-query count of ALLOWED rows among the query's `beamWidth`
@@ -539,7 +536,7 @@ final class LshIndex(
     * geometry-correlated filter). Dispatch rule
     * ([[graft.ann.FilteredSearch.useExactScan]]): when the allow-list
     * is at most `maxExactFraction` of the corpus, brute-force the
-    * allowed subset exactly — [[ExactNN.topKAgg]]'s broadcast-queries
+    * allowed subset exactly — [[ExactNN.topK]]'s broadcast-queries
     * scan over only the allowed rows, recall 1.0 by construction and
     * cheap precisely because the filter is selective; otherwise run the
     * probe-then-filter path ([[searchAll]] with `allowed`). Both counts
@@ -621,7 +618,7 @@ final class LshIndex(
     // when small), then ExactNN's broadcast-queries scan + bounded
     // top-k tail runs over just that subset
     def exactSubset: DataFrame =
-      ExactNN.topKAgg(queries, vectors.join(ids, "vec_id"), k, metric,
+      ExactNN.topK(queries, vectors.join(ids, "vec_id"), k, metric,
         threshold = Some(distanceThreshold), roundTo = roundTo)
     // one ladder (FilteredSearch.decide, via the pre-deduped twin):
     // the selectivity short-circuit and the dispatch-off default both

@@ -160,11 +160,7 @@ final class PqIndex(val model: PqModel, val codes: DataFrame) {
       .select(col("query_id"), col("vec_id"),
         round(PqExpressions.pqAdcDist(tables, col("query_id"), col("codes")),
           roundTo).as("dist"))
-    scored.groupBy("query_id")
-      .agg(TopK.topK(k)(col("vec_id"), col("dist")).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("n"))
-      .select(col("query_id"), col("n.vec_id").as("vec_id"),
-        col("n.dist").as("dist"))
+    TopK.perQueryTopK(scored, k)
   }
 
   /** Serve-time delete view (tombstone pattern, semantics and scale
@@ -310,11 +306,7 @@ object Pq {
       .join(broadcast(queries.select(col("query_id"), col("qv"))), "query_id")
       .select(col("query_id"), col("vec_id"),
         round(distCol, roundTo).as("dist"))
-    exact.groupBy("query_id")
-      .agg(TopK.topK(k)(col("vec_id"), col("dist")).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("n"))
-      .select(col("query_id"), col("n.vec_id").as("vec_id"),
-        col("n.dist").as("dist"))
+    TopK.perQueryTopK(exact, k)
   }
 
   def train(df: DataFrame, idCol: String, vecCol: String,

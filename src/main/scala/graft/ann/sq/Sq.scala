@@ -116,11 +116,7 @@ final class SqIndex(val model: SqModel, val codes: DataFrame) {
       .select(col("query_id"), col("vec_id"),
         round(graft.functions.exprs.l2DistNative(col("qv"), col("dec")),
           roundTo).as("dist"))
-    scored.groupBy("query_id")
-      .agg(TopK.topK(k)(col("vec_id"), col("dist")).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("n"))
-      .select(col("query_id"), col("n.vec_id").as("vec_id"),
-        col("n.dist").as("dist"))
+    TopK.perQueryTopK(scored, k)
   }
 
   /** The SQ deployment shape: the quantized scan retrieves `rerankDepth`
@@ -138,11 +134,7 @@ final class SqIndex(val model: SqModel, val codes: DataFrame) {
       .select(col("query_id"), col("vec_id"),
         round(graft.functions.exprs.l2DistNative(col("qv"), col("embedding")),
           roundTo).as("dist"))
-    exact.groupBy("query_id")
-      .agg(TopK.topK(k)(col("vec_id"), col("dist")).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("n"))
-      .select(col("query_id"), col("n.vec_id").as("vec_id"),
-        col("n.dist").as("dist"))
+    TopK.perQueryTopK(exact, k)
   }
 
   /** Serve-time delete view (tombstone pattern, semantics and scale

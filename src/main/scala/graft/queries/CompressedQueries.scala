@@ -458,7 +458,7 @@ object CompressedQueries extends QueryPack {
             () => idx.filteredDecision(q, allowed, K,
               allowedCount = Some(cntRow.getLong(i + 1)),
               corpusCount = Some(nCorpus)),
-            () => ExactNN.topKAgg(q,
+            () => ExactNN.topK(q,
                 e.where(pred).select(col("vec_id"), col("embedding")), K,
                 ExactNN.L2)
               .localCheckpoint())
@@ -536,8 +536,7 @@ object CompressedQueries extends QueryPack {
       val legs = inParallel(
         () => probes.exceptAll(fresh)
           .unionByName(fresh.exceptAll(probes)).isEmpty,
-        () => graft.ann.TopK.perQueryTopK(gtScored, K,
-          viaAggregator = true).localCheckpoint())
+        () => graft.ann.TopK.perQueryTopK(gtScored, K).localCheckpoint())
       val probesOk = legs(0).asInstanceOf[Boolean]
       val gt = legs(1).asInstanceOf[DataFrame]
       val pred = store.searchAllLabeled(q, K, ExactNN.L2,
@@ -583,7 +582,7 @@ object CompressedQueries extends QueryPack {
           .localCheckpoint(),
         () => probes.exceptAll(fresh)
           .unionByName(fresh.exceptAll(probes)).isEmpty,
-        () => ExactNN.topKAgg(q, e.join(allowed, "vec_id"), K, ExactNN.L2)
+        () => ExactNN.topK(q, e.join(allowed, "vec_id"), K, ExactNN.L2)
           .localCheckpoint())
       val pred = legs(0).asInstanceOf[DataFrame]
       val api = legs(1).asInstanceOf[DataFrame]
@@ -673,7 +672,7 @@ object CompressedQueries extends QueryPack {
         graft.ann.TopK.perQueryTopK(
             scored.where(col("hrank") < d)
               .select("query_id", "vec_id", "dist"),
-            K, viaAggregator = true)
+            K)
           .withColumn("arm", lit(d))
       }
       val reloaded = LshQueries.dumpAndReload(s,
@@ -720,7 +719,7 @@ object CompressedQueries extends QueryPack {
         graft.ann.TopK.perQueryTopK(
             scored.where(col("qrank") < d)
               .select("query_id", "vec_id", "dist"),
-            K, viaAggregator = true)
+            K)
           .withColumn("arm", lit(d))
       }
       val reloaded = LshQueries.dumpAndReload(s,

@@ -584,7 +584,7 @@ object GraphQueries extends QueryPack {
             symmetrize = false, excluded = Some(tombs)),
           s"${LshQueries.SearchDumpRoot}/${LshQueries.sfName(dir)}/graph_scoped_recall"),
         () => memoized(s, dir, "exact_gt_cos_live") {
-          ExactNN.topKAgg(q,
+          ExactNN.topK(q,
               e.where(!(pmod(col("vec_id"), lit(TombstoneMod)) === 0 &&
                 col("vec_id") < nRows - InsertTailCount)),
               K, ExactNN.Cosine)
@@ -642,7 +642,7 @@ object GraphQueries extends QueryPack {
             entries, K, BeamWidth, BeamHops,
             allowed = Some(col("label") % 2 === 0)),
           s"${LshQueries.SearchDumpRoot}/${LshQueries.sfName(dir)}/graph_filtered_recall"),
-        () => ExactNN.topKAgg(q, e.where(col("label") % 2 === 0), K,
+        () => ExactNN.topK(q, e.where(col("label") % 2 === 0), K,
           ExactNN.Cosine).localCheckpoint())
       val (pred, gt) = (legs(0), legs(1))
       Eval.setPrecisionRecall(pred.select("query_id", "vec_id"), gt)
@@ -674,7 +674,7 @@ object GraphQueries extends QueryPack {
             allowed = pmod(col("vec_id"), lit(50)) === 0,
             metric = ExactNN.Cosine),
           s"${LshQueries.SearchDumpRoot}/${LshQueries.sfName(dir)}/graph_filtered_selective"),
-        () => ExactNN.topKAgg(q,
+        () => ExactNN.topK(q,
           e.where(pmod(col("vec_id"), lit(50)) === 0), K, ExactNN.Cosine)
           .localCheckpoint())
       val (pred, gt) = (legs(0), legs(1))
@@ -724,7 +724,7 @@ object GraphQueries extends QueryPack {
             entries, K, BeamWidth, BeamHops, ExactNN.Cosine,
             allowed = Some(allowed)),
           s"${LshQueries.SearchDumpRoot}/${LshQueries.sfName(dir)}/graph_filtered_labeled"),
-        () => ExactNN.topKAgg(q, e.where(allowed), K, ExactNN.Cosine)
+        () => ExactNN.topK(q, e.where(allowed), K, ExactNN.Cosine)
           .localCheckpoint())
       val (pred, gt) = (legs(0), legs(1))
       Eval.setPrecisionRecall(pred.select("query_id", "vec_id"), gt)
@@ -791,7 +791,7 @@ object GraphQueries extends QueryPack {
               "vec_id", "embedding", q, entries, K, BeamWidth, pred,
               ExactNN.Cosine,
               knownCounts = Some((nCorpus, cntRow.getLong(i + 1)))),
-            () => ExactNN.topKAgg(q,
+            () => ExactNN.topK(q,
                 e.where(pred).select(col("vec_id"), col("embedding")), K,
                 ExactNN.Cosine)
               .localCheckpoint())
@@ -861,7 +861,7 @@ object GraphQueries extends QueryPack {
         () => graft.ann.GraphSearch.beamFrom(g, e, "vec_id",
           "embedding", q, entries, K, BeamWidth, BeamHops, ExactNN.Cosine,
           allowed = Some(pred)),
-        () => ExactNN.topKAgg(q,
+        () => ExactNN.topK(q,
             e.where(pred).select(col("vec_id"), col("embedding")), K,
             ExactNN.Cosine)
           .localCheckpoint())

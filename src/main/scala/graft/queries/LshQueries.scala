@@ -321,7 +321,7 @@ object LshQueries extends QueryPack {
             () => idx.filteredDecision(q, allowed, K, metric = ExactNN.L2,
               allowedCount = Some(cntRow.getLong(i + 1)),
               corpusCount = Some(nCorpus)),
-            () => graft.ann.ExactNN.topKAgg(q,
+            () => graft.ann.ExactNN.topK(q,
                 emb.where(pred).select(col("vec_id"), col("embedding")), K,
                 ExactNN.L2, threshold = Some(SelectiveThreshold))
               .localCheckpoint())
@@ -410,8 +410,7 @@ object LshQueries extends QueryPack {
       val legs = inParallel(
         () => probes.exceptAll(fresh)
           .unionByName(fresh.exceptAll(probes)).isEmpty,
-        () => graft.ann.TopK.perQueryTopK(gtScored, K,
-          viaAggregator = true).localCheckpoint())
+        () => graft.ann.TopK.perQueryTopK(gtScored, K).localCheckpoint())
       val probesOk = legs(0).asInstanceOf[Boolean]
       val gt = legs(1).asInstanceOf[DataFrame]
       val pred = store.searchAllLabeled(q, K, SelectiveThreshold, ExactNN.L2,
@@ -467,7 +466,7 @@ object LshQueries extends QueryPack {
           ExactNN.L2).localCheckpoint(),
         () => probes.exceptAll(fresh)
           .unionByName(fresh.exceptAll(probes)).isEmpty,
-        () => ExactNN.topKAgg(q, e.join(allowed, "vec_id"), K, ExactNN.L2,
+        () => ExactNN.topK(q, e.join(allowed, "vec_id"), K, ExactNN.L2,
           threshold = Some(SelectiveThreshold)).localCheckpoint())
       val pred = legs(0).asInstanceOf[DataFrame]
       val api = legs(1).asInstanceOf[DataFrame]
@@ -510,7 +509,7 @@ object LshQueries extends QueryPack {
       val legs = inParallel(
         () => dumpAndReload(s, preds,
           s"$SearchDumpRoot/${sfName(dir)}/autotune_scoped_m_arms"),
-        () => ExactNN.topKAgg(q, e.join(allowed, "vec_id"), K, ExactNN.L2)
+        () => ExactNN.topK(q, e.join(allowed, "vec_id"), K, ExactNN.L2)
           .localCheckpoint())
       val (reloaded, gt) = (legs(0), legs(1))
       graft.ann.AutoTune.gradeArms(ScopedMArms, reloaded,

@@ -505,7 +505,7 @@ object RetrievalQueries extends QueryPack {
       // top-MmrDepth candidates, rel = cosine similarity of the rounded
       // distance; persisted — MmrK steps and the pair-sim join all read it
       val cand = graft.text.Dedup.materializeRelease(
-        TopK.perQueryTopK(scored, MmrDepth, viaAggregator = true)
+        TopK.perQueryTopK(scored, MmrDepth)
           .select(col("query_id"), col("vec_id").as("doc_id"),
             (lit(1.0) - col("dist")).as("rel")))
       // pairwise sims among each query's candidates (≤ MmrDepth² per

@@ -103,14 +103,14 @@ object SimilarityQueries extends QueryPack {
   private[queries] def exactGtL2(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "exact_gt_l2") {
       val e = emb(s, dir)
-      ExactNN.topKAgg(queriesDf(e), e, K, ExactNN.L2).localCheckpoint()
+      ExactNN.topK(queriesDf(e), e, K, ExactNN.L2).localCheckpoint()
     }
 
   /** Cosine twin of [[exactGtL2]] (the graph family's metric). */
   private[queries] def exactGtCos(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "exact_gt_cos") {
       val e = emb(s, dir)
-      ExactNN.topKAgg(queriesDf(e), e, K, ExactNN.Cosine).localCheckpoint()
+      ExactNN.topK(queriesDf(e), e, K, ExactNN.Cosine).localCheckpoint()
     }
   // ivfIdx's memo home moved to [[CompressedQueries]] with the family;
   // the two consumers here route through it (one build either way)

@@ -83,7 +83,7 @@ object StatsQueries extends QueryPack {
     "q_knn_classify" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
       val q = queriesDf(e)
-      val nn = ExactNN.topKAgg(q, e, K + 1, ExactNN.L2)
+      val nn = ExactNN.topK(q, e, K + 1, ExactNN.L2)
         .where(col("vec_id") =!= col("query_id"))
       val votes = nn
         .join(e.select(col("vec_id"), col("label")), "vec_id")

@@ -143,7 +143,7 @@ object VectorQueries extends QueryPack {
           .projectCol(col("embedding"), JlDimsIn, JlDimsOut).as("embedding"))
       val q = proj.orderBy("vec_id").limit(NumQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val pred = ExactNN.topKAgg(q, proj, K, ExactNN.L2)
+      val pred = ExactNN.topK(q, proj, K, ExactNN.L2)
       val gt = exactNn(s, dir, ExactNN.L2)
       graft.eval.Eval.setPrecisionRecall(
           pred.select(col("query_id"), col("vec_id")),

@@ -519,7 +519,7 @@ object Dedup {
     * no-change confirm round — they converge before a jump could help,
     * so rounds 1-2 stay plain and they never pay the self-join), but
     * the mutual-kNN cluster graphs measured 17 and 9 plain rounds at
-    * sf0.1 (CcRoundsProbe) — the regime the jump exists for (17→11,
+    * sf0.1 (OPTIMIZATION_r18.md §Measurement method) — the regime the jump exists for (17→11,
     * 9→7 measured; starting the jump at round 2 instead saved no
     * rounds on the 17-case and one on the 9-case while taxing every
     * shallow caller's confirm round — measured, not guessed). Each round is one equi-join + one aggregation + (from
@@ -563,7 +563,8 @@ object Dedup {
       // Pointer jumping from round 3 (label(v) ← label(label(v)), the
       // classic doubling step): plain propagation converges in
       // O(component diameter) rounds, and the board's mutual-kNN
-      // cluster graphs MEASURE 17 and 9 rounds at sf0.1 (CcRoundsProbe)
+      // cluster graphs MEASURE 17 and 9 rounds at sf0.1
+      // (OPTIMIZATION_r18.md §Measurement method)
       // — chains, not the shallow near-dup cliques the original
       // 2-3-round assumption covered. The jump makes covered distance
       // roughly double per round (d ← 2d+1), so deep components
@@ -603,9 +604,9 @@ object Dedup {
     }
     edges.unpersist(false)
     // observability for the round-count cost model (per-round cost is
-    // fixed: join + agg + checkpoint + convergence read) — the
-    // CcRoundsProbe measurement that motivated the pointer jump reads
-    // these lines at DEBUG
+    // fixed: join + agg + checkpoint + convergence read) — the round
+    // counts that motivated the pointer jump (OPTIMIZATION_r18.md
+    // §Measurement method) were read off these lines at DEBUG
     log.debug(s"connectedComponents converged after $iter rounds " +
       s"(maxIters $maxIters)")
     labels

@@ -203,7 +203,7 @@ class AutoTuneSpec extends AnyFunSuite with SparkSpecBase {
     arms.foreach { d =>
       val shared = TopK.perQueryTopK(
           scored.where($"hrank" < d).select("query_id", "vec_id", "dist"),
-          5, viaAggregator = true)
+          5)
         .orderBy("query_id", "dist", "vec_id").collect().toSeq
       val perArm = idx.searchRerank(q, vecs, 5, rerankDepth = d)
         .orderBy("query_id", "dist", "vec_id").collect().toSeq
@@ -301,7 +301,7 @@ class AutoTuneSpec extends AnyFunSuite with SparkSpecBase {
       assert(got === sharedPreds(a), s"arm $a combined preds differ")
     }
     // grading the combined frame reproduces the sweep rows
-    val gt = ExactNN.topKAgg(q, idx.vectors, 5, ExactNN.L2)
+    val gt = ExactNN.topK(q, idx.vectors, 5, ExactNN.L2)
       .select("query_id", "vec_id")
     val graded = armRows(AutoTune.gradeArms(Seq(1, 4, 8), combined, gt, 0.95))
     val swept = armRows(AutoTune.sweepIvfNProbeShared(idx, q, 5,

@@ -19,7 +19,7 @@ import graft.ann.lsh.{Lsh, LshConfig}
   *   - the pure rule ([[FilteredSearch.route]]) boundary behavior;
   *   - a density-starved 10% filter auto-dispatches to the exact
   *     subset scan (route `exact_density`, output row-identical to
-  *     [[ExactNN.topKAgg]] over the subset — recall 1.0);
+  *     [[ExactNN.topK]] over the subset — recall 1.0);
   *   - a locally-dense 50% filter stays on the walk (route `walk`,
   *     output row-identical to [[GraphSearch.beamFrom]] `allowed`);
   *   - a starved filter ABOVE the auto-exact ceiling walks with the
@@ -115,7 +115,7 @@ class GraphFilteredDispatchSpec extends AnyFunSuite with SparkSpecBase {
       s"median ${d.medianLocalAllowed} expected < $K")
     assert(d.allowedCount === 200L && d.corpusCount === 2000L)
     // output identity: the dispatch IS the exact scan over the subset
-    val expected = ExactNN.topKAgg(queries, corpus.where(pred)
+    val expected = ExactNN.topK(queries, corpus.where(pred)
       .select($"vec_id", $"embedding"), K, ExactNN.Cosine)
     assert(rows(dispatch(pred)) === rows(expected))
     // and therefore recall 1.0 by construction
@@ -161,7 +161,7 @@ class GraphFilteredDispatchSpec extends AnyFunSuite with SparkSpecBase {
       "embedding", queries, noEntries, K, Beam, pred, ExactNN.Cosine)
     assert(d.medianLocalAllowed.contains(0.0), d.toString)
     assert(d.route === FilteredSearch.ExactDensity)
-    val expected = ExactNN.topKAgg(queries, corpus.where(pred)
+    val expected = ExactNN.topK(queries, corpus.where(pred)
       .select($"vec_id", $"embedding"), K, ExactNN.Cosine)
     val got = GraphSearch.beamFromFiltered(graph, corpus, "vec_id",
       "embedding", queries, noEntries, K, Beam, Hops, pred,
@@ -187,7 +187,7 @@ class GraphFilteredDispatchSpec extends AnyFunSuite with SparkSpecBase {
     val walk = GraphSearch.beamFrom(graph, corpus, "vec_id", "embedding",
       queries, entries, K, Beam, Hops, ExactNN.Cosine,
       allowed = Some(pred))
-    val exact = ExactNN.topKAgg(queries, corpus.where(pred)
+    val exact = ExactNN.topK(queries, corpus.where(pred)
       .select($"vec_id", $"embedding"), K, ExactNN.Cosine)
     Seq(2, 5, 15, 50).foreach { arm =>
       val shared =

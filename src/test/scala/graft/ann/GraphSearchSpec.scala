@@ -41,7 +41,7 @@ class GraphSearchSpec extends AnyFunSuite with SparkSpecBase {
     val q = queriesOf(e, 50)
     val pred = GraphSearch.beam(g, e, "vec_id", "embedding", q,
       (0L until 16L).toSeq, 10, 16, 4)
-    val gt = ExactNN.topKAgg(q, e, 10, ExactNN.Cosine)
+    val gt = ExactNN.topK(q, e, 10, ExactNN.Cosine)
     val recall = recallOf(pred, gt)
     assert(recall < 0.6, s"expected island-limited recall, got $recall")
     assert(recall > 0.2, s"entry clusters should still resolve, got $recall")
@@ -56,7 +56,7 @@ class GraphSearchSpec extends AnyFunSuite with SparkSpecBase {
     val q = queriesOf(e, 50)
     val pred = GraphSearch.beam(g, e, "vec_id", "embedding", q,
       (0L until 32L).toSeq, 10, 32, 6)
-    val gt = ExactNN.topKAgg(q, e, 10, ExactNN.Cosine)
+    val gt = ExactNN.topK(q, e, 10, ExactNN.Cosine)
     val recall = recallOf(pred, gt)
     assert(recall > 0.95, s"backbone beam recall $recall on clustered corpus")
   }
@@ -138,7 +138,7 @@ class GraphSearchSpec extends AnyFunSuite with SparkSpecBase {
       .localCheckpoint()
 
     // 1. inserted nodes' out-edges vs their exact nearest EXISTING nodes
-    val gt = ExactNN.topKAgg(
+    val gt = ExactNN.topK(
       arriving.select($"vec_id".as("query_id"), $"embedding".as("qv")),
       existing, 5, ExactNN.Cosine)
     val inserted = extended.where($"src".isin(newIds.toSeq: _*))
@@ -248,7 +248,7 @@ class GraphSearchSpec extends AnyFunSuite with SparkSpecBase {
       .agg(min("count")).as[Long].head()
     assert(perQuery === 10L,
       s"filtered walk under-delivered k (min $perQuery)")
-    val gt = ExactNN.topKAgg(q, e.where($"vec_id" % 2 === 0), 10,
+    val gt = ExactNN.topK(q, e.where($"vec_id" % 2 === 0), 10,
       ExactNN.Cosine)
     val recall = recallOf(pred, gt)
     assert(recall > 0.9, s"filtered walk recall $recall")
@@ -269,7 +269,7 @@ class GraphSearchSpec extends AnyFunSuite with SparkSpecBase {
       .agg(min("count")).as[Long].head()
     assert(perQuery === 10L,
       s"pool under-delivered k at 10% selectivity (min $perQuery)")
-    val gt = ExactNN.topKAgg(q, e.where($"vec_id" % 10 === 3), 10,
+    val gt = ExactNN.topK(q, e.where($"vec_id" % 10 === 3), 10,
       ExactNN.Cosine)
     val recall = recallOf(pred, gt)
     assert(recall > 0.8, s"filtered pool recall $recall at 10% selectivity")
@@ -294,7 +294,7 @@ class GraphSearchSpec extends AnyFunSuite with SparkSpecBase {
     // 2% allowed (10 of 500) — far under the 5% cutoff
     val pred = GraphSearch.beamFromFiltered(g, e, "vec_id", "embedding", q,
       entriesOf(q, 32), 5, 32, 6, $"vec_id" % 50 === 0, ExactNN.Cosine)
-    val gt = ExactNN.topKAgg(q, e.where($"vec_id" % 50 === 0), 5,
+    val gt = ExactNN.topK(q, e.where($"vec_id" % 50 === 0), 5,
       ExactNN.Cosine)
     assert(recallOf(pred, gt) === 1.0)
     // 50% allowed — the walk path binds and still serves only allowed

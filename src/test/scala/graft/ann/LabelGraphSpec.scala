@@ -94,7 +94,7 @@ class LabelGraphSpec extends AnyFunSuite with SparkSpecBase {
     val q = e.orderBy("vec_id").limit(40)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
     val subset = e.where(allowedPred)
-    val gt = ExactNN.topKAgg(q, subset, 5, ExactNN.Cosine)
+    val gt = ExactNN.topK(q, subset, 5, ExactNN.Cosine)
     def recallOf(pred: DataFrame): Double =
       graft.eval.Eval.setPrecisionRecall(
           pred.select($"query_id", $"vec_id"),
@@ -174,7 +174,7 @@ class LabelGraphSpec extends AnyFunSuite with SparkSpecBase {
       q, plainSeeds, 5, 16, allowedPred, ExactNN.Cosine)
     assert(d.route === FilteredSearch.WalkStarved, d.toString)
     val subset = e.where(allowedPred)
-    val gt = ExactNN.topKAgg(q, subset, 5, ExactNN.Cosine)
+    val gt = ExactNN.topK(q, subset, 5, ExactNN.Cosine)
     val aug = KnnGraph.labelAware(idx, e, "vec_id", "embedding", "label",
       5, ExactNN.Cosine, base = Some(base))
     val filteredSeeds = idx.searchAll(q, 16, Double.MaxValue,

@@ -6,14 +6,14 @@ import graft.SparkSpecBase
 import graft.ann.ivf.{Ivf, IvfConfig}
 import graft.ann.lsh.{Lsh, LshConfig}
 
-/** Plan-shape guard for the ANN search tail (mirrors VectorPlanSpec's
-  * role for the vector queries): the DEFAULT `searchAll` plan must use
-  * the bounded TopK partial aggregation, never a `row_number()` window —
+/** Plan-shape guard for the ANN search tails (mirrors VectorPlanSpec's
+  * role for the vector queries): every search's result top-k is the
+  * bounded TopK partial aggregation, never a `row_number()` window —
   * the window form shuffles every scored candidate row and is exactly
   * the plan TopK.scala's scaladoc calls out as not surviving a 100x
-  * candidate scale-up (round-8 verdict, What's wrong #1). TopKSpec and
-  * the `topKViaAggregator` row-identity tests prove the two forms return
-  * identical rows; this spec pins which one the default plan IS.
+  * candidate scale-up (round-8 verdict, What's wrong #1). TopKSpec
+  * keeps the window formulation as its row-identity reference; this
+  * spec pins that no search plan contains one.
   */
 class SearchPlanSpec extends AnyFunSuite with SparkSpecBase {
 
@@ -37,10 +37,10 @@ class SearchPlanSpec extends AnyFunSuite with SparkSpecBase {
       .queryExecution.optimizedPlan.toString
     assert(!p.contains("Window"), s"window top-k leaked into the default plan:\n$p")
     // sensitivity check: the probe must be able to see a Window when one
-    // genuinely exists (the explicit legacy form)
-    val legacy = idx.searchAll(queries, k = 5, distanceThreshold = 4.0,
-      topKViaAggregator = false).queryExecution.optimizedPlan.toString
-    assert(legacy.contains("Window"), "probe lost sensitivity to Window nodes")
+    // genuinely exists (the maxCandidates cap is one by construction)
+    val capped = idx.searchAll(queries, k = 5, distanceThreshold = 4.0,
+      maxCandidates = Some(50)).queryExecution.optimizedPlan.toString
+    assert(capped.contains("Window"), "probe lost sensitivity to Window nodes")
   }
 
   test("maxCandidates cap keeps its (intentional) per-query Window, top-k stays aggregated") {
@@ -60,6 +60,27 @@ class SearchPlanSpec extends AnyFunSuite with SparkSpecBase {
     val p = idx.searchAll(queries, k = 5)
       .queryExecution.optimizedPlan.toString
     assert(!p.contains("Window"), s"window top-k leaked into the default plan:\n$p")
+  }
+
+  test("IVF-PQ searchAll and searchRerank plans have no Window node") {
+    val idx = graft.ann.ivfpq.IvfPq.train(corpus, "vec_id", "embedding",
+      graft.ann.ivfpq.IvfPqConfig(nCells = 4, nProbe = 2, numSubvectors = 3,
+        codesPerSubvector = 8, iters = 3, seed = 3L))
+    val p = idx.searchAll(queries, k = 5).queryExecution.optimizedPlan.toString
+    assert(!p.contains("Window"), s"window top-k leaked into the IVF-PQ plan:\n$p")
+    val rp = idx.searchRerank(queries, corpus, k = 5, rerankDepth = 20)
+      .queryExecution.optimizedPlan.toString
+    assert(!rp.contains("Window"), s"window top-k leaked into the IVF-PQ rerank plan:\n$rp")
+  }
+
+  test("IVF-SQ searchAll and searchRerank plans have no Window node") {
+    val idx = graft.ann.ivfsq.IvfSq.train(corpus, "vec_id", "embedding",
+      graft.ann.ivfsq.IvfSqConfig(nCells = 4, nProbe = 2, iters = 3, seed = 3L))
+    val p = idx.searchAll(queries, k = 5).queryExecution.optimizedPlan.toString
+    assert(!p.contains("Window"), s"window top-k leaked into the IVF-SQ plan:\n$p")
+    val rp = idx.searchRerank(queries, corpus, k = 5, rerankDepth = 20)
+      .queryExecution.optimizedPlan.toString
+    assert(!rp.contains("Window"), s"window top-k leaked into the IVF-SQ rerank plan:\n$rp")
   }
 
   test("SQ searchAll: no Window; decode materialized once below the query join") {

@@ -163,7 +163,7 @@ class BqSpec extends AnyFunSuite with SparkSpecBase {
         10, n, ExactNN.Cosine)
       .orderBy("query_id", "dist", "vec_id")
       .as[(Long, Long, Double)].collect().toSeq
-    val exact = ExactNN.topKAgg(q, emb, 10, ExactNN.Cosine)
+    val exact = ExactNN.topK(q, emb, 10, ExactNN.Cosine)
       .orderBy("query_id", "dist", "vec_id")
       .as[(Long, Long, Double)].collect().toSeq
     assert(got === exact, "full-depth cosine rerank diverged from exact NN")

@@ -42,7 +42,7 @@ class DistributedFitSpec extends AnyFunSuite with SparkSpecBase {
   test("IVF: distributed fit matches driver-fit recall at the same operating point") {
     val corpus = mkCorpus()
     val q = queriesOf(corpus, 50)
-    val gt = ExactNN.topKAgg(q, corpus, 10, ExactNN.L2)
+    val gt = ExactNN.topK(q, corpus, 10, ExactNN.L2)
     val cfg = IvfConfig(nCells = 16, nProbe = 4, seed = 42L)
     val driver = Ivf.train(corpus, "vec_id", "embedding", cfg)
     // threshold 1 forces the distributed path on the same data
@@ -67,7 +67,7 @@ class DistributedFitSpec extends AnyFunSuite with SparkSpecBase {
   test("angular IVF: distributed fit normalizes map-side, cosine recall parity") {
     val corpus = mkCorpus(seed = 11)
     val q = queriesOf(corpus, 50)
-    val gt = ExactNN.topKAgg(q, corpus, 10, ExactNN.Cosine)
+    val gt = ExactNN.topK(q, corpus, 10, ExactNN.Cosine)
     val cfg = IvfConfig(nCells = 16, nProbe = 4, seed = 42L, angular = true)
     val driver = Ivf.train(corpus, "vec_id", "embedding", cfg)
     val dist = Ivf.train(corpus, "vec_id", "embedding",
@@ -106,7 +106,7 @@ class DistributedFitSpec extends AnyFunSuite with SparkSpecBase {
   test("IVF-PQ: distributed coarse + driver-bounded codebook sample keeps rerank recall") {
     val corpus = mkCorpus(seed = 17)
     val q = queriesOf(corpus, 30)
-    val gt = ExactNN.topKAgg(q, corpus, 10, ExactNN.L2)
+    val gt = ExactNN.topK(q, corpus, 10, ExactNN.L2)
     val cfg = graft.ann.ivfpq.IvfPqConfig(nCells = 8, nProbe = 8,
       numSubvectors = 4, codesPerSubvector = 16, seed = 42L)
     val vectors = corpus.select($"vec_id", $"embedding")

@@ -69,19 +69,6 @@ class IvfSpec extends AnyFunSuite with SparkSpecBase {
     assert(pred.forall(_._2 % 2 == 0), "disallowed vec_id in filtered result")
   }
 
-  test("searchAll topKViaAggregator path is row-identical to the window path") {
-    val q = clustered.limit(10)
-      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-    val idx = Ivf.train(clustered, "vec_id", "embedding",
-      IvfConfig(nCells = 4, nProbe = 4, seed = 7L))
-    val window = idx.searchAll(q, k = 5, ExactNN.L2, topKViaAggregator = false)
-      .orderBy("query_id", "dist", "vec_id").collect().toSeq
-    val agg = idx.searchAll(q, k = 5, ExactNN.L2, topKViaAggregator = true)
-      .orderBy("query_id", "dist", "vec_id").collect().toSeq
-    assert(window.nonEmpty)
-    assert(agg === window)
-  }
-
   test("nProbe=1 on separated clusters still achieves full recall (cluster-local NNs)") {
     val q = clustered.limit(10)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))

@@ -26,7 +26,7 @@ import graft.ann.ivf.{Ivf, IvfConfig}
   *     ([[LshIndex.localAllowedCounts]]: own-leaf beamWidth-nearest);
   *   - starved 10% filters (uncorrelated per-point AND
   *     cluster-correlated) auto-dispatch to the exact subset scan
-  *     (route `exact_density`, row-identical to [[ExactNN.topKAgg]]
+  *     (route `exact_density`, row-identical to [[ExactNN.topK]]
   *     over the subset — recall 1.0);
   *   - a locally-dense 50% filter stays on the probe path (route
   *     `probe`, row-identical to `searchAll(allowed=…)`);
@@ -111,7 +111,7 @@ class BucketFilteredDispatchSpec extends AnyFunSuite with SparkSpecBase {
     // query (nothing underfilled, candidate counts look healthy) while
     // recall collapses — the rows are allowed but FAR. A signal that
     // only counts allowed candidates cannot see this.
-    val gt = ExactNN.topKAgg(queries, corpus.where(cl10Pred), K,
+    val gt = ExactNN.topK(queries, corpus.where(cl10Pred), K,
       ExactNN.Cosine)
     val probe = idx.searchAll(queries, K, Double.MaxValue, ExactNN.Cosine,
       allowed = Some(allowedOf(cl10Pred)))
@@ -131,7 +131,7 @@ class BucketFilteredDispatchSpec extends AnyFunSuite with SparkSpecBase {
       assert(d.route === FilteredSearch.ExactDensity, s"$tag: $d")
       assert(d.medianLocalAllowed.exists(_ < K), s"$tag: $d")
       assert(d.allowedCount === 200L && d.corpusCount === 2000L)
-      val expected = ExactNN.topKAgg(queries, corpus.where(pred), K,
+      val expected = ExactNN.topK(queries, corpus.where(pred), K,
         ExactNN.Cosine, threshold = Some(Double.MaxValue))
       assert(rows(lshDispatch(pred)) === rows(expected), s"$tag diverged")
     }
@@ -262,7 +262,7 @@ class BucketFilteredDispatchSpec extends AnyFunSuite with SparkSpecBase {
     for ((tag, pred) <- Seq("pt10" -> pt10Pred, "cl10" -> cl10Pred)) {
       val d = decide(pred)
       assert(d.route === FilteredSearch.ExactDensity, s"$tag: $d")
-      val expected = ExactNN.topKAgg(queries, corpus.where(pred), K,
+      val expected = ExactNN.topK(queries, corpus.where(pred), K,
         ExactNN.L2)
       val got = ivf.searchAllFiltered(queries, allowedOf(pred), K,
         ExactNN.L2)

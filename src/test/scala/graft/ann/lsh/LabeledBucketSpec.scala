@@ -90,7 +90,7 @@ class LabeledBucketSpec extends AnyFunSuite with SparkSpecBase {
   test("starved-large arm: labeled serving recovers where probe-then-filter collapses") {
     val pred = pmod(($"vec_id" / 10).cast("long"), lit(6)) === 0
     val q = queriesWith("0")
-    val gt = ExactNN.topKAgg(q, corpus.where(pred), K, ExactNN.Cosine)
+    val gt = ExactNN.topK(q, corpus.where(pred), K, ExactNN.Cosine)
       .localCheckpoint()
     val probeRec = recallOf(
       idx.searchAll(q, K, Double.MaxValue, ExactNN.Cosine,
@@ -106,7 +106,7 @@ class LabeledBucketSpec extends AnyFunSuite with SparkSpecBase {
   test("bimodal even-split arm: labeled serving recovers the starved half") {
     val pred = pmod(($"vec_id" / 10).cast("long"), lit(2)) === 0
     val q = queriesWith("0")
-    val gt = ExactNN.topKAgg(q, corpus.where(pred), K, ExactNN.Cosine)
+    val gt = ExactNN.topK(q, corpus.where(pred), K, ExactNN.Cosine)
       .localCheckpoint()
     def perQueryMin(df: DataFrame): Double =
       graft.eval.Eval.setPrecisionRecall(df.select("query_id", "vec_id"),
@@ -125,7 +125,7 @@ class LabeledBucketSpec extends AnyFunSuite with SparkSpecBase {
   test("probe-budget curve: monotone, default at or past the knee") {
     val pred = pmod(($"vec_id" / 10).cast("long"), lit(6)) === 0
     val q = queriesWith("0")
-    val gt = ExactNN.topKAgg(q, corpus.where(pred), K, ExactNN.Cosine)
+    val gt = ExactNN.topK(q, corpus.where(pred), K, ExactNN.Cosine)
       .localCheckpoint()
     val curve = Seq(2, 8, 32, 64).map { m =>
       m -> recallOf(lidx6.searchAllLabeled(q, K, Double.MaxValue,
@@ -262,7 +262,7 @@ class LabeledBucketSpec extends AnyFunSuite with SparkSpecBase {
   test("IVF labeled serving recovers the starved-large arm") {
     val pred = pmod(($"vec_id" / 10).cast("long"), lit(6)) === 0
     val q = queriesWith("0")
-    val gt = ExactNN.topKAgg(q, corpus.where(pred), K, ExactNN.L2)
+    val gt = ExactNN.topK(q, corpus.where(pred), K, ExactNN.L2)
       .localCheckpoint()
     val probeRec = recallOf(
       ivf.searchAll(q, K, ExactNN.L2,
@@ -375,7 +375,7 @@ class LabeledBucketSpec extends AnyFunSuite with SparkSpecBase {
     // a forced decision binds the route (no internal re-derivation)
     val forced = graft.ann.FilteredSearch.Decision(2000L, 200L, None,
       graft.ann.FilteredSearch.ExactSelectivity)
-    val exact = ExactNN.topKAgg(q, corpus.where(pred), K, ExactNN.Cosine,
+    val exact = ExactNN.topK(q, corpus.where(pred), K, ExactNN.Cosine,
       threshold = Some(Double.MaxValue))
     assert(rows(idx.searchAllFiltered(q, allowed, K, Double.MaxValue,
       ExactNN.Cosine, decision = Some(forced))) === rows(exact))

@@ -102,7 +102,7 @@ class LabeledLshMaintainerSpec extends AnyFunSuite with SparkSpecBase {
       .join(broadcast(queries), $"c.label" === queries("label"))
       .select($"query_id", $"c.vec_id".as("vec_id"),
         round(ExactNN.L2.dist($"qv", $"c.embedding"), 6).as("dist"))
-    val gtTop = graft.ann.TopK.perQueryTopK(gt, 5, viaAggregator = true)
+    val gtTop = graft.ann.TopK.perQueryTopK(gt, 5)
       .as[(Long, Long, Double)].collect().toSet
     assert(exact.nonEmpty)
     assert(served(m.index, queries) === gtTop,
@@ -180,7 +180,7 @@ class LabeledLshMaintainerSpec extends AnyFunSuite with SparkSpecBase {
       .join(broadcast(queries), $"c.label" === queries("label"))
       .select($"query_id", $"c.vec_id".as("vec_id"),
         round(ExactNN.L2.dist($"qv", $"c.embedding"), 6).as("dist"))
-    val gtTop = graft.ann.TopK.perQueryTopK(gt, 5, viaAggregator = true)
+    val gtTop = graft.ann.TopK.perQueryTopK(gt, 5)
       .as[(Long, Long, Double)].collect().toSet
     assert(served(m.index, queries) === gtTop,
       "refit store != exact per label")

@@ -161,24 +161,6 @@ class LshIndexSpec extends AnyFunSuite with SparkSpecBase {
       "filter-before-cut diverged from deep-search-then-recut")
   }
 
-  test("searchAll topKViaAggregator path is row-identical to the window path") {
-    val rng = new scala.util.Random(29)
-    val corpus = (0L until 400L).map(i =>
-      (i, Seq.fill(6)(rng.nextGaussian()))).toDF("vec_id", "embedding")
-    val queries = (0L until 8L).map(i =>
-      (i, Seq.fill(6)(rng.nextGaussian()))).toDF("query_id", "qv")
-    val idx = Lsh.train(corpus, "vec_id", "embedding",
-      LshConfig(nTrees = 6, kMinVecs = 25, seed = 13L))
-    val window = idx.searchAll(queries, k = 7, distanceThreshold = 4.0,
-      topKViaAggregator = false)
-      .orderBy("query_id", "dist", "vec_id").collect().toSeq
-    val agg = idx.searchAll(queries, k = 7, distanceThreshold = 4.0,
-      topKViaAggregator = true)
-      .orderBy("query_id", "dist", "vec_id").collect().toSeq
-    assert(window.nonEmpty)
-    assert(agg === window)
-  }
-
   test("ragged or null embeddings fail the fit with a named error") {
     val cfg = LshConfig(nTrees = 3, kMinVecs = 1, seed = 5L)
     val ragged = Seq((1L, Seq(1.0f, 2.0f)), (2L, Seq(1.0f)))

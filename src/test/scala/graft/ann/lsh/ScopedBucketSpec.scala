@@ -71,7 +71,7 @@ class ScopedBucketSpec extends AnyFunSuite with SparkSpecBase {
       .as[(Long, Long, Double)].collect().toSet
 
   test("scoped serving recovers the starved-large arm where probe-then-filter collapses") {
-    val gt = ExactNN.topKAgg(queries, corpus.where(starvedPred), K,
+    val gt = ExactNN.topK(queries, corpus.where(starvedPred), K,
       ExactNN.Cosine).localCheckpoint()
     val probeRec = recallOf(
       idx.searchAll(queries, K, Double.MaxValue, ExactNN.Cosine,
@@ -158,7 +158,7 @@ class ScopedBucketSpec extends AnyFunSuite with SparkSpecBase {
     assert(rows(idx.searchAllFiltered(queries, allowed6, K,
       Double.MaxValue, ExactNN.Cosine, decision = Some(exact),
       scopedFallback = true)) ===
-      rows(ExactNN.topKAgg(queries, corpus.where(starvedPred), K,
+      rows(ExactNN.topK(queries, corpus.where(starvedPred), K,
         ExactNN.Cosine, threshold = Some(Double.MaxValue))))
   }
 

@@ -116,7 +116,7 @@ class EvalGradingSpec extends AnyFunSuite with SparkSpecBase {
         round(graft.ann.ExactNN.L2.dist(col("qv"), col("embedding")), 6)
           .as("dist"))
       .where(col("dist") <= 1e9)
-    val ref = graft.ann.TopK.perQueryTopK(scored, 5, viaAggregator = true)
+    val ref = graft.ann.TopK.perQueryTopK(scored, 5)
     assert(served.exceptAll(ref).unionByName(ref.exceptAll(served)).isEmpty,
       "array-local probe dedup must serve the explicit-dedup rows")
     assert(served.count() > 0)

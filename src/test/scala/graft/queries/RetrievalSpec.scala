@@ -181,7 +181,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSpecBase {
       .select($"query_id", $"vec_id",
         round(graft.functions.exprs.cosineDistNative($"qv", $"embedding"), 6)
           .as("dist"))
-    val cand = graft.ann.TopK.perQueryTopK(scored, 8, viaAggregator = true)
+    val cand = graft.ann.TopK.perQueryTopK(scored, 8)
       .select($"query_id", $"vec_id".as("doc_id"), (lit(1.0) - $"dist").as("rel"))
     val sims = cand.select($"query_id", $"doc_id".as("a"))
       .join(cand.select($"query_id", $"doc_id".as("b")), "query_id")

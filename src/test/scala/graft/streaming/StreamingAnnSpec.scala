@@ -23,7 +23,7 @@ class StreamingAnnSpec extends AnyFunSuite with SparkSpecBase {
       .select($"vec_id".as("query_id"), $"embedding".cast("array<double>").as("qv"))
       .as[(Long, Seq[Double])].collect().toSeq
 
-    val batch = ExactNN.topKAgg(queries.toDF("query_id", "qv"), emb, k = 5)
+    val batch = ExactNN.topK(queries.toDF("query_id", "qv"), emb, k = 5)
       .orderBy("query_id", "dist", "vec_id").collect().toSeq
 
     implicit val sqlCtx = spark.sqlContext
