@@ -77,15 +77,16 @@ final class CodesMaintainer(
   /** The serving view ([[LsmStore.liveViews]] over the codes table).
     * Pass to the family's index constructor. */
   def liveCodes: DataFrame =
-    liveViews()(spark.read.parquet(s"$path/codes") -> "codes_delta").head
+    liveViews()(readBase("codes") -> "codes_delta").head
 
   /** One maintenance step. `arrivals` rows are (vec_id, embedding);
-    * `deletes` rows are (vec_id). An id in both is an upsert. */
+    * `deletes` rows are (vec_id). An id in both is an upsert. Codes
+    * are logged in the base table's schema. */
   def onBatch(arrivals: Option[DataFrame],
               deletes: Option[DataFrame]): Unit =
     runBatch(deletes) { seq =>
       arrivals.foreach { a =>
-        writeCodes(encodeFn(a).withColumn("seq", lit(seq)),
+        writeCodes(logRows(encodeFn(a), readBase("codes").schema, seq),
           "codes_delta", "append")
       }
       arrivals

@@ -215,10 +215,7 @@ final class GraphMaintainer(
     * twin of the LSM fence: full refines advance both (finishSwap),
     * scoped refines advance only this one (the logs they DIDN'T fold —
     * tombstone revival history, un-refined arrivals — stay live). */
-  private def scopeFence: Int =
-    try readMarker("_scope_fence").map(_.trim).filter(_.nonEmpty)
-      .map(_.toInt).getOrElse(0)
-    catch { case _: Exception => 0 }
+  private def scopeFence: Int = readIntMarker("_scope_fence")
 
   /** The last refine of either kind — the cadence origin. */
   private def lastRefineSeq: Int = math.max(readFence(), scopeFence)
@@ -231,6 +228,15 @@ final class GraphMaintainer(
     * whole cycle. */
   def refineDue: Boolean = (batches + 1) - lastRefineSeq >= refineEvery
 
+  /** A log read with its schema inferred (`empty` when absent): the
+    * graph logs' id columns take the type of the caller's `idCol`. */
+  private def readOr(sub: String, empty: => DataFrame): DataFrame = {
+    val p = s"$path/$sub"
+    if (lsmFs.exists(new org.apache.hadoop.fs.Path(p))) spark.read.parquet(p)
+    else empty
+  }
+  private def emptySeqIds: DataFrame =
+    spark.range(0).select(col("id").as("vec_id"), lit(0).as("seq"))
   private def emptyEdges: DataFrame =
     spark.range(0).select(col("id").as("src"), col("id").as("dst"),
       lit(0).as("seq"))
@@ -275,9 +281,10 @@ final class GraphMaintainer(
         !lsmFs.exists(new org.apache.hadoop.fs.Path(s"$path/superseded")))
       return base0
     val base = base0.withColumn("seq", lit(0))
-    val delta = visibleFilter(readOr("edges_delta", emptyEdges))
+    val vis = visibility().pred
+    val delta = readOr("edges_delta", emptyEdges).where(vis)
       .select("src", "dst", "seq")
-    val sup = visibleFilter(readOr("superseded", emptySrcSeq))
+    val sup = readOr("superseded", emptySrcSeq).where(vis)
       .groupBy("src").agg(max("seq").as("sup_seq"))
     base.unionByName(delta)
       .join(broadcast(sup), Seq("src"), "left")
@@ -294,9 +301,10 @@ final class GraphMaintainer(
     * of the same id lands at an equal-or-later seq (re-insertion
     * revives the id; same-batch delete+insert is an upsert). */
   def tombstones: DataFrame = {
-    val t = visibleFilter(readOr("tombstones", emptySeqIds))
+    val vis = visibility().pred
+    val t = readOr("tombstones", emptySeqIds).where(vis)
       .select(col("vec_id"), col("seq").as("tseq"))
-    val a = visibleFilter(readOr("arrivals", emptySeqIds))
+    val a = readOr("arrivals", emptySeqIds).where(vis)
       .select(col("vec_id").as("aid"), col("seq").as("aseq"))
     t.join(broadcast(a), t("vec_id") === a("aid") && a("aseq") >= t("tseq"),
         "left_anti")
@@ -483,7 +491,7 @@ final class GraphMaintainer(
     * This is the graph store's COMPACTION: active tombstones are
     * applied physically, the fence is stamped at the current seq, and
     * both logs are dropped — log rows surviving a crash in that window
-    * are fenced off ([[LsmStore.visibleFilter]]) like every other
+    * are fenced off ([[LsmStore.visibility]]) like every other
     * maintainer's.
     *
     * The refined frame is localCheckpoint-materialized BEFORE the store
@@ -664,9 +672,10 @@ final class GraphMaintainer(
         lr.rdd.unpersist(false)
       case _ =>
     }
-    val arr = visibleFilter(readOr("arrivals", emptySeqIds))
+    val vis = visibility().pred
+    val arr = readOr("arrivals", emptySeqIds).where(vis)
       .where(col("seq") > sf).select(col("vec_id").as("node"))
-    val tombWindow = visibleFilter(readOr("tombstones", emptySeqIds))
+    val tombWindow = readOr("tombstones", emptySeqIds).where(vis)
       .where(col("seq") > sf).select(col("vec_id").as("node"))
     val pending = tombstones.localCheckpoint(eager = false)
     val pendingNodes = pending.select(col("vec_id").as("node"))

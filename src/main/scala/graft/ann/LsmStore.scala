@@ -1,8 +1,9 @@
 package graft.ann
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** The LSM store every maintained index mixes in:
   * [[graft.ann.lsh.LshMaintainer]], [[graft.ann.lsh.LabeledLshMaintainer]]
@@ -11,11 +12,15 @@ import org.apache.spark.sql.functions._
   * [[GraphMaintainer]]. It is the one place that knows the LSM
   * decisions, so the stores cannot drift apart:
   *
-  *   - **seq-stamped logs and the kill rule** ([[liveViews]]): delta
-  *     appends and tombstones carry the batch sequence; base rows sit at
-  *     seq 0 under the visible deltas, and a tombstone kills rows of its
-  *     key from STRICTLY EARLIER seqs, making same-batch delete+arrival
-  *     an upsert. Every store except GraphMaintainer (whose arrivals
+  *   - **seq-stamped logs, one visibility snapshot and the kill rule**
+  *     ([[visibility]], [[liveViews]]): delta appends and tombstones
+  *     carry the batch sequence and their base's schema ([[logRows]]).
+  *     A view reads the fence and the commit log once, filters every
+  *     log with the literal seq set they resolve to, and is its bare
+  *     bases when no log seq is visible. Base rows sit at seq 0 under
+  *     the visible deltas, and a tombstone kills rows of its key from
+  *     STRICTLY EARLIER seqs, making same-batch delete+arrival an
+  *     upsert. Every store except GraphMaintainer (whose arrivals
   *     revive ids) builds its serving view through [[liveViews]];
   *   - **persistent sequence**: recovered at construction as
   *     max(compaction fence, max seq across the logs) — a restarted
@@ -24,34 +29,22 @@ import org.apache.spark.sql.functions._
   *   - **compaction fence** (`_lsm_fence`, a tiny marker file): written
   *     AFTER the folded base lands and BEFORE the logs are deleted.
   *     Log rows with seq ≤ fence are already IN the base, and
-  *     [[visibleFilter]] drops them from every view — so a crash between
-  *     the fence write and the log deletion re-serves correctly (the
-  *     surviving rows are fenced off; the next compaction deletes
-  *     them). The cadence is measured from the fence
-  *     ([[compactionDueAt]]);
+  *     [[visibility]] drops them from every view — so a crash between
+  *     the fence write and the log deletion re-serves correctly. The
+  *     cadence is measured from the fence ([[compactionDueAt]]);
   *   - **crash-safe compaction commit** ([[commitCompaction]] /
-  *     [[recoverCompaction]]): the folded base is written to TEMP
-  *     subdirs first, then a pre-commit marker (`_lsm_precommit`,
-  *     atomically renamed into place) records the target seq and the
-  *     pending renames, and only then do the destructive steps run
-  *     (swap temps into place, stamp the fence, drop the logs, drop
-  *     the marker). Construction calls [[recoverCompaction]] (via
-  *     [[recoverSeq]]): no marker means no compaction was mid-commit
-  *     (orphan temp dirs from a pre-marker crash are inert and
-  *     overwritten by the next compaction); a marker means every
-  *     remaining step is deterministic, so the reopen FINISHES the
-  *     commit instead of serving duplicates. Every step is idempotent
-  *     (rename skipped when the temp is gone, fence monotone,
-  *     log/marker deletes no-ops), so a crash during recovery itself
-  *     re-heals on the next open;
-  *   - **occupancy-watermark accounting**: `fitRows` is the base
-  *     snapshot the frozen model was fit against (counted once,
-  *     lazily), `atRestRows` adds delta rows INCLUDING tombstoned ones
-  *     (dead rows cost every probe until compacted out). Compaction
-  *     updates `atRestRows` but KEEPS `fitRows` — the model is still
-  *     the original fit, so growth-since-fit keeps accumulating and
-  *     repeated post-compaction warnings correctly say "refit"; only a
-  *     refit (which retrains) resets the reference.
+  *     [[recoverCompaction]]): the folded base lands in TEMP subdirs,
+  *     then an atomically published pre-commit marker records the
+  *     target seq and the pending renames, and only then do the
+  *     idempotent destructive steps run. Construction ([[recoverSeq]])
+  *     FINISHES a commit whose marker it finds instead of serving
+  *     duplicates; a crash before the marker leaves only inert temps;
+  *   - **occupancy-watermark accounting** ([[ensureCounts]]): `fitRows`
+  *     is the base the frozen model was fit against, `atRestRows` adds
+  *     delta rows INCLUDING tombstoned ones (dead rows cost every probe
+  *     until compacted out). Compaction resets `atRestRows` but KEEPS
+  *     `fitRows` (the model is still the original fit); only a refit
+  *     resets the reference.
   *
   * The batch step, the drift watermark and the compaction/refit
   * cadence of the three frozen-model vector stores live in
@@ -68,42 +61,57 @@ private[graft] trait LsmStore {
     org.apache.hadoop.fs.FileSystem.get(
       new Path(lsmPath).toUri, lsmSpark.sparkContext.hadoopConfiguration)
 
-  protected final def readOr(sub: String, empty: => DataFrame): DataFrame = {
+  protected final val SeqSchema = StructType(Seq(StructField("seq", IntegerType)))
+  private val baseSchemas =
+    scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  /** The base table at `sub`, read with its schema: inferred once per
+    * instance (compaction and refit rewrite the same columns), then
+    * passed on every read, so a view starts no schema-inference job
+    * while its file listing stays fresh (another process may compact).
+    * `asString` columns read as STRING whatever their values look like
+    * (partition columns, whose inferred type follows the values). */
+  protected final def readBase(sub: String, asString: String*): DataFrame = {
     val p = s"$lsmPath/$sub"
-    if (lsmFs.exists(new Path(p))) lsmSpark.read.parquet(p) else empty
+    lsmSpark.read.schema(baseSchemas.getOrElseUpdate(sub, StructType(
+      lsmSpark.read.parquet(p).schema.map(f =>
+        if (asString.contains(f.name)) f.copy(dataType = StringType) else f))))
+      .parquet(p)
   }
 
-  protected final def emptySeqIds: DataFrame = emptySeqKeys("vec_id")
+  /** The log at `sub` read with its known `schema` (empty when absent). */
+  protected final def readLog(sub: String, schema: StructType): DataFrame = {
+    val p = s"$lsmPath/$sub"
+    if (lsmFs.exists(new Path(p))) lsmSpark.read.schema(schema).parquet(p)
+    else lsmSpark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
 
-  private def emptySeqKeys(key: String): DataFrame =
-    lsmSpark.range(0).select(col("id").as(key), lit(0).as("seq"))
+  /** `rows` cast to `fields` (bar `seq`) and stamped `seq`: the schema
+    * every read of a [[liveViews]] log assumes — its base's schema (the
+    * base's key, for tombstones) plus `seq INT`. */
+  protected final def logRows(rows: DataFrame, fields: Seq[StructField],
+                              seq: Int): DataFrame =
+    rows.select(fields.filter(_.name != "seq")
+      .map(f => col(f.name).cast(f.dataType).as(f.name)) :+
+      lit(seq).as("seq"): _*)
 
   // ---- compaction fence ----
 
-  private def fencePath = new Path(s"$lsmPath/_lsm_fence")
-
   /** Seq through which the logs have been folded into the base (0 when
-    * no compaction has completed). Read FULLY ([[readMarker]] — a
-    * short single read could truncate the seq and regress both the
-    * visibility fence and the recovered batch counter). A
-    * corrupt/unreadable marker reads as 0 — conservative: stale rows
-    * re-serve as duplicates rather than fresh rows being dropped. */
-  protected final def readFence(): Int =
-    try readMarker("_lsm_fence").map(_.trim).filter(_.nonEmpty)
-      .map(_.toInt).getOrElse(0)
-    catch { case _: Exception => 0 }
+    * no compaction has completed). A corrupt/unreadable marker reads as
+    * 0 — conservative: stale rows re-serve as duplicates rather than
+    * fresh rows being dropped. */
+  protected final def readFence(): Int = readIntMarker("_lsm_fence")
 
-  protected final def writeFence(seq: Int): Unit = {
-    val out = lsmFs.create(fencePath, true)
-    try out.write(seq.toString.getBytes("UTF-8")) finally out.close()
-  }
+  protected final def writeFence(seq: Int): Unit =
+    writeFile(new Path(s"$lsmPath/_lsm_fence"), seq.toString)
 
   // ---- atomic multi-log batches ----
 
   /** Append the batch-commit record for `seq` — the LAST write of a
     * maintainer's onBatch, after every per-log append of the batch.
     * Log rows of a seq with no commit record are IGNORED by
-    * [[visibleFilter]], so a crash between a batch's log writes
+    * [[visibility]], so a crash between a batch's log writes
     * leaves a PARTIAL batch invisible instead of diverging the store
     * (e.g. one postings table written and not the other, or a delete
     * logged without its same-batch upsert arrival). Recovery needs no
@@ -123,10 +131,8 @@ private[graft] trait LsmStore {
     * drops the logs must re-create it before new batches land, and
     * construction creates/backfills it ([[recoverSeq]]). */
   protected final def initCommitLog(): Unit =
-    // the seq-0 sentinel keeps the dir NON-empty at rest (seq 0 rows
-    // always pass the filter anyway): sync/copy tools that drop empty
-    // dirs cannot erase the commit log and downgrade a new-format
-    // store to the legacy pass-through
+    // the seq-0 sentinel keeps the dir NON-empty at rest, so sync/copy
+    // tools that drop empty dirs cannot downgrade it to pass-through
     lsmSpark.range(1).select(lit(0).as("seq"))
       .write.mode("append").parquet(s"$lsmPath/batch_commits")
 
@@ -147,9 +153,8 @@ private[graft] trait LsmStore {
     if (commitPoisoned) throw new IllegalStateException(
       s"LSM store '$lsmPath': a compaction/swap commit failed mid-swap " +
         "on this instance — the on-disk store may be half-swapped. " +
-        "Construct a new instance (recovery finishes the commit from " +
-        "the pre-commit marker at construction); do not keep serving " +
-        "from this one.")
+        "Construct a new instance (it finishes the commit from the " +
+        "pre-commit marker); do not keep serving from this one.")
 
   /** Run the destructive half of a commit, poisoning this instance if
     * it throws (the marker and temps stay on disk for recovery). */
@@ -157,48 +162,46 @@ private[graft] trait LsmStore {
     try { val r = f; commitPoisoned = false; r }
     catch { case e: Throwable => commitPoisoned = true; throw e }
 
-  /** The single visibility rule every log read applies (fence + commit
-    * record fused — one fence read and one commit-log read per CALL;
-    * a view composed of several log reads pays one pair per leg):
-    * base rows (seq 0) always pass; rows at or below the fence were
-    * folded by a committed compaction and drop; rows above the fence
-    * pass only with a batch-commit record. The commit log exists from
-    * construction on (recoverSeq backfills legacy stores — whose rows
-    * were committed by the old single-write contract — and creates it
-    * empty for fresh ones; every log-dropping commit re-creates it),
-    * so the missing-dir pass-through can only be observed in the
-    * instant between a commit's log-drop and its re-create, when the
-    * logs are empty anyway. */
-  protected final def visibleFilter(df: DataFrame): DataFrame = {
+  /** A [[visibility]] snapshot; `bare`: no log row can pass `pred`. */
+  protected final class Visibility(val pred: Column, val bare: Boolean)
+
+  /** The single visibility rule, resolved ONCE per view: one fence read
+    * and one commit-log read (schema `seq INT`; the committed seqs above
+    * the fence, a handful of ints, de-duplicated on the driver). Base
+    * rows (seq 0) always pass; rows at or below the fence were folded by
+    * a committed compaction and drop; rows above the fence pass only
+    * with a batch-commit record. Every log a view reads filters with the
+    * one literal `seq = 0 OR seq IN (…)`; with no committed seq above
+    * the fence the view is `bare` (its bases alone, the at-rest plan).
+    * The commit log exists from construction on ([[recoverSeq]] backfills
+    * legacy stores; every log-dropping commit re-creates it), so the
+    * missing-dir pass-through `seq = 0 OR seq > fence` applies only
+    * between a commit's log-drop and its re-create (empty logs). */
+  protected final def visibility(): Visibility = {
     guardPoisoned()
     val fence = readFence()
-    val unfenced =
-      if (fence == 0) df
-      else df.where(col("seq") === 0 || col("seq") > fence)
-    if (!lsmFs.exists(new Path(s"$lsmPath/batch_commits"))) return unfenced
-    val commits = lsmSpark.read.parquet(s"$lsmPath/batch_commits")
-      .select(col("seq").as("c_seq")).distinct()
-      .withColumn("c_ok", lit(true))
-    unfenced
-      .join(broadcast(commits), unfenced("seq") === col("c_seq"), "left")
-      .where(col("seq") === 0 || col("c_ok"))
-      .drop("c_seq", "c_ok")
+    val commits = s"$lsmPath/batch_commits"
+    if (!lsmFs.exists(new Path(commits)))
+      return new Visibility(col("seq") === 0 || col("seq") > fence, false)
+    val seqs = lsmSpark.read.schema(SeqSchema).parquet(commits)
+      .where(col("seq") > fence).collect().map(_.getInt(0)).distinct.sorted
+    new Visibility(col("seq") === 0 || col("seq").isin(seqs.toSeq: _*),
+      seqs.isEmpty)
   }
 
   // ---- the live view ----
 
-  /** The visible tombstone log as (`key`, seq). */
-  protected final def visibleTombstones(key: String): DataFrame =
-    visibleFilter(readOr("tombstones", emptySeqKeys(key))).select(key, "seq")
+  /** The visible tombstone log as (`key`, seq), `key` typed as in `base`. */
+  protected final def visibleTombstones(base: DataFrame, key: String,
+                                        vis: Visibility): DataFrame =
+    readLog("tombstones", StructType(Seq(base.schema(key)) ++ SeqSchema))
+      .where(vis.pred)
 
   /** `base` (carrying `seq`) ∪ the visible rows of the delta log at
-    * `deltaSub`, projected to the base's columns. */
-  protected final def withVisibleDelta(base: DataFrame,
-                                       deltaSub: String): DataFrame = {
-    val cols = base.columns.toSeq.map(col)
-    base.unionByName(
-      visibleFilter(readOr(deltaSub, base.limit(0)).select(cols: _*)))
-  }
+    * `deltaSub`, read with the base's schema. */
+  protected final def withVisibleDelta(base: DataFrame, deltaSub: String,
+                                       vis: Visibility): DataFrame =
+    base.unionByName(readLog(deltaSub, base.schema).where(vis.pred))
 
   /** The kill rule as a join: a row of `rows` is killed by a tombstone
     * of `tombs` on the same `key` at a STRICTLY later seq. `how` is
@@ -208,23 +211,27 @@ private[graft] trait LsmStore {
     rows.join(tombs,
       rows(key) === tombs(key) && tombs("seq") > rows("seq"), how)
 
-  /** The serving views: for each (base, delta log) leg, base rows at
-    * seq 0 ∪ the visible delta, minus the rows a visible tombstone on
-    * `key` kills — one tombstone read (broadcast) shared by every leg.
-    * With `keepSeq` the base carries its own `seq` column and the
-    * views keep it (stores whose rows keep their seq through
-    * compaction); otherwise `seq` is dropped. */
+  /** The serving views under one snapshot `vis`: for each (base, delta
+    * log) leg, base rows at seq 0 ∪ the visible delta, minus the rows a
+    * visible tombstone on `key` kills (one tombstone read, broadcast,
+    * shared by every leg). A `bare` snapshot returns the bases as they
+    * are: no union, no anti-join. With `keepSeq` the base carries its
+    * own `seq` column and the views keep it (stores whose rows keep
+    * their seq through compaction); otherwise `seq` is dropped. */
   protected final def liveViews(key: String = "vec_id",
-                                keepSeq: Boolean = false)(
-      legs: (DataFrame, String)*): Seq[DataFrame] = {
-    val t = broadcast(visibleTombstones(key))
-    legs.map { case (base, deltaSub) =>
-      val all = withVisibleDelta(
-        if (keepSeq) base else base.withColumn("seq", lit(0)), deltaSub)
-      val live = killJoin(all, t, key, "left_anti")
-      if (keepSeq) live else live.drop("seq")
+                                keepSeq: Boolean = false,
+                                vis: Visibility = visibility())(
+      legs: (DataFrame, String)*): Seq[DataFrame] =
+    if (vis.bare) legs.map(_._1)
+    else {
+      val t = broadcast(visibleTombstones(legs.head._1, key, vis))
+      legs.map { case (base, deltaSub) =>
+        val all = withVisibleDelta(
+          if (keepSeq) base else base.withColumn("seq", lit(0)), deltaSub, vis)
+        val live = killJoin(all, t, key, "left_anti")
+        if (keepSeq) live else live.drop("seq")
+      }
     }
-  }
 
   /** The compaction cadence: true when a store whose latest seq is
     * `seq` has gone `every` batches since the LAST compaction (the
@@ -244,10 +251,7 @@ private[graft] trait LsmStore {
     * restart, or a crash loop would reset the clock forever). 0 when
     * never measured, the last measured batch was clean, or a refit
     * restarted the run. */
-  final def driftBreaches: Int =
-    try readMarker("_drift_breaches").map(_.trim).filter(_.nonEmpty)
-      .map(_.toInt).getOrElse(0)
-    catch { case _: Exception => 0 }
+  final def driftBreaches: Int = readIntMarker("_drift_breaches")
 
   /** Record one measured batch: a breach extends the run, a clean
     * batch resets it. Returns the updated run length. One tiny marker
@@ -263,16 +267,10 @@ private[graft] trait LsmStore {
   /** Stage a zeroed breach marker inside the compaction temp dir and
     * return its rename pair — a REFIT commit includes it in its
     * [[commitCompaction]] renames so the run reset is ATOMIC with the
-    * model swap: a crash after the commit's destructive half can never
-    * leave `refitDue` latched true over an already-refit store (the
-    * reconstructed maintainer would re-run the O(corpus) refit for
-    * nothing), and recovery re-applies the reset with the rest of the
-    * marker's renames. */
+    * model swap: a crash can never leave `refitDue` latched true over
+    * an already-refit store, and recovery re-applies the reset. */
   protected final def stageDriftBreachReset(): (String, String) = {
-    lsmFs.mkdirs(new Path(s"$lsmPath/$CompactTmpDir"))
-    val tmp = new Path(s"$lsmPath/$CompactTmpDir/_drift_breaches")
-    val out = lsmFs.create(tmp, true)
-    try out.write("0".getBytes("UTF-8")) finally out.close()
+    writeFile(new Path(s"$lsmPath/$CompactTmpDir/_drift_breaches"), "0")
     s"$CompactTmpDir/_drift_breaches" -> "_drift_breaches"
   }
 
@@ -284,8 +282,7 @@ private[graft] trait LsmStore {
     * which Hadoop FileSystems signal as `false`, not exceptions). */
   protected final def publishMarker(markerFile: String, body: String): Unit = {
     val tmp = new Path(s"$lsmPath/$markerFile.tmp")
-    val out = lsmFs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeFile(tmp, body)
     val fin = new Path(s"$lsmPath/$markerFile")
     lsmFs.delete(fin, false)
     require(lsmFs.rename(tmp, fin),
@@ -307,6 +304,18 @@ private[graft] trait LsmStore {
       while (n > 0) { bos.write(buf, 0, n); n = in.read(buf) }
       Some(new String(bos.toByteArray, "UTF-8"))
     } finally in.close()
+  }
+
+  /** An integer marker ([[readMarker]]); 0 when absent or unreadable. */
+  protected final def readIntMarker(markerFile: String): Int =
+    try readMarker(markerFile).map(_.trim).filter(_.nonEmpty)
+      .map(_.toInt).getOrElse(0)
+    catch { case _: Exception => 0 }
+
+  /** Write a small file whole (its parent dirs are created). */
+  private def writeFile(p: Path, body: String): Unit = {
+    val out = lsmFs.create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
   // ---- crash-safe compaction commit ----
@@ -372,14 +381,10 @@ private[graft] trait LsmStore {
   protected final def recoverCompaction(): Unit = {
     val body = readMarker("_lsm_precommit").getOrElse(return)
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    // Defensive parse: the marker is published via temp-file + rename,
-    // so a 0-byte or garbled body can only come from an FS that creates
-    // the rename target before the content syncs — a crash point BEFORE
-    // publishMarker returned, hence BEFORE any destructive step ran
-    // (base and logs are fully intact; only inert temps exist). The
-    // safe recovery is to ABORT the never-started commit — drop the
-    // marker and the temp dir — not to brick every construction with a
-    // NumberFormatException (the recoverSwap tolerance, applied here).
+    // Defensive parse: a 0-byte or garbled body means the publisher
+    // crashed BEFORE publishMarker returned, hence before any
+    // destructive step ran. ABORT the never-started commit (drop the
+    // marker and the temp dir) rather than brick every construction.
     val parsed: Option[(Int, Seq[(String, String)])] = try {
       val lines = body.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
       val seq = lines.head.toInt
@@ -426,7 +431,7 @@ private[graft] trait LsmStore {
       // the empty dir, so even its FIRST batch's crash is filtered
       val backfill = new Path(s"$lsmPath/_batch_commits_backfill")
       val legacySeqs = lsmLogDirs.filterNot(_ == "batch_commits")
-        .map(sub => readOr(sub, emptySeqIds).select("seq"))
+        .map(readLog(_, SeqSchema))
         .reduce(_.unionByName(_))
         .where(col("seq") > 0).distinct()
         .persist()
@@ -451,9 +456,7 @@ private[graft] trait LsmStore {
         s"LSM store '$lsmPath': failed to install the backfilled " +
           "commit log")
     }
-    val logs = lsmLogDirs
-      .map(sub => readOr(sub, emptySeqIds).select("seq"))
-      .reduce(_.unionByName(_))
+    val logs = lsmLogDirs.map(readLog(_, SeqSchema)).reduce(_.unionByName(_))
     val m = logs.agg(max("seq")).head()
     math.max(readFence(), if (m.isNullAt(0)) 0 else m.getInt(0))
   }
@@ -509,9 +512,8 @@ private[graft] trait LsmStore {
   * which frame is counted and drift-checked, the table the occupancy
   * watermark counts, its log wording, and what [[compactNow]] rewrites.
   * PostingsStore and DedupGate share the cadence test
-  * ([[LsmStore.compactionDueAt]]) but not this trait: they have no
-  * drift check or refit, and its public members would be new API on
-  * them.
+  * ([[LsmStore.compactionDueAt]]) but not this trait (no drift check
+  * or refit).
   *
   * Driver-side state is one Int (the batch counter); everything heavy
   * is DataFrame jobs, so a maintainer is safe as a `foreachBatch` body.
@@ -547,9 +549,7 @@ private[graft] trait VectorLsmStore extends LsmStore {
 
   /** (max shift in fit-MADs, max spread fold) of the most recent
     * batch's arrivals vs the fit stats — None until a batch with both
-    * a configured [[DriftCheck]] and arrivals has run. Exposed so
-    * callers (and specs) can act on the measurement, not just the log
-    * line. */
+    * a configured [[DriftCheck]] and arrivals has run. */
   @volatile var lastDrift: Option[(Double, Double)] = None
 
   /** Batches applied over the store's lifetime (persistent: recovered
@@ -584,19 +584,17 @@ private[graft] trait VectorLsmStore extends LsmStore {
     // bless a failed attempt's orphans
     batches = seq
     // counts snapshot BEFORE this batch's delta lands (counting after
-    // the write would double-count the batch); the base is counted
-    // from its parquet directly — loading the model just to count
-    // rows would collect a forest's node table to the driver
+    // the write would double-count the batch), from the parquet tables
     if (occupancyWatermark > 0) ensureCounts(
-      lsmSpark.read.parquet(s"$lsmPath/$countedTable").count(),
-      readOr(s"${countedTable}_delta", emptySeqIds).count())
+      readBase(countedTable).count(),
+      readLog(s"${countedTable}_delta", SeqSchema).count())
     val counted = writeArrivals(seq)
     deletes.foreach { d =>
-      d.select(col("vec_id"), lit(seq).as("seq"))
+      logRows(d, Seq(readBase(countedTable).schema("vec_id")), seq)
         .write.mode("append").parquet(s"$lsmPath/tombstones")
     }
     // the batch becomes visible ATOMICALLY here: a crash above leaves
-    // a partial batch that visibleFilter ignores
+    // a partial batch that the visibility rule ignores
     markBatchCommitted(seq)
     if (occupancyWatermark > 0)
       counted.foreach(a => atRestRows += a.count())
@@ -631,8 +629,10 @@ private[graft] trait VectorLsmStore extends LsmStore {
 }
 
 object LsmStore {
-  /** Default compaction cadence, read off the measured serve-latency-
-    * vs-log-depth curve (1M×64-d, SCALE.md §Index lifecycle):
+  /** Default compaction cadence, read off the serve-latency-vs-log-depth
+    * curve measured under the per-leg visibility join that
+    * [[LsmStore.visibility]] replaced (1M×64-d, SCALE.md §Index
+    * lifecycle; re-measure before changing it):
     * view searches are FLAT through ~25 batches of logs (3.0 → 3.4 s),
     * then small-fragment overhead compounds (5.0 s at 50, 7.4 s at
     * 100, vs a 2.0 s compacted baseline). 32 sits at the knee: serve

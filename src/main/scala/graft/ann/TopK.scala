@@ -34,9 +34,9 @@ object TopK {
 
   final case class Neighbor(vec_id: Long, dist: Double)
 
-  /** Aggregator input: the distance is boxed so a NULL stays NULL
-    * instead of arriving as 0.0. */
-  final case class Scored(vec_id: Long, dist: java.lang.Double)
+  /** Aggregator input: the id and the distance are boxed so a NULL
+    * stays NULL instead of arriving as 0 / 0.0. */
+  final case class Scored(vec_id: java.lang.Long, dist: java.lang.Double)
 
   /** Mutable bounded buffer: the first `size` slots of (ids, dists) are
     * filled, sorted ascending by (dist, id). */
@@ -94,8 +94,9 @@ object TopK {
       }
     }
 
+    /** A pair with no id or no distance is not a neighbour. */
     override def reduce(b: Buf, n: Scored): Buf = {
-      if (n.dist != null) add(b, n.vec_id, n.dist)
+      if (n.vec_id != null && n.dist != null) add(b, n.vec_id, n.dist)
       b
     }
 

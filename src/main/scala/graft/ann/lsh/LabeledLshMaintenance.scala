@@ -79,22 +79,24 @@ final class LabeledLshMaintainer(
     Seq("model", "vectors", "buckets", "centroids", "labeled_meta")
       .map(sub => s"$CompactTmpDir/$sub" -> sub)
 
+  /** The base tables as [[LabeledLshIndex.load]] reads them (partition
+    * columns cast back per its rules; labels pinned to STRING in the
+    * read schema), each schema read once per instance. */
+  private def vectorsBase: DataFrame = readBase("vectors")
+  private def bucketsBase: DataFrame = readBase("buckets", "label")
+    .select(col("label"), col("tree_id").cast("int").as("tree_id"),
+      col("hash"), col("vec_id"))
+
   /** The serving view ([[graft.ann.LsmStore.liveViews]]) with the
     * PERSISTED (last-compaction) centroid sidecar — the crash-safe form
-    * of the staleness contract (class doc). Partition columns are cast
-    * back per [[LabeledLshIndex.load]]'s rules. */
+    * of the staleness contract (class doc). */
   def index: LabeledLshIndex = {
     val Seq(vecs, bks) = liveViews()(
-      spark.read.parquet(s"$path/vectors") -> "vectors_delta",
-      spark.read.parquet(s"$path/buckets")
-        .select(col("label").cast("string").as("label"),
-          col("tree_id").cast("int").as("tree_id"), col("hash"),
-          col("vec_id")) -> "buckets_delta")
+      vectorsBase -> "vectors_delta", bucketsBase -> "buckets_delta")
     new LabeledLshIndex(model, vecs, bks, centroidTrees,
-      Some(spark.read.parquet(s"$path/centroids")
-        .select(col("label").cast("string").as("label"),
-          col("tree_id").cast("int").as("tree_id"), col("hash"),
-          col("centroid"))))
+      Some(readBase("centroids", "label")
+        .select(col("label"), col("tree_id").cast("int").as("tree_id"),
+          col("hash"), col("centroid"))))
   }
 
   /** One streaming maintenance step. `arrivals` rows are `(vec_id,
@@ -113,19 +115,17 @@ final class LabeledLshMaintainer(
       // the dedup shuffle re-running per consumer. The count and the
       // drift check read VECTOR rows, not label rows: a multi-label
       // arrival is one vectors_delta row, and occupancy tracks the
-      // at-rest vector table the frozen forest was fit for.
+      // at-rest vector table the frozen forest was fit for. Both logs
+      // are written in their base's schema.
       arrivals.map { a0 =>
-        val vecs = a0.select("vec_id", "embedding").dropDuplicates("vec_id")
-          .localCheckpoint()
+        val vecs = logRows(a0, vectorsBase.schema, seq)
+          .dropDuplicates("vec_id").localCheckpoint()
         val lbls = a0.select(col("vec_id"),
             col("label").cast("string").as("label"))
           .dropDuplicates("vec_id", "label")
-        vecs.withColumn("seq", lit(seq))
-          .write.mode("append").parquet(s"$path/vectors_delta")
-        model.transform(vecs, "vec_id", "embedding")
-          .join(lbls, "vec_id")
-          .select(col("label"), col("tree_id"), col("hash"), col("vec_id"),
-            lit(seq).as("seq"))
+        vecs.write.mode("append").parquet(s"$path/vectors_delta")
+        logRows(model.transform(vecs, "vec_id", "embedding")
+            .join(lbls, "vec_id"), bucketsBase.schema, seq)
           .write.mode("append").parquet(s"$path/buckets_delta")
         vecs
       }

@@ -64,34 +64,39 @@ final class LshMaintainer(
     Seq("model", "vectors", "buckets")
       .map(sub => s"$CompactTmpDir/$sub" -> sub)
 
+  /** The base tables as [[Lsh.load]] reads them, each with its schema
+    * read once per instance ([[graft.ann.LsmStore.readBase]]). */
+  private def vectorsBase: DataFrame = readBase("vectors")
+  private def bucketsBase: DataFrame = readBase("buckets")
+    .select(col("tree_id").cast("int").as("tree_id"), col("hash"),
+      col("vec_id"))
+
   /** The serving view ([[graft.ann.LsmStore.liveViews]] over the
-    * vector and bucket tables). Uses the once-loaded frozen [[model]] —
-    * `Lsh.load` here would collect the forest's node table to the
-    * driver on EVERY serving call (a per-micro-batch tax a foreachBatch
-    * loop pays for nothing: the model is frozen by the class contract,
-    * and compaction rewrites it byte-identically). */
+    * vector and bucket tables), resolved from one visibility snapshot:
+    * with no committed batch above the fence (e.g. just compacted) it
+    * is the at-rest plan plus the one commit-log read. Uses the
+    * once-loaded frozen [[model]] — `Lsh.load` here would collect the
+    * forest's node table to the driver on EVERY serving call (a
+    * per-micro-batch tax a foreachBatch loop pays for nothing: the
+    * model is frozen by the class contract, and compaction rewrites it
+    * byte-identically). */
   def index: LshIndex = {
     val Seq(vecs, bks) = liveViews()(
-      spark.read.parquet(s"$path/vectors") -> "vectors_delta",
-      spark.read.parquet(s"$path/buckets")
-        .select(col("tree_id").cast("int").as("tree_id"), col("hash"),
-          col("vec_id")) -> "buckets_delta")
+      vectorsBase -> "vectors_delta", bucketsBase -> "buckets_delta")
     new LshIndex(model, vecs, bks)
   }
 
   /** One streaming maintenance step. `arrivals` rows are
     * (vec_id, embedding); `deletes` rows are (vec_id). An id in both is
-    * an upsert. */
+    * an upsert. Both logs are written in their base's schema. */
   def onBatch(arrivals: Option[DataFrame],
               deletes: Option[DataFrame]): Unit =
     runBatch(deletes) { seq =>
       arrivals.foreach { a0 =>
-        val a = a0.select("vec_id", "embedding")
-        a.withColumn("seq", lit(seq))
-          .write.mode("append").parquet(s"$path/vectors_delta")
-        model.transform(a, "vec_id", "embedding")
-          .select(col("tree_id"), col("hash"), col("vec_id"),
-            lit(seq).as("seq"))
+        val a = logRows(a0, vectorsBase.schema, seq)
+        a.write.mode("append").parquet(s"$path/vectors_delta")
+        logRows(model.transform(a, "vec_id", "embedding"),
+            bucketsBase.schema, seq)
           .write.mode("append").parquet(s"$path/buckets_delta")
       }
       arrivals

@@ -106,14 +106,15 @@ final class PostingsStore(
     * ([[graft.ann.LsmStore.compactionDueAt]]). */
   def compactionDue: Boolean = compactionDueAt(batches + 1, compactEvery)
 
-  private def withDelta(baseSub: String): DataFrame =
-    withVisibleDelta(spark.read.parquet(s"$path/$baseSub"), s"${baseSub}_delta")
+  private def withDelta(baseSub: String, vis: Visibility): DataFrame =
+    withVisibleDelta(readBase(baseSub), s"${baseSub}_delta", vis)
 
   /** The shared live view ([[graft.ann.LsmStore.liveViews]]) over a
-    * base table whose rows keep their `seq` through compaction. */
-  private def live(baseSub: String): DataFrame =
-    liveViews("doc_id", keepSeq = true)(
-      spark.read.parquet(s"$path/$baseSub") -> s"${baseSub}_delta").head
+    * base table whose rows keep their `seq` through compaction. A
+    * caller that reads several views passes one snapshot `vis` to all. */
+  private def live(baseSub: String, vis: Visibility = visibility()): DataFrame =
+    liveViews("doc_id", keepSeq = true, vis)(
+      readBase(baseSub) -> s"${baseSub}_delta").head
 
   /** Live raw postings (doc_id, term, tf, dl, seq). */
   private[retrieval] def liveTfs: DataFrame = live("tfs")
@@ -127,7 +128,7 @@ final class PostingsStore(
     * composed pipelines and specs check store membership against. */
   def liveDocs: DataFrame = liveDoclens.select(col("doc_id"), col("dl"))
 
-  private def stats: DataFrame = spark.read.parquet(s"$path/stats")
+  private def stats: DataFrame = readBase("stats")
   private def meta: (Long, Double, Long) = {
     val r = spark.read.parquet(s"$path/meta").head()
     (r.getAs[Long]("n"), r.getAs[Double]("avgdl"), r.getAs[Long]("tdl"))
@@ -183,22 +184,21 @@ final class PostingsStore(
             "score NOTHING until a refit and df for known terms is stale. " +
             "Run mergeRefit(): it folds the drift into the stats in " +
             "O(drift) and the stored raw rows re-score retroactively.")
-        tf.select(col("doc_id"), col("term"), col("tf"), col("dl"),
-            lit(seq).as("seq"))
+        logRows(tf, readBase("tfs").schema, seq)
           .write.mode("append").parquet(s"$path/tfs_delta")
-        a.select(col("doc_id"), size(col("toks")).as("dl"),
-            lit(seq).as("seq"))
+        logRows(a.select(col("doc_id"), size(col("toks")).as("dl")),
+            readBase("doclens").schema, seq)
           .write.mode("append").parquet(s"$path/doclens_delta")
       // finally: the burn-and-retry contract makes the failure path an
       // expected flow — a leaked cached RDD per failed attempt would
       // accumulate across retries
       } finally tf.unpersist(false)
     }
-    deletes.foreach(_.select(col("doc_id"), lit(seq).as("seq"))
-      .write.mode("append").parquet(s"$path/tombstones"))
+    deletes.foreach(d => logRows(d, Seq(readBase("doclens").schema("doc_id")),
+        seq).write.mode("append").parquet(s"$path/tombstones"))
     // atomic visibility: a crash above leaves a partial batch (tfs
     // written, doclens not — or a delete without its upsert arrival)
-    // that visibleFilter ignores instead of serving diverged views
+    // that the visibility rule ignores instead of serving diverged views
     markBatchCommitted(seq)
     if (compactionDueAt(batches, compactEvery)) compactNow()
   }
@@ -216,10 +216,7 @@ final class PostingsStore(
     * doc count) still refuses the doc-count-changing cases loudly;
     * count-neutral drift (same-length upserts) on such a store is the
     * residual documented gap — rebuild closes it. */
-  private def markerFence: Int =
-    try readMarker("_stats_fence").map(_.trim).filter(_.nonEmpty)
-      .map(_.toInt).getOrElse(0)
-    catch { case _: Exception => 0 }
+  private def markerFence: Int = readIntMarker("_stats_fence")
 
   private def statsFence: Int = {
     val marker = markerFence
@@ -318,8 +315,10 @@ final class PostingsStore(
     // guard only fires for PRE-stats_seq stores with a lost marker (or
     // a hand-damaged meta), where it refuses the doc-count-changing
     // double-fold cases loudly.
+    // one visibility snapshot for every log read of the fold
+    val vis = visibility()
     if (sf == 0) {
-      val fitDocs = withDelta("doclens").where(col("seq") <= 0).count()
+      val fitDocs = withDelta("doclens", vis).where(col("seq") <= 0).count()
       val (n0, _, _) = meta
       require(fitDocs == n0,
         s"postings store '$path': stats fence reads 0 (fit-time only) " +
@@ -329,7 +328,8 @@ final class PostingsStore(
           "already-folded rows. Rebuild (PostingsStore.build).")
     }
     val newFence = batches
-    val tombs = visibleTombstones("doc_id").persist()
+    val tombs = visibleTombstones(readBase("doclens"), "doc_id", vis)
+      .persist()
     try {
       val newT = broadcast(tombs.where(col("seq") > sf))
       val oldT = broadcast(tombs.where(col("seq") <= sf))
@@ -340,12 +340,12 @@ final class PostingsStore(
       def deadOld(all: DataFrame): DataFrame = killJoin(
         killJoin(all.where(col("seq") <= sf), oldT, "doc_id", "left_anti"),
         newT, "doc_id", "left_semi")
-      val deadTf = deadOld(withDelta("tfs"))
-      val deadDl = deadOld(withDelta("doclens"))
+      val deadTf = deadOld(withDelta("tfs", vis))
+      val deadDl = deadOld(withDelta("doclens", vis))
       // live rows the stats don't cover yet (arrivals since the fence;
       // an upserted doc's surviving version)
-      val freshTf = liveTfs.where(col("seq") > sf)
-      val freshDl = liveDoclens.where(col("seq") > sf)
+      val freshTf = live("tfs", vis).where(col("seq") > sf)
+      val freshDl = live("doclens", vis).where(col("seq") > sf)
 
       val dlMoves = freshDl.select(lit(1L).as("dn"), col("dl").cast("long"))
         .withColumn("sgn", lit(1L))
@@ -414,9 +414,10 @@ final class PostingsStore(
   def compactNow(): Unit = {
     guardPoisoned()
     mergeRefit()
-    liveTfs.localCheckpoint().write.mode("overwrite")
+    val vis = visibility()
+    live("tfs", vis).localCheckpoint().write.mode("overwrite")
       .parquet(s"$path/$CompactTmpDir/tfs")
-    liveDoclens.localCheckpoint().write.mode("overwrite")
+    live("doclens", vis).localCheckpoint().write.mode("overwrite")
       .parquet(s"$path/$CompactTmpDir/doclens")
     commitCompaction(batches, Seq(
       s"$CompactTmpDir/tfs" -> "tfs",

@@ -58,7 +58,7 @@ final class DedupGate(
   override protected def lsmLogDirs: Seq[String] =
     Seq("bands_delta", "tombstones", "batch_commits")
 
-  private def base: DataFrame = spark.read.parquet(s"$path/bands")
+  private def base: DataFrame = readBase("bands")
 
   /** The frozen hot-shingle row the gate bands arrivals with. When
     * capping is on (`cfg.maxDocFreqRatio < 1`) and no `hot` frame was
@@ -149,14 +149,13 @@ final class DedupGate(
         .select(col("doc_id"), col("cluster_id"))
         .dropDuplicates("doc_id")
         .localCheckpoint()
-      deletes.foreach(_.select(col(idCol).as("doc_id"), lit(seq).as("seq"))
+      deletes.foreach(d => logRows(d.select(col(idCol).as("doc_id")),
+          Seq(base.schema("doc_id")), seq)
         .write.mode("append").parquet(s"$path/tombstones"))
       // admitted docs' band rows = the gating pass's own rows, filtered —
       // no second shingling/banding of the batch
-      aBands
-        .join(broadcast(rej.select(col("doc_id"))), Seq("doc_id"),
-          "left_anti")
-        .withColumn("seq", lit(seq))
+      logRows(aBands.join(broadcast(rej.select(col("doc_id"))),
+          Seq("doc_id"), "left_anti"), base.schema, seq)
         .write.mode("append").parquet(s"$path/bands_delta")
       rej
     } finally aBands.unpersist(false)
@@ -164,7 +163,7 @@ final class DedupGate(
       broadcast(rejected.select(col("doc_id").as(idCol))),
       Seq(idCol), "left_anti")
     // the batch becomes visible ATOMICALLY here (LsmStore doc): a crash
-    // above leaves a partial batch that visibleFilter ignores
+    // above leaves a partial batch that the visibility rule ignores
     markBatchCommitted(seq)
     if (compactionDueAt(batches, compactEvery)) compactNow()
     DedupGate.Result(admitted, rejected)

@@ -59,6 +59,17 @@ class TopKSpec extends AnyFunSuite with SparkSpecBase {
     assert(got === Seq((1L, 1.0), (2L, 2.0)))
   }
 
+  test("a NULL vec_id is not a neighbour: it never reads as id 0") {
+    val corpus = Seq[(java.lang.Long, Seq[Double])](
+      (null, Seq(0.1, 0.0)), (5L, Seq(1.0, 0.0)), (6L, Seq(2.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    val q = Seq((0L, Seq(0.0, 0.0))).toDF("query_id", "qv")
+    val got = ExactNN.topK(q, corpus, k = 2, ExactNN.L2)
+      .orderBy("dist", "vec_id").collect()
+      .map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    assert(got === Seq((5L, 1.0), (6L, 2.0)))
+  }
+
   test("tie eviction is deterministic: equal dists keep lowest vec_id") {
     val corpus = Seq(
       (1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.0)), (3L, Seq(1.0, 0.0)),
