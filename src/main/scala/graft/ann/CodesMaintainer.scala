@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * Arrivals land seq-stamped in `codes_delta`; [[liveCodes]] is the
   * serving view — feed it to the family's index constructor
-  * (`new SqIndex(model, m.liveCodes)`); [[compactNow]] folds it into
-  * `$path/codes`. The occupancy watermark counts the codes table: for
+  * (`new SqIndex(model, m.liveCodes)`); [[compactNow]] folds it into a
+  * new generation of the codes table. The occupancy watermark counts the codes table: for
   * the frozen models the inflation is per-family drift (SQ bounds
   * saturate, PQ codebooks go stale, IVF cells crowd), so the warning's
   * action is refit/retrain ([[refitAndSwap]]), not compact harder;
@@ -49,7 +49,7 @@ final class CodesMaintainer(
   override protected def lsmSpark: SparkSession = spark
   override protected def lsmPath: String = path
   override protected def lsmLogDirs: Seq[String] =
-    Seq("codes_delta", "tombstones", "batch_commits")
+    Seq("codes_delta", "tombstones")
   override protected def countedTable: String = "codes"
   override protected def storeLabel: String = "stored codes table"
   override protected def driftAdvice: String =
@@ -62,47 +62,49 @@ final class CodesMaintainer(
       "scaladoc) has likely been outgrown. Refit/retrain; compaction " +
       "drops tombstoned rows but never re-fits the model."
 
-  /** Write `df` to `$path/$sub`, repartitioned on the family layout so
+  /** Write `df` to the dir `p`, repartitioned on the family layout so
     * a partitioned write emits one file per partition dir per write
     * (the `IvfSq.save` clustering), not one per upstream task. */
-  private def writeCodes(df: DataFrame, sub: String, mode: String): Unit = {
+  private def writeCodes(df: DataFrame, p: String, mode: String): Unit = {
     val clustered =
       if (partitionCols.isEmpty) df
       else df.repartition(partitionCols.map(col): _*)
     val w = clustered.write.mode(mode)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$path/$sub")
+      .parquet(p)
   }
 
   /** The serving view ([[LsmStore.liveViews]] over the codes table).
     * Pass to the family's index constructor. */
-  def liveCodes: DataFrame =
-    liveViews()(readBase("codes") -> "codes_delta").head
+  def liveCodes: DataFrame = liveCodes(manifest())
+
+  private def liveCodes(m: LsmStore.Manifest): DataFrame =
+    liveViews(m)(readBase(m, "codes") -> "codes_delta").head
 
   /** One maintenance step. `arrivals` rows are (vec_id, embedding);
     * `deletes` rows are (vec_id). An id in both is an upsert. Codes
     * are logged in the base table's schema. */
   def onBatch(arrivals: Option[DataFrame],
               deletes: Option[DataFrame]): Unit =
-    runBatch(deletes) { seq =>
+    runBatch(deletes) { (m, seq) =>
       arrivals.foreach { a =>
-        writeCodes(logRows(encodeFn(a), readBase("codes").schema, seq),
-          "codes_delta", "append")
+        writeCodes(logRows(encodeFn(a), readBase(m, "codes").schema, seq),
+          m.log("codes_delta"), "append")
       }
       arrivals
     }
 
-  /** Fold the logs into the base codes table (family layout preserved
-    * via `partitionCols`): the folded base lands in the compaction
-    * temp dir first, then [[graft.ann.LsmStore.commitCompaction]] runs
-    * the crash-safe swap-fence-drop sequence — a crash at any point
-    * either leaves the old base + logs fully intact (pre-marker) or is
-    * finished by the next construction's
-    * [[graft.ann.LsmStore.recoverCompaction]]. */
+  /** Fold the logs into a new base codes table (family layout preserved
+    * via `partitionCols`) written as a new generation and published by
+    * [[graft.ann.LsmStore.commitFold]] — a crash before the publish
+    * leaves an orphan generation no manifest names, and the old base +
+    * logs serve on. */
   def compactNow(): Unit = {
-    val live = liveCodes.localCheckpoint()
-    writeCodes(live, s"$CompactTmpDir/codes", "overwrite")
-    commitCompaction(batches, Seq(s"$CompactTmpDir/codes" -> "codes"))
+    val m = manifest()
+    val live = liveCodes(m).localCheckpoint()
+    val n = newGeneration()
+    writeCodes(live, s"$path/${genDir(n)}/codes", "overwrite")
+    commitFold(m, n, Seq("codes"), batches)
     val folded = live.count()
     onCompacted(folded)
     if (log.isInfoEnabled) log.info(
@@ -112,28 +114,27 @@ final class CodesMaintainer(
 
   /** The drift warning's prescribed action, as code — the
     * [[graft.ann.lsh.LshMaintainer.refitNow]] of the codes stores:
-    * RETRAIN on the live corpus and swap model + codes atomically.
-    * The maintainer is family-generic (it holds only an encode
-    * closure), so the caller owns the family fit and hands back:
+    * RETRAIN on the live corpus and publish model + codes as one
+    * generation. The maintainer is family-generic (it holds only an
+    * encode closure), so the caller owns the family fit and hands back:
     *
     *   - `newEncode` — the freshly-trained frozen model's transform
     *     ((vec_id, embedding) → code rows, the constructor `encode`
     *     contract), used for the re-encode here and every later batch;
     *   - `writeModel` — persists the new model dirs UNDER THE GIVEN
-    *     TEMP ROOT using the same subdir names the live model occupies
-    *     (each family's `model.save` pointed at the temp root);
-    *   - `modelSubs` — those subdir names, so the commit swaps them
-    *     with the codes in ONE crash-safe step.
+    *     ROOT using the same subdir names the live model occupies
+    *     (each family's `model.save` pointed at that root);
+    *   - `modelSubs` — those subdir names, so the commit publishes
+    *     them with the codes in ONE manifest.
     *
     * `vectors` must cover the live ids (rows of deleted ids are
     * dropped by the serve-view semi-join; the id set served afterwards
-    * is exactly the id set served before). Everything lands in the
-    * compaction temp dir first, then
-    * [[graft.ann.LsmStore.commitCompaction]] runs the swap-fence-drop
-    * sequence — a crash either leaves the old model + codes + logs
-    * intact or is finished at the next construction. Afterwards the
-    * occupancy fit reference resets ([[graft.ann.LsmStore.onRefit]])
-    * and the drift-breach run restarts; the caller should also refresh
+    * is exactly the id set served before). Everything lands in a new
+    * generation first, then [[graft.ann.LsmStore.commitFold]]
+    * publishes it — a crash before the publish leaves the old model +
+    * codes + logs serving. Afterwards the occupancy fit reference
+    * resets ([[graft.ann.LsmStore.onRefit]]) and the drift-breach run
+    * restarts (in the same publish); the caller should also refresh
     * the [[DriftCheck]] stats ([[DriftCheck.writeFitStats]] on the
     * refit corpus — the check reads its stats path live).
     *
@@ -141,30 +142,26 @@ final class CodesMaintainer(
     * batches, but a maintainer constructed AFTER the refit gets
     * whatever `encode` closure the caller passes — always construct
     * with the transform of the PERSISTED model (each family's `load`
-    * over `path`, the [[graft.ann.lsh.LshMaintainer]] model-cache
-    * rule); a stale closure would encode future arrivals against the
+    * over `path`, which resolves the dirs through the manifest); a
+    * stale closure would encode future arrivals against the
     * swapped-out geometry. */
   def refitAndSwap(vectors: DataFrame,
                    newEncode: DataFrame => DataFrame,
                    writeModel: String => Unit = _ => (),
                    modelSubs: Seq[String] = Nil): Unit = {
-    guardPoisoned()
+    val m = manifest()
     val live = vectors
-      .join(liveCodes.select("vec_id"), Seq("vec_id"), "left_semi")
+      .join(liveCodes(m).select("vec_id"), Seq("vec_id"), "left_semi")
       .localCheckpoint()
-    writeCodes(newEncode(live), s"$CompactTmpDir/codes", "overwrite")
-    writeModel(s"$path/$CompactTmpDir")
-    // the breach-run reset rides the commit (staged rename, not a
-    // post-commit write): a crash after the swap can't leave refitDue
-    // latched true and trigger a spurious second O(corpus) refit
-    commitCompaction(batches,
-      ("codes" +: modelSubs).map(s => s"$CompactTmpDir/$s" -> s) :+
-        stageDriftBreachReset())
+    val n = newGeneration()
+    writeCodes(newEncode(live), s"$path/${genDir(n)}/codes", "overwrite")
+    writeModel(s"$path/${genDir(n)}")
+    commitFold(m, n, "codes" +: modelSubs, batches, "drift_breaches" -> 0)
     encodeFn = newEncode
-    val n = live.count()
-    onRefit(n)
+    val n2 = live.count()
+    onRefit(n2)
     if (log.isInfoEnabled) log.info(
-      s"$storeLabel '$path' refit on $n live vectors after " +
+      s"$storeLabel '$path' refit on $n2 live vectors after " +
         s"$batches batches (model swapped; drift-breach run reset)")
   }
 }

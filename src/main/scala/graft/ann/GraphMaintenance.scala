@@ -64,14 +64,18 @@ import org.apache.spark.sql.functions._
   * batch = upsert, later batch = re-add), closing the "old delete
   * beats new insert" inversion a bare id-set log has — where a
   * re-inserted id stayed excluded from serving and the next refine
-  * silently dropped it. [[refineNow]] is this store's compaction, and
-  * it commits CRASH-SAFELY like the dir-based maintainers: the refined
-  * graph lands in a TEMP catalog table first, a path-based swap marker
-  * records the commit, and only then do the destructive steps run
-  * (drop-and-rename the table, stamp the fence, drop the logs, drop
-  * the marker) — construction detects the marker and finishes a
-  * mid-commit crash, so every crash point either leaves the old store
-  * + logs fully intact or self-heals on reopen.
+  * silently dropped it. [[refineNow]] is this store's compaction. Its
+  * base is the catalog table `${name}_edges`, read by name, so unlike
+  * the dir-based stores it cannot publish a new generation: it keeps
+  * one rename. The refined graph lands in a TEMP catalog table first,
+  * a path-based swap marker records the commit, then the table is
+  * dropped-and-renamed and a fold manifest is published (fence and
+  * scope fence at the seq, no commits, a fresh log generation) — the
+  * [[LsmStore]] commit rule after the rename. Construction detects the
+  * marker and finishes a mid-commit crash, so every crash point either
+  * leaves the old store + logs fully intact or self-heals on reopen.
+  * This is the one store that can be half-swapped, so it alone
+  * poisons an instance whose swap threw.
   */
 final class GraphMaintainer(
     spark: SparkSession,
@@ -117,32 +121,32 @@ final class GraphMaintainer(
   override protected def lsmSpark: SparkSession = spark
   override protected def lsmPath: String = path
   override protected def lsmLogDirs: Seq[String] =
-    Seq("tombstones", "arrivals", "edges_delta", "superseded",
-      "batch_commits")
+    Seq("tombstones", "arrivals", "edges_delta", "superseded")
 
   /** The LSM sequence is PERSISTENT state (recovered from the logs and
-    * the refine fence) — a reconstructed maintainer continues both the
+    * the manifest) — a reconstructed maintainer continues both the
     * refine CADENCE and the delete/re-insert ORDERING. A refine that
     * crashed mid-commit is finished FIRST ([[recoverSwap]]); legacy
     * catalog-table tombstones are folded in SECOND
     * ([[backfillLegacyTombstones]]) so pre-log-format pending deletes
     * don't silently resurrect on upgrade. */
   private var batches = {
-    recoverSwap(); backfillLegacyTombstones()
+    val s = recoverSeq()
+    recoverSwap(s); backfillLegacyTombstones()
     // the scope fence joins the recovery max: an empty-region scoped
     // refine burns a seq that lands in NO log (its only trace is the
     // fence) — without this, a reconstructed maintainer would reuse
     // that seq and the next window's arrivals would sit at-or-below
     // the fence, permanently skipped by the scoped cadence
-    math.max(recoverSeq(), scopeFence)
+    math.max(s, scopeFence(manifest()))
   }
 
   /** Pending deletes of a pre-log-format store lived in the catalog
     * table `${name}_tombstones`; the log-based view reads only
     * `$path/tombstones` — without this fold, an existing store's
     * un-refined tombstones would silently resurrect on upgrade (the
-    * commit-log analog is recoverSeq's legacy backfill). Folded at
-    * seq 0: visible without a commit record, and killed by any later
+    * manifest analog is the conversion of a store without one). Folded
+    * at seq 0: visible without a commit, and killed by any later
     * re-insert arrival (seq ≥ 1 ≥ 0) — exactly the legacy semantics,
     * where every logged arrival postdates the legacy table. The
     * legacy table is dropped after the fold so this runs once. */
@@ -151,74 +155,102 @@ final class GraphMaintainer(
     if (!spark.catalog.tableExists(legacy)) return
     log.warn(s"stored graph '$name': found the pre-log-format tombstone " +
       s"table '$legacy' — folding its ids into the seq-stamped " +
-      s"tombstone log at '$path/tombstones' (seq 0) and dropping the " +
-      "legacy table, so pending deletes survive the upgrade.")
+      s"tombstone log (seq 0) and dropping the legacy table, so " +
+      "pending deletes survive the upgrade.")
     spark.table(legacy).select(col("vec_id"), lit(0).as("seq"))
-      .write.mode("append").parquet(s"$path/tombstones")
+      .write.mode("append").parquet(manifest().log("tombstones"))
     spark.sql(s"DROP TABLE IF EXISTS $legacy")
   }
 
-  // ---- crash-safe refine commit (the catalog-table twin of
-  //      LsmStore.commitCompaction's dir protocol) ----
+  // ---- crash-safe refine commit: the table rename, then a fold
+  //      manifest ----
 
   private def swapMarkerPath =
     new org.apache.hadoop.fs.Path(s"$path/_graph_swap")
   private def tmpTable = s"${name}_swap_edges"
   private def finalTable = s"${name}_edges"
 
+  /** Set when a swap threw mid-commit: the store may be HALF-SWAPPED
+    * (refined table renamed in, old logs still served). A caller that
+    * catches the exception and keeps serving would read a diverged
+    * view — healing happens at the next CONSTRUCTION ([[recoverSwap]]),
+    * so every serving/maintenance entry point throws until then. */
+  @volatile private var swapPoisoned = false
+
+  private def guardPoisoned(): Unit =
+    if (swapPoisoned) throw new IllegalStateException(
+      s"stored graph '$name': a refine swap failed mid-commit on this " +
+        "instance — the store may be half-swapped. Construct a new " +
+        "instance (it finishes the swap from the marker); do not keep " +
+        "serving from this one.")
+
+  /** The snapshot every view and commit of this store reads. */
+  private def snapshot(): LsmStore.Manifest = { guardPoisoned(); manifest() }
+
+  /** Publish the swap marker atomically (temp file + rename), BEFORE any
+    * destructive step. */
+  private def publishMarker(seq: Int): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(s"$path/_graph_swap.tmp")
+    val out = lsmFs.create(tmp, true)
+    try out.write(seq.toString.getBytes("UTF-8")) finally out.close()
+    lsmFs.delete(swapMarkerPath, false)
+    require(lsmFs.rename(tmp, swapMarkerPath),
+      s"stored graph '$name': failed to publish the swap marker — " +
+        "aborting before any destructive step")
+  }
+
   /** The destructive half of the refine commit — idempotent: the
     * rename is skipped when the temp table is gone (it already
-    * happened), the fence is monotone, the log/marker deletes are
-    * no-ops when done. Runs live and on recovery. */
-  private def finishSwap(seq: Int): Unit = {
-    if (spark.catalog.tableExists(tmpTable)) {
-      spark.sql(s"DROP TABLE IF EXISTS $finalTable")
-      spark.sql(s"ALTER TABLE $tmpTable RENAME TO $finalTable")
-    }
-    if (readFence() < seq) writeFence(seq)
-    // a full refine absorbs everything a scoped refine would — advance
-    // the scope fence so the scoped cadence restarts from here
-    if (scopeFence < seq) publishMarker("_scope_fence", seq.toString)
-    lsmLogDirs.foreach(sub =>
-      lsmFs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true))
-    // the commit log's existence is load-bearing (LsmStore doc) —
-    // re-create it before any new batch lands
-    initCommitLog()
-    lsmFs.delete(swapMarkerPath, false)
-  }
+    * happened), the fold manifest is published only while the fence is
+    * below `seq`, and the marker delete is a no-op when done. Runs live
+    * and on recovery; a throw poisons this instance. */
+  private def finishSwap(seq: Int): Unit =
+    try {
+      if (spark.catalog.tableExists(tmpTable)) {
+        spark.sql(s"DROP TABLE IF EXISTS $finalTable")
+        spark.sql(s"ALTER TABLE $tmpTable RENAME TO $finalTable")
+      }
+      val m = manifest()
+      // a full refine absorbs everything a scoped refine would — the
+      // scope fence moves with the fence so the scoped cadence
+      // restarts from here
+      if (m.fence < seq) commitFold(m, newGeneration(), Nil, seq,
+        "scope_fence" -> math.max(seq, scopeFence(m)))
+      lsmFs.delete(swapMarkerPath, false)
+    } catch { case e: Throwable => swapPoisoned = true; throw e }
 
   /** Detect and finish a refine that crashed mid-commit. No marker →
     * nothing was mid-commit (an orphan temp table from a pre-marker
-    * crash is inert; the next refine drops it before writing). */
-  private def recoverSwap(): Unit = {
-    // readMarker reads FULLY (a short InputStream.read could truncate
-    // the seq and regress the fence/cadence)
-    val seq = readMarker("_graph_swap") match {
-      case None => return
-      // a 0-byte/garbled marker (FS that creates the rename target
-      // before the content syncs) must not brick every construction:
-      // seq 0 finishes the swap harmlessly (fence write is monotone)
-      case Some(body) => body.trim.toIntOption.getOrElse(0)
+    * crash is inert; the next refine drops it before writing). A 0-byte
+    * or garbled marker (an FS that creates the rename target before the
+    * content syncs) reads as the recovered seq `seq`: a swap runs at
+    * the current seq, and no batch follows a crashed one. */
+  private def recoverSwap(seq: Int): Unit =
+    LsmStore.readFile(lsmFs, swapMarkerPath).foreach { body =>
+      val s = body.trim.toIntOption.getOrElse(seq)
+      log.warn(s"stored graph '$name': found a refine swap marker " +
+        s"(seq $s) — a previous process crashed mid-commit; finishing " +
+        "the commit (swap refined table into place, publish the fold).")
+      finishSwap(s)
     }
-    log.warn(s"stored graph '$name': found a refine swap marker " +
-      s"(seq $seq) — a previous process crashed mid-commit; finishing " +
-      "the commit (swap refined table into place, fence, drop logs).")
-    poisonOnFailure(finishSwap(seq))
-  }
 
   /** Insert batches applied over the store's lifetime (refines don't
     * reset — the cadence is "every Nth batch"). */
   def batchesSeen: Int = batches
 
   /** Seq through which arrivals/deletes have been absorbed by a SCOPED
-    * refine (`_scope_fence` marker, 0 = never) — the touched-region
-    * twin of the LSM fence: full refines advance both (finishSwap),
-    * scoped refines advance only this one (the logs they DIDN'T fold —
-    * tombstone revival history, un-refined arrivals — stay live). */
-  private def scopeFence: Int = readIntMarker("_scope_fence")
+    * refine (the manifest's `scope_fence`, 0 = never) — the
+    * touched-region twin of the LSM fence: full refines advance both
+    * (finishSwap), scoped refines advance only this one (the logs they
+    * DIDN'T fold — tombstone revival history, un-refined arrivals —
+    * stay live). */
+  private def scopeFence(m: LsmStore.Manifest): Int = m.int("scope_fence")
 
   /** The last refine of either kind — the cadence origin. */
-  private def lastRefineSeq: Int = math.max(readFence(), scopeFence)
+  private def lastRefineSeq: Int = {
+    val m = manifest()
+    math.max(m.fence, scopeFence(m))
+  }
 
   /** True when the NEXT [[onBatch]] call will trigger the scheduled
     * refine — exposed so callers can align checkpoints around it. The
@@ -228,13 +260,12 @@ final class GraphMaintainer(
     * whole cycle. */
   def refineDue: Boolean = (batches + 1) - lastRefineSeq >= refineEvery
 
-  /** A log read with its schema inferred (`empty` when absent): the
-    * graph logs' id columns take the type of the caller's `idCol`. */
-  private def readOr(sub: String, empty: => DataFrame): DataFrame = {
-    val p = s"$path/$sub"
+  /** The log at `p` read with its schema inferred (`empty` when
+    * absent): the graph logs' id columns take the type of the caller's
+    * `idCol`. */
+  private def readOr(p: String, empty: => DataFrame): DataFrame =
     if (lsmFs.exists(new org.apache.hadoop.fs.Path(p))) spark.read.parquet(p)
     else empty
-  }
   private def emptySeqIds: DataFrame =
     spark.range(0).select(col("id").as("vec_id"), lit(0).as("seq"))
   private def emptyEdges: DataFrame =
@@ -272,19 +303,19 @@ final class GraphMaintainer(
       .select(col("src"), col("dst"))
     // full-refine mode never writes the scoped legs — short-circuit to
     // the bare bucketed read so the default mode's hot paths (the walk
-    // re-evaluates this frame per hop) don't pay union + fence/commit
-    // reads + a supersede join for provably empty legs. The dir checks
-    // guard the one legitimate crossover (a full-mode maintainer opened
-    // on a store a scoped one wrote): present logs are always honored.
+    // re-evaluates this frame per hop) don't pay union + log reads + a
+    // supersede join for provably empty legs. The dir checks guard the
+    // one legitimate crossover (a full-mode maintainer opened on a
+    // store a scoped one wrote): present logs are always honored.
+    val m = snapshot()
     if (!scopedRefine &&
-        !lsmFs.exists(new org.apache.hadoop.fs.Path(s"$path/edges_delta")) &&
-        !lsmFs.exists(new org.apache.hadoop.fs.Path(s"$path/superseded")))
+        !lsmFs.exists(new org.apache.hadoop.fs.Path(m.log("edges_delta"))) &&
+        !lsmFs.exists(new org.apache.hadoop.fs.Path(m.log("superseded"))))
       return base0
     val base = base0.withColumn("seq", lit(0))
-    val vis = visibility().pred
-    val delta = readOr("edges_delta", emptyEdges).where(vis)
+    val delta = readOr(m.log("edges_delta"), emptyEdges).where(m.pred)
       .select("src", "dst", "seq")
-    val sup = readOr("superseded", emptySrcSeq).where(vis)
+    val sup = readOr(m.log("superseded"), emptySrcSeq).where(m.pred)
       .groupBy("src").agg(max("seq").as("sup_seq"))
     base.unionByName(delta)
       .join(broadcast(sup), Seq("src"), "left")
@@ -301,10 +332,10 @@ final class GraphMaintainer(
     * of the same id lands at an equal-or-later seq (re-insertion
     * revives the id; same-batch delete+insert is an upsert). */
   def tombstones: DataFrame = {
-    val vis = visibility().pred
-    val t = readOr("tombstones", emptySeqIds).where(vis)
+    val m = snapshot()
+    val t = readOr(m.log("tombstones"), emptySeqIds).where(m.pred)
       .select(col("vec_id"), col("seq").as("tseq"))
-    val a = readOr("arrivals", emptySeqIds).where(vis)
+    val a = readOr(m.log("arrivals"), emptySeqIds).where(m.pred)
       .select(col("vec_id").as("aid"), col("seq").as("aseq"))
     t.join(broadcast(a), t("vec_id") === a("aid") && a("aseq") >= t("tseq"),
         "left_anti")
@@ -331,19 +362,20 @@ final class GraphMaintainer(
     val seq = batches + 1
     // the seq is BURNED up front: a failed attempt's partial log rows
     // stay at a seq no retry reuses (same-instance or post-restart),
-    // so markBatchCommitted can never bless a failed attempt's orphans
+    // so no commit can ever bless a failed attempt's orphans
     batches = seq
+    val m = manifestFor(seq)
     // the two log appends land in DISJOINT directories and neither is
-    // visible until markBatchCommitted below — independent jobs, run
+    // visible until the commit below — independent jobs, run
     // concurrently (guide §2.6; each is a small fixed-latency write).
     // The old "arrivals logged BEFORE the tombstone view" ordering note
-    // still holds observably: visibility is the commit record, not the
-    // write order, and the tombstone view is taken only after both.
+    // still holds observably: visibility is the commit, not the write
+    // order, and the tombstone view is taken only after both.
     graft.ann.ParallelFit.run(2) {
       case 0 => deletes.foreach(_.select(col("vec_id"), lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/tombstones"))
+        .write.mode("append").parquet(m.log("tombstones")))
       case 1 => newVectors.select(col(idCol).as("vec_id"), lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/arrivals")
+        .write.mode("append").parquet(m.log("arrivals"))
     }
     // atomic log visibility BEFORE the walk: a crash between the two
     // log writes leaves a partial batch (a delete without its upsert
@@ -352,7 +384,7 @@ final class GraphMaintainer(
     // backbone the next refine re-links it (randomBackbone runs over
     // the live vectors, which include it); with backbone = false no
     // refine creates edges for an absent node — re-insert the id
-    markBatchCommitted(seq)
+    val committed = commit(m)(_.committed(seq))
     // Scoped mode's served view is base ∪ delta + a supersede join over
     // two LSM log scans — NOT the bare bucketed read — and the insert
     // walk below re-evaluates its edge frame once per hop (plus the
@@ -415,7 +447,7 @@ final class GraphMaintainer(
     // row would look older than the supersede that preceded it).
     if (scopedRefine)
       deltaNew.withColumn("seq", lit(seq))
-        .write.mode("append").parquet(s"$path/edges_delta")
+        .write.mode("append").parquet(committed.log("edges_delta"))
     else deltaNew.write.mode("append")
       .bucketBy(nBuckets, "src").sortBy("src")
       .saveAsTable(s"${name}_edges")
@@ -425,11 +457,11 @@ final class GraphMaintainer(
         // the fold always runs right after a scoped refine, so every
         // pending delete has been bridge-consolidated before the fold
         // applies it physically (foldNow's ordering contract)
-        if (compactEvery > 0 && batches - readFence() >= compactEvery)
+        if (compactEvery > 0 && compactionDueAt(batches, compactEvery))
           foldNow()
       } else refineNow(vectors)
     } else if (scopedRefine && compactEvery > 0 &&
-        (batches + 1) - readFence() >= compactEvery) {
+        compactionDueAt(batches + 1, compactEvery)) {
       // the fold cadence arrived BEFORE the refine cadence
       // (compactEvery < refineEvery): quantizing the fold to the
       // refine schedule would let the logs grow for refineEvery
@@ -489,16 +521,15 @@ final class GraphMaintainer(
     * its symmetrized+backboned form.
     *
     * This is the graph store's COMPACTION: active tombstones are
-    * applied physically, the fence is stamped at the current seq, and
-    * both logs are dropped — log rows surviving a crash in that window
-    * are fenced off ([[LsmStore.visibility]]) like every other
-    * maintainer's.
+    * applied physically, and the fold manifest moves the fence to the
+    * current seq with a fresh log generation, so the old logs are
+    * never read again ([[LsmStore]] retention deletes them one commit
+    * later).
     *
     * The refined frame is localCheckpoint-materialized BEFORE the store
     * rewrite — Spark refuses to overwrite a table still being read, and
     * every frame here descends from the stored table. */
   def refineNow(vectors: DataFrame): DataFrame = {
-    guardPoisoned()
     val stored0 = servingEdges
     // Delete consolidation (FreshDiskANN §4.2): for every tombstoned
     // node d, bridge its in-neighbors to its out-neighbors (a→d, d→b ⇒
@@ -512,7 +543,7 @@ final class GraphMaintainer(
     // two-cluster corridor). Like backbone edges, the insurance set is
     // re-priced at the next refine. Tombstoned rows themselves drop
     // out in the va/vb inner joins (live vectors only), and the logs
-    // are fenced+dropped after the rewrite.
+    // are fenced off after the rewrite.
     val pending = tombstones.localCheckpoint()
     val hasDeletes = !pending.isEmpty
     val live =
@@ -572,8 +603,8 @@ final class GraphMaintainer(
     // by the next construction's recoverSwap.
     spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
     GraphSearch.saveBucketed(withBackbone, s"${name}_swap", nBuckets)
-    publishMarker("_graph_swap", batches.toString)
-    poisonOnFailure(finishSwap(batches))
+    publishMarker(batches)
+    finishSwap(batches)
     // maxStoredDegree is a full edge-table aggregate — only pay for it
     // when the log line is actually emitted
     if (log.isInfoEnabled) log.info(
@@ -633,7 +664,7 @@ final class GraphMaintainer(
     *     one `superseded` record per region node (tombstoned nodes get
     *     the record and NO replacement — their physical delete) plus
     *     the symmetrized replacement rows in `edges_delta`, all at one
-    *     burned seq made visible atomically by the batch-commit record.
+    *     burned seq made visible atomically by one manifest publish.
     *     Reverse partners landing on non-region srcs are ADDITIVE
     *     (anti-joined against those srcs' current rows — no
     *     duplicates), and region srcs keep the return directions of
@@ -657,11 +688,12 @@ final class GraphMaintainer(
     * remaining cost is one broadcast anti-join. */
   def refineScopedNow(vectors: DataFrame): DataFrame = {
     guardPoisoned()
-    val sf = scopeFence
     val seq = batches + 1
     // burned up front, like onBatch: a failed attempt's partial
     // supersede/replacement rows stay at a seq no retry reuses
     batches = seq
+    val m = manifestFor(seq)
+    val sf = scopeFence(m)
     // the served view feeds the reverse-hop seed scan, every hop
     // expansion, and both touched slices — checkpoint it lazily once
     // (the onBatch treatment: scoped mode's view is joins + log scans,
@@ -672,10 +704,9 @@ final class GraphMaintainer(
         lr.rdd.unpersist(false)
       case _ =>
     }
-    val vis = visibility().pred
-    val arr = readOr("arrivals", emptySeqIds).where(vis)
+    val arr = readOr(m.log("arrivals"), emptySeqIds).where(m.pred)
       .where(col("seq") > sf).select(col("vec_id").as("node"))
-    val tombWindow = readOr("tombstones", emptySeqIds).where(vis)
+    val tombWindow = readOr(m.log("tombstones"), emptySeqIds).where(m.pred)
       .where(col("seq") > sf).select(col("vec_id").as("node"))
     val pending = tombstones.localCheckpoint(eager = false)
     val pendingNodes = pending.select(col("vec_id").as("node"))
@@ -764,7 +795,7 @@ final class GraphMaintainer(
       // refine leaves the PREVIOUS refine's mode in lastScopedPrune and
       // probes attribute the empty-window call to the wrong path
       lastScopedPrune = Some(pruneActive && regionIds.isDefined)
-      if (sf < seq) publishMarker("_scope_fence", seq.toString)
+      if (sf < seq) commit(m)(_.withInt("scope_fence", seq))
       releaseServing()
       return empty
     }
@@ -931,20 +962,19 @@ final class GraphMaintainer(
       .unionByName(additive)
       .withColumn("seq", lit(seq))
       .localCheckpoint(eager = false)
-    // disjoint-directory appends, invisible until the commit record —
+    // disjoint-directory appends, invisible until the commit —
     // concurrent like onBatch's log writes (the `out` checkpoint
     // materializes inside its own write job; `region` is already
     // collected/checkpointed)
     graft.ann.ParallelFit.run(2) {
       case 0 => region.select(col("node").as("src"), lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/superseded")
-      case 1 => out.write.mode("append").parquet(s"$path/edges_delta")
+        .write.mode("append").parquet(m.log("superseded"))
+      case 1 => out.write.mode("append").parquet(m.log("edges_delta"))
     }
-    // one commit record makes supersede + replacement visible
-    // ATOMICALLY — a crash above leaves both halves invisible and the
-    // burned seq dead
-    markBatchCommitted(seq)
-    publishMarker("_scope_fence", seq.toString)
+    // one manifest makes supersede + replacement visible and moves the
+    // scope fence ATOMICALLY — a crash above leaves both halves
+    // invisible and the burned seq dead
+    commit(m)(_.committed(seq).withInt("scope_fence", seq))
     // the writes above materialized every frame derived from the view
     // (truncated-lineage blocks spill, never recompute) — safe to drop
     releaseServing()
@@ -964,7 +994,7 @@ final class GraphMaintainer(
     * check sees `batches + 2`. */
   def foldDue: Boolean =
     scopedRefine && compactEvery > 0 &&
-      (batches + 2) - readFence() >= compactEvery
+      compactionDueAt(batches + 2, compactEvery)
 
   /** The scoped store's COMPACTION — the log fold [[refineNow]]
     * performs as a side effect, without the O(n·k) re-score/re-cut: the
@@ -972,8 +1002,8 @@ final class GraphMaintainer(
     * ACTIVE tombstone — their physical delete) is rewritten as the
     * bucketed base through the same crash-safe swap protocol the full
     * refine uses (temp table → `_graph_swap` marker → idempotent
-    * [[finishSwap]]: rename, fence at the current seq, drop ALL logs,
-    * re-create the commit log). Cost is one pass over the served view
+    * [[finishSwap]]: rename, then the fold manifest — fence at the
+    * current seq, a fresh log generation). Cost is one pass over the served view
     * plus the bucketed rewrite — no vector reads, no distance math.
     *
     * The served view is preserved EXACTLY (GraphScopedFoldSpec pins
@@ -988,10 +1018,9 @@ final class GraphMaintainer(
     * pending drops the dead nodes' edges without the FreshDiskANN
     * bridges — connectivity the region refine would have preserved. */
   def foldNow(): Unit = {
-    guardPoisoned()
     val pending = tombstones.localCheckpoint()
     // materialized BEFORE the swap: the lineage reads the stored table
-    // and the logs, both of which finishSwap rewrites/drops
+    // and the logs, which finishSwap rewrites and supersedes
     val folded = servingEdges
       .join(broadcast(pending.select(col("vec_id").as("src"))),
         Seq("src"), "left_anti")
@@ -1003,8 +1032,8 @@ final class GraphMaintainer(
     folded.write.mode("overwrite")
       .bucketBy(nBuckets, "src").sortBy("src")
       .saveAsTable(tmpTable)
-    publishMarker("_graph_swap", batches.toString)
-    poisonOnFailure(finishSwap(batches))
+    publishMarker(batches)
+    finishSwap(batches)
     if (log.isInfoEnabled) log.info(
       s"stored graph '$name' folded its logs into the base at seq " +
         s"$batches (scoped-store compaction)")

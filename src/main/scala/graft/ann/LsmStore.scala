@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
@@ -9,42 +9,54 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * [[graft.ann.lsh.LshMaintainer]], [[graft.ann.lsh.LabeledLshMaintainer]]
   * and [[CodesMaintainer]] (through [[VectorLsmStore]]),
   * [[graft.retrieval.PostingsStore]], [[graft.text.DedupGate]] and
-  * [[GraphMaintainer]]. It is the one place that knows the LSM
-  * decisions, so the stores cannot drift apart:
+  * [[GraphMaintainer]]. One commit rule (Delta Lake's numbered log and
+  * snapshot read over an LSM-tree): **a commit writes new files under
+  * fresh names, then publishes manifest n+1**.
   *
-  *   - **seq-stamped logs, one visibility snapshot and the kill rule**
-  *     ([[visibility]], [[liveViews]]): delta appends and tombstones
-  *     carry the batch sequence and their base's schema ([[logRows]]).
-  *     A view reads the fence and the commit log once, filters every
-  *     log with the literal seq set they resolve to, and is its bare
-  *     bases when no log seq is visible. Base rows sit at seq 0 under
-  *     the visible deltas, and a tombstone kills rows of its key from
-  *     STRICTLY EARLIER seqs, making same-batch delete+arrival an
-  *     upsert. Every store except GraphMaintainer (whose arrivals
-  *     revive ids) builds its serving view through [[liveViews]];
-  *   - **persistent sequence**: recovered at construction as
-  *     max(compaction fence, max seq across the logs) — a restarted
-  *     counter would let an old tombstone kill a new arrival (old
-  *     delete beats new insert: the LSM ordering inverted);
-  *   - **compaction fence** (`_lsm_fence`, a tiny marker file): written
-  *     AFTER the folded base lands and BEFORE the logs are deleted.
-  *     Log rows with seq ≤ fence are already IN the base, and
-  *     [[visibility]] drops them from every view — so a crash between
-  *     the fence write and the log deletion re-serves correctly. The
-  *     cadence is measured from the fence ([[compactionDueAt]]);
-  *   - **crash-safe compaction commit** ([[commitCompaction]] /
-  *     [[recoverCompaction]]): the folded base lands in TEMP subdirs,
-  *     then an atomically published pre-commit marker records the
-  *     target seq and the pending renames, and only then do the
-  *     idempotent destructive steps run. Construction ([[recoverSeq]])
-  *     FINISHES a commit whose marker it finds instead of serving
-  *     duplicates; a crash before the marker leaves only inert temps;
-  *   - **occupancy-watermark accounting** ([[ensureCounts]]): `fitRows`
-  *     is the base the frozen model was fit against, `atRestRows` adds
-  *     delta rows INCLUDING tombstoned ones (dead rows cost every probe
-  *     until compacted out). Compaction resets `atRestRows` but KEEPS
-  *     `fitRows` (the model is still the original fit); only a refit
-  *     resets the reference.
+  *   - **manifest** ([[LsmStore.Manifest]], `$path/_lsm/<n>`): key=value
+  *     lines naming each base table's dir and the log generation's, the
+  *     `fence` (the seq folded into the base), `commits` (the committed
+  *     seqs above it) and the store's integers (`drift_breaches`,
+  *     `stats_fence`, `scope_fence`), closed by `end`. Created
+  *     exclusively, never overwritten: publishing onto an existing
+  *     number, or over a newer manifest, is a named error (one writer
+  *     per store). Readers take the newest manifest that parses, so a
+  *     0-byte or truncated one (a crashed publish) is skipped;
+  *   - **commits**: a batch appends its seq-stamped logs into the log
+  *     generation and publishes its seq into `commits` ([[commit]]); a
+  *     compaction or refit writes `gen-<n>/…` and publishes the new
+  *     dirs with `fence` = its seq, no commits and `gen-<n>` as the
+  *     fresh log generation ([[commitFold]]; a refit's breach-run reset
+  *     rides along). Rows no manifest names are never served, and the
+  *     seq is burned before the writes ([[recoverSeq]] counts every
+  *     log row), so a retry lands at a fresh seq;
+  *   - **views** ([[liveViews]]): one manifest read on the driver, not a
+  *     Spark job, gives the dirs and the literal `seq = 0 OR seq IN
+  *     (commits)`; with no commits the view is its bare bases. Base rows
+  *     sit at seq 0 and a tombstone kills rows of its key from STRICTLY
+  *     EARLIER seqs (same-batch delete+arrival is an upsert). All but
+  *     GraphMaintainer (whose arrivals revive ids) serve through it;
+  *   - **retention**: after publishing n+1 over n, the older manifests
+  *     go with every dir they name that neither n nor n+1 names, and so
+  *     does every `gen-*` no retained manifest names (a crashed
+  *     commit's orphan). A view stays readable through one further
+  *     commit; a failed delete is retried by the next commit;
+  *   - **conversion**: generation 0 is the store root, so a fresh store
+  *     keeps its paths. A store without `_lsm/` gets manifest 0 at
+  *     construction: its root dirs, the rename-swap format's
+  *     `_lsm_fence`, its `batch_commits` seqs above it (every log seq
+  *     without a commit log) and its integer markers. That format's
+  *     `_lsm_precommit` / `_postings_refit` marker (a swap stopped
+  *     midway) is refused by name. `load`s resolve dirs through
+  *     [[LsmStore.baseDir]];
+  *   - **the graph exception**: GraphMaintainer's base is a catalog
+  *     table read by name, so it keeps one rename (`_graph_swap`),
+  *     publishes a fold manifest after it, and alone guards against a
+  *     half-swapped instance;
+  *   - **occupancy accounting** ([[ensureCounts]]): `fitRows` is the
+  *     base the frozen model was fit against, `atRestRows` adds delta
+  *     rows INCLUDING tombstoned ones. Compaction resets `atRestRows`;
+  *     only a refit resets `fitRows`.
   *
   * The batch step, the drift watermark and the compaction/refit
   * cadence of the three frozen-model vector stores live in
@@ -52,39 +64,42 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   */
 private[graft] trait LsmStore {
 
+  import LsmStore.Manifest
+
   protected def lsmSpark: SparkSession
   protected def lsmPath: String
-  /** Log subdirs holding seq-stamped rows (delta logs + tombstones). */
+  /** Log subdirs of a log generation holding seq-stamped rows (delta
+    * logs + tombstones). */
   protected def lsmLogDirs: Seq[String]
 
-  protected final def lsmFs: org.apache.hadoop.fs.FileSystem =
-    org.apache.hadoop.fs.FileSystem.get(
-      new Path(lsmPath).toUri, lsmSpark.sparkContext.hadoopConfiguration)
+  protected final def lsmFs: FileSystem =
+    FileSystem.get(new Path(lsmPath).toUri, lsmSpark.sparkContext.hadoopConfiguration)
+
+  private def lsmLog = org.slf4j.LoggerFactory.getLogger(classOf[LsmStore])
 
   protected final val SeqSchema = StructType(Seq(StructField("seq", IntegerType)))
+  /** Base-table schemas keyed by the directory a manifest names. */
   private val baseSchemas =
     scala.collection.concurrent.TrieMap.empty[String, StructType]
 
-  /** The base table at `sub`, read with its schema: inferred once per
-    * instance (compaction and refit rewrite the same columns), then
-    * passed on every read, so a view starts no schema-inference job
-    * while its file listing stays fresh (another process may compact).
+  /** The base table `sub` of snapshot `m`, read with its schema: inferred
+    * once per directory, then passed on every read, so a view starts no
+    * schema-inference job while its file listing stays fresh.
     * `asString` columns read as STRING whatever their values look like
     * (partition columns, whose inferred type follows the values). */
-  protected final def readBase(sub: String, asString: String*): DataFrame = {
-    val p = s"$lsmPath/$sub"
-    lsmSpark.read.schema(baseSchemas.getOrElseUpdate(sub, StructType(
+  protected final def readBase(m: Manifest, sub: String,
+                               asString: String*): DataFrame = {
+    val p = m.base(sub)
+    lsmSpark.read.schema(baseSchemas.getOrElseUpdate(p, StructType(
       lsmSpark.read.parquet(p).schema.map(f =>
         if (asString.contains(f.name)) f.copy(dataType = StringType) else f))))
       .parquet(p)
   }
 
-  /** The log at `sub` read with its known `schema` (empty when absent). */
-  protected final def readLog(sub: String, schema: StructType): DataFrame = {
-    val p = s"$lsmPath/$sub"
+  /** The log at `p` read with its known `schema` (empty when absent). */
+  protected final def readLog(p: String, schema: StructType): DataFrame =
     if (lsmFs.exists(new Path(p))) lsmSpark.read.schema(schema).parquet(p)
     else lsmSpark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-  }
 
   /** `rows` cast to `fields` (bar `seq`) and stamped `seq`: the schema
     * every read of a [[liveViews]] log assumes — its base's schema (the
@@ -95,113 +110,114 @@ private[graft] trait LsmStore {
       .map(f => col(f.name).cast(f.dataType).as(f.name)) :+
       lit(seq).as("seq"): _*)
 
-  // ---- compaction fence ----
+  // ---- the manifest ----
 
-  /** Seq through which the logs have been folded into the base (0 when
-    * no compaction has completed). A corrupt/unreadable marker reads as
-    * 0 — conservative: stale rows re-serve as duplicates rather than
-    * fresh rows being dropped. */
-  protected final def readFence(): Int = readIntMarker("_lsm_fence")
+  /** The newest manifest that parses: the snapshot a view reads and a
+    * commit extends. */
+  protected final def manifest(): Manifest =
+    LsmStore.latest(lsmFs, lsmPath).getOrElse(throw new IllegalStateException(
+      s"LSM store '$lsmPath': no readable manifest under _lsm/"))
 
-  protected final def writeFence(seq: Int): Unit =
-    writeFile(new Path(s"$lsmPath/_lsm_fence"), seq.toString)
-
-  // ---- atomic multi-log batches ----
-
-  /** Append the batch-commit record for `seq` — the LAST write of a
-    * maintainer's onBatch, after every per-log append of the batch.
-    * Log rows of a seq with no commit record are IGNORED by
-    * [[visibility]], so a crash between a batch's log writes
-    * leaves a PARTIAL batch invisible instead of diverging the store
-    * (e.g. one postings table written and not the other, or a delete
-    * logged without its same-batch upsert arrival). Recovery needs no
-    * step: [[recoverSeq]] reads the max seq over ALL log rows
-    * (committed or not) and maintainers burn their in-memory seq
-    * BEFORE writing, so a retried batch — same instance or after a
-    * restart — lands at a FRESH seq and the orphan rows stay invisible
-    * until compaction drops the logs. */
-  protected final def markBatchCommitted(seq: Int): Unit = {
-    guardPoisoned()
-    lsmSpark.range(1).select(lit(seq).as("seq"))
-      .write.mode("append").parquet(s"$lsmPath/batch_commits")
+  /** The snapshot a commit at `seq` extends. A seq the manifest already
+    * holds (at or below the fence, or committed) means another writer
+    * committed since this instance recovered its sequence: refused by
+    * name before anything is written at that seq. */
+  protected final def manifestFor(seq: Int): Manifest = {
+    val m = manifest()
+    if (seq <= (m.fence +: m.commits).max)
+      throw LsmStore.concurrentWriter(lsmPath, s"seq $seq is already committed", null)
+    m
   }
 
-  /** (Re-)create the commit log, empty — its EXISTENCE is load-bearing:
-    * a missing dir reads as legacy pass-through, so every path that
-    * drops the logs must re-create it before new batches land, and
-    * construction creates/backfills it ([[recoverSeq]]). */
-  protected final def initCommitLog(): Unit =
-    // the seq-0 sentinel keeps the dir NON-empty at rest, so sync/copy
-    // tools that drop empty dirs cannot downgrade it to pass-through
-    lsmSpark.range(1).select(lit(0).as("seq"))
-      .write.mode("append").parquet(s"$lsmPath/batch_commits")
+  /** The number the next manifest takes: one above every number on
+    * disk, unreadable ones included, so a crashed publish is never
+    * published onto. */
+  protected final def nextNumber(): Int =
+    LsmStore.numbers(lsmFs, lsmPath).headOption.fold(0)(_ + 1)
 
-  // ---- poisoned-instance guard ----
+  /** The root of generation `n`, relative to [[lsmPath]]. */
+  protected final def genDir(n: Int): String = s"gen-$n"
 
-  /** Set when the destructive half of a commit threw mid-swap: the
-    * store may be HALF-SWAPPED on disk (e.g. new sparse + old bm25,
-    * fence unstamped, logs visible). A caller that catches the commit
-    * exception and keeps serving would read diverged or duplicated
-    * views — healing only happens at the next CONSTRUCTION
-    * ([[recoverCompaction]] retries the commit from the marker), so
-    * every serving/maintenance entry point throws until then. */
-  @volatile private var commitPoisoned: Boolean = false
+  /** Reserve generation `nextNumber()` for a commit that writes new
+    * bases: its dir is cleared (the orphan of an attempt that crashed
+    * before publishing) and its number returned for [[commitFold]] or
+    * [[commit]]. */
+  protected final def newGeneration(): Int = {
+    val n = nextNumber()
+    lsmFs.delete(new Path(s"$lsmPath/${genDir(n)}"), true)
+    n
+  }
 
-  /** Throws when a failed commit has poisoned this instance (see
-    * [[commitPoisoned]]) — called by every serving/batch entry point. */
-  protected final def guardPoisoned(): Unit =
-    if (commitPoisoned) throw new IllegalStateException(
-      s"LSM store '$lsmPath': a compaction/swap commit failed mid-swap " +
-        "on this instance — the on-disk store may be half-swapped. " +
-        "Construct a new instance (it finishes the commit from the " +
-        "pre-commit marker); do not keep serving from this one.")
+  /** Publish `edit(from)` as manifest `n`, then apply retention. `from`
+    * must still be the newest manifest that parses: a newer one means
+    * another writer committed, and extending `from` would drop its
+    * commit, so that is the same named error as publishing onto an
+    * existing number. */
+  protected final def commit(from: Manifest, n: Int = nextNumber())(
+      edit: Manifest => Manifest): Manifest = {
+    LsmStore.numbers(lsmFs, lsmPath).filter(_ > from.n)
+      .find(LsmStore.parse(lsmFs, lsmPath, _).isDefined)
+      .foreach(k => throw LsmStore.concurrentWriter(lsmPath,
+        s"manifest $k was published after manifest ${from.n}", null))
+    val next = edit(from).copy(n = n)
+    LsmStore.write(lsmFs, next)
+    retain(from, next)
+    next
+  }
 
-  /** Run the destructive half of a commit, poisoning this instance if
-    * it throws (the marker and temps stay on disk for recovery). */
-  protected final def poisonOnFailure[T](f: => T): T =
-    try { val r = f; commitPoisoned = false; r }
-    catch { case e: Throwable => commitPoisoned = true; throw e }
+  /** A compaction or refit commit: the bases `subs` written under
+    * generation `n` replace `from`'s, the fence moves to `seq`, and `n`
+    * starts a fresh log generation with no commits; `ints` ride the same
+    * publish. The rewritten bases keep their columns, so their cached
+    * schemas carry over to the new dirs. */
+  protected final def commitFold(from: Manifest, n: Int, subs: Seq[String],
+                                 seq: Int, ints: (String, Int)*): Manifest = {
+    val next = commit(from, n)(m => m.withBases(genDir(n), subs).copy(
+      logs = genDir(n), fence = seq, commits = Nil, ints = m.ints ++ ints))
+    subs.foreach(s =>
+      baseSchemas.get(from.base(s)).foreach(baseSchemas.put(next.base(s), _)))
+    next
+  }
 
-  /** A [[visibility]] snapshot; `bare`: no log row can pass `pred`. */
-  protected final class Visibility(val pred: Column, val bare: Boolean)
-
-  /** The single visibility rule, resolved ONCE per view: one fence read
-    * and one commit-log read (schema `seq INT`; the committed seqs above
-    * the fence, a handful of ints, de-duplicated on the driver). Base
-    * rows (seq 0) always pass; rows at or below the fence were folded by
-    * a committed compaction and drop; rows above the fence pass only
-    * with a batch-commit record. Every log a view reads filters with the
-    * one literal `seq = 0 OR seq IN (…)`; with no committed seq above
-    * the fence the view is `bare` (its bases alone, the at-rest plan).
-    * The commit log exists from construction on ([[recoverSeq]] backfills
-    * legacy stores; every log-dropping commit re-creates it), so the
-    * missing-dir pass-through `seq = 0 OR seq > fence` applies only
-    * between a commit's log-drop and its re-create (empty logs). */
-  protected final def visibility(): Visibility = {
-    guardPoisoned()
-    val fence = readFence()
-    val commits = s"$lsmPath/batch_commits"
-    if (!lsmFs.exists(new Path(commits)))
-      return new Visibility(col("seq") === 0 || col("seq") > fence, false)
-    val seqs = lsmSpark.read.schema(SeqSchema).parquet(commits)
-      .where(col("seq") > fence).collect().map(_.getInt(0)).distinct.sorted
-    new Visibility(col("seq") === 0 || col("seq").isin(seqs.toSeq: _*),
-      seqs.isEmpty)
+  /** Delete what no retained manifest (`from`, `next`) names: the older
+    * manifests with their dirs, and orphan generations. */
+  private def retain(from: Manifest, next: Manifest): Unit = {
+    val keep = from.dirs(lsmLogDirs) ++ next.dirs(lsmLogDirs)
+    def drop(rel: String): Boolean = {
+      val p = new Path(s"$lsmPath/$rel")
+      val ok =
+        try !lsmFs.exists(p) || lsmFs.delete(p, true)
+        catch { case scala.util.control.NonFatal(_) => false }
+      if (!ok) lsmLog.warn(s"LSM store '$lsmPath': could not delete the " +
+        s"superseded '$rel'; the next commit retries")
+      ok
+    }
+    LsmStore.numbers(lsmFs, lsmPath).filter(k => k < next.n && k != from.n)
+      .foreach { k =>
+        val stale = LsmStore.parse(lsmFs, lsmPath, k)
+          .fold(Set.empty[String])(_.dirs(lsmLogDirs) -- keep)
+        // the manifest goes last: it is what the retry reads
+        if (stale.toSeq.map(drop).forall(identity)) drop(s"_lsm/$k")
+      }
+    lsmFs.listStatus(new Path(lsmPath)).map(_.getPath.getName)
+      .filter(g => g.startsWith("gen-") &&
+        !keep.exists(d => d == g || d.startsWith(g + "/")))
+      .foreach(drop)
   }
 
   // ---- the live view ----
 
   /** The visible tombstone log as (`key`, seq), `key` typed as in `base`. */
-  protected final def visibleTombstones(base: DataFrame, key: String,
-                                        vis: Visibility): DataFrame =
-    readLog("tombstones", StructType(Seq(base.schema(key)) ++ SeqSchema))
-      .where(vis.pred)
+  protected final def visibleTombstones(m: Manifest, base: DataFrame,
+                                        key: String): DataFrame =
+    readLog(m.log("tombstones"), StructType(Seq(base.schema(key)) ++ SeqSchema))
+      .where(m.pred)
 
-  /** `base` (carrying `seq`) ∪ the visible rows of the delta log at
+  /** `base` (carrying `seq`) ∪ the visible rows of the delta log
     * `deltaSub`, read with the base's schema. */
-  protected final def withVisibleDelta(base: DataFrame, deltaSub: String,
-                                       vis: Visibility): DataFrame =
-    base.unionByName(readLog(deltaSub, base.schema).where(vis.pred))
+  protected final def withVisibleDelta(m: Manifest, base: DataFrame,
+                                       deltaSub: String): DataFrame =
+    base.unionByName(readLog(m.log(deltaSub), base.schema).where(m.pred))
 
   /** The kill rule as a join: a row of `rows` is killed by a tombstone
     * of `tombs` on the same `key` at a STRICTLY later seq. `how` is
@@ -211,23 +227,23 @@ private[graft] trait LsmStore {
     rows.join(tombs,
       rows(key) === tombs(key) && tombs("seq") > rows("seq"), how)
 
-  /** The serving views under one snapshot `vis`: for each (base, delta
-    * log) leg, base rows at seq 0 ∪ the visible delta, minus the rows a
-    * visible tombstone on `key` kills (one tombstone read, broadcast,
-    * shared by every leg). A `bare` snapshot returns the bases as they
-    * are: no union, no anti-join. With `keepSeq` the base carries its
-    * own `seq` column and the views keep it (stores whose rows keep
-    * their seq through compaction); otherwise `seq` is dropped. */
-  protected final def liveViews(key: String = "vec_id",
-                                keepSeq: Boolean = false,
-                                vis: Visibility = visibility())(
+  /** The serving views of snapshot `m`: for each (base, delta log) leg,
+    * base rows at seq 0 ∪ the visible delta, minus the rows a visible
+    * tombstone on `key` kills (one tombstone read, broadcast, shared by
+    * every leg). The bases must be read from `m` ([[readBase]]). A
+    * `bare` snapshot returns the bases as they are: no union, no
+    * anti-join. With `keepSeq` the base carries its own `seq` column
+    * and the views keep it (stores whose rows keep their seq through
+    * compaction); otherwise `seq` is dropped. */
+  protected final def liveViews(m: Manifest, key: String = "vec_id",
+                                keepSeq: Boolean = false)(
       legs: (DataFrame, String)*): Seq[DataFrame] =
-    if (vis.bare) legs.map(_._1)
+    if (m.bare) legs.map(_._1)
     else {
-      val t = broadcast(visibleTombstones(legs.head._1, key, vis))
+      val t = broadcast(visibleTombstones(m, legs.head._1, key))
       legs.map { case (base, deltaSub) =>
-        val all = withVisibleDelta(
-          if (keepSeq) base else base.withColumn("seq", lit(0)), deltaSub, vis)
+        val all = withVisibleDelta(m,
+          if (keepSeq) base else base.withColumn("seq", lit(0)), deltaSub)
         val live = killJoin(all, t, key, "left_anti")
         if (keepSeq) live else live.drop("seq")
       }
@@ -239,227 +255,94 @@ private[graft] trait LsmStore {
     * failed attempt burns its seq, and a burned multiple must defer
     * the fold by one batch, not a whole cycle. */
   protected final def compactionDueAt(seq: Int, every: Int): Boolean =
-    seq - readFence() >= every
+    seq - manifest().fence >= every
 
   // ---- consecutive-drift-breach run (the refitDue signal) ----
 
   /** Length of the consecutive-drifted-batch run ending at the most
     * recent MEASURED batch (a batch with arrivals under a configured
-    * [[DriftCheck]]) — persistent via the `_drift_breaches` marker, so
-    * a reconstructed maintainer agrees with the live one (the
-    * `compactionDue` treatment: the refit signal must survive a
-    * restart, or a crash loop would reset the clock forever). 0 when
-    * never measured, the last measured batch was clean, or a refit
-    * restarted the run. */
-  final def driftBreaches: Int = readIntMarker("_drift_breaches")
+    * [[DriftCheck]]) — the manifest's `drift_breaches`, so a
+    * reconstructed maintainer agrees with the live one (the refit
+    * signal must survive a restart, or a crash loop would reset the
+    * clock forever). 0 when never measured, the last measured batch was
+    * clean, or a refit restarted the run. */
+  final def driftBreaches: Int = manifest().int("drift_breaches")
 
   /** Record one measured batch: a breach extends the run, a clean
-    * batch resets it. Returns the updated run length. One tiny marker
-    * write per CHANGE of run length (a clean batch on a zero run is
-    * free). */
+    * batch resets it. Returns the updated run length. One publish per
+    * CHANGE of run length (a clean batch on a zero run is free). */
   protected final def recordDriftBreach(breached: Boolean): Int = {
-    val prev = driftBreaches
+    val m = manifest()
+    val prev = m.int("drift_breaches")
     val run = if (breached) prev + 1 else 0
-    if (run != prev) publishMarker("_drift_breaches", run.toString)
+    if (run != prev) commit(m)(_.withInt("drift_breaches", run))
     run
   }
 
-  /** Stage a zeroed breach marker inside the compaction temp dir and
-    * return its rename pair — a REFIT commit includes it in its
-    * [[commitCompaction]] renames so the run reset is ATOMIC with the
-    * model swap: a crash can never leave `refitDue` latched true over
-    * an already-refit store, and recovery re-applies the reset. */
-  protected final def stageDriftBreachReset(): (String, String) = {
-    writeFile(new Path(s"$lsmPath/$CompactTmpDir/_drift_breaches"), "0")
-    s"$CompactTmpDir/_drift_breaches" -> "_drift_breaches"
-  }
+  // ---- opening the store ----
 
-  // ---- small atomic markers (shared by the compaction commit and
-  //      GraphMaintainer's table-swap commit) ----
-
-  /** Atomically publish a small marker file (temp + rename; ABORTS —
-    * nothing destructive has run yet — when the FS reports failure,
-    * which Hadoop FileSystems signal as `false`, not exceptions). */
-  protected final def publishMarker(markerFile: String, body: String): Unit = {
-    val tmp = new Path(s"$lsmPath/$markerFile.tmp")
-    writeFile(tmp, body)
-    val fin = new Path(s"$lsmPath/$markerFile")
-    lsmFs.delete(fin, false)
-    require(lsmFs.rename(tmp, fin),
-      s"LSM store '$lsmPath': failed to publish marker '$markerFile' — " +
-        "aborting before any destructive step")
-  }
-
-  /** Read a marker FULLY (None when absent). InputStream.read may
-    * legally return fewer bytes than available — a single-read parse
-    * could truncate a seq and corrupt recovery. */
-  protected final def readMarker(markerFile: String): Option[String] = {
-    val mp = new Path(s"$lsmPath/$markerFile")
-    if (!lsmFs.exists(mp)) return None
-    val in = lsmFs.open(mp)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n > 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      Some(new String(bos.toByteArray, "UTF-8"))
-    } finally in.close()
-  }
-
-  /** An integer marker ([[readMarker]]); 0 when absent or unreadable. */
-  protected final def readIntMarker(markerFile: String): Int =
-    try readMarker(markerFile).map(_.trim).filter(_.nonEmpty)
-      .map(_.toInt).getOrElse(0)
-    catch { case _: Exception => 0 }
-
-  /** Write a small file whole (its parent dirs are created). */
-  private def writeFile(p: Path, body: String): Unit = {
-    val out = lsmFs.create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  // ---- crash-safe compaction commit ----
-
-  /** Subdir all compaction temp writes land under (relative to
-    * [[lsmPath]]) before being swapped into place. */
-  protected final val CompactTmpDir = "_compact_tmp"
-
-  private def precommitPath = new Path(s"$lsmPath/_lsm_precommit")
-
-  /** Commit a compaction whose folded base has already been fully
-    * written under `$lsmPath/$CompactTmpDir`: atomically publish the
-    * pre-commit marker (seq + pending renames), then swap each
-    * (tmpSub, finalSub) into place, stamp the fence at `seq`, drop the
-    * logs, drop the marker. The marker is written via temp-file +
-    * rename so it is never observed partially; once it exists, the
-    * commit is deterministic and [[recoverCompaction]] can finish it
-    * after a crash at ANY later point. */
-  protected final def commitCompaction(seq: Int,
-                                       renames: Seq[(String, String)]): Unit = {
-    publishMarker("_lsm_precommit",
-      (seq.toString +: renames.map { case (t, f) => s"$t>$f" })
-        .mkString("\n"))
-    poisonOnFailure(finishCommit(seq, renames))
-  }
-
-  /** The destructive half of the commit — idempotent: a rename whose
-    * temp dir is gone already happened, the fence write is monotone,
-    * and the log/marker deletes are no-ops when already done. Runs
-    * both live (from [[commitCompaction]]) and on recovery. Every
-    * swap's boolean result is CHECKED: a failed delete-or-rename
-    * throws with the marker and temp dirs still in place, so the
-    * fence/log-drop never run on a half-swapped store and the next
-    * open retries the commit. */
-  private def finishCommit(seq: Int, renames: Seq[(String, String)]): Unit = {
-    renames.foreach { case (tmp, fin) =>
-      val tp = new Path(s"$lsmPath/$tmp")
-      val fp = new Path(s"$lsmPath/$fin")
-      if (lsmFs.exists(tp)) {
-        require(!lsmFs.exists(fp) || lsmFs.delete(fp, true),
-          s"LSM store '$lsmPath': failed to clear '$fin' for the " +
-            "compaction swap — marker and temp base kept; reopen retries")
-        require(lsmFs.rename(tp, fp),
-          s"LSM store '$lsmPath': failed to swap '$tmp' into '$fin' — " +
-            "marker and temp base kept; reopen retries")
-      }
-    }
-    if (readFence() < seq) writeFence(seq)
-    lsmLogDirs.foreach(sub => lsmFs.delete(new Path(s"$lsmPath/$sub"), true))
-    lsmFs.delete(new Path(s"$lsmPath/$CompactTmpDir"), true)
-    // re-create the (empty) commit log IMMEDIATELY: its absence reads
-    // as legacy pass-through, and a first-post-compaction-batch crash
-    // must be filtered, not passed through
-    initCommitLog()
-    lsmFs.delete(precommitPath, false)
-  }
-
-  /** Detect and finish a compaction that crashed mid-commit. Called by
-    * [[recoverSeq]] so every maintainer heals at construction; safe to
-    * call any time. No marker → nothing mid-commit (a crash BEFORE the
-    * marker leaves only inert temp dirs, which the next compaction
-    * overwrites — the base and logs are untouched at that point). */
-  protected final def recoverCompaction(): Unit = {
-    val body = readMarker("_lsm_precommit").getOrElse(return)
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    // Defensive parse: a 0-byte or garbled body means the publisher
-    // crashed BEFORE publishMarker returned, hence before any
-    // destructive step ran. ABORT the never-started commit (drop the
-    // marker and the temp dir) rather than brick every construction.
-    val parsed: Option[(Int, Seq[(String, String)])] = try {
-      val lines = body.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      val seq = lines.head.toInt
-      val renames = lines.tail.map { l =>
-        val i = l.indexOf('>')
-        require(i > 0 && i < l.length - 1, s"rename line '$l' has no '>'")
-        (l.substring(0, i), l.substring(i + 1))
-      }
-      Some((seq, renames))
-    } catch { case _: Exception => None }
-    parsed match {
-      case None =>
-        log.warn(
-          s"LSM store '$lsmPath': the compaction pre-commit marker at " +
-            s"$precommitPath is empty or unparseable (body: " +
-            s"'${body.take(80)}') — the publishing process crashed " +
-            "before the marker content synced, so no destructive step " +
-            "ran. Discarding the marker and the temp dir; the aborted " +
-            "compaction simply retries at its next cadence.")
-        lsmFs.delete(precommitPath, false)
-        lsmFs.delete(new Path(s"$lsmPath/$CompactTmpDir"), true)
-      case Some((seq, renames)) =>
-        log.warn(
-          s"LSM store '$lsmPath': found a compaction pre-commit marker " +
-            s"(seq $seq) — a previous process crashed mid-commit; finishing " +
-            "the commit (swap folded base into place, stamp fence, drop logs).")
-        poisonOnFailure(finishCommit(seq, renames))
-    }
-  }
-
-  // ---- persistent sequence ----
-
-  /** Recover the batch sequence at construction: heal any mid-commit
-    * compaction first ([[recoverCompaction]]), then max(fence, max log
-    * seq). Fresh store → 0; freshly-compacted store → the fence, so a
-    * reconstructed maintainer agrees with the live one that compacted. */
+  /** Open the store: convert a store with no `_lsm/` to manifest 0, then
+    * recover the batch sequence as the max of the fence, the commits
+    * and every log row of the current generation (committed or not,
+    * so a burned seq is never reused). A restarted counter would let an
+    * old tombstone kill a new arrival. */
   protected final def recoverSeq(): Int = {
-    recoverCompaction()
-    if (!lsmFs.exists(new Path(s"$lsmPath/batch_commits"))) {
-      // legacy or fresh store: rows written before the commit-record
-      // format were committed by the old single-write contract —
-      // BACKFILL records for their seqs (atomically, via dir rename)
-      // so activating the filter cannot drop them; a fresh store gets
-      // the empty dir, so even its FIRST batch's crash is filtered
-      val backfill = new Path(s"$lsmPath/_batch_commits_backfill")
-      val legacySeqs = lsmLogDirs.filterNot(_ == "batch_commits")
-        .map(readLog(_, SeqSchema))
-        .reduce(_.unionByName(_))
-        .where(col("seq") > 0).distinct()
-        .persist()
-      val nLegacy = legacySeqs.count()
-      if (nLegacy > 0)
-        // loud: on a true pre-format store this is the intended
-        // upgrade; but if a new-format store LOST its commit log
-        // (partial copy/sync), this backfill blesses any orphan rows —
-        // the operator should know which of the two happened
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"LSM store '$lsmPath': no commit log found — backfilling " +
-            s"commit records for $nLegacy existing log seq(s) as " +
-            "legacy-committed (pre-commit-record format). If this " +
-            "store was written under the commit-record format and its " +
-            "commit log was lost in a copy, uncommitted partial " +
-            "batches (if any) are being blessed here.")
-      legacySeqs.unionByName(
-          lsmSpark.range(1).select(lit(0).as("seq")))
-        .write.mode("overwrite").parquet(backfill.toString)
-      legacySeqs.unpersist(false)
-      require(lsmFs.rename(backfill, new Path(s"$lsmPath/batch_commits")),
-        s"LSM store '$lsmPath': failed to install the backfilled " +
-          "commit log")
-    }
-    val logs = lsmLogDirs.map(readLog(_, SeqSchema)).reduce(_.unionByName(_))
-    val m = logs.agg(max("seq")).head()
-    math.max(readFence(), if (m.isNullAt(0)) 0 else m.getInt(0))
+    if (!lsmFs.exists(new Path(s"$lsmPath/_lsm"))) convert()
+    val m = manifest()
+    val top = lsmLogDirs.map(s => readLog(m.log(s), SeqSchema))
+      .reduce(_.unionByName(_)).agg(max("seq")).head()
+    (Seq(m.fence, if (top.isNullAt(0)) 0 else top.getInt(0)) ++ m.commits).max
   }
+
+  /** Manifest 0 over the store root (see the class doc). */
+  private def convert(): Unit = {
+    Seq("_lsm_precommit", "_postings_refit")
+      .find(f => lsmFs.exists(new Path(s"$lsmPath/$f"))).foreach { f =>
+        throw new IllegalStateException(s"LSM store '$lsmPath': '$f' " +
+          "marks an unfinished commit of the rename-swap store format. " +
+          "Open the store once with the previous build to finish it, " +
+          "then open it here.")
+      }
+    val fence = readIntFile("_lsm_fence")
+    val commitLog = s"$lsmPath/batch_commits"
+    val committed =
+      if (lsmFs.exists(new Path(commitLog))) readLog(commitLog, SeqSchema)
+      else {
+        val logged = lsmLogDirs.map(s => readLog(s"$lsmPath/$s", SeqSchema))
+          .reduce(_.unionByName(_))
+        if (!logged.where(col("seq") > fence).isEmpty)
+          // loud: on a store written before commit records this is the
+          // intended upgrade; if a later store LOST its commit log, any
+          // uncommitted partial batch is being blessed here
+          lsmLog.warn(s"LSM store '$lsmPath': no commit log found — every " +
+            "log seq above the fence is taken as committed " +
+            "(pre-commit-record format). If this store's commit log was " +
+            "lost in a copy, uncommitted partial batches (if any) are " +
+            "being blessed here.")
+        logged
+      }
+    val commits = committed.where(col("seq") > fence).distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    val root = new Path(lsmPath)
+    val bases =
+      if (!lsmFs.exists(root)) Nil
+      else lsmFs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
+        .filterNot(d => d.startsWith("_") || d.startsWith(".") ||
+          d.startsWith("gen-") || d == "batch_commits" || lsmLogDirs.contains(d))
+        .toSeq
+    val markers = LsmStore.LegacyInts.map { case (k, f) => k -> readIntFile(f) }
+      .filter(_._2 != 0)
+    LsmStore.write(lsmFs, Manifest(lsmPath, 0, bases.map(d => d -> d).toMap,
+      ".", fence, commits, markers.toMap))
+    ("batch_commits" +: "_lsm_fence" +: LsmStore.LegacyInts.map(_._2))
+      .foreach(f => lsmFs.delete(new Path(s"$lsmPath/$f"), true))
+  }
+
+  /** An integer in a small root file (0 when absent or unreadable). */
+  private def readIntFile(name: String): Int =
+    try LsmStore.readFile(lsmFs, new Path(s"$lsmPath/$name"))
+      .map(_.trim).filter(_.nonEmpty).fold(0)(_.toInt)
+    catch { case _: Exception => 0 }
 
   // ---- occupancy-watermark accounting ----
 
@@ -524,8 +407,8 @@ private[graft] trait VectorLsmStore extends LsmStore {
   protected def occupancyWatermark: Double
   protected def driftCheck: Option[DriftCheck]
   protected def refitAfterBreaches: Int
-  /** The table the occupancy watermark counts: the base at
-    * `$lsmPath/<table>`, its delta log at `<table>_delta`. */
+  /** The table the occupancy watermark counts: the base `<table>`, its
+    * delta log `<table>_delta`. */
   protected def countedTable: String
   /** How log lines name the store, e.g. "stored LSH index". */
   protected def storeLabel: String
@@ -534,7 +417,7 @@ private[graft] trait VectorLsmStore extends LsmStore {
   /** What the occupancy warning says has inflated, and the remedy. */
   protected def occupancyAdvice: String
 
-  /** Fold the logs into the base through [[commitCompaction]]. */
+  /** Fold the logs into a new base generation ([[commitFold]]). */
   def compactNow(): Unit
 
   require(compactEvery > 0, s"compactEvery $compactEvery must be positive")
@@ -553,8 +436,8 @@ private[graft] trait VectorLsmStore extends LsmStore {
   @volatile var lastDrift: Option[(Double, Double)] = None
 
   /** Batches applied over the store's lifetime (persistent: recovered
-    * from the logs and the compaction fence, so a reconstructed
-    * maintainer agrees with the live one). */
+    * from the logs and the manifest, so a reconstructed maintainer
+    * agrees with the live one). */
   def batchesSeen: Int = batches
 
   /** True when the NEXT `onBatch` call triggers compaction
@@ -563,39 +446,38 @@ private[graft] trait VectorLsmStore extends LsmStore {
 
   /** True when the drift watermark has been breached by
     * `refitAfterBreaches` CONSECUTIVE measured batches — the refit
-    * twin of [[compactionDue]], persistent across restarts via the
-    * `_drift_breaches` marker ([[driftBreaches]]), so an operator loop
-    * can poll it and refit exactly when the drift warnings stop being
-    * noise and start being a new distribution. The refit resets the
-    * run. */
+    * twin of [[compactionDue]], persistent across restarts through the
+    * manifest ([[driftBreaches]]), so an operator loop can poll it and
+    * refit exactly when the drift warnings stop being noise and start
+    * being a new distribution. The refit resets the run. */
   def refitDue: Boolean =
     driftCheck.nonEmpty && driftBreaches >= refitAfterBreaches
 
-  /** One maintenance step. `writeArrivals(seq)` appends the family's
-    * seq-stamped arrival rows and returns the frame the occupancy
-    * watermark counts and the drift check grades (None without
-    * arrivals); `deletes` rows are (vec_id). An id in both is an
-    * upsert. */
+  /** One maintenance step. `writeArrivals(m, seq)` appends the family's
+    * seq-stamped arrival rows into snapshot `m`'s log generation and
+    * returns the frame the occupancy watermark counts and the drift
+    * check grades (None without arrivals); `deletes` rows are
+    * (vec_id). An id in both is an upsert. */
   protected final def runBatch(deletes: Option[DataFrame])(
-      writeArrivals: Int => Option[DataFrame]): Unit = {
+      writeArrivals: (LsmStore.Manifest, Int) => Option[DataFrame]): Unit = {
     val seq = batches + 1
     // the seq is BURNED up front: a failed attempt's partial log rows
-    // stay at a seq no retry reuses, so markBatchCommitted can never
-    // bless a failed attempt's orphans
+    // stay at a seq no retry reuses, so no commit can bless them
     batches = seq
+    val m = manifestFor(seq)
     // counts snapshot BEFORE this batch's delta lands (counting after
     // the write would double-count the batch), from the parquet tables
     if (occupancyWatermark > 0) ensureCounts(
-      readBase(countedTable).count(),
-      readLog(s"${countedTable}_delta", SeqSchema).count())
-    val counted = writeArrivals(seq)
+      readBase(m, countedTable).count(),
+      readLog(m.log(s"${countedTable}_delta"), SeqSchema).count())
+    val counted = writeArrivals(m, seq)
     deletes.foreach { d =>
-      logRows(d, Seq(readBase(countedTable).schema("vec_id")), seq)
-        .write.mode("append").parquet(s"$lsmPath/tombstones")
+      logRows(d, Seq(readBase(m, countedTable).schema("vec_id")), seq)
+        .write.mode("append").parquet(m.log("tombstones"))
     }
     // the batch becomes visible ATOMICALLY here: a crash above leaves
-    // a partial batch that the visibility rule ignores
-    markBatchCommitted(seq)
+    // a partial batch no manifest names
+    commit(m)(_.committed(seq))
     if (occupancyWatermark > 0)
       counted.foreach(a => atRestRows += a.count())
     // Distribution watermark (the cause the occupancy warning can only
@@ -630,9 +512,9 @@ private[graft] trait VectorLsmStore extends LsmStore {
 
 object LsmStore {
   /** Default compaction cadence, read off the serve-latency-vs-log-depth
-    * curve measured under the per-leg visibility join that
-    * [[LsmStore.visibility]] replaced (1M×64-d, SCALE.md §Index
-    * lifecycle; re-measure before changing it):
+    * curve measured under the per-leg visibility join that the
+    * one-snapshot view replaced (1M×64-d, SCALE.md §Index lifecycle;
+    * re-measure before changing it):
     * view searches are FLAT through ~25 batches of logs (3.0 → 3.4 s),
     * then small-fragment overhead compounds (5.0 s at 50, 7.4 s at
     * 100, vs a 2.0 s compacted baseline). 32 sits at the knee: serve
@@ -641,4 +523,118 @@ object LsmStore {
     * batch). Deployments with bigger batches (fewer, larger fragments)
     * can raise it; the watermark warnings fire either way. */
   val DefaultCompactEvery = 32
+
+  /** Manifest integers and the root marker files of the rename-swap
+    * format they are converted from. */
+  private val LegacyInts = Seq("drift_breaches" -> "_drift_breaches",
+    "stats_fence" -> "_stats_fence", "scope_fence" -> "_scope_fence")
+
+  /** One published manifest of the store at `root`: base table dirs and
+    * the log generation (relative to `root`, "." for the root itself),
+    * the fence, the committed seqs above it and the store's integers. */
+  private[graft] final case class Manifest(
+      root: String, n: Int, bases: Map[String, String], logs: String,
+      fence: Int, commits: Seq[Int], ints: Map[String, Int]) {
+
+    /** The dir of base table `sub` (the root's when the manifest does
+      * not name it). */
+    def base(sub: String): String = s"$root/${bases.getOrElse(sub, sub)}"
+    /** The dir of log `sub` in the current log generation. */
+    def log(sub: String): String = s"$root/${logRel(sub)}"
+    def int(key: String): Int = ints.getOrElse(key, 0)
+    /** The visibility rule as one literal: base rows (seq 0) and the
+      * committed seqs above the fence. */
+    def pred: Column = col("seq") === 0 || col("seq").isin(commits: _*)
+    /** No log row is visible: the view is its bare bases. */
+    def bare: Boolean = commits.isEmpty
+
+    def committed(seq: Int): Manifest = copy(commits = commits :+ seq)
+    def withInt(key: String, v: Int): Manifest = copy(ints = ints + (key -> v))
+    def withBases(gen: String, subs: Seq[String]): Manifest =
+      copy(bases = bases ++ subs.map(s => s -> s"$gen/$s"))
+
+    private def logRel(sub: String) = if (logs == ".") sub else s"$logs/$sub"
+    /** Every dir this manifest names, relative to `root`. */
+    private[ann] def dirs(logSubs: Seq[String]): Set[String] =
+      bases.values.toSet ++ logSubs.map(logRel)
+
+    private[ann] def body: String =
+      (bases.toSeq.sorted.map { case (s, d) => s"base.$s=$d" } ++
+        Seq(s"logs=$logs", s"fence=$fence", s"commits=${commits.mkString(",")}") ++
+        ints.toSeq.sorted.map { case (k, v) => s"$k=$v" } :+ "end")
+        .mkString("", "\n", "\n")
+  }
+
+  private def manifestDir(root: String) = new Path(s"$root/_lsm")
+
+  /** The manifest numbers on disk, newest first. */
+  private[ann] def numbers(fs: FileSystem, root: String): Seq[Int] =
+    if (!fs.exists(manifestDir(root))) Nil
+    else fs.listStatus(manifestDir(root)).toSeq
+      .flatMap(_.getPath.getName.toIntOption).sorted.reverse
+
+  /** Manifest `n`, or None when it is missing, truncated (no closing
+    * `end` line) or does not parse. */
+  private[ann] def parse(fs: FileSystem, root: String, n: Int): Option[Manifest] =
+    try readFile(fs, new Path(manifestDir(root), n.toString)).flatMap { text =>
+      val lines = text.split("\n").toSeq
+      if (lines.lastOption != Some("end")) None
+      else {
+        val kv = lines.init.map { l =>
+          val i = l.indexOf('=')
+          require(i > 0, s"manifest line '$l' has no key")
+          l.take(i) -> l.drop(i + 1)
+        }
+        val fields = kv.toMap
+        val fixed = Set("logs", "fence", "commits")
+        Some(Manifest(root, n,
+          kv.collect { case (k, v) if k.startsWith("base.") => k.drop(5) -> v }.toMap,
+          fields("logs"), fields("fence").toInt,
+          fields("commits").split(",").filter(_.nonEmpty).map(_.toInt).toSeq,
+          kv.collect { case (k, v) if !k.startsWith("base.") && !fixed(k) =>
+            k -> v.toInt }.toMap))
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The newest manifest of the store at `root` that parses (None when
+    * the store has none). */
+  private[graft] def latest(fs: FileSystem, root: String): Option[Manifest] =
+    numbers(fs, root).iterator.flatMap(parse(fs, root, _)).nextOption()
+
+  /** Publish `m` as `_lsm/<m.n>`: created exclusively, never
+    * overwritten; the closing `end` line marks it complete. */
+  private[graft] def write(fs: FileSystem, m: Manifest): Unit = {
+    val p = new Path(manifestDir(m.root), m.n.toString)
+    val out =
+      try fs.create(p, false)
+      catch { case e: java.io.IOException if fs.exists(p) =>
+        throw concurrentWriter(m.root, s"manifest ${m.n} is already published", e)
+      }
+    try out.write(m.body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The single-writer check's named error: `what` shows that another
+    * writer committed to the store at `root`. */
+  private[ann] def concurrentWriter(root: String, what: String,
+                                    cause: Throwable): IllegalStateException =
+    new IllegalStateException(s"LSM store '$root': $what — another writer " +
+      "committed to this store. One writer per store; open a new " +
+      "instance to continue from the newest manifest.", cause)
+
+  /** A small file read whole (None when absent). */
+  private[ann] def readFile(fs: FileSystem, p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
+
+  /** Where the base tables of the store at `path` live: the dirs its
+    * newest manifest names, or `$path/<sub>` for a store without one. The
+    * one lookup every `load` of a maintainable layout goes through. */
+  private[graft] def baseDir(spark: SparkSession, path: String): String => String = {
+    val fs = FileSystem.get(new Path(path).toUri,
+      spark.sparkContext.hadoopConfiguration)
+    latest(fs, path).fold((sub: String) => s"$path/$sub")(m => m.base)
+  }
 }

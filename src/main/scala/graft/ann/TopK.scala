@@ -94,9 +94,11 @@ object TopK {
       }
     }
 
-    /** A pair with no id or no distance is not a neighbour. */
+    /** A pair with no id or no comparable distance (NULL or NaN, which
+      * no `<` orders) is not a neighbour. */
     override def reduce(b: Buf, n: Scored): Buf = {
-      if (n.vec_id != null && n.dist != null) add(b, n.vec_id, n.dist)
+      if (n.vec_id != null && n.dist != null && !n.dist.isNaN)
+        add(b, n.vec_id, n.dist)
       b
     }
 

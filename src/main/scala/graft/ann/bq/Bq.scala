@@ -225,16 +225,17 @@ object Bq {
     * written before the packed-64 format have no meta table and load
     * as 32-bit — the width their codes were packed at. */
   def load(spark: SparkSession, path: String): BqIndex = {
+    val at = graft.ann.LsmStore.baseDir(spark, path)
     import spark.implicits._
-    val thr = spark.read.parquet(s"$path/thresholds")
+    val thr = spark.read.parquet(at("thresholds"))
       .select($"dim", $"thr").as[(Int, Double)]
       .collect().sortBy(_._1).map(_._2)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(path).toUri,
       spark.sparkContext.hadoopConfiguration)
     val bpw =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta"))) 32
-      else spark.read.parquet(s"$path/meta").head().getAs[Int]("bits_per_word")
-    new BqIndex(new BqModel(thr, bpw), spark.read.parquet(s"$path/codes"))
+      if (!fs.exists(new org.apache.hadoop.fs.Path(at("meta")))) 32
+      else spark.read.parquet(at("meta")).head().getAs[Int]("bits_per_word")
+    new BqIndex(new BqModel(thr, bpw), spark.read.parquet(at("codes")))
   }
 }

@@ -329,8 +329,9 @@ object IvfPq {
 
   /** Reopen a saved index — layout defined by [[IvfPqIndex.save]]. */
   def load(spark: SparkSession, path: String): IvfPqIndex = {
+    val at = graft.ann.LsmStore.baseDir(spark, path)
     import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = spark.read.parquet(at("meta")).head()
     val config = IvfPqConfig(
       nCells = meta.getAs[Int]("n_cells"),
       nProbe = meta.getAs[Int]("n_probe"),
@@ -341,16 +342,16 @@ object IvfPq {
       sampleCap = meta.getAs[Int]("sample_cap"),
       angular = meta.getAs[Boolean]("angular"))
     val dims = meta.getAs[Int]("dims")
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = spark.read.parquet(at("centroids"))
       .select($"cell", $"centroid").as[(Int, Seq[Double])].collect()
       .sortBy(_._1).map(_._2.toArray)
-    val cbRows = spark.read.parquet(s"$path/codebooks")
+    val cbRows = spark.read.parquet(at("codebooks"))
       .select($"subvector", $"code", $"centroid")
       .as[(Int, Int, Seq[Double])].collect()
     val codebooks = Array.tabulate(config.numSubvectors) { s =>
       cbRows.filter(_._1 == s).sortBy(_._2).map(_._3.toArray)
     }
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(at("codes"))
       .select(col("vec_id"), col("cell").cast("int").as("cell"), col("codes"))
     new IvfPqIndex(new IvfPqModel(config,
       new IvfModel(config.ivfConfig, centroids),

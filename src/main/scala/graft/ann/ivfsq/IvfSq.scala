@@ -212,8 +212,9 @@ object IvfSq {
 
   /** Reopen a saved index. */
   def load(spark: SparkSession, path: String): IvfSqIndex = {
+    val at = graft.ann.LsmStore.baseDir(spark, path)
     import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = spark.read.parquet(at("meta")).head()
     val config = IvfSqConfig(
       nCells = meta.getAs[Int]("n_cells"),
       nProbe = meta.getAs[Int]("n_probe"),
@@ -222,16 +223,16 @@ object IvfSq {
       seed = meta.getAs[Long]("seed"),
       sampleCap = meta.getAs[Int]("sample_cap"),
       angular = meta.getAs[Boolean]("angular"))
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = spark.read.parquet(at("centroids"))
       .select($"cell", $"centroid").as[(Int, Seq[Double])]
       .collect().sortBy(_._1).map(_._2.toArray)
     val ivfModel = new IvfModel(config.ivfConfig, cents)
-    val bounds = spark.read.parquet(s"$path/bounds")
+    val bounds = spark.read.parquet(at("bounds"))
       .select($"dim", $"mn", $"mx").as[(Int, Double, Double)]
       .collect().sortBy(_._1)
     val sqModel = new SqModel(bounds.map(_._2), bounds.map(_._3),
       config.levels)
     new IvfSqIndex(config, ivfModel, sqModel,
-      spark.read.parquet(s"$path/codes"))
+      spark.read.parquet(at("codes")))
   }
 }

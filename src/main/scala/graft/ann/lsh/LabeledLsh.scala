@@ -231,17 +231,18 @@ object LabeledLshIndex {
   val DefaultMaxProbeBuckets = 64
 
   def load(spark: SparkSession, path: String): LabeledLshIndex = {
-    val trees = spark.read.parquet(s"$path/labeled_meta")
+    val at = graft.ann.LsmStore.baseDir(spark, path)
+    val trees = spark.read.parquet(at("labeled_meta"))
       .head().getAs[Int]("centroid_trees")
     new LabeledLshIndex(
-      LshModel.load(spark, s"$path/model"),
-      spark.read.parquet(s"$path/vectors"),
-      spark.read.parquet(s"$path/buckets")
+      LshModel.load(spark, at("model")),
+      spark.read.parquet(at("vectors")),
+      spark.read.parquet(at("buckets"))
         .select(col("label").cast("string").as("label"),
           col("tree_id").cast("int").as("tree_id"), col("hash"),
           col("vec_id")),
       trees,
-      Some(spark.read.parquet(s"$path/centroids")
+      Some(spark.read.parquet(at("centroids"))
         .select(col("label").cast("string").as("label"),
           col("tree_id").cast("int").as("tree_id"), col("hash"),
           col("centroid"))))

@@ -3,6 +3,8 @@ package graft.ann.lsh
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ann.LsmStore.Manifest
+
 /** Scheduled maintenance for a STORED label-partitioned LSH index
   * under streaming upserts/deletes — the [[LshMaintainer]] twin over
   * the [[LabeledLshIndex.save]] layout at `path`. The LSM protocol,
@@ -45,7 +47,7 @@ final class LabeledLshMaintainer(
   override protected def lsmSpark: SparkSession = spark
   override protected def lsmPath: String = path
   override protected def lsmLogDirs: Seq[String] =
-    Seq("vectors_delta", "buckets_delta", "tombstones", "batch_commits")
+    Seq("vectors_delta", "buckets_delta", "tombstones")
   override protected def countedTable: String = "vectors"
   override protected def storeLabel: String = "labeled LSH store"
   override protected def driftAdvice: String =
@@ -55,46 +57,48 @@ final class LabeledLshMaintainer(
     "per-probe cost inflates by the same factor, and the STALE sidecar " +
       "no longer ranks the newest mass. refitNow, or compact more often."
 
-  /** The frozen forest, loaded once (the [[LshMaintainer.model]]
-    * rationale); replaced only by [[refitNow]]. */
-  private var modelCache: LshModel = null
-  private def model: LshModel = {
-    if (modelCache == null) modelCache = LshModel.load(spark, s"$path/model")
-    modelCache
+  /** The frozen forest, loaded once per model dir (the
+    * [[LshMaintainer.model]] rationale and keying). */
+  private var modelCache: (String, LshModel) = ("", null)
+  private def model(m: Manifest): LshModel = {
+    val dir = m.base("model")
+    if (modelCache._1 != dir) modelCache = (dir, LshModel.load(spark, dir))
+    modelCache._2
   }
 
   /** The store's probe-selection cell structure, read once from the
     * persisted `labeled_meta` (frozen like the model). */
   private var centroidTreesCache: Int = -1
-  private def centroidTrees: Int = {
+  private def centroidTrees(m: Manifest): Int = {
     if (centroidTreesCache < 0)
-      centroidTreesCache = spark.read.parquet(s"$path/labeled_meta")
+      centroidTreesCache = spark.read.parquet(m.base("labeled_meta"))
         .head().getAs[Int]("centroid_trees")
     centroidTreesCache
   }
 
-  /** The [[LabeledLshIndex.save]] layout's subdirs, as
-    * compaction-commit renames. */
-  private def storeRenames: Seq[(String, String)] =
+  /** The [[LabeledLshIndex.save]] layout's subdirs. */
+  private val layout =
     Seq("model", "vectors", "buckets", "centroids", "labeled_meta")
-      .map(sub => s"$CompactTmpDir/$sub" -> sub)
 
   /** The base tables as [[LabeledLshIndex.load]] reads them (partition
     * columns cast back per its rules; labels pinned to STRING in the
-    * read schema), each schema read once per instance. */
-  private def vectorsBase: DataFrame = readBase("vectors")
-  private def bucketsBase: DataFrame = readBase("buckets", "label")
-    .select(col("label"), col("tree_id").cast("int").as("tree_id"),
-      col("hash"), col("vec_id"))
+    * read schema), each schema read once per dir. */
+  private def vectorsBase(m: Manifest): DataFrame = readBase(m, "vectors")
+  private def bucketsBase(m: Manifest): DataFrame =
+    readBase(m, "buckets", "label")
+      .select(col("label"), col("tree_id").cast("int").as("tree_id"),
+        col("hash"), col("vec_id"))
 
   /** The serving view ([[graft.ann.LsmStore.liveViews]]) with the
     * PERSISTED (last-compaction) centroid sidecar — the crash-safe form
     * of the staleness contract (class doc). */
-  def index: LabeledLshIndex = {
-    val Seq(vecs, bks) = liveViews()(
-      vectorsBase -> "vectors_delta", bucketsBase -> "buckets_delta")
-    new LabeledLshIndex(model, vecs, bks, centroidTrees,
-      Some(readBase("centroids", "label")
+  def index: LabeledLshIndex = index(manifest())
+
+  private def index(m: Manifest): LabeledLshIndex = {
+    val Seq(vecs, bks) = liveViews(m)(
+      vectorsBase(m) -> "vectors_delta", bucketsBase(m) -> "buckets_delta")
+    new LabeledLshIndex(model(m), vecs, bks, centroidTrees(m),
+      Some(readBase(m, "centroids", "label")
         .select(col("label"), col("tree_id").cast("int").as("tree_id"),
           col("hash"), col("centroid"))))
   }
@@ -104,7 +108,7 @@ final class LabeledLshMaintainer(
     * `deletes` rows are `(vec_id)`. An id in both is an upsert. */
   def onBatch(arrivals: Option[DataFrame],
               deletes: Option[DataFrame]): Unit =
-    runBatch(deletes) { seq =>
+    runBatch(deletes) { (m, seq) =>
       // the LabeledLshIndex.append dedup rules, per delta batch —
       // CHECKPOINTED ONCE: dropDuplicates is nondeterministic per
       // action when a batch carries conflicting embeddings for one id,
@@ -118,31 +122,34 @@ final class LabeledLshMaintainer(
       // at-rest vector table the frozen forest was fit for. Both logs
       // are written in their base's schema.
       arrivals.map { a0 =>
-        val vecs = logRows(a0, vectorsBase.schema, seq)
+        val vecs = logRows(a0, vectorsBase(m).schema, seq)
           .dropDuplicates("vec_id").localCheckpoint()
         val lbls = a0.select(col("vec_id"),
             col("label").cast("string").as("label"))
           .dropDuplicates("vec_id", "label")
-        vecs.write.mode("append").parquet(s"$path/vectors_delta")
-        logRows(model.transform(vecs, "vec_id", "embedding")
-            .join(lbls, "vec_id"), bucketsBase.schema, seq)
-          .write.mode("append").parquet(s"$path/buckets_delta")
+        vecs.write.mode("append").parquet(m.log("vectors_delta"))
+        logRows(model(m).transform(vecs, "vec_id", "embedding")
+            .join(lbls, "vec_id"), bucketsBase(m).schema, seq)
+          .write.mode("append").parquet(m.log("buckets_delta"))
         vecs
       }
     }
 
   /** Fold the logs into the base AND recompute the centroid sidecar —
-    * one crash-safe commit, so the staleness window is exactly the
-    * compaction cadence (class doc). */
+    * one generation, one publish, so the staleness window is exactly
+    * the compaction cadence (class doc). */
   def compactNow(): Unit = {
-    val live = index
+    val m = manifest()
+    val live = index(m)
     val v = live.vectors.localCheckpoint()
     val b = live.labeledBuckets.localCheckpoint()
+    val n = newGeneration()
     // a fresh view (no precomputedCentroids) recomputes the sidecar
     // from the checkpointed live tables inside save
-    new LabeledLshIndex(model, v, b, centroidTrees)
-      .save(spark, s"$path/$CompactTmpDir")
-    commitCompaction(batches, storeRenames)
+    new LabeledLshIndex(live.model, v, b, centroidTrees(m))
+      .save(spark, s"$path/${genDir(n)}")
+    val next = commitFold(m, n, layout, batches)
+    modelCache = (next.base("model"), live.model)
     val folded = v.count()
     onCompacted(folded)
     if (log.isInfoEnabled) log.info(
@@ -154,23 +161,25 @@ final class LabeledLshMaintainer(
     * live vectors, rebuild the label partitions from the live
     * `(vec_id, label)` pairs (recovered from the bucket rows — one
     * `centroidTrees`-scoped distinct, labels are never stored twice),
-    * recompute the sidecar, swap atomically. */
+    * recompute the sidecar, and publish it all as one generation. */
   def refitNow(config: LshConfig): Unit = {
-    val live = index
+    val m = manifest()
+    val live = index(m)
     val v = live.vectors.localCheckpoint()
     val labels = live.labeledBuckets
       .where(col("tree_id") === 0)
       .select("vec_id", "label").dropDuplicates("vec_id", "label")
       .localCheckpoint()
     val fresh = Lsh.train(v, "vec_id", "embedding", config)
-    fresh.withLabels(labels, centroidTrees)
-      .save(spark, s"$path/$CompactTmpDir")
-    commitCompaction(batches, storeRenames :+ stageDriftBreachReset())
-    modelCache = fresh.model
-    val n = v.count()
-    onRefit(n)
+    val n = newGeneration()
+    fresh.withLabels(labels, centroidTrees(m))
+      .save(spark, s"$path/${genDir(n)}")
+    val next = commitFold(m, n, layout, batches, "drift_breaches" -> 0)
+    modelCache = (next.base("model"), fresh.model)
+    val n2 = v.count()
+    onRefit(n2)
     if (log.isInfoEnabled) log.info(
-      s"$storeLabel '$path' refit on $n live vectors after " +
+      s"$storeLabel '$path' refit on $n2 live vectors after " +
         s"$batches batches (fresh forest, rebuilt partitions + sidecar)")
   }
 }

@@ -885,9 +885,10 @@ object Lsh {
   /** Reopen a saved index (reference LoadHasher + a Store pointing at the
     * persisted namespaces, lsh.go:200-207). */
   def load(spark: SparkSession, path: String): LshIndex = {
-    val model = LshModel.load(spark, s"$path/model")
-    val vectors = spark.read.parquet(s"$path/vectors")
-    val buckets = spark.read.parquet(s"$path/buckets")
+    val at = graft.ann.LsmStore.baseDir(spark, path)
+    val model = LshModel.load(spark, at("model"))
+    val vectors = spark.read.parquet(at("vectors"))
+    val buckets = spark.read.parquet(at("buckets"))
       .select(col("tree_id").cast("int").as("tree_id"), col("hash"), col("vec_id"))
     new LshIndex(model, vectors, buckets)
   }
@@ -923,6 +924,10 @@ object Lsh {
     // split on a prefix and hash later rows from reads past their end
     require(vecs.forall(_ != null) && vecs.map(_.length).distinct.length <= 1,
       "embedding dimensions are ragged or contain nulls")
+    // a NaN or infinite row can become a split point, and its plane
+    // sends every vector to one side
+    require(vecs.forall(_.forall(x => !x.isNaN && !x.isInfinite)),
+      "embedding values are not finite (NaN or infinite)")
     // trees are independent: build them concurrently (the reference's
     // goroutine-per-tree, hasher.go:179-186) — each still seeded
     // deterministically, so the forest is identical to a serial build;

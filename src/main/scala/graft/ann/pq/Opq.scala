@@ -509,15 +509,16 @@ object Opq {
     * silently non-orthogonal matrix. */
   private[ann] def loadRotation(spark: SparkSession, path: String,
                                 d: Int): RotationMatrix = {
-    val rows = spark.read.parquet(s"$path/rotation")
+    val at = graft.ann.LsmStore.baseDir(spark, path)
+    val rows = spark.read.parquet(at("rotation"))
       .select(col("row").cast("int"), col("col").cast("int"), col("value"))
       .collect()
     require(rows.length == d * d,
-      s"Opq.loadRotation: rotation at $path/rotation has ${rows.length} " +
+      s"Opq.loadRotation: rotation at ${at("rotation")} has ${rows.length} " +
         s"entries, expected ${d * d} (${d}x$d) — partial or corrupt dump")
     val distinctCells = rows.map(x => (x.getInt(0), x.getInt(1))).distinct.length
     require(distinctCells == d * d,
-      s"Opq.loadRotation: rotation at $path/rotation has $distinctCells " +
+      s"Opq.loadRotation: rotation at ${at("rotation")} has $distinctCells " +
         s"distinct (row, col) cells, expected ${d * d} — duplicated cells " +
         "are masking missing ones (corrupt dump)")
     val r = Array.ofDim[Double](d, d)

@@ -227,8 +227,9 @@ object Pq {
   /** Reopen a saved index (codebooks + codes) — parquet layout defined
     * by [[PqIndex.save]], mirroring the LSH/IVF persistence contract. */
   def load(spark: SparkSession, path: String): PqIndex = {
+    val at = graft.ann.LsmStore.baseDir(spark, path)
     import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = spark.read.parquet(at("meta")).head()
     val config = PqConfig(
       numSubvectors = meta.getAs[Int]("num_subvectors"),
       codesPerSubvector = meta.getAs[Int]("codes_per_subvector"),
@@ -236,13 +237,13 @@ object Pq {
       seed = meta.getAs[Long]("seed"),
       sampleCap = meta.getAs[Int]("sample_cap"))
     val dims = meta.getAs[Int]("dims")
-    val rows = spark.read.parquet(s"$path/codebooks")
+    val rows = spark.read.parquet(at("codebooks"))
       .select($"subvector", $"code", $"centroid")
       .as[(Int, Int, Seq[Double])].collect()
     val codebooks = Array.tabulate(config.numSubvectors) { s =>
       rows.filter(_._1 == s).sortBy(_._2).map(_._3.toArray)
     }
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(at("codes"))
       .select(col("vec_id"), col("codes"))
     new PqIndex(new PqModel(config, dims, codebooks), codes)
   }

@@ -199,12 +199,13 @@ object Sq {
 
   /** Reopen a saved index (bounds + codes). */
   def load(spark: SparkSession, path: String): SqIndex = {
+    val at = graft.ann.LsmStore.baseDir(spark, path)
     import spark.implicits._
-    val levels = spark.read.parquet(s"$path/meta").head().getAs[Int]("levels")
-    val bounds = spark.read.parquet(s"$path/bounds")
+    val levels = spark.read.parquet(at("meta")).head().getAs[Int]("levels")
+    val bounds = spark.read.parquet(at("bounds"))
       .select($"dim", $"mn", $"mx").as[(Int, Double, Double)]
       .collect().sortBy(_._1)
     val model = new SqModel(bounds.map(_._2), bounds.map(_._3), levels)
-    new SqIndex(model, spark.read.parquet(s"$path/codes"))
+    new SqIndex(model, spark.read.parquet(at("codes")))
   }
 }

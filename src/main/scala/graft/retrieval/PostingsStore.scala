@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ann.LsmStore.Manifest
+
 /** A STORED lexical retrieval index — the serving form of the BM25 /
   * sparse dot-product queries (graft.queries.RetrievalQueries): the
   * per-(doc, term) postings are computed ONCE over the corpus and
@@ -23,15 +25,15 @@ import org.apache.spark.sql.functions._
   *     without touching the postings table;
   *   - `stats`   (term, df) and `meta` (n, avgdl, tdl, stats_seq): the
   *     corpus statistics as of the STATS FENCE (the log seq through
-  *     which arrivals/deletes are folded into them — embedded in meta
-  *     as `stats_seq` AND cached in the `_stats_fence` marker).
+  *     which arrivals/deletes are folded into them — the manifest's
+  *     `stats_fence`, published with them, and embedded in meta as
+  *     `stats_seq`).
   *     `tdl` (total doc length, a long) makes the avgdl fold exact:
   *     avgdl = tdl/n in both build and refit, bit-equal to the inline
   *     pipelines' double-sum avg() for any corpus whose token total
   *     fits 2^53 (and MORE exact past it);
   *   - LSM logs (the [[graft.ann.LsmStore]] protocol, kill rule and
-  *     cadence): `tfs_delta`, `doclens_delta`, `tombstones`,
-  *     `batch_commits`.
+  *     cadence): `tfs_delta`, `doclens_delta`, `tombstones`.
   *
   * Serving ([[sparse]]/[[bm25]]) computes w/tscore at probe time:
   * live rows ⨝ broadcast(stats) with the canonical expressions below —
@@ -55,10 +57,10 @@ import org.apache.spark.sql.functions._
   * Post-refit serving is row-identical to a full
   * [[PostingsStore.build]] over the drifted corpus (spec-pinned).
   *
-  * [[compactNow]] folds the logs into the base through the crash-safe
-  * temp-dir + pre-commit-marker protocol, running [[mergeRefit]] FIRST
-  * — the row fold physically applies tombstones and drops the logs,
-  * which are exactly the inputs the stats fold needs — so a compacted
+  * [[compactNow]] folds the logs into a new base generation, running
+  * [[mergeRefit]] FIRST — the row fold physically applies tombstones
+  * and starts a fresh log generation, and the old logs are exactly the
+  * inputs the stats fold needs — so a compacted
   * store's stats always describe its live corpus (post-compaction
   * serving == a fresh build's, the strongest identity on offer).
   * Serving scores therefore change only at refit/compaction
@@ -79,7 +81,7 @@ final class PostingsStore(
   override protected def lsmSpark: SparkSession = spark
   override protected def lsmPath: String = path
   override protected def lsmLogDirs: Seq[String] =
-    Seq("tfs_delta", "doclens_delta", "tombstones", "batch_commits")
+    Seq("tfs_delta", "doclens_delta", "tombstones")
 
   // a v1 store (precomputed sparse/bm25 tables, no raw rows) cannot be
   // upgraded in place — its tf/dl inputs were never persisted
@@ -94,7 +96,7 @@ final class PostingsStore(
   // mergeRefit with NO log row carrying it — recovery from the logs
   // alone would reuse it, and the reused batch's rows would sit
   // at-or-below the fence, permanently excluded from every stats fold
-  private var batches = { recoverRefit(); math.max(recoverSeq(), statsFence) }
+  private var batches = { val s = recoverSeq(); math.max(s, statsFence(manifest())) }
 
   /** OOV posting ratio of the most recent batch's ARRIVALS (None until
     * a batch with arrivals has run) — the fraction of the batch's
@@ -106,15 +108,15 @@ final class PostingsStore(
     * ([[graft.ann.LsmStore.compactionDueAt]]). */
   def compactionDue: Boolean = compactionDueAt(batches + 1, compactEvery)
 
-  private def withDelta(baseSub: String, vis: Visibility): DataFrame =
-    withVisibleDelta(readBase(baseSub), s"${baseSub}_delta", vis)
+  private def withDelta(m: Manifest, baseSub: String): DataFrame =
+    withVisibleDelta(m, readBase(m, baseSub), s"${baseSub}_delta")
 
   /** The shared live view ([[graft.ann.LsmStore.liveViews]]) over a
     * base table whose rows keep their `seq` through compaction. A
-    * caller that reads several views passes one snapshot `vis` to all. */
-  private def live(baseSub: String, vis: Visibility = visibility()): DataFrame =
-    liveViews("doc_id", keepSeq = true, vis)(
-      readBase(baseSub) -> s"${baseSub}_delta").head
+    * caller that reads several views passes one snapshot `m` to all. */
+  private def live(baseSub: String, m: Manifest = manifest()): DataFrame =
+    liveViews(m, "doc_id", keepSeq = true)(
+      readBase(m, baseSub) -> s"${baseSub}_delta").head
 
   /** Live raw postings (doc_id, term, tf, dl, seq). */
   private[retrieval] def liveTfs: DataFrame = live("tfs")
@@ -128,26 +130,29 @@ final class PostingsStore(
     * composed pipelines and specs check store membership against. */
   def liveDocs: DataFrame = liveDoclens.select(col("doc_id"), col("dl"))
 
-  private def stats: DataFrame = readBase("stats")
-  private def meta: (Long, Double, Long) = {
-    val r = spark.read.parquet(s"$path/meta").head()
+  private def stats(m: Manifest): DataFrame = readBase(m, "stats")
+  private def meta(m: Manifest): (Long, Double, Long) = {
+    val r = spark.read.parquet(m.base("meta")).head()
     (r.getAs[Long]("n"), r.getAs[Double]("avgdl"), r.getAs[Long]("tdl"))
   }
 
   /** The serving views — probe them by term exactly like the inline
     * pipelines' frames (RetrievalSpec pins row-identity): scores derive
     * map-side from the probed raw rows × the broadcast fence-time
-    * stats. Terms absent from stats (OOV since the fence) don't score
-    * until a refit — the under-score-never-over-score rule. */
+    * stats, all from one manifest. Terms absent from stats (OOV since
+    * the fence) don't score until a refit — the
+    * under-score-never-over-score rule. */
   def sparse: DataFrame = {
-    val (n, _, _) = meta
-    liveTfs.join(broadcast(stats), "term")
+    val m = manifest()
+    val (n, _, _) = meta(m)
+    live("tfs", m).join(broadcast(stats(m)), "term")
       .select(col("doc_id"), col("term"),
         PostingsStore.sparseWCol(n.toDouble).as("w"))
   }
   def bm25: DataFrame = {
-    val (n, avgdl, _) = meta
-    liveTfs.join(broadcast(stats), "term")
+    val m = manifest()
+    val (n, avgdl, _) = meta(m)
+    live("tfs", m).join(broadcast(stats(m)), "term")
       .select(col("doc_id"), col("term"),
         PostingsStore.tscoreCol(n.toDouble, k1, b, lit(avgdl)).as("tscore"))
   }
@@ -157,11 +162,11 @@ final class PostingsStore(
     * upsert. Arrivals store RAW rows (stats-independent — class doc). */
   def onBatch(arrivals: Option[DataFrame],
               deletes: Option[DataFrame]): Unit = {
-    guardPoisoned()
     val seq = batches + 1
     // the seq is BURNED up front: a failed attempt's partial log rows
     // stay at a seq no retry reuses (LsmStore doc)
     batches = seq
+    val m = manifestFor(seq)
     arrivals.foreach { a =>
       val tf = a.select(col("doc_id"), size(col("toks")).as("dl"),
           explode(col("toks")).as("term"))
@@ -171,7 +176,7 @@ final class PostingsStore(
         // staleness watermark: OOV fraction of this batch's postings vs
         // the fence-time vocabulary
         val agg = tf.agg(count(lit(1)).as("total")).crossJoin(
-          tf.join(broadcast(stats), "term")
+          tf.join(broadcast(stats(m)), "term")
             .agg(count(lit(1)).as("known"))).head()
         val total = agg.getAs[Long]("total")
         val oov = if (total == 0) 0.0
@@ -184,113 +189,47 @@ final class PostingsStore(
             "score NOTHING until a refit and df for known terms is stale. " +
             "Run mergeRefit(): it folds the drift into the stats in " +
             "O(drift) and the stored raw rows re-score retroactively.")
-        logRows(tf, readBase("tfs").schema, seq)
-          .write.mode("append").parquet(s"$path/tfs_delta")
+        logRows(tf, readBase(m, "tfs").schema, seq)
+          .write.mode("append").parquet(m.log("tfs_delta"))
         logRows(a.select(col("doc_id"), size(col("toks")).as("dl")),
-            readBase("doclens").schema, seq)
-          .write.mode("append").parquet(s"$path/doclens_delta")
+            readBase(m, "doclens").schema, seq)
+          .write.mode("append").parquet(m.log("doclens_delta"))
       // finally: the burn-and-retry contract makes the failure path an
       // expected flow — a leaked cached RDD per failed attempt would
       // accumulate across retries
       } finally tf.unpersist(false)
     }
-    deletes.foreach(d => logRows(d, Seq(readBase("doclens").schema("doc_id")),
-        seq).write.mode("append").parquet(s"$path/tombstones"))
+    deletes.foreach(d => logRows(d, Seq(readBase(m, "doclens").schema("doc_id")),
+        seq).write.mode("append").parquet(m.log("tombstones")))
     // atomic visibility: a crash above leaves a partial batch (tfs
     // written, doclens not — or a delete without its upsert arrival)
-    // that the visibility rule ignores instead of serving diverged views
-    markBatchCommitted(seq)
+    // that no manifest names instead of serving diverged views
+    commit(m)(_.committed(seq))
     if (compactionDueAt(batches, compactEvery)) compactNow()
   }
 
   // ---- O(drift) stats refit ----
 
-  /** Log seq through which arrivals/deletes are folded into stats/meta
-    * (0 = fit-time only) — read as max(the `_stats_fence` marker, the
-    * `stats_seq` column embedded in meta since round 14). The embedded
-    * copy makes marker loss recoverable: it is written in the SAME
-    * crash-safe commit as the stats it fences, so the two cannot
-    * diverge destructively (see the body comment for the one benign
-    * divergence). For a pre-stats_seq store whose marker is lost, the
+  /** Log seq through which arrivals/deletes are folded into the stats
+    * of snapshot `m` (0 = fit-time only): max(the manifest's
+    * `stats_fence`, the `stats_seq` column embedded in meta). A refit
+    * publishes both; a no-drift advance moves only the manifest's,
+    * whose skipped window folds nothing. The embedded copy covers a
+    * store converted from the marker format whose `_stats_fence` marker
+    * was lost. For a pre-stats_seq store in that state, the
     * [[mergeRefit]] fence-0 cross-check (meta.n vs the persisted seq≤0
     * doc count) still refuses the doc-count-changing cases loudly;
     * count-neutral drift (same-length upserts) on such a store is the
     * residual documented gap — rebuild closes it. */
-  private def markerFence: Int = readIntMarker("_stats_fence")
-
-  private def statsFence: Int = {
-    val marker = markerFence
-    // meta's embedded copy (absent on pre-round-14 stores) is the
-    // durable one — it swapped WITH the stats it fences, so it can
-    // only be lost by losing the stats themselves. max() is safe in
-    // the one divergence case (marker ahead after a no-drift advance,
-    // which rewrites no meta): the skipped window had zero moves, so
-    // re-scanning it from the meta fence would fold nothing anyway.
+  private def statsFence(m: Manifest): Int = {
     val embedded =
       try {
-        val df = spark.read.parquet(s"$path/meta")
+        val df = spark.read.parquet(m.base("meta"))
         if (df.schema.fieldNames.contains("stats_seq"))
           df.head().getAs[Int]("stats_seq")
         else 0
       } catch { case _: Exception => 0 }
-    math.max(marker, embedded)
-  }
-
-  private def refitMarkerPath = new Path(s"$path/_postings_refit")
-  // a def, NOT a val: recoverRefit runs during construction (the
-  // `batches` initializer), before later vals initialize — a val here
-  // would read as null inside the recovery path and silently skip the
-  // renames (found the hard way)
-  private def RefitTmpDir = "_refit_tmp"
-
-  /** The destructive half of the refit commit — idempotent: renames
-    * skipped when the temp is gone, the stats fence write is monotone,
-    * the temp/marker deletes are no-ops when done. */
-  private def finishRefit(newFence: Int): Unit = {
-    Seq("stats", "meta").foreach { sub =>
-      val tp = new Path(s"$path/$RefitTmpDir/$sub")
-      val fp = new Path(s"$path/$sub")
-      if (lsmFs.exists(tp)) {
-        require(!lsmFs.exists(fp) || lsmFs.delete(fp, true),
-          s"postings store '$path': failed to clear '$sub' for the " +
-            "refit swap — marker and temp kept; reopen retries")
-        require(lsmFs.rename(tp, fp),
-          s"postings store '$path': failed to swap refit '$sub' — " +
-            "marker and temp kept; reopen retries")
-      }
-    }
-    // compared against the MARKER's own value, not the combined fence:
-    // the swap above already advanced the embedded copy, and the
-    // marker cache must still be (re)published for the no-drift
-    // advance path (which never rewrites meta) to build on
-    if (markerFence < newFence)
-      publishMarker("_stats_fence", newFence.toString)
-    lsmFs.delete(new Path(s"$path/$RefitTmpDir"), true)
-    lsmFs.delete(refitMarkerPath, false)
-  }
-
-  /** Detect and finish a refit that crashed mid-commit (the
-    * [[graft.ann.LsmStore.recoverCompaction]] pattern: a parseable
-    * marker means the new stats/meta are fully written and every
-    * remaining step is deterministic; a garbled one means the
-    * publishing process crashed pre-content — nothing destructive ran,
-    * so the aborted refit just retries later). */
-  private def recoverRefit(): Unit = {
-    val body = readMarker("_postings_refit").getOrElse(return)
-    body.trim.toIntOption match {
-      case Some(f) =>
-        logr.warn(s"postings store '$path': found a refit marker " +
-          s"(stats fence $f) — a previous process crashed mid-commit; " +
-          "finishing the commit (swap stats/meta, advance the fence).")
-        poisonOnFailure(finishRefit(f))
-      case None =>
-        logr.warn(s"postings store '$path': the refit marker at " +
-          s"$refitMarkerPath is unparseable (body '${body.take(40)}') — " +
-          "pre-content crash, nothing destructive ran; discarding the " +
-          "aborted refit's marker and temps.")
-        lsmFs.delete(refitMarkerPath, false)
-        lsmFs.delete(new Path(s"$path/$RefitTmpDir"), true)
-    }
+    math.max(m.int("stats_fence"), embedded)
   }
 
   /** Fold the drift since the stats fence into stats/meta — O(drift),
@@ -301,12 +240,14 @@ final class PostingsStore(
     * sidecar. Post-refit serving is row-identical to a full
     * [[PostingsStore.build]] over the drifted corpus
     * (PostingsStoreSpec pins it), and previously-OOV stored rows begin
-    * scoring retroactively. Crash-safe: new stats/meta land in a temp
-    * dir, a marker commits, recovery finishes at construction. No-op
-    * (returns false) when nothing drifted. */
+    * scoring retroactively. Crash-safe: new stats/meta land in a new
+    * generation and one manifest publishes them with the new stats
+    * fence; a crash before the publish leaves the old stats serving.
+    * No-op (returns false) when nothing drifted. */
   def mergeRefit(): Boolean = {
-    guardPoisoned()
-    val sf = statsFence
+    // one snapshot for every read of the fold
+    val m = manifest()
+    val sf = statsFence(m)
     // fence-0 cross-check (see [[statsFence]]): stats claiming
     // "fit-time only" must agree with the persisted fit-time doc count
     // (build stamps base rows seq 0 and meta.n from them; every later
@@ -315,20 +256,19 @@ final class PostingsStore(
     // guard only fires for PRE-stats_seq stores with a lost marker (or
     // a hand-damaged meta), where it refuses the doc-count-changing
     // double-fold cases loudly.
-    // one visibility snapshot for every log read of the fold
-    val vis = visibility()
     if (sf == 0) {
-      val fitDocs = withDelta("doclens", vis).where(col("seq") <= 0).count()
-      val (n0, _, _) = meta
+      val fitDocs = withDelta(m, "doclens").where(col("seq") <= 0).count()
+      val (n0, _, _) = meta(m)
       require(fitDocs == n0,
         s"postings store '$path': stats fence reads 0 (fit-time only) " +
           s"but meta.n=$n0 differs from the seq<=0 doc count $fitDocs — " +
-          "the `_stats_fence` marker was likely lost or corrupted after " +
+          "the stats fence (manifest `stats_fence`, formerly the " +
+          "`_stats_fence` marker) was likely lost or corrupted after " +
           "a refit/compaction; folding from 0 would double-count " +
           "already-folded rows. Rebuild (PostingsStore.build).")
     }
     val newFence = batches
-    val tombs = visibleTombstones(readBase("doclens"), "doc_id", vis)
+    val tombs = visibleTombstones(m, readBase(m, "doclens"), "doc_id")
       .persist()
     try {
       val newT = broadcast(tombs.where(col("seq") > sf))
@@ -340,12 +280,12 @@ final class PostingsStore(
       def deadOld(all: DataFrame): DataFrame = killJoin(
         killJoin(all.where(col("seq") <= sf), oldT, "doc_id", "left_anti"),
         newT, "doc_id", "left_semi")
-      val deadTf = deadOld(withDelta("tfs", vis))
-      val deadDl = deadOld(withDelta("doclens", vis))
+      val deadTf = deadOld(withDelta(m, "tfs"))
+      val deadDl = deadOld(withDelta(m, "doclens"))
       // live rows the stats don't cover yet (arrivals since the fence;
       // an upserted doc's surviving version)
-      val freshTf = live("tfs", vis).where(col("seq") > sf)
-      val freshDl = live("doclens", vis).where(col("seq") > sf)
+      val freshTf = live("tfs", m).where(col("seq") > sf)
+      val freshDl = live("doclens", m).where(col("seq") > sf)
 
       val dlMoves = freshDl.select(lit(1L).as("dn"), col("dl").cast("long"))
         .withColumn("sgn", lit(1L))
@@ -369,35 +309,34 @@ final class PostingsStore(
       if (dN == 0L && dTdl == 0L && nMoved == 0L) {
         // nothing drifted — still advance the fence so later folds
         // don't rescan this window
-        if (newFence > sf) publishMarker("_stats_fence", newFence.toString)
+        if (newFence > sf) commit(m)(_.withInt("stats_fence", newFence))
         return false
       }
-      val (n, _, tdl) = meta
+      val (n, _, tdl) = meta(m)
       val n2 = n + dN
       val tdl2 = tdl + dTdl
       require(n2 >= 0 && tdl2 >= 0,
         s"postings store '$path': refit fold went negative (n=$n2, " +
           s"tdl=$tdl2) — stats fence and logs disagree; rebuild " +
           "(PostingsStore.build)")
-      val merged = stats
+      val merged = stats(m)
         .join(dfMoves, Seq("term"), "full_outer")
         .select(col("term"),
           (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L)))
             .as("df"))
         .where(col("df") > 0L)
+      val g = newGeneration()
       merged.localCheckpoint()
-        .write.mode("overwrite").parquet(s"$path/$RefitTmpDir/stats")
+        .write.mode("overwrite").parquet(s"$path/${genDir(g)}/stats")
       import spark.implicits._
-      // the fence travels INSIDE meta (stats_seq): meta swaps in the
-      // same commit as the stats it describes, so a lost/corrupt
-      // `_stats_fence` marker is recovered from the store itself —
-      // see [[statsFence]]
+      // the fence also travels INSIDE meta (stats_seq) — see
+      // [[statsFence]]
       Seq((n2, if (n2 == 0L) 0.0 else tdl2.toDouble / n2, tdl2,
           newFence))
         .toDF("n", "avgdl", "tdl", "stats_seq")
-        .write.mode("overwrite").parquet(s"$path/$RefitTmpDir/meta")
-      publishMarker("_postings_refit", newFence.toString)
-      poisonOnFailure(finishRefit(newFence))
+        .write.mode("overwrite").parquet(s"$path/${genDir(g)}/meta")
+      commit(m, g)(_.withBases(genDir(g), Seq("stats", "meta"))
+        .withInt("stats_fence", newFence))
       if (logr.isInfoEnabled) logr.info(
         s"stored postings '$path' stats refit: folded drift through " +
           s"seq $newFence ($nMoved terms, $dN docs)")
@@ -406,22 +345,20 @@ final class PostingsStore(
     } finally tombs.unpersist(false)
   }
 
-  /** Fold the logs into the base tables through the crash-safe
-    * temp-dir + pre-commit-marker commit — stats first
-    * ([[mergeRefit]]; the row fold physically applies the tombstones
-    * and drops the logs the stats fold reads), so a compacted store's
-    * stats always describe its live corpus. */
+  /** Fold the logs into a new generation of the base tables — stats
+    * first ([[mergeRefit]]; the row fold physically applies the
+    * tombstones and starts a fresh log generation, and the old logs are
+    * what the stats fold reads), so a compacted store's stats always
+    * describe its live corpus. */
   def compactNow(): Unit = {
-    guardPoisoned()
     mergeRefit()
-    val vis = visibility()
-    live("tfs", vis).localCheckpoint().write.mode("overwrite")
-      .parquet(s"$path/$CompactTmpDir/tfs")
-    live("doclens", vis).localCheckpoint().write.mode("overwrite")
-      .parquet(s"$path/$CompactTmpDir/doclens")
-    commitCompaction(batches, Seq(
-      s"$CompactTmpDir/tfs" -> "tfs",
-      s"$CompactTmpDir/doclens" -> "doclens"))
+    val m = manifest()
+    val g = newGeneration()
+    live("tfs", m).localCheckpoint().write.mode("overwrite")
+      .parquet(s"$path/${genDir(g)}/tfs")
+    live("doclens", m).localCheckpoint().write.mode("overwrite")
+      .parquet(s"$path/${genDir(g)}/doclens")
+    commitFold(m, g, Seq("tfs", "doclens"), batches)
     if (logr.isInfoEnabled) logr.info(
       s"stored postings '$path' compacted after $batches batches")
   }
@@ -468,7 +405,8 @@ object PostingsStore {
     * tokens, and exact past it. */
   /** Open a NEW store at `toPath` whose base tables are a FILE-level
     * copy of the store at `fromPath` (the four base subdirs —
-    * tfs/doclens/stats/meta; LSM logs are NOT copied, the clone starts
+    * tfs/doclens/stats/meta, wherever the source's manifest names them;
+    * LSM logs are NOT copied, the clone starts
     * with a clean history). The sharing primitive for derived stores:
     * a drifted/refit twin over the same corpus skips the
     * tokenize + tf/df aggregation build entirely (two corpus shuffles
@@ -487,8 +425,9 @@ object PostingsStore {
     val fs = from.getFileSystem(conf)
     fs.delete(to, true)
     fs.mkdirs(to)
+    val at = graft.ann.LsmStore.baseDir(spark, fromPath)
     Seq("tfs", "doclens", "stats", "meta").foreach { sub =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(from, sub),
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(at(sub)),
         fs, new Path(to, sub), false, conf)
     }
     new PostingsStore(spark, toPath, compactEvery, k1, b, oovWatermark)

@@ -39,7 +39,7 @@ import graft.text.DedupGate
   * every store sees exactly the same admitted set (the gate's decision
   * is materialized once and shared — a store can never ingest a doc
   * another store rejected), and each store's batch is individually
-  * atomic (the LSM batch-commit record). Cross-store atomicity is BY
+  * atomic (one LSM manifest publish). Cross-store atomicity is BY
   * REPLAY, not by transaction: the store legs run concurrently, so a
   * crash mid-batch leaves an ARBITRARY SUBSET of the legs committed
   * (any k of the n stores, not a prefix); the stream checkpoint

@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   * LSM legs (the [[graft.ann.LsmStore]] protocol, kill rule and
   * cadence): admitted band rows land seq-stamped in `bands_delta`;
   * deletes append to the `tombstones` log (a deleted doc stops
-  * blocking future arrivals); a batch-commit record makes each batch
-  * atomic; every `compactEvery` batches the serving view folds into
-  * `$path/bands` through the crash-safe commit.
+  * blocking future arrivals); one manifest publish makes each batch
+  * atomic; every `compactEvery` batches the serving view folds into a
+  * new generation of the `bands` table.
   *
   * Scale shape: gating cost is per-BATCH — arrivals band map-side and
   * broadcast into the stored band table (never shuffling it), the
@@ -56,9 +56,10 @@ final class DedupGate(
   override protected def lsmSpark: SparkSession = spark
   override protected def lsmPath: String = path
   override protected def lsmLogDirs: Seq[String] =
-    Seq("bands_delta", "tombstones", "batch_commits")
+    Seq("bands_delta", "tombstones")
 
-  private def base: DataFrame = readBase("bands")
+  private def base(m: graft.ann.LsmStore.Manifest): DataFrame =
+    readBase(m, "bands")
 
   /** The frozen hot-shingle row the gate bands arrivals with. When
     * capping is on (`cfg.maxDocFreqRatio < 1`) and no `hot` frame was
@@ -98,8 +99,10 @@ final class DedupGate(
 
   /** The serving band index: the shared live view
     * ([[graft.ann.LsmStore.liveViews]]) keyed on doc_id. */
-  def servingBands: DataFrame =
-    liveViews("doc_id")(base -> "bands_delta").head
+  def servingBands: DataFrame = servingBands(manifest())
+
+  private def servingBands(m: graft.ann.LsmStore.Manifest): DataFrame =
+    liveViews(m, "doc_id")(base(m) -> "bands_delta").head
 
   /** One gated maintenance step. `arrivals` rows carry (`idCol`,
     * `textCol`, …) — extra columns ride through to `admitted`
@@ -115,13 +118,13 @@ final class DedupGate(
     * regardless and the label stays the component min). */
   def onBatch(arrivals: DataFrame,
               deletes: Option[DataFrame] = None): DedupGate.Result = {
-    guardPoisoned()
     val seq = batches + 1
     // the seq is BURNED up front (LsmStore doc): a failed attempt's
     // partial log rows stay at a seq no retry reuses
     batches = seq
-    val serving = deletes.fold(servingBands)(d =>
-      servingBands.join(
+    val m = manifestFor(seq)
+    val serving = deletes.fold(servingBands(m))(d =>
+      servingBands(m).join(
         broadcast(d.select(col(idCol).as("doc_id"))),
         Seq("doc_id"), "left_anti"))
     // the banding pass is shared: the same persisted arrival band rows
@@ -150,36 +153,38 @@ final class DedupGate(
         .dropDuplicates("doc_id")
         .localCheckpoint()
       deletes.foreach(d => logRows(d.select(col(idCol).as("doc_id")),
-          Seq(base.schema("doc_id")), seq)
-        .write.mode("append").parquet(s"$path/tombstones"))
+          Seq(base(m).schema("doc_id")), seq)
+        .write.mode("append").parquet(m.log("tombstones")))
       // admitted docs' band rows = the gating pass's own rows, filtered —
       // no second shingling/banding of the batch
       logRows(aBands.join(broadcast(rej.select(col("doc_id"))),
-          Seq("doc_id"), "left_anti"), base.schema, seq)
-        .write.mode("append").parquet(s"$path/bands_delta")
+          Seq("doc_id"), "left_anti"), base(m).schema, seq)
+        .write.mode("append").parquet(m.log("bands_delta"))
       rej
     } finally aBands.unpersist(false)
     val admitted = arrivals.join(
       broadcast(rejected.select(col("doc_id").as(idCol))),
       Seq(idCol), "left_anti")
     // the batch becomes visible ATOMICALLY here (LsmStore doc): a crash
-    // above leaves a partial batch that the visibility rule ignores
-    markBatchCommitted(seq)
+    // above leaves a partial batch no manifest names
+    commit(m)(_.committed(seq))
     if (compactionDueAt(batches, compactEvery)) compactNow()
     DedupGate.Result(admitted, rejected)
   }
 
-  /** Fold the logs into `$path/bands` through the crash-safe commit
-    * ([[graft.ann.LsmStore.commitCompaction]]). */
+  /** Fold the logs into a new generation of the `bands` table
+    * ([[graft.ann.LsmStore.commitFold]]). */
   def compactNow(): Unit = {
+    val m = manifest()
     // dropDuplicates: a replayed batch (at-least-once delivery)
     // re-appends its admitted band rows at a fresh seq — identical
     // (doc_id, band, bkey) triples that pair generation already
     // dedups; the fold is where they physically collapse
-    val live = servingBands.dropDuplicates("doc_id", "band", "bkey")
+    val live = servingBands(m).dropDuplicates("doc_id", "band", "bkey")
       .localCheckpoint()
-    live.write.mode("overwrite").parquet(s"$path/$CompactTmpDir/bands")
-    commitCompaction(batches, Seq(s"$CompactTmpDir/bands" -> "bands"))
+    val g = newGeneration()
+    live.write.mode("overwrite").parquet(s"$path/${genDir(g)}/bands")
+    commitFold(m, g, Seq("bands"), batches)
     if (log.isInfoEnabled) log.info(
       s"dedup gate '$path' compacted after $batches batches")
   }

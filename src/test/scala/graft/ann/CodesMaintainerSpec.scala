@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpecBase
+import graft.{LsmTestKit, SparkSpecBase}
 import graft.ann.ivfsq.{IvfSq, IvfSqConfig}
 import graft.ann.sq.Sq
 
@@ -68,18 +68,24 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
     assert(m2.batchesSeen === 2, s"seq not recovered: ${m2.batchesSeen}")
     assert(m2.compactionDue)
 
-    // batch 3 (empty) triggers compaction: base == view, logs gone,
-    // and the fence keeps the lifetime counter across reconstruction
+    // batch 3 (empty) triggers compaction: base == view, the view reads
+    // a fresh log generation, and the fence keeps the lifetime counter
+    // across reconstruction
     m2.onBatch(None, None)
     val reloaded = Sq.load(spark, path)
     assert(rows(reloaded.codes) === rows(chain.codes),
       "compacted base != lifecycle chain")
-    assert(!new java.io.File(s"$path/codes_delta").exists() &&
-      !new java.io.File(s"$path/tombstones").exists(),
-      "logs survived compaction")
+    val folded = LsmTestKit.manifest(spark, path)
+    assert(folded.bare && folded.logs != "." && folded.fence === 3,
+      s"compaction did not start a fresh log generation: $folded")
     assert(new CodesMaintainer(spark, path, enc, compactEvery = 3)
       .batchesSeen === 3,
       "compaction fence lost the lifetime batch counter")
+    // the superseded base and logs go at the next commit
+    m2.onBatch(None, None)
+    Seq("codes", "codes_delta", "tombstones").foreach(d =>
+      assert(!LsmTestKit.exists(s"$path/$d"), s"superseded $d kept"))
+    assert(rows(Sq.load(spark, path).codes) === rows(chain.codes))
   }
 
   test("compaction fence makes logs surviving a post-fence crash harmless") {
@@ -97,31 +103,20 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
       .append(arrivals).codes)
     assert(rows(m.liveCodes) === expected)
 
-    // snapshot the logs, compact, then restore them — simulating a
-    // crash AFTER the fence write but BEFORE the log deletion (the
-    // LsmStore crash window the fence exists for)
-    def cp(from: String, to: String): Unit = {
-      val src = java.nio.file.Paths.get(from)
-      val dst = java.nio.file.Paths.get(to)
-      java.nio.file.Files.walk(src).forEach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    val stash = java.nio.file.Files
-      .createTempDirectory("codes_lsm_stash").toString
-    cp(s"$path/codes_delta", s"$stash/codes_delta")
-    cp(s"$path/tombstones", s"$stash/tombstones")
+    // compact, then copy the folded batch's log rows (seq 1, at the
+    // fence) into the NEW log generation too — the worst a crash around
+    // the publish could leave: the old generation's logs survive until
+    // retention, and stale rows sit beside the fresh generation's
     m.compactNow()
-    cp(s"$stash/codes_delta", s"$path/codes_delta")
-    cp(s"$stash/tombstones", s"$path/tombstones")
+    val gen = LsmTestKit.manifest(spark, path)
+    assert(LsmTestKit.exists(s"$path/codes_delta"),
+      "the superseded logs must survive one commit (a view may read them)")
+    LsmTestKit.cp(s"$path/codes_delta", gen.log("codes_delta"))
+    LsmTestKit.cp(s"$path/tombstones", gen.log("tombstones"))
 
-    // the restored (stale) log rows are fenced off: no duplicates, no
-    // resurrected tombstone kills — live view and a reconstructed
-    // maintainer's view both equal the folded truth
+    // the stale log rows are fenced off: no duplicates, no resurrected
+    // tombstone kills — live view and a reconstructed maintainer's view
+    // both equal the folded truth
     assert(rows(m.liveCodes) === expected,
       "stale logs after the fence polluted the live view")
     val m2 = new CodesMaintainer(spark, path, enc, compactEvery = 100)
@@ -141,63 +136,49 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
       .createTempDirectory("codes_lsm_heal").toString + "/idx"
     idx.save(spark, path)
     def enc(df: DataFrame) = idx.model.transformDf(df, "vec_id", "embedding")
-    def writeMarker(seq: Int): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$path/_lsm_precommit"),
-        s"$seq\n_compact_tmp/codes>codes".getBytes("UTF-8"))
     def noDups(df: DataFrame): Unit =
       assert(df.groupBy("vec_id").count().where($"count" > 1).count() === 0)
 
-    // ---- window A: folded base written + marker published, CRASH
-    // before any rename/fence/log-drop (the round-11 "residual window":
-    // unfenced logs would duplicate folded rows) ----
+    // ---- window A: the folded base written to its generation, CRASH
+    // before the manifest is published ----
     val m = new CodesMaintainer(spark, path, enc, compactEvery = 100)
     val arrivals = mkCorpus(40, seed = 29).where($"vec_id" >= 30L)
     m.onBatch(Some(arrivals), Some(Seq(3L).toDF("vec_id")))
     val expected = rows(idx.withDeletes(Seq(3L).toDF("vec_id"))
       .append(arrivals).codes)
+    val orphan = s"$path/gen-${LsmTestKit.nextNumber(path)}"
     m.liveCodes.localCheckpoint()
-      .write.mode("overwrite").parquet(s"$path/_compact_tmp/codes")
-    writeMarker(1)
-    // crash here. A reopened maintainer must FINISH the commit:
+      .write.mode("overwrite").parquet(s"$orphan/codes")
+    // crash here. A reopened maintainer serves the published snapshot
+    // (old base + logs), never the unpublished generation:
     val m2 = new CodesMaintainer(spark, path, enc, compactEvery = 100)
-    assert(!new java.io.File(s"$path/_lsm_precommit").exists(), "marker kept")
-    assert(!new java.io.File(s"$path/codes_delta").exists() &&
-      !new java.io.File(s"$path/tombstones").exists(), "logs survived heal")
     assert(rows(m2.liveCodes) === expected, "healed view wrong")
-    assert(rows(Sq.load(spark, path).codes) === expected, "healed base wrong")
+    assert(rows(Sq.load(spark, path).codes) === rows(idx.codes),
+      "an unpublished generation was served at rest")
     noDups(m2.liveCodes)
     assert(m2.batchesSeen === 1, s"seq: ${m2.batchesSeen}")
 
-    // ---- window B: base swapped into place, CRASH before the fence
-    // write (logs + marker still present, fence stale) ----
+    // ---- window B: the next commit (a batch) deletes the orphan; a
+    // compaction publishes, CRASH before retention (the superseded
+    // base and logs are still on disk) ----
     val arrivals2 = mkCorpus(50, seed = 31).where($"vec_id" >= 40L)
     m2.onBatch(Some(arrivals2), Some(Seq(5L).toDF("vec_id")))
+    assert(!LsmTestKit.exists(orphan), "orphan generation kept")
     val expected2 = rows(idx.withDeletes(Seq(3L).toDF("vec_id"))
       .append(arrivals).withDeletes(Seq(5L).toDF("vec_id"))
       .append(arrivals2).codes)
-    val folded2 = m2.liveCodes.localCheckpoint()
-    folded2.write.mode("overwrite").parquet(s"$path/_compact_tmp/codes")
-    writeMarker(2)
-    // manual rename (the commit's first destructive step), then crash
-    def del(p: String): Unit = {
-      val f = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(f))
-        java.nio.file.Files.walk(f)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(x => java.nio.file.Files.delete(x))
-    }
-    del(s"$path/codes")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$path/_compact_tmp/codes"),
-      java.nio.file.Paths.get(s"$path/codes"))
-    // crash here: fence still 1, logs still present, marker present
+    m2.compactNow()
+    assert(LsmTestKit.exists(s"$path/codes_delta"))
     val m3 = new CodesMaintainer(spark, path, enc, compactEvery = 100)
     assert(rows(m3.liveCodes) === expected2, "window-B healed view wrong")
+    assert(rows(Sq.load(spark, path).codes) === expected2)
     noDups(m3.liveCodes)
     assert(m3.batchesSeen === 2, s"seq: ${m3.batchesSeen}")
-    assert(!new java.io.File(s"$path/_lsm_precommit").exists())
-    assert(!new java.io.File(s"$path/codes_delta").exists())
+    // the next commit finishes the retention
+    m3.onBatch(None, None)
+    assert(!LsmTestKit.exists(s"$path/codes_delta") &&
+      !LsmTestKit.exists(s"$path/codes"))
+    assert(rows(m3.liveCodes) === expected2)
   }
 
   test("a partial batch (no commit record) is invisible; a retry lands at a fresh seq") {
@@ -242,7 +223,7 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
     assert(rows(Sq.load(spark, path).codes) === expected)
   }
 
-  test("a 0-byte or garbled pre-commit marker aborts the commit instead of bricking construction") {
+  test("a 0-byte or truncated newest manifest is skipped; the next commit deletes it") {
     val corpus = mkCorpus(30)
     val idx = Sq.train(corpus, "vec_id", "embedding")
     val path = java.nio.file.Files
@@ -254,30 +235,29 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
     m.onBatch(Some(arrivals), Some(Seq(3L).toDF("vec_id")))
     val expected = rows(m.liveCodes)
 
-    // the FS anomaly recoverSwap tolerates: the marker's rename target
-    // exists but the content never synced (0 bytes) — pre-content crash,
-    // so nothing destructive ran; base + logs are fully intact
-    m.liveCodes.localCheckpoint()
-      .write.mode("overwrite").parquet(s"$path/_compact_tmp/codes")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/_lsm_precommit"), Array.empty[Byte])
+    // a publish that crashed: the newest manifest is 0 bytes (an FS
+    // that creates the file before the content syncs) ...
+    val empty = s"$path/_lsm/${LsmTestKit.nextNumber(path)}"
+    LsmTestKit.write(empty, "")
     val m2 = new CodesMaintainer(spark, path, enc, compactEvery = 100)
-    assert(!new java.io.File(s"$path/_lsm_precommit").exists(),
-      "garbled marker kept — would re-log the abort on every open")
-    assert(!new java.io.File(s"$path/_compact_tmp").exists(),
-      "orphan temp dir kept after the aborted commit")
-    assert(new java.io.File(s"$path/codes_delta").exists(),
-      "logs destroyed by an aborted (never-started) commit")
-    assert(rows(m2.liveCodes) === expected, "aborted-commit view wrong")
+    assert(rows(m2.liveCodes) === expected, "0-byte manifest view wrong")
     assert(m2.batchesSeen === 1, s"seq: ${m2.batchesSeen}")
-
-    // garbled rename line (valid seq, no '>') takes the same abort path
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/_lsm_precommit"),
-      "1\n_compact_tmp/codescodes".getBytes("UTF-8"))
+    // ... or truncated before its closing line (it names a generation
+    // that does not exist)
+    val good = LsmTestKit.manifest(spark, path)
+    val truncated = s"$path/_lsm/${LsmTestKit.nextNumber(path)}"
+    LsmTestKit.write(truncated, good.copy(bases = good.bases +
+      ("codes" -> "gen-99/codes")).body.stripSuffix("end\n"))
     val m3 = new CodesMaintainer(spark, path, enc, compactEvery = 100)
-    assert(!new java.io.File(s"$path/_lsm_precommit").exists())
-    assert(rows(m3.liveCodes) === expected)
+    assert(rows(m3.liveCodes) === expected, "truncated manifest view wrong")
+    assert(rows(Sq.load(spark, path).codes) === rows(idx.codes))
+    // the next commit publishes above both and deletes them
+    val up = mkCorpus(42, seed = 31).where($"vec_id" >= 40L)
+    m3.onBatch(Some(up), None)
+    assert(!LsmTestKit.exists(empty) && !LsmTestKit.exists(truncated),
+      "unreadable manifests kept")
+    assert(rows(m3.liveCodes) === rows(idx
+      .withDeletes(Seq(3L).toDF("vec_id")).append(arrivals).append(up).codes))
   }
 
   test("legacy store (no commit log) backfills at construction; rows stay visible") {
@@ -287,34 +267,30 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
       .createTempDirectory("codes_lsm_legacy").toString + "/idx"
     idx.save(spark, path)
     def enc(df: DataFrame) = idx.model.transformDf(df, "vec_id", "embedding")
-    val m = new CodesMaintainer(spark, path, enc, compactEvery = 100)
+    // a store written BEFORE commit records: root logs in onBatch's
+    // format, committed by the old single-write contract, no commit log
+    // and no manifest
     val arrivals = mkCorpus(40, seed = 29).where($"vec_id" >= 30L)
-    m.onBatch(Some(arrivals), Some(Seq(3L).toDF("vec_id")))
-    val expected = rows(m.liveCodes)
-    // simulate a store written BEFORE the commit-record format: the
-    // commit log does not exist, but its delta/tombstone rows were
-    // committed by the old single-write contract
-    def del(p: String): Unit = {
-      val f = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(f))
-        java.nio.file.Files.walk(f)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(x => java.nio.file.Files.delete(x))
-    }
-    del(s"$path/batch_commits")
-    // a reconstructed maintainer BACKFILLS records for the legacy seqs
-    // instead of silently dropping the rows when the filter activates
+    enc(arrivals).withColumn("seq", lit(1))
+      .write.mode("append").parquet(s"$path/codes_delta")
+    Seq((3L, 1)).toDF("vec_id", "seq")
+      .write.mode("append").parquet(s"$path/tombstones")
+    val expected = rows(idx.withDeletes(Seq(3L).toDF("vec_id"))
+      .append(arrivals).codes)
+    // construction converts it: every log seq is taken as committed
     val m2 = new CodesMaintainer(spark, path, enc, compactEvery = 100)
     assert(rows(m2.liveCodes) === expected,
       "legacy rows vanished when the commit filter activated")
-    // and a new committed batch coexists with the backfilled ones
+    assert(m2.batchesSeen === 1)
+    assert(LsmTestKit.manifest(spark, path).commits === Seq(1))
+    // and a new committed batch coexists with the converted ones
     val up = mkCorpus(42, seed = 31).where($"vec_id" >= 40L)
     m2.onBatch(Some(up), None)
     assert(rows(m2.liveCodes) === rows(idx
       .withDeletes(Seq(3L).toDF("vec_id")).append(arrivals).append(up).codes))
   }
 
-  test("LSH store heal finishes a partial multi-dir rename") {
+  test("LSH store: a compaction that crashed before publishing is never served; the next commit deletes it") {
     val corpus = mkCorpus(30)
     val idx = graft.ann.lsh.Lsh.train(corpus, "vec_id", "embedding",
       graft.ann.lsh.LshConfig(nTrees = 2, kMinVecs = 16, seed = 3L))
@@ -327,28 +303,14 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
     val expected = m.index.vectors.collect()
       .map(r => r.getAs[Long]("vec_id")).sorted.toSeq
 
-    // folded store written to the temp dir, marker published, then ONE
-    // of the three renames done before the crash
+    // the folded store written to its generation, but only two of the
+    // three dirs before the crash, and no manifest
+    val gen = s"$path/gen-${LsmTestKit.nextNumber(path)}"
     val live = m.index
     new graft.ann.lsh.LshIndex(live.model,
       live.vectors.localCheckpoint(), live.buckets.localCheckpoint())
-      .save(spark, s"$path/_compact_tmp")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/_lsm_precommit"),
-      ("1\n_compact_tmp/model>model\n_compact_tmp/vectors>vectors\n" +
-        "_compact_tmp/buckets>buckets").getBytes("UTF-8"))
-    def del(p: String): Unit = {
-      val f = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(f))
-        java.nio.file.Files.walk(f)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(x => java.nio.file.Files.delete(x))
-    }
-    del(s"$path/model")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$path/_compact_tmp/model"),
-      java.nio.file.Paths.get(s"$path/model"))
-    // crash here: vectors/buckets still old, logs present, no fence
+      .save(spark, gen)
+    LsmTestKit.rm(s"$gen/buckets")
     val m2 = new graft.ann.lsh.LshMaintainer(spark, path, compactEvery = 100)
     val healed = m2.index
     assert(healed.vectors.collect().map(_.getAs[Long]("vec_id")).sorted.toSeq
@@ -356,8 +318,13 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
     assert(healed.vectors.groupBy("vec_id").count()
       .where($"count" > 1).count() === 0, "duplicates after heal")
     assert(m2.batchesSeen === 1)
-    assert(!new java.io.File(s"$path/_lsm_precommit").exists())
-    assert(!new java.io.File(s"$path/vectors_delta").exists())
+    assert(graft.ann.lsh.Lsh.load(spark, path).vectors.count() === 30,
+      "the partial generation was served at rest")
+    m2.onBatch(None, None)
+    assert(!LsmTestKit.exists(gen), "partial generation kept")
+    m2.compactNow()
+    assert(graft.ann.lsh.Lsh.load(spark, path).vectors.collect()
+      .map(_.getAs[Long]("vec_id")).sorted.toSeq === expected)
   }
 
   test("OPQ codes LSM: frozen rotation+codebooks encode deltas; compaction reloads") {
@@ -418,7 +385,8 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
 
     // batch 2 triggers compaction; layout and rows preserved
     m.onBatch(None, None)
-    val baseDirs = new java.io.File(s"$path/codes").listFiles()
+    val baseDirs = new java.io.File(LsmTestKit.manifest(spark, path)
+        .base("codes")).listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(baseDirs.exists(_.startsWith("cell=")),
       s"compacted base lost cell partitioning: ${baseDirs.toSeq}")

@@ -237,9 +237,19 @@ class GraphDeleteSpec extends AnyFunSuite with SparkSpecBase {
       s"swap not finished: $edges")
     assert(!spark.catalog.tableExists("gswap_spec_swap_edges"))
     assert(!new java.io.File(s"$lsmPath/_graph_swap").exists())
-    assert(!new java.io.File(s"$lsmPath/tombstones").exists(),
-      "logs survived the finished commit")
+    val folded = graft.LsmTestKit.manifest(spark, lsmPath)
+    assert(folded.fence === 1 && folded.int("scope_fence") === 1 &&
+      folded.bare && folded.logs != ".",
+      s"the finished commit did not publish the fold: $folded")
     assert(m2.tombstones.isEmpty)
     assert(m2.batchesSeen === 1) // the fence carries the seq
+    // the superseded logs go at the next commit
+    val arr2 = Seq((21L, pt(0.3))).toDF("vec_id", "embedding")
+    m2.onBatch(all.unionByName(arr).unionByName(arr2), arr2,
+      arr2.select($"vec_id".as("query_id"))
+        .crossJoin((0L until 4L).toDF("node")))
+    assert(!new java.io.File(s"$lsmPath/tombstones").exists() &&
+      !new java.io.File(s"$lsmPath/arrivals").exists(),
+      "logs survived the commit after the finished one")
   }
 }

@@ -36,11 +36,11 @@ class GraphMaintenanceSpec extends AnyFunSuite with SparkSpecBase {
       refineEvery = 100)
     assert(m2.tombstones.as[Long].collect().sorted.toSeq === Seq(3L, 9L))
     // revival: a committed arrival of id 3 at seq 1 kills the seq-0
-    // tombstone (write the logs in onBatch's format — no graph needed)
+    // tombstone (write the log in onBatch's format and publish its
+    // commit — no graph needed)
     Seq((3L, 1)).toDF("vec_id", "seq")
       .write.mode("append").parquet(s"$path/arrivals")
-    Seq(Tuple1(1)).toDF("seq")
-      .write.mode("append").parquet(s"$path/batch_commits")
+    graft.LsmTestKit.publish(spark, path)(_.committed(1))
     assert(m2.tombstones.as[Long].collect().toSeq === Seq(9L),
       "re-inserted id stayed tombstoned (old delete beat new insert)")
   }

@@ -12,8 +12,8 @@ import graft.SparkSpecBase
   *   - **fold == served-view identity**: after a fold the served view is
   *     EXACTLY the pre-fold view minus rows touching an active
   *     tombstone (their physical delete), now read straight off the
-  *     rewritten base with every log dropped — no re-symmetrization, no
-  *     invented edges;
+  *     rewritten base with a fresh log generation — no
+  *     re-symmetrization, no invented edges;
   *   - a reconstructed maintainer agrees (fence persistent, seq
   *     continues) and its tombstone view is empty;
   *   - the SCHEDULED fold fires from [[GraphMaintainer.onBatch]] every
@@ -107,8 +107,10 @@ class GraphScopedFoldSpec extends AnyFunSuite with SparkSpecBase {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(lsm).toUri,
       spark.sparkContext.hadoopConfiguration)
+    // the fold's manifest serves a fresh log generation
+    val folded = graft.LsmTestKit.manifest(spark, lsm)
     Seq("edges_delta", "superseded", "tombstones", "arrivals").foreach {
-      sub => assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$lsm/$sub")),
+      sub => assert(!fs.exists(new org.apache.hadoop.fs.Path(folded.log(sub))),
         s"log dir $sub survived the fold")
     }
     // (d) restart: fence persistent, view identical, seq continues
@@ -145,8 +147,9 @@ class GraphScopedFoldSpec extends AnyFunSuite with SparkSpecBase {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(lsm).toUri,
       spark.sparkContext.hadoopConfiguration)
-    def hasDelta = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$lsm/edges_delta"))
+    // the served snapshot's delta log
+    def hasDelta = fs.exists(new org.apache.hadoop.fs.Path(
+      graft.LsmTestKit.manifest(spark, lsm).log("edges_delta")))
     var folded = false
     arriving.grouped(6).zipWithIndex.foreach { case (split, i) =>
       val batchDf = split.toDF("vec_id", "embedding")
@@ -205,7 +208,8 @@ class GraphScopedFoldSpec extends AnyFunSuite with SparkSpecBase {
       m.onBatch(all, batchDf, entriesFor(split.map(_._1)))
       if (due) {
         folds += 1
-        assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$lsm/edges_delta")),
+        assert(!fs.exists(new org.apache.hadoop.fs.Path(
+            graft.LsmTestKit.manifest(spark, lsm).log("edges_delta"))),
           s"batch $i: foldDue but logs survived (fold quantized to " +
             "the refine cadence)")
         // the early refine consolidated + the fold applied: arrivals

@@ -15,11 +15,11 @@ import graft.ann.sq.Sq
   *   - `refitDue` fires only on SUSTAINED drift — `refitAfterBreaches`
   *     CONSECUTIVE drifted batches; one clean batch resets the run
   *     (the DriftCheck small-batch noise caveat as scheduling);
-  *   - the breach run is PERSISTENT (`_drift_breaches` marker): a
+  *   - the breach run is PERSISTENT (the manifest's `drift_breaches`): a
   *     reconstructed maintainer agrees, like `compactionDue`;
   *   - [[CodesMaintainer.refitAndSwap]] retrains atomically: codes +
-  *     model dirs land in the compaction temp dir and commit through
-  *     the one crash-safe marker protocol, the serving view lands
+  *     model dirs land in a new generation and commit through one
+  *     manifest publish, the serving view lands
   *     EXACTLY where a fresh build over the live corpus lands (SQ's
   *     deterministic fit makes that row-identity, not approximation),
   *     later batches encode through the NEW model, and the breach run
@@ -97,8 +97,9 @@ class MaintainerRefitLoopSpec extends AnyFunSuite with SparkSpecBase {
       "refit model/codes dirs not swapped on disk")
     assert(!m.refitDue && m.driftBreaches === 0,
       "refit must reset the breach run")
-    assert(!new java.io.File(s"$dir/idx/codes_delta").exists(),
-      "refit commit must drop the logs")
+    val refit = graft.LsmTestKit.manifest(spark, s"$dir/idx")
+    assert(refit.bare && refit.logs != ".",
+      "refit commit must start a fresh log generation")
 
     // 6. later batches encode through the NEW model. The batch is
     // drawn from the refit corpus's MIXTURE (the refreshed stats
@@ -111,6 +112,9 @@ class MaintainerRefitLoopSpec extends AnyFunSuite with SparkSpecBase {
     val lateGot = rows(m.liveCodes.join(late.select("vec_id"),
       Seq("vec_id"), "left_semi"))
     assert(lateGot === lateWant, "post-refit batch used the stale model")
+    // the commit after the refit drops the superseded logs and model
+    Seq("codes_delta", "codes", "bounds").foreach(d =>
+      assert(!graft.LsmTestKit.exists(s"$dir/idx/$d"), s"superseded $d kept"))
     // in-distribution vs the refreshed stats: the run stays clean
     assert(m.driftBreaches === 0,
       "post-refit in-distribution batch extended the breach run")

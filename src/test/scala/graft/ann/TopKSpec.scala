@@ -59,6 +59,19 @@ class TopKSpec extends AnyFunSuite with SparkSpecBase {
     assert(got === Seq((1L, 1.0), (2L, 2.0)))
   }
 
+  test("a NaN distance is not a neighbour: it never ranks first") {
+    // NaN is unordered under < and ==, so once buffered it would stay
+    // at the head of the sorted buffer
+    val corpus = Seq(
+      (1L, Seq(Double.NaN, 0.0)), (2L, Seq(1.0, 0.0)), (3L, Seq(2.0, 0.0)),
+      (4L, Seq(0.5, 0.0)), (5L, Seq(3.0, 0.0))).toDF("vec_id", "embedding")
+    val q = Seq((0L, Seq(0.0, 0.0))).toDF("query_id", "qv")
+    val got = ExactNN.topK(q, corpus, k = 2, ExactNN.L2)
+      .orderBy("dist", "vec_id").collect()
+      .map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    assert(got === Seq((4L, 0.5), (2L, 1.0)))
+  }
+
   test("a NULL vec_id is not a neighbour: it never reads as id 0") {
     val corpus = Seq[(java.lang.Long, Seq[Double])](
       (null, Seq(0.1, 0.0)), (5L, Seq(1.0, 0.0)), (6L, Seq(2.0, 0.0)))

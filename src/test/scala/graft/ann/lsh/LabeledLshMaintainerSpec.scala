@@ -107,8 +107,12 @@ class LabeledLshMaintainerSpec extends AnyFunSuite with SparkSpecBase {
     assert(exact.nonEmpty)
     assert(served(m.index, queries) === gtTop,
       "post-compaction view != exact per label")
-    assert(!new java.io.File(s"$path/tombstones").exists(),
+    assert(graft.LsmTestKit.manifest(spark, path).logs != ".",
       "logs survived compaction")
+    // the superseded logs go at the next commit
+    m.onBatch(None, None)
+    assert(!new java.io.File(s"$path/tombstones").exists(),
+      "logs survived the commit after the compaction")
   }
 
   test("sidecar staleness boundary == compaction cadence; restart recovers seq") {
@@ -169,7 +173,7 @@ class LabeledLshMaintainerSpec extends AnyFunSuite with SparkSpecBase {
         .select($"vec_id", $"embedding", labelOf.as("label"))),
       Some(Seq(5L, 12L).toDF("vec_id")))
     m.refitNow(cfg)
-    assert(!new java.io.File(s"$path/tombstones").exists(),
+    assert(graft.LsmTestKit.manifest(spark, path).logs != ".",
       "logs survived refit")
     val queries = emb.where($"vec_id" < 6)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"),
@@ -184,5 +188,9 @@ class LabeledLshMaintainerSpec extends AnyFunSuite with SparkSpecBase {
       .as[(Long, Long, Double)].collect().toSet
     assert(served(m.index, queries) === gtTop,
       "refit store != exact per label")
+    // the superseded logs go at the next commit
+    m.onBatch(None, None)
+    assert(!new java.io.File(s"$path/tombstones").exists(),
+      "logs survived the commit after the refit")
   }
 }

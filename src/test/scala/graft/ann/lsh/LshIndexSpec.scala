@@ -177,6 +177,18 @@ class LshIndexSpec extends AnyFunSuite with SparkSpecBase {
     assert(e2.getMessage.contains("null"))
   }
 
+  test("a NaN or infinite fit sample fails the fit with a named error") {
+    val cfg = LshConfig(nTrees = 3, kMinVecs = 1, seed = 5L)
+    val finite = (1 to 6).map(i => (i.toLong, Seq(i.toFloat, -i.toFloat)))
+    Seq(Float.NaN, Float.PositiveInfinity).foreach { bad =>
+      val df = (finite :+ ((7L, Seq(bad, 1.0f)))).toDF("vec_id", "embedding")
+      val e = intercept[IllegalArgumentException] {
+        Lsh.fit(df, "embedding", cfg)
+      }
+      assert(e.getMessage.contains("not finite"), s"$bad: ${e.getMessage}")
+    }
+  }
+
   test("bucket rows: nTrees entries per vector, stats are consistent") {
     val cfg = LshConfig(nTrees = 7, kMinVecs = 2, seed = 3L)
     val idx = Lsh.train(miniDf, "vec_id", "embedding", cfg)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpecBase
+import graft.{LsmTestKit, SparkSpecBase}
 import graft.retrieval.PostingsStore
 import graft.text.TextFunctions
 
@@ -16,8 +16,9 @@ import graft.text.TextFunctions
   * upserts follow the LSM seq rules; [[PostingsStore.mergeRefit]]
   * folds drift into the stats in O(drift) and lands EXACTLY where a
   * full rebuild over the drifted corpus lands; compaction (stats fold
-  * + row fold) serves exactly what a fresh build serves; both the
-  * refit and the compaction commits heal crashes at construction. */
+  * + row fold) serves exactly what a fresh build serves; a refit or a
+  * compaction that crashed before publishing its manifest is never
+  * served. */
 class PostingsStoreSpec extends AnyFunSuite with SparkSpecBase {
 
   import spark.implicits._
@@ -122,7 +123,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkSpecBase {
     store.onBatch(Some(Seq((777777L, Seq("vector")))
       .toDF("doc_id", "toks")), None)
     assert(store.batchesSeen === 3)
-    assert(!new java.io.File(s"$path/tfs_delta").exists(),
+    assert(LsmTestKit.manifest(spark, path).fence === 3,
       "burned cadence multiple skipped the compaction cycle")
     assert(store.sparse.where($"doc_id" === 777777L).count() === 1,
       "retry double-served the doc")
@@ -160,14 +161,14 @@ class PostingsStoreSpec extends AnyFunSuite with SparkSpecBase {
       .select("term").as[String].collect().toSet
     assert(doc3Terms === Set("vector", "query"), s"upsert lost: $doc3Terms")
 
-    // batch 3 triggers compaction (crash-safe commit): logs gone, the
-    // stats fold ran first (compaction == mergeRefit + row fold), so
-    // the compacted store serves EXACTLY what a fresh build over the
-    // live corpus serves — the strongest identity on offer — and a
-    // reopened store agrees
+    // batch 3 triggers compaction (one published generation): a fresh
+    // log generation, the stats fold ran first (compaction == mergeRefit
+    // + row fold), so the compacted store serves EXACTLY what a fresh
+    // build over the live corpus serves — the strongest identity on
+    // offer — and a reopened store agrees
     store.onBatch(None, None)
-    assert(!new java.io.File(s"$path/tfs_delta").exists())
-    assert(!new java.io.File(s"$path/tombstones").exists())
+    val folded = LsmTestKit.manifest(spark, path)
+    assert(folded.bare && folded.logs != "." && folded.fence === 3)
     val drifted = d.where(!$"doc_id".isin(1L, 2L, 3L))
       .unionByName(newDoc3)
     val fresh = PostingsStore.build(spark,
@@ -179,6 +180,11 @@ class PostingsStoreSpec extends AnyFunSuite with SparkSpecBase {
       "compacted serving != fresh build over the live corpus (bm25)")
     val reopened = new PostingsStore(spark, path, compactEvery = 3)
     assert(reopened.batchesSeen === 3)
+    assert(rows(reopened.sparse) === rows(fresh.sparse))
+    // the superseded logs go at the next commit
+    reopened.onBatch(None, None)
+    Seq("tfs_delta", "doclens_delta", "tombstones", "tfs").foreach(d =>
+      assert(!LsmTestKit.exists(s"$path/$d"), s"superseded $d kept"))
     assert(rows(reopened.sparse) === rows(fresh.sparse))
   }
 
@@ -273,13 +279,14 @@ class PostingsStoreSpec extends AnyFunSuite with SparkSpecBase {
       "fold after a burned-fence restart != full rebuild")
   }
 
-  test("a crashed refit commit finishes at construction; a garbled marker aborts") {
+  test("a refit that crashed before publishing is not served; a rename-swap refit marker gets a named error") {
     val d = docsOf(sf("sf0.001") + "/documents.parquet")
     val path = java.nio.file.Files
       .createTempDirectory("postings_refit_heal").toString + "/idx"
     val store = PostingsStore.build(spark, path, d)
     store.onBatch(Some(Seq((888801L, Seq("vector", "vector")))
       .toDF("doc_id", "toks")), None)
+    val before = rows(store.sparse)
 
     // what a completed refit WOULD produce, from an identical twin
     val twinPath = java.nio.file.Files
@@ -289,41 +296,46 @@ class PostingsStoreSpec extends AnyFunSuite with SparkSpecBase {
       .toDF("doc_id", "toks")), None)
     twin.mergeRefit()
     val want = rows(twin.sparse)
+    assert(want !== before)
 
-    // crash window: new stats/meta fully written to the temp dir +
-    // marker published, CRASH before any rename — construction must
-    // finish the commit
-    spark.read.parquet(s"$twinPath/stats").write.mode("overwrite")
-      .parquet(s"$path/_refit_tmp/stats")
-    spark.read.parquet(s"$twinPath/meta").write.mode("overwrite")
-      .parquet(s"$path/_refit_tmp/meta")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/_postings_refit"),
-      "1".getBytes("UTF-8"))
-    val healed = new PostingsStore(spark, path, compactEvery = 1000)
-    assert(!new java.io.File(s"$path/_postings_refit").exists(),
-      "refit marker kept after heal")
-    assert(rows(healed.sparse) === want, "healed refit serving wrong")
-    // the healed fence is durable: no drift since seq 1 -> no-op
-    assert(!healed.mergeRefit(), "healed fence lost (refold attempted)")
+    // crash window: new stats/meta fully written to the refit's
+    // generation, CRASH before the manifest is published — the store
+    // serves the pre-refit stats, and the retried refit lands
+    val twinMf = LsmTestKit.manifest(spark, twinPath)
+    val gen = s"$path/gen-${LsmTestKit.nextNumber(path)}"
+    Seq("stats", "meta").foreach(sub =>
+      spark.read.parquet(twinMf.base(sub)).write.mode("overwrite")
+        .parquet(s"$gen/$sub"))
+    val reopened = new PostingsStore(spark, path, compactEvery = 1000)
+    assert(rows(reopened.sparse) === before, "unpublished refit served")
+    assert(reopened.mergeRefit(), "the crashed refit's drift was lost")
+    assert(rows(reopened.sparse) === want, "retried refit serving wrong")
+    // the refit's fence is durable: no drift since seq 1 -> no-op
+    assert(!new PostingsStore(spark, path, compactEvery = 1000).mergeRefit(),
+      "refit fence lost (refold attempted)")
 
-    // garbled marker: pre-content crash, nothing destructive ran —
-    // construction discards it and the store serves the PRE-refit view
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/_postings_refit"),
-      Array.empty[Byte])
-    val ok = new PostingsStore(spark, path, compactEvery = 1000)
-    assert(!new java.io.File(s"$path/_postings_refit").exists())
-    assert(rows(ok.sparse) === want)
+    // a store of the rename-swap format with its refit marker still at
+    // the root stopped mid-commit: opening it here is refused by name
+    val legacy = java.nio.file.Files
+      .createTempDirectory("postings_refit_legacy").toString + "/idx"
+    PostingsStore.build(spark, legacy, d)
+    LsmTestKit.rm(s"$legacy/_lsm")
+    LsmTestKit.write(s"$legacy/_postings_refit", "1")
+    val e = intercept[IllegalStateException](
+      new PostingsStore(spark, legacy, compactEvery = 1000))
+    assert(e.getMessage.contains("_postings_refit") &&
+      e.getMessage.contains("previous build"), e.getMessage)
   }
 
   test("a lost stats fence cannot silently re-inflate folded stats") {
     // insert-only drift is the hole the negative-fold require can't
-    // see: with `_stats_fence` lost after a refit, a fold from 0 would
+    // see: with the stats fence lost after a refit, a fold from 0 would
     // re-count every already-folded arrival as a fresh df/n/tdl
-    // increment — pure inflation, nothing goes negative. Since the
-    // fence is embedded in meta (stats_seq, swapped WITH the stats),
-    // the marker loss must be RECOVERED, not just refused.
+    // increment — pure inflation, nothing goes negative. The fence is
+    // also embedded in meta (stats_seq, published WITH the stats), so a
+    // manifest without it (a store converted from the marker format
+    // whose `_stats_fence` marker was lost) must be RECOVERED, not just
+    // refused.
     val d = docsOf(sf("sf0.001") + "/documents.parquet")
     val path = java.nio.file.Files
       .createTempDirectory("postings_fence_lost").toString + "/idx"
@@ -331,42 +343,36 @@ class PostingsStoreSpec extends AnyFunSuite with SparkSpecBase {
     store.onBatch(Some(Seq((888801L, Seq("vector", "query")))
       .toDF("doc_id", "toks")), None)
     assert(store.mergeRefit()) // arrivals folded; fence -> 1
-    val metaAfter = spark.read.parquet(s"$path/meta").head()
+    val mf = LsmTestKit.manifest(spark, path)
+    val metaAfter = spark.read.parquet(mf.base("meta")).head()
     val nAfter = metaAfter.getAs[Long]("n")
     assert(metaAfter.getAs[Int]("stats_seq") === 1,
       "refit must embed the fence in meta")
-    val statsAfter = rows(spark.read.parquet(s"$path/stats"))
-    // simulate the marker loss: the embedded copy takes over — the
+    assert(mf.int("stats_fence") === 1, "refit must publish the fence")
+    val statsAfter = rows(spark.read.parquet(mf.base("stats")))
+    // simulate the fence loss: the embedded copy takes over — the
     // reopened store's next fold is a no-op, not a double-fold
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$path/_stats_fence"))
+    LsmTestKit.publish(spark, path)(m => m.copy(ints = m.ints - "stats_fence"))
     val reopened = new PostingsStore(spark, path, compactEvery = 1000)
     assert(reopened.batchesSeen === 1,
       "embedded fence must keep the recovered seq")
     assert(!reopened.mergeRefit(),
-      "marker loss must not re-fold the already-folded window")
-    assert(rows(spark.read.parquet(s"$path/stats")) === statsAfter &&
-      spark.read.parquet(s"$path/meta").head().getAs[Long]("n") === nAfter,
-      "marker loss re-inflated the folded stats")
+      "fence loss must not re-fold the already-folded window")
+    val now = LsmTestKit.manifest(spark, path)
+    assert(rows(spark.read.parquet(now.base("stats"))) === statsAfter &&
+      spark.read.parquet(now.base("meta")).head().getAs[Long]("n") === nAfter,
+      "fence loss re-inflated the folded stats")
 
-    // a PRE-stats_seq store (legacy meta) with a lost marker: the
+    // a PRE-stats_seq store (legacy meta) with a lost fence: the
     // fence-0 cross-check refuses the doc-count-changing double-fold
     // loudly instead of folding from 0
     import org.apache.spark.sql.functions.col
-    val legacyMeta = spark.read.parquet(s"$path/meta")
-      .select(col("n"), col("avgdl"), col("tdl")).collect()
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(legacyMeta.toIndexedSeq),
-        spark.read.parquet(s"$path/meta")
-          .select("n", "avgdl", "tdl").schema)
+    spark.read.parquet(now.base("meta")).select(col("n"), col("avgdl"), col("tdl"))
+      .localCheckpoint()
       .write.mode("overwrite").parquet(s"$path/meta_legacy")
-    // swap in the legacy-format meta
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(path).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/meta"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$path/meta_legacy"),
-      new org.apache.hadoop.fs.Path(s"$path/meta"))
+    LsmTestKit.publish(spark, path)(m => m.copy(
+      bases = m.bases + ("meta" -> "meta_legacy"),
+      ints = m.ints - "stats_fence"))
     val legacy = new PostingsStore(spark, path, compactEvery = 1000)
     val e = intercept[IllegalArgumentException](legacy.mergeRefit())
     assert(e.getMessage.contains("_stats_fence"),

@@ -80,10 +80,14 @@ class StreamingLshLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     assert(maint.compactionDue)
     feed(adds2, dels2) // compaction fires here
     assert(maint.batchesSeen === 2)
-    // post-compaction: logs folded into the base, zero residue at rest
+    // post-compaction: logs folded into the base, the view reads a
+    // fresh log generation
+    val folded = graft.LsmTestKit.manifest(spark, path)
+    assert(folded.bare && folded.logs != ".")
+    feed(Seq.empty, dels3)
+    // and the next commit leaves zero residue of the folded logs
     assert(!new java.io.File(s"$path/tombstones").exists())
     assert(!new java.io.File(s"$path/vectors_delta").exists())
-    feed(Seq.empty, dels3)
     q.stop()
 
     // ---- batch twin: the in-memory lifecycle chain, same ops,
@@ -234,7 +238,7 @@ class StreamingLshLifecycleSpec extends AnyFunSuite with SparkSpecBase {
 
     m.refitNow(cfg)
     assert(m.atRestGrowth === 1.0, s"growth not reset: ${m.atRestGrowth}")
-    assert(!new java.io.File(s"$path/tombstones").exists(),
+    assert(graft.LsmTestKit.manifest(spark, path).logs != ".",
       "logs survived refit")
     // the refit store serves the LIVE corpus exactly (single-leaf
     // forest: candidates are total, so view == exact)
@@ -246,5 +250,9 @@ class StreamingLshLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     val exact = ExactNN.topK(queries, live, 5, ExactNN.L2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(served === exact, "refit store != exact over live corpus")
+    // the superseded logs go at the next commit
+    m.onBatch(None, None)
+    assert(!new java.io.File(s"$path/tombstones").exists(),
+      "logs survived the commit after the refit")
   }
 }
