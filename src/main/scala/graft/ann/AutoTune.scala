@@ -38,25 +38,6 @@ import graft.ann.lsh.LshIndex
   */
 object AutoTune {
 
-  /** Run independent guard-count actions as concurrent jobs (they are
-    * each one tiny aggregate whose wall cost is scheduled-stage
-    * latency, not compute). */
-  private def par[T](thunks: (() => T)*): Seq[T] = {
-    import scala.concurrent.{blocking, Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // await-all-then-rethrow + managed blocking — the QueryPack
-    // .inParallel discipline (no orphaned legs after a failure, no
-    // unbounded compensation-thread burst under nesting)
-    val settled = blocking {
-      Await.result(
-        Future.sequence(thunks.map(t =>
-          Future(scala.util.Try(t()))).toSeq),
-        scala.concurrent.duration.Duration.Inf)
-    }
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
-    settled.map(_.get)
-  }
-
   /** Grade a combined predictions frame against the exact ground truth
     * and apply the cheapest-arm-meeting-target rule.
     *
@@ -208,7 +189,7 @@ object AutoTune {
                            gtOpt: Option[DataFrame] = None,
                            maxSharedRows: Long = 50000000L): DataFrame = {
     require(arms.nonEmpty, "sweepIvfNProbeShared: empty arm list")
-    val guards = par(() => queries.count(), () => idx.vectors.count())
+    val guards = ParallelLegs(() => queries.count(), () => idx.vectors.count())
     if (!sharedSweepFits(guards(0), guards(1), arms.max,
         idx.model.config.nCells, maxSharedRows)) {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -278,7 +259,7 @@ object AutoTune {
         arms.map(p => armPred(p).withColumn("arm", lit(p)))
           .reduce(_ unionByName _)
           .select(col("arm"), col("query_id"), col("vec_id"), col("dist")))
-    val guards = par(() => queries.count(), () => idx.vectors.count())
+    val guards = ParallelLegs(() => queries.count(), () => idx.vectors.count())
     if (!sharedSweepFits(guards(0), guards(1), arms.max,
         idx.model.config.nCells, maxSharedRows)) {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -388,7 +369,7 @@ object AutoTune {
     // The bucket count reads the BOUNDED sidecar; rows one aggregate.
     // The three guard counts are independent one-row aggregates — run
     // them concurrently (stage latency, not compute).
-    val guards = par(
+    val guards = ParallelLegs(
       () => store.bucketCentroids.count(),
       () => queries.count(),
       () => store.vectors.count())

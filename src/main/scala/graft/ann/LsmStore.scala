@@ -281,12 +281,17 @@ private[graft] trait LsmStore {
 
   // ---- opening the store ----
 
+  /** Refuse, by name, a store whose layout this build does not read —
+    * before opening it changes anything on disk. */
+  protected def checkLayout(): Unit = ()
+
   /** Open the store: convert a store with no `_lsm/` to manifest 0, then
     * recover the batch sequence as the max of the fence, the commits
     * and every log row of the current generation (committed or not,
     * so a burned seq is never reused). A restarted counter would let an
     * old tombstone kill a new arrival. */
   protected final def recoverSeq(): Int = {
+    checkLayout()
     if (!lsmFs.exists(new Path(s"$lsmPath/_lsm"))) convert()
     val m = manifest()
     val top = lsmLogDirs.map(s => readLog(m.log(s), SeqSchema))

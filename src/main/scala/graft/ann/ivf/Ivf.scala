@@ -266,7 +266,8 @@ final class IvfIndex(
 
   private def scoreTopK(cands: DataFrame, queries: DataFrame, k: Int,
                         metric: ExactNN.Metric, roundTo: Int): DataFrame =
-    graft.ann.CandidateScoring.scoreTopK(cands, vectors, queries, k, None,
+    graft.ann.CandidateScoring.scoreTopK(
+      graft.ann.CandidateScoring.pairs(cands, vectors, queries), k, None,
       metric, roundTo)
 
   /** Label-partitioned view of this index (see [[LabeledIvfIndex]] and
@@ -555,12 +556,12 @@ final class IvfIndex(
     cells.groupBy("cell").agg(count(lit(1)).as("n_vectors"))
       .orderBy("cell")
 
-  /** Bucketed-table persistence (same rationale as
-    * [[graft.ann.lsh.LshIndex.saveBucketed]]): `cells` bucketed by cell
-    * id so cell-keyed joins/aggregations read pre-clustered files with no
+  /** Bucketed-table persistence: `cells` bucketed by cell id so
+    * cell-keyed joins/aggregations read pre-clustered files with no
     * corpus-side Exchange; `vectors` bucketed by vec_id for the
-    * candidates→vectors lookup join. Centroids+meta still save to
-    * `modelPath` as plain parquet. */
+    * candidates→vectors lookup join (at 100 TB these are the joins
+    * whose corpus-side shuffle would dominate the job). Centroids+meta
+    * still save to `modelPath` as plain parquet. */
   def saveBucketed(spark: SparkSession, name: String, modelPath: String,
                    nBuckets: Int = 64): Unit = {
     saveModel(spark, modelPath)

@@ -94,8 +94,8 @@ final class LabeledIvfIndex(
         Seq("label", "cell"))
       .select("query_id", "vec_id")
       .dropDuplicates("query_id", "vec_id")
-    CandidateScoring.scoreTopK(cands, vectors, queries, k, None, metric,
-      roundTo)
+    CandidateScoring.scoreTopK(CandidateScoring.pairs(cands, vectors, queries),
+      k, None, metric, roundTo)
   }
 
   /** Serve-time delete view (the tombstone pattern; sidecar-staleness

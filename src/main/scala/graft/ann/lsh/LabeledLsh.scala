@@ -134,8 +134,8 @@ final class LabeledLshIndex(
         Seq("label", "tree_id", "hash"))
       .select("query_id", "vec_id")
       .dropDuplicates("query_id", "vec_id")
-    CandidateScoring.scoreTopK(cands, vectors, queries, k,
-      Some(distanceThreshold), metric, roundTo)
+    CandidateScoring.scoreTopK(CandidateScoring.pairs(cands, vectors, queries),
+      k, Some(distanceThreshold), metric, roundTo)
   }
 
   /** Serve-time delete view (the [[LshIndex.withDeletes]] tombstone

@@ -119,6 +119,14 @@ final class LshModel(val config: LshConfig, val trees: Array[TreeNode])
         posexplode(LshExpressions.lshHashes(this, col(vecCol))))
       .select(col(idCol), col("pos").as("tree_id"), col("col").as("hash"))
 
+  /** The LSH table's rows `(vec_id, embedding, hashes)` for every input
+    * vector: one map-side pass, `hashes` the native [[LshHashesExpr]]
+    * (NULL for a vector of the wrong length, which is then in no
+    * bucket). */
+  def hashedRows(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"),
+      LshExpressions.lshHashes(this, col(vecCol)).as("hashes"))
+
   /** (query-id, tree_id, hash) probe rows: two per tree per query. */
   def probeRows(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
     queries.select(
@@ -196,37 +204,74 @@ object LshModel {
   }
 }
 
-/** A trained index: the fitted model plus the two persisted-shape
-  * DataFrames (reference `Store` namespaces, store/store.go:12-18 →
-  * SURVEY.md §1.1: `vectors(id, vec)` + `buckets(tree_id, hash, id)`). */
+/** A trained index: the fitted model plus one table,
+  * `hashed(vec_id, embedding, hashes ARRAY<BIGINT>)`, where `hashes(t)`
+  * is the vector's bucket in tree t (reference `Store` namespaces,
+  * store/store.go:12-18, SURVEY.md §1.1, kept as one row per vector). */
 object LshIndex {
   /** Local-neighborhood cut for the filtered-dispatch density estimate
     * ([[LshIndex.localAllowedCounts]]) — the graph family's beamWidth
     * analog, and the same 32 the graph queries serve with. */
   val DefaultLocalBeamWidth = 32
+
+  /** The one converter from an edited bucket table (a capped, filtered
+    * or dumped `buckets`) into an index: each vector's hashes gathered
+    * back into its row, NULL at tree t when `buckets` has no row of it
+    * in tree t. A vector with no bucket row keeps NULL `hashes` and is
+    * never a probe candidate (it stays in `vectors`, so exact paths
+    * still see it). `buckets` holds at most one hash per
+    * (vec_id, tree_id), as every subset of a forest's bucket table
+    * does. */
+  def fromBuckets(model: LshModel, vectors: DataFrame,
+                  buckets: DataFrame): LshIndex = {
+    val perTree = model.trees.indices.map(t =>
+      max(when(col("tree_id") === t, col("hash"))))
+    val hashes = buckets.groupBy("vec_id").agg(array(perTree: _*).as("hashes"))
+    new LshIndex(model, vectors.select("vec_id", "embedding")
+      .join(hashes, Seq("vec_id"), "left"))
+  }
 }
 
 final class LshIndex(
     val model: LshModel,
-    val vectors: DataFrame, // (vec_id, embedding)
-    val buckets: DataFrame  // (tree_id, hash, vec_id)
+    val hashed: DataFrame // (vec_id, embedding, hashes)
 ) {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Batch ANN search (reference Search, lsh.go:137-197), Spark-first:
+  /** (vec_id, embedding): a view of [[hashed]]. */
+  lazy val vectors: DataFrame = hashed.select("vec_id", "embedding")
+
+  /** (tree_id, hash, vec_id): a view of [[hashed]], one row per tree a
+    * vector is bucketed in (`posexplode` of `hashes`, NULLs skipped). */
+  lazy val buckets: DataFrame =
+    hashed.select(col("vec_id"), posexplode(col("hashes")))
+      .where(col("col").isNotNull)
+      .select(col("pos").as("tree_id"), col("col").as("hash"), col("vec_id"))
+
+  /** Batch ANN search (reference Search, lsh.go:137-197) as one scan of
+    * [[hashed]]:
     *
-    *   1. probe generation: 2 buckets per tree per query (own + flipped
-    *      highest bit) — map-side explode;
-    *   2. candidate retrieval: probes ⋈ buckets on (tree_id, hash) — the
-    *      probe side is tiny and broadcast, so the big buckets table is
-    *      never shuffled (= the reference's bucket pruning, its whole
-    *      point, SURVEY.md §4);
-    *   3. dedup (query_id, vec_id) — reference closestSet (lsh.go:169-171);
-    *   4. vec join + distance + threshold filter (lsh.go:172-177);
-    *   5. bounded per-query top-k ([[graft.ann.TopK.perQueryTopK]], the
+    *   1. the query batch is collected once on the driver (no job when
+    *      it is local) with its probes — 2 buckets per tree per query,
+    *      own + flipped highest bit ([[LshModel.probes]]) — into an
+    *      [[LshProbeMap]] `(tree, hash) → queries`; a query of the wrong
+    *      length has no probes;
+    *   2. one pass over [[hashed]]: the native
+    *      [[LshExpressions.lshProbeMatch]] gives the distinct queries a
+    *      row's `hashes` match, with their vectors, exploded into
+    *      `(query_id, qv, vec_id, embedding)` — one row per pair by
+    *      construction, so no dedup (reference closestSet,
+    *      lsh.go:169-171), no vector join and no query join;
+    *   3. distance + threshold filter (lsh.go:172-177);
+    *   4. bounded per-query top-k ([[graft.ann.TopK.perQueryTopK]], the
     *      reference min-heap pop, lsh.go:192-195), ties pinned by vec_id
-    *      for determinism.
+    *      for determinism — the only shuffle, keyed by query_id.
+    *
+    * The shape is a partition-local search, then one global top-k
+    * merge: 2 jobs for a local query batch, 3 otherwise. The scan reads
+    * the whole table; bucket pruning is done by the match, in memory,
+    * not by the storage layout.
     *
     * Deviation (SURVEY.md §7.4): the reference's `MaxCandidates` early
     * exit is nondeterministic (Go map iteration order decides which
@@ -243,7 +288,12 @@ final class LshIndex(
                 metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
                 maxCandidates: Option[Int] = None,
                 allowed: Option[DataFrame] = None): DataFrame = {
-    val uncapped = probedCandidates(queries)
+    val probes = LshProbeMap.of(model, queries)
+    val probed = hashed
+      .select(explode(LshExpressions.lshProbeMatch(probes, col("hashes"))).as("q"),
+        col("vec_id"), col("embedding"))
+      .select(col("q.query_id").as("query_id"), col("q.qv").as("qv"),
+        col("vec_id"), col("embedding"))
     // Constrained (metadata-filtered) search: the (vec_id) allow-list —
     // typically the output of a metadata predicate — lands BETWEEN
     // candidate retrieval and scoring, so disallowed candidates are
@@ -251,76 +301,28 @@ final class LshIndex(
     // (a post-filtered top-k would return fewer than k allowed rows).
     // It ALSO runs before `maxCandidates`, so disallowed rows never
     // consume cap slots — the cap's contract is "at most `cap` ALLOWED
-    // candidates per query". Join shape: no forced broadcast hint on
-    // either side. The candidate side is bounded (queries × probes ×
-    // occupancy) only when the caller composed [[cappedBuckets]] /
-    // `maxCandidates`; an uncapped hot-bucket corpus can push it past
-    // driver memory, so the build-side choice is left to Catalyst/AQE,
-    // which broadcasts the candidate set when its MEASURED size is
-    // small and degrades to a vec_id-partitioned shuffle join instead
-    // of an OOM when it is not. The allow-list side stays a scan with
-    // its metadata predicate pushed down either way. Only probed
+    // candidates per query". A left-semi join: duplicate allow rows
+    // cannot duplicate a candidate, so no dedup shuffle. No forced
+    // hint: Catalyst/AQE broadcasts the allow-list when its MEASURED
+    // size is small and degrades to a vec_id-partitioned shuffle join
+    // instead of an OOM when it is not. Only probed
     // candidates are tested — the standard filtered-ANN trade, recall
     // graded against the FILTERED exact ground truth by
     // q_lsh_filtered_recall. For highly selective filters use
     // [[searchAllFiltered]], which dispatches to an exact scan over
     // the allowed subset (the probe candidate set degenerates toward
     // empty and the brute-force side is tiny).
-    // (dedup AFTER the join: it runs on the join output, where a
-    // distinct() on the allow-list side would shuffle the whole
-    // corpus-scale id set just to guard against duplicate allow rows)
-    val filtered = allowed.fold(uncapped)(a =>
-      filterCandidates(uncapped, a.select("vec_id")))
+    val filtered = allowed.fold(probed)(a =>
+      probed.join(a.select("vec_id"), Seq("vec_id"), "left_semi"))
     val cands = maxCandidates.fold(filtered) { cap =>
       val cw = Window.partitionBy("query_id").orderBy("vec_id")
       filtered.withColumn("crn", row_number().over(cw))
         .where(col("crn") <= cap).drop("crn")
     }
-    scoreTopK(cands, queries, k, distanceThreshold, metric, roundTo)
+    graft.ann.CandidateScoring.scoreTopK(cands, k, Some(distanceThreshold),
+      metric, roundTo)
   }
 
-  /** Candidate retrieval — steps 1-3 of [[searchAll]]'s pipeline,
-    * shared with the density-aware filtered dispatch so the dispatch's
-    * observable and the search's candidate set can never drift. */
-  private def probedCandidates(queries: DataFrame): DataFrame = {
-    // Probe dedup WITHOUT an Exchange: probes are generated one array
-    // per query row, so duplicate (tree_id, hash) pairs can only occur
-    // within that row's own array (a bucket whose bit-flip neighbor is
-    // itself) — array_distinct over (tree_id, hash) structs replaces
-    // the old dropDuplicates shuffle, one fewer scheduled exchange on
-    // EVERY LSH search. Identical candidate rows: the per-query
-    // distinct set of (tree_id, hash) is unchanged (callers passing a
-    // duplicated query row are collapsed by the candidate-level dedup
-    // below, as before).
-    val probes = queries.select(col("query_id"),
-        explode(array_distinct(transform(
-          LshExpressions.lshProbes(model, col("qv")),
-          (h, i) => struct((i / 2).cast(IntegerType).as("tree_id"),
-            h.as("hash"))))).as("p"))
-      .select(col("query_id"), col("p.tree_id").as("tree_id"),
-        col("p.hash").as("hash"))
-    buckets
-      .join(broadcast(probes.select("query_id", "tree_id", "hash")),
-        Seq("tree_id", "hash"))
-      .select("query_id", "vec_id")
-      .dropDuplicates("query_id", "vec_id")
-  }
-
-  /** The allow-list filter on a candidate set (the join-shape notes in
-    * [[searchAll]]'s body apply). */
-  private def filterCandidates(cands: DataFrame, ids: DataFrame): DataFrame =
-    ids.join(cands, "vec_id")
-      .select("query_id", "vec_id")
-      .dropDuplicates("query_id", "vec_id")
-
-  /** Steps 4-5 of [[searchAll]]'s pipeline: vec join + distance +
-    * threshold + per-query top-k — the
-    * [[graft.ann.CandidateScoring.scoreTopK]] shared tail. */
-  private def scoreTopK(cands: DataFrame, queries: DataFrame, k: Int,
-                        distanceThreshold: Double, metric: ExactNN.Metric,
-                        roundTo: Int): DataFrame =
-    graft.ann.CandidateScoring.scoreTopK(cands, vectors, queries, k,
-      Some(distanceThreshold), metric, roundTo)
 
   /** Label-partitioned view of this index — the IN-FAMILY remediation
     * the density dispatch's `probe_starved` / bimodal warnings name
@@ -432,7 +434,7 @@ final class LshIndex(
                          metric: ExactNN.Metric = ExactNN.L2,
                          roundTo: Int = 6, treeId: Int = 0): DataFrame =
     // dedup BEFORE the flag join: the serve path tolerates duplicate
-    // allow rows (filterCandidates dedups after its join), so the
+    // allow rows (its allow filter is a semi join), so the
     // estimator must too — a doubled allow-list would double-count
     // every allowed row AND double its window slots, inflating the
     // median past k in exactly the starved regime this signal catches
@@ -452,18 +454,16 @@ final class LshIndex(
                                              metric: ExactNN.Metric,
                                              roundTo: Int,
                                              treeId: Int = 0): DataFrame = {
-    val qHash = model.transform(
-        queries.select(col("query_id"), col("qv")), "query_id", "qv")
-      .where(col("tree_id") === treeId)
-      .select(col("query_id"), col("hash"))
-    val cands = buckets.where(col("tree_id") === treeId)
-      .join(broadcast(qHash), "hash")
-      .select("query_id", "vec_id")
+    // one read of the LSH table: a row's tree-`treeId` bucket is matched
+    // against the broadcast query hashes and its embedding scored in
+    // the same row (`get` is NULL past the array's end, never an error)
+    val qHash = queries.select(col("query_id"), col("qv"),
+      get(LshExpressions.lshHashes(model, col("qv")), lit(treeId)).as("hash"))
     val flagged = ids.select(col("vec_id")).withColumn("ok", lit(true))
-    val scored = cands
-      .join(vectors, "vec_id")
-      .join(broadcast(queries.select(col("query_id"), col("qv"))),
-        "query_id")
+    val scored = hashed
+      .select(col("vec_id"), col("embedding"),
+        get(col("hashes"), lit(treeId)).as("hash"))
+      .join(broadcast(qHash), "hash")
       .join(flagged, Seq("vec_id"), "left")
       .select(col("query_id"), col("vec_id"),
         round(metric.dist(col("qv"), col("embedding")), roundTo).as("dist"),
@@ -502,8 +502,8 @@ final class LshIndex(
                        densityDispatch: Boolean = true)
       : graft.ann.FilteredSearch.Decision =
     // dedup once: duplicate allow rows would inflate the selectivity
-    // count AND the estimator (the serve path's filterCandidates
-    // dedups after its join; the exact route's vectors join would not)
+    // count AND the estimator (the serve path's allow filter is a
+    // semi join; the exact route's vectors join is not)
     filteredDecisionDeduped(queries,
       allowed.select("vec_id").dropDuplicates("vec_id"), k, beamWidth,
       metric, roundTo, maxExactFraction, maxAutoExactFraction,
@@ -609,8 +609,8 @@ final class LshIndex(
     // dedup once: the count, the exact subset join, and the estimator
     // must all see each allowed id once (duplicate allow rows would
     // inflate selectivity, duplicate exact-route result rows, and
-    // inflate the density median — the probe path's filterCandidates
-    // dedups after its join and was the only dup-safe consumer); the
+    // inflate the density median — the probe path's semi join is the
+    // only dup-safe consumer); the
     // private call chain below runs under the pre-deduped contract
     val ids = allowed.select("vec_id").dropDuplicates("vec_id")
     // exact path: the corpus scan is pre-filtered to the allowed rows
@@ -758,45 +758,41 @@ final class LshIndex(
       .where(col("dist") <= threshold)
   }
 
+  /** The forest thinned to its first `t` trees — the search-time half
+    * of SCALE.md's round-8 density law (once occupancy is sized, tree
+    * count prices recall linearly in candidate volume). `hashes` is
+    * cut to its first `t` elements, so the buckets of dropped trees
+    * leave the `buckets` view and match no probe; the probe side still
+    * hashes all fitted trees per query — a per-query CPU constant, not
+    * a data-volume term. Serving lever of
+    * [[graft.ann.AutoTune.sweepLshTrees]]. */
+  def withTrees(t: Int): LshIndex = {
+    require(t >= 1 && t <= model.config.nTrees,
+      s"withTrees: $t outside [1, ${model.config.nTrees}]")
+    new LshIndex(model, hashed.withColumn("hashes", slice(col("hashes"), 1, t)))
+  }
+
   /** Serve-time delete view — the tombstone pattern for index
-    * mutability at scale: both tables anti-join the (small, broadcast)
+    * mutability at scale: the table anti-joins the (small, broadcast)
     * tombstone id set, so deleted vectors vanish from candidate
     * retrieval, scoring, and `candidatePairs` without touching the
     * stored corpus. The anti-join is map-side (broadcast hash join
     * build = tombstones), so serving cost is unchanged until the
     * tombstone set itself grows large — at which point compaction is
-    * one rewrite: `withDeletes(t).save(path)` / `.saveBucketed(...)`
-    * materializes the same view with zero tombstone residue
-    * (LshLifecycleSpec pins compacted == tombstoned-view results).
-    * The reference has no delete at all (store/store.go grows
-    * append-only); this is the production gap a long-lived 100 TB
-    * index cannot live without. */
-  /** The forest thinned to its first `t` trees — the search-time half
-    * of SCALE.md's round-8 density law (once occupancy is sized, tree
-    * count prices recall linearly in candidate volume). Buckets of
-    * dropped trees are filtered out (partition-pruned when the store is
-    * tree-partitioned); the probe side still hashes all fitted trees
-    * per query — a per-query CPU constant, not a data-volume term —
-    * and its dropped-tree probes simply find no bucket to join.
-    * Serving lever of [[graft.ann.AutoTune.sweepLshTrees]]. */
-  def withTrees(t: Int): LshIndex = {
-    require(t >= 1 && t <= model.config.nTrees,
-      s"withTrees: $t outside [1, ${model.config.nTrees}]")
-    new LshIndex(model, vectors, buckets.where(col("tree_id") < t))
-  }
-
-  def withDeletes(tombstones: DataFrame): LshIndex = {
-    val t = broadcast(tombstones.select("vec_id"))
-    new LshIndex(model,
-      vectors.join(t, Seq("vec_id"), "left_anti"),
-      buckets.join(t, Seq("vec_id"), "left_anti"))
-  }
+    * one rewrite: `withDeletes(t).save(path)` materializes the same
+    * view with zero tombstone residue (LshLifecycleSpec pins
+    * compacted == tombstoned-view results). The reference has no
+    * delete at all (store/store.go grows append-only); this is the
+    * production gap a long-lived 100 TB index cannot live without. */
+  def withDeletes(tombstones: DataFrame): LshIndex =
+    new LshIndex(model, hashed.join(broadcast(tombstones.select("vec_id")),
+      Seq("vec_id"), "left_anti"))
 
   /** Incremental append: hash arrivals (vec_id, embedding) through the
     * FITTED forest — map-side only, no refit, no shuffle (the same
     * frozen-model contract as [[GraphSearch.insert]]'s walk and the
     * reference's own SetHash write path, lsh.go:123-128). Union-only,
-    * so existing bucket files are never rewritten. Freshness caveat
+    * so existing files are never rewritten. Freshness caveat
     * (the [[Lsh.fit]] occupancy rule, applied over time instead of
     * corpus size): planes fitted on the original sample still split
     * arrivals fine while the data distribution holds, but occupancy
@@ -804,56 +800,23 @@ final class LshIndex(
     * past its fit sample, refit or cap ([[cappedBuckets]] /
     * `maxCandidates`). Callers tracking batches should apply the
     * [[graft.ann.GraphMaintainer]] cadence pattern. */
-  def append(arrivals: DataFrame): LshIndex = {
-    val a = arrivals.select("vec_id", "embedding")
+  def append(arrivals: DataFrame): LshIndex =
     new LshIndex(model,
-      vectors.unionByName(a),
-      buckets.unionByName(
-        model.transform(a, "vec_id", "embedding")
-          .select(col("tree_id"), col("hash"), col("vec_id"))))
-  }
+      hashed.unionByName(model.hashedRows(arrivals, "vec_id", "embedding")))
 
-  /** Upsert = tombstone-then-append: updated ids are removed from both
-    * tables first, so a re-inserted vector appears exactly once even
-    * when its new embedding hashes to different buckets. */
+  /** Upsert = tombstone-then-append: updated ids are removed first, so
+    * a re-inserted vector appears exactly once even when its new
+    * embedding hashes to different buckets. */
   def upsert(updates: DataFrame): LshIndex =
     withDeletes(updates.select("vec_id")).append(updates)
 
-  /** Persist the full index: model (nodes+meta), vectors, and the
-    * buckets table written `partitionBy(tree_id)` and sorted by hash
-    * within files — so a probe `WHERE tree_id = t AND hash = h` prunes to
-    * one partition directory and min/max row-group stats skip within it.
-    * This is the at-rest layout that makes bucket pruning (the
-    * reference's whole point, SURVEY.md §4) a storage property. */
+  /** Persist the index at rest: `model/` (nodes + meta) and `hashed/`,
+    * the one table as it stands — no repartition and no sort, since a
+    * search reads the whole table once and matches buckets in memory.
+    * [[Lsh.load]] reopens it. */
   def save(spark: SparkSession, path: String): Unit = {
     model.save(spark, s"$path/model")
-    vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    buckets
-      .repartition(col("tree_id"))
-      .sortWithinPartitions("hash")
-      .write.mode("overwrite")
-      .partitionBy("tree_id")
-      .parquet(s"$path/buckets")
-  }
-
-  /** Bucketed-table persistence — the at-scale layout: `buckets` is
-    * written `bucketBy(nBuckets, tree_id, hash)` so any equi-join or
-    * self-join on the bucket key reads pre-clustered files and needs NO
-    * Exchange on the corpus side; `vectors` is `bucketBy(vec_id)` so the
-    * candidates→vectors lookup join shuffles only the (small) candidate
-    * side. At 100 TB these two joins are the ones whose corpus-side
-    * shuffle would dominate the job; bucketed tables delete it. The
-    * model still saves to `modelPath` as plain parquet (it is a few KB).
-    * Requires a session catalog (tables land in the warehouse dir). */
-  def saveBucketed(spark: SparkSession, name: String, modelPath: String,
-                   nBuckets: Int = 64): Unit = {
-    model.save(spark, modelPath)
-    vectors.write.mode("overwrite")
-      .bucketBy(nBuckets, "vec_id").sortBy("vec_id")
-      .saveAsTable(s"${name}_vectors")
-    buckets.write.mode("overwrite")
-      .bucketBy(nBuckets, "tree_id", "hash").sortBy("tree_id", "hash")
-      .saveAsTable(s"${name}_buckets")
+    hashed.write.mode("overwrite").parquet(s"$path/hashed")
   }
 
   /** Bucket occupancy summary — used for diagnostics and the
@@ -872,25 +835,27 @@ object Lsh {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Reopen a bucketed-table index saved by [[LshIndex.saveBucketed]]:
-    * the returned index's `buckets`/`vectors` scans carry the bucketed
-    * HashPartitioning, so bucket-key joins plan without a corpus-side
-    * Exchange (asserted in LshIndexSpec). */
-  def loadBucketed(spark: SparkSession, name: String, modelPath: String): LshIndex =
-    new LshIndex(
-      LshModel.load(spark, modelPath),
-      spark.table(s"${name}_vectors"),
-      spark.table(s"${name}_buckets"))
-
   /** Reopen a saved index (reference LoadHasher + a Store pointing at the
     * persisted namespaces, lsh.go:200-207). */
   def load(spark: SparkSession, path: String): LshIndex = {
     val at = graft.ann.LsmStore.baseDir(spark, path)
-    val model = LshModel.load(spark, at("model"))
-    val vectors = spark.read.parquet(at("vectors"))
-    val buckets = spark.read.parquet(at("buckets"))
-      .select(col("tree_id").cast("int").as("tree_id"), col("hash"), col("vec_id"))
-    new LshIndex(model, vectors, buckets)
+    requireOneTable(spark, path, at)
+    new LshIndex(LshModel.load(spark, at("model")), spark.read.parquet(at("hashed")))
+  }
+
+  /** The named error for a store in the two-table layout (`vectors/` +
+    * `buckets/`, no `hashed/`) that earlier builds wrote; `at` resolves
+    * the store's base dirs. */
+  private[lsh] def requireOneTable(spark: SparkSession, path: String,
+                                   at: String => String): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new org.apache.hadoop.fs.Path(path).toUri, spark.sparkContext.hadoopConfiguration)
+    def has(sub: String) = fs.exists(new org.apache.hadoop.fs.Path(at(sub)))
+    if (!has("hashed") && has("buckets"))
+      throw new IllegalStateException(s"LSH store '$path' has the two-table " +
+        "layout (vectors/ + buckets/) of an earlier build; this build reads " +
+        "one table, hashed/ (vec_id, embedding, hashes). Rebuild the store " +
+        "from its vectors: Lsh.train(vectors, ...).save(spark, path).")
   }
 
   /** Fit the forest over a (capped) sample of the vector column. The
@@ -940,17 +905,14 @@ object Lsh {
     new LshModel(config, trees)
   }
 
-  /** Train = fit + index both storage namespaces (reference Train,
-    * lsh.go:106-134; Clear() ≡ these DataFrames replacing any previous
-    * ones). `vectors` keeps original ids/embeddings untouched (angular
+  /** Train = fit + hash every vector into the one table (reference
+    * Train, lsh.go:106-134; Clear() ≡ this DataFrame replacing any
+    * previous one). `embedding` keeps the original vectors untouched (angular
     * normalization happens only inside hashing, never on stored data —
     * hasher.go:198-205 vs helpers.go:219-234). */
   def train(df: DataFrame, idCol: String, vecCol: String,
             config: LshConfig): LshIndex = {
     val model = fit(df, vecCol, config)
-    val vectors = df.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    val buckets = model.transform(df, idCol, vecCol)
-      .select(col("tree_id"), col("hash"), col(idCol).as("vec_id"))
-    new LshIndex(model, vectors, buckets)
+    new LshIndex(model, model.hashedRows(df, idCol, vecCol))
   }
 }

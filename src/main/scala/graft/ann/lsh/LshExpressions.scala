@@ -1,10 +1,12 @@
 package graft.ann.lsh
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.SparkShim
 import org.apache.spark.sql.graftshim.SparkShim.AbstractDataType
 import org.apache.spark.sql.types._
@@ -104,6 +106,109 @@ case class LshProbesExpr(child: Expression, bcast: Broadcast[LshModel])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** A query batch's probes, built on the driver (the reference's bucket
+  * lookup, lsh.go:156-168, turned inside out: the scan asks of each
+  * stored row which queries probe its buckets). For tree t, `keys(t)`
+  * holds the probed hashes in ascending order and `slots(t)(i)` the
+  * slots of the queries probing `keys(t)(i)`; `queries(slot)` is that
+  * query's `(query_id, qv)` row in Catalyst's internal form, typed
+  * `batchType`, so a match carries the query vector with it. */
+final class LshProbeMap private (keys: Array[Array[Long]],
+                                 slots: Array[Array[Array[Int]]],
+                                 queries: Array[InternalRow],
+                                 val batchType: StructType) extends Serializable {
+
+  /** The distinct queries whose probes contain one of `hashes`' buckets
+    * (`hashes(t)` is tree t's). A NULL element is in no bucket of its
+    * tree, and trees past either length match nothing, so a short, long
+    * or partly NULL array is never read out of bounds. */
+  def matchData(hashes: ArrayData): ArrayData = {
+    val n = math.min(hashes.numElements(), keys.length)
+    var seen: Array[Long] = null
+    var found: Array[Int] = null
+    var m = 0
+    var t = 0
+    while (t < n) {
+      if (!hashes.isNullAt(t)) {
+        val i = java.util.Arrays.binarySearch(keys(t), hashes.getLong(t))
+        if (i >= 0) {
+          val s = slots(t)(i)
+          if (seen == null) {
+            seen = new Array[Long]((queries.length + 63) >>> 6)
+            found = new Array[Int](math.max(4, s.length))
+          }
+          var j = 0
+          while (j < s.length) {
+            val q = s(j)
+            if ((seen(q >>> 6) & (1L << q)) == 0) {
+              seen(q >>> 6) |= 1L << q
+              if (m == found.length)
+                found = java.util.Arrays.copyOf(found, math.min(queries.length, 2 * m))
+              found(m) = q
+              m += 1
+            }
+            j += 1
+          }
+        }
+      }
+      t += 1
+    }
+    if (m == 0) LshProbeMap.NoMatch
+    else {
+      val out = new Array[Any](m)
+      var u = 0
+      while (u < m) { out(u) = queries(found(u)); u += 1 }
+      new GenericArrayData(out)
+    }
+  }
+}
+
+object LshProbeMap {
+  private val NoMatch = new GenericArrayData(Array.empty[Any])
+
+  /** The probe map of a `(query_id, qv)` batch: the batch is collected
+    * once (no job when it is local) with its probes, in
+    * [[LshModel.probes]]' flat layout (2t = tree t's own bucket, 2t+1
+    * its neighbor). A query with a NULL id, or of the wrong length
+    * (NULL probes), probes nothing; a repeated id keeps its first row. */
+  def of(model: LshModel, queries: DataFrame): LshProbeMap = {
+    val q = queries.select(col("query_id"), col("qv"))
+    val toRow = SparkShim.toCatalyst(q.schema)
+    val rows = q.withColumn("probes", LshExpressions.lshProbes(model, col("qv")))
+      .collect().toSeq.filterNot(_.isNullAt(0)).distinctBy(_.get(0))
+    val nTrees = model.trees.length
+    val perTree = Array.fill(nTrees)(
+      scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.LinkedHashSet[Int]])
+    for ((r, slot) <- rows.zipWithIndex if !r.isNullAt(2); t <- 0 until nTrees) {
+      val probes = r.getSeq[Long](2)
+      for (h <- Seq(probes(2 * t), probes(2 * t + 1)))
+        perTree(t).getOrElseUpdate(h, scala.collection.mutable.LinkedHashSet.empty[Int]) += slot
+    }
+    val sorted = perTree.map(_.toArray.sortBy(_._1))
+    new LshProbeMap(sorted.map(_.map(_._1)), sorted.map(_.map(_._2.toArray)),
+      rows.map(r => toRow(Row(r.get(0), r.get(1))).asInstanceOf[InternalRow]).toArray,
+      q.schema)
+  }
+}
+
+/** The distinct `(query_id, qv)` rows whose probes match a stored row's
+  * `hashes` (ARRAY<BIGINT>, tree t's bucket at t): the candidate test of
+  * [[LshIndex.searchAll]] inside one pass over the LSH table. The probe
+  * map rides into the generated code as a reference object. */
+case class LshProbeMatchExpr(child: Expression, probes: LshProbeMap)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "lsh_probe_match"
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(probes.batchType, containsNull = false)
+  override def nullSafeEval(av: Any): Any =
+    probes.matchData(av.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("lshProbeMap", probes, classOf[LshProbeMap].getName)
+    defineCodeGen(ctx, ev, a => s"$ref.matchData($a)")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 object LshExpressions {
   import SparkShim.{column, expression}
 
@@ -112,4 +217,9 @@ object LshExpressions {
 
   def lshProbes(model: LshModel, v: Column): Column =
     column(LshProbesExpr(expression(v), LshModelBroadcast.of(model)))
+
+  /** ARRAY of the `(query_id, qv)` rows of `probes` whose probes
+    * contain one of `hashes`' buckets; NULL for a NULL `hashes`. */
+  def lshProbeMatch(probes: LshProbeMap, hashes: Column): Column =
+    column(LshProbeMatchExpr(expression(hashes), probes))
 }

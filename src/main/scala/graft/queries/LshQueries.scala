@@ -175,7 +175,7 @@ object LshQueries extends QueryPack {
       val emb = tbl(s, dir, "embeddings")
       val q = queriesDf(emb)
       val idx = lshIdx(s, dir, angular = false)
-      val capped = new LshIndex(idx.model, idx.vectors,
+      val capped = LshIndex.fromBuckets(idx.model, idx.vectors,
         idx.cappedBuckets(MaxOccupancy))
       val res = Eval.withValidity(
         capped.searchAll(q, K, L2Threshold, ExactNN.L2,
@@ -293,7 +293,7 @@ object LshQueries extends QueryPack {
           idx0.model.transform(q, "query_id", "qv")
             .where(col("tree_id") === 0).select("query_id", "hash"),
           s"$dump/lsh_auto_qhash"))
-      val idx = new LshIndex(idx0.model, idx0.vectors, dumps(0))
+      val idx = LshIndex.fromBuckets(idx0.model, idx0.vectors, dumps(0))
       val arms = GraphQueries.FilteredAutoArms.map { case (name, m, r) =>
         (name, pmod(col("vec_id"), lit(m)) === r)
       }

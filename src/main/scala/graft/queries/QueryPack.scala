@@ -52,27 +52,11 @@ trait QueryPack {
     * stage latency into concurrent stage latency). Each thunk must be
     * an INDEPENDENT computation (no shared mutable state, memo
     * dependencies resolved by the caller first); results are returned
-    * in argument order, so scheduling cannot change a row. */
-  protected def inParallel[T](thunks: (() => T)*): Seq[T] = {
-    import scala.concurrent.{blocking, Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // Every leg SETTLES before this returns, success or failure (the
-    // lifted-Try form): a fail-fast Future.sequence would return while
-    // sibling legs still run Spark jobs and write dump parquet in the
-    // background, so a caller's retry could overlap a concurrent write
-    // to the same dump path. The first failure (argument order) is
-    // rethrown only after every leg finished. `blocking` marks the
-    // nested awaits for the fork-join pool's managed-blocking machinery
-    // explicitly (bounded compensation threads instead of a burst).
-    val settled = blocking {
-      Await.result(
-        Future.sequence(thunks.map(t =>
-          Future(scala.util.Try(t()))).toSeq),
-        scala.concurrent.duration.Duration.Inf)
-    }
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
-    settled.map(_.get)
-  }
+    * in argument order, so scheduling cannot change a row; every leg
+    * settles before the first failure is rethrown
+    * ([[graft.ann.ParallelLegs]]). */
+  protected def inParallel[T](thunks: (() => T)*): Seq[T] =
+    graft.ann.ParallelLegs(thunks: _*)
 
   protected def memoized[T <: AnyRef](s: SparkSession, dir: String,
                                       tag: String)(f: => T): T = {

@@ -20,6 +20,10 @@ object SparkShim {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** External (Row) values of type `dt` to Catalyst's internal form. */
+  def toCatalyst(dt: org.apache.spark.sql.types.DataType): Any => Any =
+    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
+
   /** The concrete `classic` SparkSession behind the Spark 4.x abstract
     * API type (CacheManager's methods take the classic type). The cast
     * is pinned HERE so a Spark-jar upgrade that moves or renames

@@ -303,14 +303,13 @@ class CodesMaintainerSpec extends AnyFunSuite with SparkSpecBase {
     val expected = m.index.vectors.collect()
       .map(r => r.getAs[Long]("vec_id")).sorted.toSeq
 
-    // the folded store written to its generation, but only two of the
-    // three dirs before the crash, and no manifest
+    // the folded store written to its generation, but only the model
+    // and not the table before the crash, and no manifest
     val gen = s"$path/gen-${LsmTestKit.nextNumber(path)}"
     val live = m.index
-    new graft.ann.lsh.LshIndex(live.model,
-      live.vectors.localCheckpoint(), live.buckets.localCheckpoint())
+    new graft.ann.lsh.LshIndex(live.model, live.hashed.localCheckpoint())
       .save(spark, gen)
-    LsmTestKit.rm(s"$gen/buckets")
+    LsmTestKit.rm(s"$gen/hashed")
     val m2 = new graft.ann.lsh.LshMaintainer(spark, path, compactEvery = 100)
     val healed = m2.index
     assert(healed.vectors.collect().map(_.getAs[Long]("vec_id")).sorted.toSeq

@@ -10,8 +10,8 @@ import graft.ann.ivf.{Ivf, IvfConfig}
 import graft.ann.lsh.{Lsh, LshConfig}
 
 /** Index save/load round-trips: a reopened index must return exactly the
-  * same search results, and the buckets/cells tables must be laid out
-  * partitioned by their probe key (the at-rest pruning contract). */
+  * same search results; the IVF cells table is laid out partitioned by
+  * its probe key, the LSH index is one table. */
 class IndexPersistenceSpec extends AnyFunSuite with SparkSpecBase {
 
   import spark.implicits._
@@ -21,7 +21,7 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkSpecBase {
   private def queries = emb.orderBy("vec_id").limit(20)
     .select($"vec_id".as("query_id"), $"embedding".as("qv"))
 
-  test("LSH index round-trip: identical search results, partitioned layout") {
+  test("LSH index round-trip: identical search results, one-table layout") {
     val dir = Files.createTempDirectory("lsh_idx").toString
     val idx = Lsh.train(emb, "vec_id", "embedding",
       LshConfig(nTrees = 8, kMinVecs = 30, seed = 5L))
@@ -35,10 +35,13 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkSpecBase {
     assert(a === b)
     assert(a.nonEmpty)
 
-    // partitionBy(tree_id) layout on disk
-    val partDirs = new java.io.File(s"$dir/buckets").listFiles()
-      .filter(_.getName.startsWith("tree_id="))
-    assert(partDirs.length === 8)
+    // one table at rest, beside the model: hashes(t) is tree t's bucket
+    assert(new java.io.File(dir).list().filterNot(_.startsWith(".")).sorted.toSeq ===
+      Seq("hashed", "model"))
+    val stored = spark.read.parquet(s"$dir/hashed")
+    assert(stored.columns.toSeq === Seq("vec_id", "embedding", "hashes"))
+    assert(stored.where(size($"hashes") =!= 8).isEmpty)
+    assert(reopened.buckets.count() === emb.count() * 8)
   }
 
   test("IVF index round-trip: identical search results, partitioned layout") {
@@ -105,48 +108,6 @@ class IndexPersistenceSpec extends AnyFunSuite with SparkSpecBase {
         f.delete()
       }
       rm(loc)
-    }
-  }
-
-  test("LSH bucketed tables: bucket-key self-join plans with zero Exchange") {
-    val dir = Files.createTempDirectory("lsh_bidx").toString
-    dropTables("lsh_bspec_vectors", "lsh_bspec_buckets")
-    val idx = Lsh.train(emb, "vec_id", "embedding",
-      LshConfig(nTrees = 8, kMinVecs = 30, seed = 5L))
-    idx.saveBucketed(spark, "lsh_bspec", s"$dir/model", nBuckets = 4)
-    val reopened = Lsh.loadBucketed(spark, "lsh_bspec", s"$dir/model")
-
-    // same search results through the bucketed tables
-    val a = idx.searchAll(queries, 10, 1.3, ExactNN.L2)
-      .orderBy("query_id", "dist", "vec_id").collect().toSeq
-    val b = reopened.searchAll(queries, 10, 1.3, ExactNN.L2)
-      .orderBy("query_id", "dist", "vec_id").collect().toSeq
-    assert(a === b)
-    assert(a.nonEmpty)
-
-    withoutBroadcast {
-      // the near-dup candidate self-join on (tree_id, hash): bucketed
-      // scans carry HashPartitioning(tree_id, hash), so EnsureRequirements
-      // inserts NO Exchange on either side...
-      val bk = reopened.buckets
-      val selfJoin = bk.as("a").join(bk.as("b"),
-        col("a.tree_id") === col("b.tree_id") && col("a.hash") === col("b.hash") &&
-          col("a.vec_id") < col("b.vec_id"))
-      assert(exchangeCount(selfJoin) === 0,
-        s"bucketed self-join should be shuffle-free:\n${selfJoin.queryExecution.executedPlan}")
-      // ...while the same join over the unbucketed index shuffles
-      val ubk = idx.buckets
-      val unbucketed = ubk.as("a").join(ubk.as("b"),
-        col("a.tree_id") === col("b.tree_id") && col("a.hash") === col("b.hash") &&
-          col("a.vec_id") < col("b.vec_id"))
-      assert(exchangeCount(unbucketed) > 0)
-
-      // candidates -> vectors lookup join: only the (small) candidate side
-      // shuffles; the bucketed vectors side reads in place
-      val cands = (0L until 50L).toDF("vec_id")
-      val lookup = cands.join(reopened.vectors, "vec_id")
-      assert(exchangeCount(lookup) === 1,
-        s"only the candidate side should shuffle:\n${lookup.queryExecution.executedPlan}")
     }
   }
 

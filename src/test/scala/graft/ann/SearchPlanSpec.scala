@@ -43,6 +43,40 @@ class SearchPlanSpec extends AnyFunSuite with SparkSpecBase {
     assert(capped.contains("Window"), "probe lost sensitivity to Window nodes")
   }
 
+  test("at-rest LSH searchAll scans the LSH table once and has no Exchange except the top-k's query_id one") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val parquetCorpus = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val path = java.nio.file.Files.createTempDirectory("lsh_plan").toString + "/idx"
+    Lsh.train(parquetCorpus, "vec_id", "embedding",
+      LshConfig(nTrees = 4, kMinVecs = 20, seed = 5L)).save(spark, path)
+    val q = parquetCorpus.where($"vec_id" < 8)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    val df = Lsh.load(spark, path).searchAll(q, k = 5, distanceThreshold = 1e9)
+    assert(df.count() === 40)
+    // the final (adaptive) plan, query stages included
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.size === 1 &&
+        scans.head.relation.location.rootPaths.forall(_.getName == "hashed"),
+      s"not one scan of the LSH table:\n$plan")
+    val shuffles = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size === 1, s"shuffles besides the top-k's:\n$plan")
+    shuffles.head.outputPartitioning match {
+      case HashPartitioning(Seq(key), _) =>
+        assert(key.references.map(_.name).toSeq === Seq("query_id"), plan)
+      case other => fail(s"top-k shuffle partitioned by $other:\n$plan")
+    }
+    // the one broadcast is the collected query batch, not table-scale
+    val bcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
+    assert(bcasts.forall(b => helper.collect(b) {
+      case s: FileSourceScanExec => s }.isEmpty),
+      s"a broadcast reads a table:\n$plan")
+  }
+
   test("maxCandidates cap keeps its (intentional) per-query Window, top-k stays aggregated") {
     // The deterministic candidate cap is a row_number() over candidates
     // BEFORE the distance compute — bounded work is its whole point; the

@@ -70,7 +70,7 @@ class FilteredSearchSpec extends AnyFunSuite with SparkSpecBase {
       LshConfig(nTrees = 6, kMinVecs = 10, seed = 3L))
     // adversarial index: vec 7 exists in the corpus but in NO bucket —
     // the probe path can never return it; only the exact scan can
-    val idx = new LshIndex(full.model, full.vectors,
+    val idx = LshIndex.fromBuckets(full.model, full.vectors,
       full.buckets.where($"vec_id" =!= 7L))
     val queries = corpus.where($"vec_id" === 7L)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))

@@ -87,6 +87,42 @@ class LshExpressionsSpec extends AnyFunSuite with SparkSpecBase {
       assert(rows.map(_.getSeq[Long](1).toSeq).toSeq === Seq.fill(3)(Seq(0L, 0L)))
   }
 
+  test("probe match: malformed hashes or query give no candidate, never an out-of-bounds read") {
+    val m = Lsh.fit(emb, "embedding", LshConfig(nTrees = 4, kMinVecs = 20, seed = 2L))
+    val v = emb.orderBy("vec_id").select($"embedding".cast("array<double>"))
+      .as[Seq[Double]].head().toArray
+    val h = m.hashes(v).toSeq
+    // the own-leaf hashes of v, as the LSH table stores them; every
+    // other row matches v's probes only through what is malformed in it
+    val dir = java.nio.file.Files.createTempDirectory("lsh_match").toString
+    Seq[(Long, Seq[java.lang.Long])](
+        (1L, null),                                       // NULL hashes
+        (2L, Seq(null, null, null, null)),                // NULL elements
+        (3L, Seq(Long.box(h(0) ^ 0x5a5a5aL))),            // short
+        (4L, Seq.empty),                                  // empty
+        (5L, h.map(Long.box)))                            // well formed
+      .toDF("vec_id", "hashes").write.mode("overwrite").parquet(dir)
+    val rows = spark.read.parquet(dir)
+    // query 10 probes v's buckets; query 11 has the wrong length, so
+    // lshProbes gives NULL and it probes nothing
+    val batch = Seq((10L, v.toSeq), (11L, v.take(3).toSeq)).toDF("query_id", "qv")
+    assert(batch.select(LshExpressions.lshProbes(m, $"qv").isNull)
+      .as[Boolean].collect().toSeq === Seq(false, true))
+    val pm = LshProbeMap.of(m, batch)
+    val cols = Seq($"vec_id",
+      LshExpressions.lshProbeMatch(pm, $"hashes").getField("query_id").as("q"))
+    def matched(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols: _*).orderBy("vec_id").collect()
+        .map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toSeq)).toSeq
+    val codegen = matched(rows)
+    val interpreted = withSQLConf(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { matched(rows) }
+    for (got <- Seq(codegen, interpreted))
+      assert(got === Seq(1L -> None, 2L -> Some(Nil), 3L -> Some(Nil),
+        4L -> Some(Nil), 5L -> Some(Seq(10L))), got)
+  }
+
   test("double-typed input works without cast") {
     val model = Lsh.fit(emb, "embedding", LshConfig(nTrees = 4, kMinVecs = 20, seed = 2L))
     val df = Seq((1L, Seq(0.5, -0.25) ++ Seq.fill(62)(0.0))).toDF("vec_id", "embedding")

@@ -161,6 +161,58 @@ class LshIndexSpec extends AnyFunSuite with SparkSpecBase {
       "filter-before-cut diverged from deep-search-then-recut")
   }
 
+  test("searchAll rows == probe-join reference (probes ⋈ buckets ⋈ vectors, dedup, exact top-k)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+      .select($"vec_id", $"embedding")
+    // 16 parquet queries plus one of the wrong length, which has no
+    // probes and so no row
+    val queries = emb.where($"vec_id" % 31 === 0)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+      .unionByName(Seq((9999L, Seq(0.5f, 0.5f))).toDF("query_id", "qv"))
+    /** The two-table search written out: every probed (query, vector)
+      * pair once, the allow-list, then the vec_id-ordered cap, then
+      * exact distances and a window top-k by (dist, vec_id). */
+    def reference(idx: LshIndex, k: Int, thr: Double, metric: ExactNN.Metric,
+                  cap: Option[Int], allowed: Option[DataFrame]) = {
+      val probed = idx.model.probeRows(queries, "query_id", "qv")
+        .join(idx.buckets, Seq("tree_id", "hash"))
+        .select("query_id", "vec_id").dropDuplicates("query_id", "vec_id")
+      val filtered = allowed.fold(probed)(a =>
+        probed.join(a.select("vec_id").distinct(), "vec_id"))
+      val capped = cap.fold(filtered)(c => filtered
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("query_id").orderBy("vec_id")))
+        .where($"rn" <= c).drop("rn"))
+      capped.join(idx.vectors, "vec_id").join(queries, "query_id")
+        .select($"query_id", $"vec_id",
+          round(metric.dist($"qv", $"embedding"), 6).as("dist"))
+        .where($"dist" <= thr)
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("query_id").orderBy($"dist", $"vec_id")))
+        .where($"rn" <= k).drop("rn")
+        .as[(Long, Long, Double)].collect().sorted.toSeq
+    }
+    val allowed = emb.where($"vec_id" % 3 =!= 0).select("vec_id")
+    for ((angular, metric, thr) <- Seq((false, ExactNN.L2, 1.6),
+                                        (true, ExactNN.Cosine, 0.9))) {
+      val idx = Lsh.train(emb, "vec_id", "embedding",
+        LshConfig(nTrees = 6, kMinVecs = 25, angular = angular, seed = 19L))
+      for ((cap, allow) <- Seq((None, None), (Some(12), None),
+                               (None, Some(allowed)), (Some(12), Some(allowed)))) {
+        val got = idx.searchAll(queries, 5, thr, metric,
+            maxCandidates = cap, allowed = allow)
+          .as[(Long, Long, Double)].collect().sorted.toSeq
+        val want = reference(idx, 5, thr, metric, cap, allow)
+        val arm = s"angular=$angular cap=$cap allowed=${allow.isDefined}"
+        assert(want.map(_._1).distinct.size > 8, arm)
+        assert(got === want, arm)
+        assert(!got.exists(_._1 == 9999L), arm)
+      }
+    }
+  }
+
   test("ragged or null embeddings fail the fit with a named error") {
     val cfg = LshConfig(nTrees = 3, kMinVecs = 1, seed = 5L)
     val ragged = Seq((1L, Seq(1.0f, 2.0f)), (2L, Seq(1.0f)))

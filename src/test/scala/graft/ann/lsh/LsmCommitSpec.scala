@@ -62,12 +62,13 @@ class LsmCommitSpec extends AnyFunSuite with SparkSpecBase {
     batch(m, 480, 3L)
     m.compactNow()
     val g1 = LsmTestKit.manifest(spark, path)
-    val old = Seq("model", "vectors", "buckets", "vectors_delta",
-      "buckets_delta", "tombstones")
+    val old = Seq("hashed", "hashed_delta", "tombstones")
     old.foreach(d => assert(LsmTestKit.exists(s"$path/$d"),
       s"$d deleted under the previous snapshot"))
     batch(m, 485)
     old.foreach(d => assert(!LsmTestKit.exists(s"$path/$d"), s"superseded $d kept"))
+    // the frozen model is not superseded: every manifest names it
+    assert(LsmTestKit.exists(s"$path/model"), "the frozen model was deleted")
     val manifests = new java.io.File(s"$path/_lsm").list().filter(_.forall(_.isDigit))
     assert(manifests.map(_.toInt).sorted.toSeq ===
       Seq(g1.n, LsmTestKit.manifest(spark, path).n), "dropped manifests kept")
@@ -88,11 +89,8 @@ class LsmCommitSpec extends AnyFunSuite with SparkSpecBase {
     // seq 2 committed, seq 3 a partial batch with no commit record
     def log(from: Int, to: Int, dead: Long, seq: Int): Unit = {
       val a = emb.where($"vec_id".between(from, to))
-      a.withColumn("seq", lit(seq))
-        .write.mode("append").parquet(s"$path/vectors_delta")
-      model.transform(a, "vec_id", "embedding")
-        .select($"tree_id", $"hash", $"vec_id", lit(seq).as("seq"))
-        .write.mode("append").parquet(s"$path/buckets_delta")
+      model.hashedRows(a, "vec_id", "embedding").withColumn("seq", lit(seq))
+        .write.mode("append").parquet(s"$path/hashed_delta")
       Seq((dead, seq)).toDF("vec_id", "seq")
         .write.mode("append").parquet(s"$path/tombstones")
     }
@@ -115,6 +113,56 @@ class LsmCommitSpec extends AnyFunSuite with SparkSpecBase {
     assert(m.batchesSeen === 4)
     assert(ids(new LshMaintainer(spark, path, compactEvery = 100).index) ===
       ((0L until 480L).toSet - 11L - 7L ++ Set(481L, 482L) ++ (485L to 489L)))
+  }
+
+  test("compaction keeps the frozen model: its dir stays named and unchanged; refit writes a new one") {
+    val path = store("lsm_commit_model")
+    val m = new LshMaintainer(spark, path, compactEvery = 100)
+    def modelDir = LsmTestKit.manifest(spark, path).base("model")
+    def listing(dir: String) = {
+      val root = java.nio.file.Paths.get(dir)
+      val files = java.nio.file.Files.walk(root).filter(java.nio.file.Files.isRegularFile(_))
+        .toArray.map(_.asInstanceOf[java.nio.file.Path]).sortBy(_.toString)
+      files.map(f => root.relativize(f).toString ->
+        java.nio.file.Files.getLastModifiedTime(f).toMillis).toSeq
+    }
+    val before = modelDir
+    val files = listing(before)
+    batch(m, 480, 3L)
+    m.compactNow()
+    assert(modelDir === before, "compaction moved the model")
+    assert(!new java.io.File(s"$path/${LsmTestKit.manifest(spark, path).logs}/model")
+      .exists(), "compaction wrote a model")
+    val view = rows(m.index)
+    val viewIds = ids(m.index)
+    batch(m, 485, 5L)
+    assert(modelDir === before && listing(before) === files,
+      "the model dir changed or went")
+    // the store at rest serves the compacted view's rows
+    val atRest = Lsh.load(spark, path)
+    assert(rows(atRest) === view && ids(atRest) === viewIds)
+    m.refitNow(LshConfig(nTrees = 4, kMinVecs = 40, seed = 8L))
+    assert(modelDir !== before, "refit kept the old model")
+    assert(rows(Lsh.load(spark, path)) === rows(m.index))
+  }
+
+  test("a two-table store gets a named error from Lsh.load and LshMaintainer, and is left as it was") {
+    val path = java.nio.file.Files.createTempDirectory("lsm_two_table").toString + "/idx"
+    val idx = Lsh.train(emb.where($"vec_id" < 100), "vec_id", "embedding",
+      LshConfig(nTrees = 2, kMinVecs = 40, seed = 7L))
+    // the layout earlier builds wrote: model/, vectors/, buckets/
+    idx.model.save(spark, s"$path/model")
+    idx.vectors.write.parquet(s"$path/vectors")
+    idx.buckets.write.partitionBy("tree_id").parquet(s"$path/buckets")
+    val listed = new java.io.File(path).list().sorted.toSeq
+    for (open <- Seq[() => Any](() => Lsh.load(spark, path),
+                                () => new LshMaintainer(spark, path))) {
+      val e = intercept[IllegalStateException](open())
+      assert(e.getMessage.contains("two-table layout") &&
+        e.getMessage.contains("hashed/"), e.getMessage)
+    }
+    assert(new java.io.File(path).list().sorted.toSeq === listed,
+      "opening the old store changed it")
   }
 
   test("an unfinished rename-swap commit gets a named error") {

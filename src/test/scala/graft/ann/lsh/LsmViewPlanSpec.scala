@@ -118,6 +118,34 @@ class LsmViewPlanSpec extends AnyFunSuite with SparkSpecBase {
     assert(rows(m.index) === rows(Lsh.load(spark, path)))
   }
 
+  test("an at-rest searchAll runs at most 3 jobs") {
+    val atRest = Lsh.load(spark, store("lsm_view_rest_jobs"))
+    rows(atRest)
+    // collect the query batch with its probes, then the scan stage and
+    // the top-k stage of one adaptive query
+    val jobs = jobsOf(rows(atRest))
+    assert(jobs <= 3, s"at-rest search: $jobs jobs")
+  }
+
+  test("an arrival of the wrong length is stored but never a candidate") {
+    val path = store("lsm_view_ragged")
+    val m = new LshMaintainer(spark, path, compactEvery = 100)
+    // 480 arrives with a 3-d embedding: no hashes, so no bucket
+    m.onBatch(Some(Seq((480L, Seq(0.1f, 0.2f, 0.3f))).toDF("vec_id", "embedding")),
+      None)
+    val wide = queries.unionByName(
+      Seq((99L, Seq(0.1f, 0.2f, 0.3f))).toDF("query_id", "qv"))
+    def servedIds(i: LshIndex) =
+      i.searchAll(wide, 1000, 1e9, ExactNN.L2).select("vec_id").as[Long]
+        .collect().toSet
+    for (i <- Seq(m.index, { m.compactNow(); m.index })) {
+      assert(i.vectors.where($"vec_id" === 480L).count() === 1)
+      assert(i.buckets.where($"vec_id" === 480L).isEmpty)
+      val got = servedIds(i)
+      assert(got.nonEmpty && !got.contains(480L), s"served: $got")
+    }
+  }
+
   test("with no visible log seq the view is the bare base: no Union, no Join") {
     val path = store("lsm_view_bare")
     val atRestRows = rows(Lsh.load(spark, path))
@@ -125,12 +153,9 @@ class LsmViewPlanSpec extends AnyFunSuite with SparkSpecBase {
     // a partial batch (rows in every log, no commit record) is invisible,
     // so it must not cost the view a union or a kill join either
     val arrivals = emb.where($"vec_id".between(480, 484))
-    arrivals.withColumn("seq", lit(1))
-      .write.mode("append").parquet(s"$path/vectors_delta")
     LshModel.load(spark, s"$path/model")
-      .transform(arrivals, "vec_id", "embedding")
-      .select($"tree_id", $"hash", $"vec_id", lit(1).as("seq"))
-      .write.mode("append").parquet(s"$path/buckets_delta")
+      .hashedRows(arrivals, "vec_id", "embedding").withColumn("seq", lit(1))
+      .write.mode("append").parquet(s"$path/hashed_delta")
     Seq((3L, 1)).toDF("vec_id", "seq")
       .write.mode("append").parquet(s"$path/tombstones")
     def bare(state: String): Unit = {

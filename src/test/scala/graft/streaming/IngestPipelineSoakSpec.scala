@@ -262,7 +262,7 @@ class IngestPipelineSoakSpec extends AnyFunSuite with SparkSpecBase {
     // the maintenance really fired: the tight twin's compaction commit
     // dropped the LSM logs; the loose twin's are still on disk
     for (sub <- Seq("gate/bands_delta", "postings/tfs_delta",
-        "codes/codes_delta", "forest/buckets_delta",
+        "codes/codes_delta", "forest/hashed_delta",
         "labeled/buckets_delta")) {
       assert(dirExists(s"$lRoot/$sub"), s"loose twin never logged $sub")
     }
@@ -274,7 +274,7 @@ class IngestPipelineSoakSpec extends AnyFunSuite with SparkSpecBase {
       "tight postings never compacted")
     assert(!dirExists(s"$tRoot/codes/codes_delta"),
       "tight codes never compacted")
-    assert(!dirExists(s"$tRoot/forest/buckets_delta"),
+    assert(!dirExists(s"$tRoot/forest/hashed_delta"),
       "tight forest never compacted")
     assert(!dirExists(s"$tRoot/graph/edges_delta"),
       "tight graph never folded")

@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpecBase
 import graft.ann.lsh.{Lsh, LshConfig}
 
-/** Streaming index maintenance: a fitted LSH model's transform is a pure
+/** Streaming index maintenance: a fitted LSH model's hashing is a pure
   * map-side projection, so it runs unchanged over a readStream of newly
-  * arriving vectors — the incremental bucket-append path for keeping the
-  * index fresh without retraining (the forest is fixed; only bucket rows
-  * are appended, exactly like the reference's SetHash writes on Train,
+  * arriving vectors — the incremental append path for keeping the index
+  * fresh without retraining (the forest is fixed; only table rows are
+  * appended, exactly like the reference's SetHash writes on Train,
   * lsh.go:123-128, but continuous). */
 class StreamingIndexSpec extends AnyFunSuite with SparkSpecBase {
 
@@ -27,32 +27,29 @@ class StreamingIndexSpec extends AnyFunSuite with SparkSpecBase {
     val idx = graft.ann.lsh.Lsh.train(existing, "vec_id", "embedding",
       LshConfig(nTrees = 6, kMinVecs = 30, seed = 3L))
     idx.save(spark, dir)
-    val before = spark.read.parquet(s"$dir/buckets").count()
+    val before = spark.read.parquet(s"$dir/hashed").count()
 
-    // stream newly arriving vectors; each micro-batch appends bucket rows
-    // in the same partitioned layout plus the vectors table
+    // stream newly arriving vectors; each micro-batch appends their rows,
+    // hashed through the fitted forest, to the saved LSH table
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Seq[Float])]
-    val q = idx.model.transform(mem.toDF().toDF("vec_id", "embedding"),
+    val q = idx.model.hashedRows(mem.toDF().toDF("vec_id", "embedding"),
         "vec_id", "embedding")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.select($"tree_id", $"hash", $"vec_id")
-          .write.mode("append").partitionBy("tree_id").parquet(s"$dir/buckets")
+        batch.write.mode("append").parquet(s"$dir/hashed")
       }
       .outputMode("append").start()
     try {
       mem.addData(arriving: _*)
       q.processAllAvailable()
     } finally q.stop()
-    spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
-      .select($"vec_id", $"embedding")
-      .write.mode("overwrite").parquet(s"$dir/vectors")
 
     // the reopened index now serves the streamed vectors
-    val after = spark.read.parquet(s"$dir/buckets").count()
-    assert(after === before + arriving.size * 6)
+    val after = spark.read.parquet(s"$dir/hashed").count()
+    assert(after === before + arriving.size)
     val reopened = graft.ann.lsh.Lsh.load(spark, dir)
+    assert(reopened.buckets.count() === (before + arriving.size) * 6)
     val qdf = Seq((arriving.head._1, arriving.head._2.map(_.toDouble)))
       .toDF("query_id", "qv")
     val res = reopened.searchAll(qdf, 5, 10.0).collect()

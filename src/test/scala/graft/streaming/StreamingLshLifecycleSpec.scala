@@ -87,7 +87,7 @@ class StreamingLshLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     feed(Seq.empty, dels3)
     // and the next commit leaves zero residue of the folded logs
     assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(!new java.io.File(s"$path/vectors_delta").exists())
+    assert(!new java.io.File(s"$path/hashed_delta").exists())
     q.stop()
 
     // ---- batch twin: the in-memory lifecycle chain, same ops,
@@ -181,22 +181,19 @@ class StreamingLshLifecycleSpec extends AnyFunSuite with SparkSpecBase {
     val buckets1 = bucketRows(m)
     assert(vecs1 === (0L until 485L))
 
-    // batch 2 CRASHES mid-write: rows land in BOTH delta tables and
-    // the tombstone log, but the commit record never does — simulate
-    // by writing the logs in onBatch's format directly
+    // batch 2 CRASHES mid-write: rows land in the delta log and the
+    // tombstone log, but the commit record never does — simulate by
+    // writing the logs in onBatch's format directly
     val arrivals2 = emb.where($"vec_id".between(485, 489))
-    arrivals2.withColumn("seq", lit(2))
-      .write.mode("append").parquet(s"$path/vectors_delta")
     LshModel.load(spark, s"$path/model")
-      .transform(arrivals2, "vec_id", "embedding")
-      .select($"tree_id", $"hash", $"vec_id", lit(2).as("seq"))
-      .write.mode("append").parquet(s"$path/buckets_delta")
+      .hashedRows(arrivals2, "vec_id", "embedding").withColumn("seq", lit(2))
+      .write.mode("append").parquet(s"$path/hashed_delta")
     Seq((3L, 2)).toDF("vec_id", "seq")
       .write.mode("append").parquet(s"$path/tombstones")
     // invisible: no uncommitted vector or bucket row is served, and the
     // uncommitted tombstone kills nothing
-    assert(vecRows(m) === vecs1, "uncommitted vectors_delta rows served")
-    assert(bucketRows(m) === buckets1, "uncommitted buckets_delta rows served")
+    assert(vecRows(m) === vecs1, "uncommitted hashed_delta vectors served")
+    assert(bucketRows(m) === buckets1, "uncommitted hashed_delta buckets served")
     val served1 = served(m)
     assert(served1.contains(3L) && served1.forall(_ < 485L),
       s"search served: $served1")
