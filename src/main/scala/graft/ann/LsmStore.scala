@@ -3,7 +3,7 @@ package graft.ann
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** The LSM store every maintained index mixes in:
   * [[graft.ann.lsh.LshMaintainer]], [[graft.ann.lsh.LabeledLshMaintainer]]
@@ -32,7 +32,11 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   *     log row), so a retry lands at a fresh seq;
   *   - **views** ([[liveViews]]): one manifest read on the driver, not a
   *     Spark job, gives the dirs and the literal `seq = 0 OR seq IN
-  *     (commits)`; with no commits the view is its bare bases. Base rows
+  *     (commits)`; with no commits the view is its bare bases. Bases
+  *     are unpartitioned parquet read with their own schema
+  *     ([[readBase]]); the two LSH stores each have one leg, the
+  *     `hashed` table and its `hashed_delta` log (the labeled store's
+  *     rows carry their `labels`, so a vector is one row). Base rows
   *     sit at seq 0 and a tombstone kills rows of its key from STRICTLY
   *     EARLIER seqs (same-batch delete+arrival is an upsert). All but
   *     GraphMaintainer (whose arrivals revive ids) serve through it;
@@ -84,15 +88,10 @@ private[graft] trait LsmStore {
 
   /** The base table `sub` of snapshot `m`, read with its schema: inferred
     * once per directory, then passed on every read, so a view starts no
-    * schema-inference job while its file listing stays fresh.
-    * `asString` columns read as STRING whatever their values look like
-    * (partition columns, whose inferred type follows the values). */
-  protected final def readBase(m: Manifest, sub: String,
-                               asString: String*): DataFrame = {
+    * schema-inference job while its file listing stays fresh. */
+  protected final def readBase(m: Manifest, sub: String): DataFrame = {
     val p = m.base(sub)
-    lsmSpark.read.schema(baseSchemas.getOrElseUpdate(p, StructType(
-      lsmSpark.read.parquet(p).schema.map(f =>
-        if (asString.contains(f.name)) f.copy(dataType = StringType) else f))))
+    lsmSpark.read.schema(baseSchemas.getOrElseUpdate(p, lsmSpark.read.parquet(p).schema))
       .parquet(p)
   }
 

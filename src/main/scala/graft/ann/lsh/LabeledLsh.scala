@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ann.{CandidateScoring, ExactNN}
+import graft.ann.ExactNN
 
-/** Label-partitioned LSH store — the IN-FAMILY remediation behind the
+/** Labeled LSH store — the IN-FAMILY remediation behind the
   * `probe_starved` / bimodal warnings of
   * [[LshIndex.searchAllFiltered]]'s density dispatch (round 17; the
   * bucket twin of [[graft.ann.KnnGraph.labelAware]]'s build-time rule).
@@ -20,8 +20,8 @@ import graft.ann.{CandidateScoring, ExactNN}
   * query probes.
   *
   * The serving rule — label-conditional bucket-centroid ranking: the
-  * store keys buckets by the composite `(label, tree_id, hash)` and
-  * keeps, per labeled bucket, the MEAN of the label's own rows in it
+  * store keeps, per (label, tree, bucket), the MEAN of the label's own
+  * rows in it
   * (the [[bucketCentroids]] sidecar — one build-time aggregate). A
   * `label = v` query ranks v's buckets by centroid distance and probes
   * the nearest `maxProbeBuckets` — IVF's probe rule with the FITTED
@@ -36,24 +36,39 @@ import graft.ann.{CandidateScoring, ExactNN}
   * medium distance), which is why the descent selector was replaced
   * by this rule, not tuned.
   *
-  * Built from the SAME fitted model — `withLabels` is one join plus the
-  * centroid aggregate; no second fit, no new planes. Multi-label rows
-  * land in every partition their labels name.
+  * The layout is the one LSH table: an [[LshIndex]] whose `hashed`
+  * rows also carry `labels ARRAY<STRING>`, the vector's label set
+  * (a bucket does not depend on the label, so a per-label bucket
+  * table would only repeat it per label). Built from the SAME fitted
+  * model — `withLabels` is one join plus the centroid aggregate.
   *
   * Scale shape: the centroid sidecar is bounded by the FITTED forest's
   * leaf count (≤ centroidTrees × sampleCap/kMinVecs buckets per label
   * — corpus-INDEPENDENT), so probe selection joins a tiny broadcast
-  * query set against a bounded table; the candidate join stays the
-  * [[LshIndex.searchAll]] shape (broadcast probe rows against the
-  * stored table, equi-joined on the composite key — partition-pruned
-  * when saved `partitionBy(label)`). Everything is declarative
-  * DataFrame work: no driver-side collect anywhere on the serve path. */
+  * query set against a bounded table. The probe rows (≤ queries ×
+  * `maxProbeBuckets`) are collected into an [[LshProbeMap]] and
+  * [[LshIndex.searchAll]]'s one scan of the whole table serves them. */
 final class LabeledLshIndex(
-    val model: LshModel,
-    val vectors: DataFrame,         // (vec_id, embedding)
-    val labeledBuckets: DataFrame,  // (label, tree_id, hash, vec_id)
+    val index: LshIndex, // hashed: (vec_id, embedding, hashes, labels)
     val centroidTrees: Int = LabeledLshIndex.DefaultCentroidTrees,
     precomputedCentroids: Option[DataFrame] = None) {
+
+  def model: LshModel = index.model
+  def vectors: DataFrame = index.vectors
+
+  /** `(label, tree_id, hash, vec_id, embedding)`: each row once per
+    * label × tree it is bucketed in (NULL hashes skipped). */
+  private def labeledRows: DataFrame =
+    index.hashed.select(col("*"), explode(col("labels")).as("label"))
+      .select(col("label"), col("vec_id"), col("embedding"), posexplode(col("hashes")))
+      .where(col("col").isNotNull)
+      .select(col("label"), col("pos").as("tree_id"), col("col").as("hash"),
+        col("vec_id"), col("embedding"))
+
+  /** `(label, tree_id, hash, vec_id)`: a view of the table, the shape
+    * the oracle dumps, AutoTune's shared sweep and the pipeline's
+    * label check read. */
+  lazy val labeledBuckets: DataFrame = labeledRows.drop("embedding")
 
   /** Per-(label, tree, bucket) mean of the label's own rows —
     * `(label, tree_id, hash, centroid)`, trees < [[centroidTrees]]
@@ -70,9 +85,8 @@ final class LabeledLshIndex(
   lazy val bucketCentroids: DataFrame = precomputedCentroids.getOrElse {
     import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
     import org.apache.spark.ml.stat.Summarizer
-    labeledBuckets
+    labeledRows
       .where(col("tree_id") < centroidTrees)
-      .join(vectors, "vec_id")
       .groupBy("label", "tree_id", "hash")
       .agg(Summarizer.mean(
         array_to_vector(col("embedding").cast("array<double>")))
@@ -94,8 +108,8 @@ final class LabeledLshIndex(
     * with rank = position in the centroid-distance ranking
     * ((dist, tree_id, hash) ties), which `q_lsh_filtered_labeled`
     * re-derives end to end in DuckDB. Queries: `(query_id, qv,
-    * label)`; a label absent from the store has no centroid rows and
-    * so yields no probes (an empty result), never an error. */
+    * label)`; a label absent from the store, or NULL, has no centroid
+    * rows and so yields no probes (an empty result), never an error. */
   def scopedProbeRows(queries: DataFrame,
                       maxProbeBuckets: Int =
                         LabeledLshIndex.DefaultMaxProbeBuckets,
@@ -113,101 +127,73 @@ final class LabeledLshIndex(
       .select("query_id", "label", "tree_id", "hash", "probe_rank")
   }
 
-  /** Label-constrained ANN search over the label-partitioned store:
-    * every query's candidates come only from ITS label's partition, in
-    * the label's `maxProbeBuckets` nearest buckets by the label's own
-    * within-bucket mass ([[bucketCentroids]]) — the serving rule that
-    * recovers the measured correlated-filter collapse (SCALE.md
-    * §filtered ANN, round 17). Same scoring tail as
-    * [[LshIndex.searchAll]] (same rounding, ties, bounded top-k). Pass
-    * `probes` to serve from a precomputed/dumped [[scopedProbeRows]]
-    * frame (the oracle-row pattern); otherwise they are derived here. */
+  /** Label-constrained ANN search: a query's candidates are rows
+    * carrying ITS label in the label's `maxProbeBuckets` nearest
+    * buckets by the label's own within-bucket mass ([[bucketCentroids]];
+    * SCALE.md §filtered ANN, round 17). The batch `(query_id, qv,
+    * label)` is collected once, its probe rows ([[scopedProbeRows]], or
+    * `probes`, a dumped frame of them) into an [[LshProbeMap]]; then
+    * [[LshIndex.searchAll]]'s scan and scoring tail run, keeping a match
+    * when the row's `labels` contain the query's `label`. */
   def searchAllLabeled(queries: DataFrame, k: Int, distanceThreshold: Double,
                        metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
                        probes: Option[DataFrame] = None,
                        maxProbeBuckets: Int =
                          LabeledLshIndex.DefaultMaxProbeBuckets): DataFrame = {
-    val pr = probes.getOrElse(
-      scopedProbeRows(queries, maxProbeBuckets, metric))
-    val cands = labeledBuckets
-      .join(broadcast(pr.select("label", "tree_id", "hash", "query_id")),
-        Seq("label", "tree_id", "hash"))
-      .select("query_id", "vec_id")
-      .dropDuplicates("query_id", "vec_id")
-    CandidateScoring.scoreTopK(CandidateScoring.pairs(cands, vectors, queries),
-      k, Some(distanceThreshold), metric, roundTo)
+    val q = queries.select(col("query_id"), col("qv"),
+      col("label").cast("string").as("label"))
+    val batch = q.collect().toSeq
+    val pr = probes.getOrElse(scopedProbeRows(q.sparkSession.createDataFrame(
+      java.util.Arrays.asList(batch: _*), q.schema), maxProbeBuckets, metric))
+    val byQuery = pr.select(col("query_id").cast(q.schema("query_id").dataType),
+        col("tree_id").cast("int"), col("hash").cast("long"))
+      .collect().groupBy(_.get(0))
+      .map { case (id, rs) => id -> rs.toSeq.map(r => (r.getInt(1), r.getLong(2))) }
+    index.searchProbes(
+      LshProbeMap(model.trees.length, q.schema,
+        batch.map(r => r -> byQuery.getOrElse(r.get(0), Nil))),
+      k, distanceThreshold, metric, roundTo,
+      keep = Some(array_contains(col("labels"), col("q.label"))))
   }
 
   /** Serve-time delete view (the [[LshIndex.withDeletes]] tombstone
-    * pattern): both row tables anti-join the broadcast tombstone set
+    * pattern): the table anti-joins the broadcast tombstone set
     * map-side. The centroid SIDECAR is kept as-is by design: it is a
     * probe-selection summary, so a deleted row's mass lingering in a
     * bucket mean degrades ranking quality gracefully but can never
-    * serve a deleted row (candidates come from the anti-joined tables)
+    * serve a deleted row (candidates come from the anti-joined table)
     * — recompute via [[refreshCentroids]] when the tombstone set has
     * grown past batch scale, exactly when the base index would compact. */
-  def withDeletes(tombstones: DataFrame): LabeledLshIndex = {
-    val t = broadcast(tombstones.select("vec_id"))
-    new LabeledLshIndex(model,
-      vectors.join(t, Seq("vec_id"), "left_anti"),
-      labeledBuckets.join(t, Seq("vec_id"), "left_anti"),
-      centroidTrees, Some(bucketCentroids))
-  }
+  def withDeletes(tombstones: DataFrame): LabeledLshIndex =
+    new LabeledLshIndex(index.withDeletes(tombstones), centroidTrees,
+      Some(bucketCentroids))
 
-  /** Incremental append: hash labeled arrivals `(vec_id, embedding,
-    * label)` through the FROZEN forest (map-side, no refit — the
-    * [[LshIndex.append]] contract) into their label partitions.
-    * Sidecar staleness contract, sharper than [[withDeletes]]'s: an
-    * arrival landing in a bucket its label ALREADY probes serves
-    * immediately, but one that OPENS a new bucket for its label has no
-    * sidecar entry yet and is unreachable until [[refreshCentroids]]
-    * (the classic IVF new-cell directory rule; spec-pinned) — so fold
-    * the refresh into the same cadence as the base index's
-    * maintenance, not "eventually". */
-  def append(arrivals: DataFrame): LabeledLshIndex = {
-    // dedup rules mirror withLabels: a multi-label arrival is one
-    // vector row and one bucket row PER LABEL — without the dedups a
-    // two-label arrival would double its vector row and every
-    // subsequent top-k would score (and return) it twice; duplicate
-    // (vec_id, label) rows (at-least-once replays) are collapsed
-    val a = arrivals.select(col("vec_id"), col("embedding"),
-      col("label").cast("string").as("label"))
-    val vecs = a.select("vec_id", "embedding").dropDuplicates("vec_id")
-    val lbls = a.select("vec_id", "label").dropDuplicates("vec_id", "label")
-    new LabeledLshIndex(model,
-      vectors.unionByName(vecs),
-      labeledBuckets.unionByName(
-        model.transform(vecs, "vec_id", "embedding")
-          .join(lbls, "vec_id")
-          .select("label", "tree_id", "hash", "vec_id")),
+  /** Incremental append of labeled arrivals through the FROZEN forest
+    * ([[LabeledLshIndex.arrivalRows]]). Sidecar staleness contract,
+    * sharper than [[withDeletes]]'s: an arrival landing in a bucket its
+    * label ALREADY probes serves immediately, but one that OPENS a new
+    * bucket for its label has no sidecar entry yet and is unreachable
+    * until [[refreshCentroids]] (the classic IVF new-cell directory
+    * rule; spec-pinned) — so fold the refresh into the same cadence as
+    * the base index's maintenance, not "eventually". */
+  def append(arrivals: DataFrame): LabeledLshIndex =
+    new LabeledLshIndex(
+      new LshIndex(model,
+        index.hashed.unionByName(LabeledLshIndex.arrivalRows(model, arrivals))),
       centroidTrees, Some(bucketCentroids))
-  }
 
-  /** Recompute the centroid sidecar against the CURRENT tables — the
+  /** Recompute the centroid sidecar against the CURRENT table — the
     * maintenance step that flushes [[withDeletes]]/[[append]]
     * staleness (one [[bucketCentroids]] aggregate; fold it into the
     * base index's compaction cadence). */
   def refreshCentroids(): LabeledLshIndex =
-    new LabeledLshIndex(model, vectors, labeledBuckets, centroidTrees)
+    new LabeledLshIndex(index, centroidTrees)
 
-  /** Persist model + vectors + the composite-keyed buckets table
-    * (`partitionBy(label, tree_id)`, hash-sorted files — a `label = v`
-    * serve prunes to that label's directories at the storage layer)
-    * + the centroid sidecar (`partitionBy(label)`). */
+  /** Persist [[LshIndex.save]]'s `model/` + `hashed/`, the sidecar
+    * (`centroids/`) and `labeled_meta/`; [[LabeledLshIndex.load]] reopens it. */
   def save(spark: SparkSession, path: String): Unit = {
-    model.save(spark, s"$path/model")
-    vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    labeledBuckets
-      .repartition(col("label"), col("tree_id"))
-      .sortWithinPartitions("hash")
-      .write.mode("overwrite")
-      .partitionBy("label", "tree_id")
-      .parquet(s"$path/buckets")
-    bucketCentroids
-      .repartition(col("label"))
-      .write.mode("overwrite")
-      .partitionBy("label")
-      .parquet(s"$path/centroids")
+    index.save(spark, path)
+    bucketCentroids.write.mode("overwrite").parquet(s"$path/centroids")
     import spark.implicits._
     Seq(centroidTrees).toDF("centroid_trees")
       .write.mode("overwrite").parquet(s"$path/labeled_meta")
@@ -230,21 +216,35 @@ object LabeledLshIndex {
     * budget at default occupancy). */
   val DefaultMaxProbeBuckets = 64
 
-  def load(spark: SparkSession, path: String): LabeledLshIndex = {
-    val at = graft.ann.LsmStore.baseDir(spark, path)
-    val trees = spark.read.parquet(at("labeled_meta"))
-      .head().getAs[Int]("centroid_trees")
+  /** `index` with each row's `labels` from `labels` — `(vec_id, labels)`,
+    * one row per vec_id; a row with none gets an empty set. The one
+    * join behind [[LshIndex.withLabels]] and the scoped views. */
+  private[lsh] def of(index: LshIndex, labels: DataFrame,
+                      centroidTrees: Int): LabeledLshIndex =
     new LabeledLshIndex(
-      LshModel.load(spark, at("model")),
-      spark.read.parquet(at("vectors")),
-      spark.read.parquet(at("buckets"))
-        .select(col("label").cast("string").as("label"),
-          col("tree_id").cast("int").as("tree_id"), col("hash"),
-          col("vec_id")),
-      trees,
-      Some(spark.read.parquet(at("centroids"))
-        .select(col("label").cast("string").as("label"),
-          col("tree_id").cast("int").as("tree_id"), col("hash"),
-          col("centroid"))))
+      new LshIndex(index.model,
+        index.hashed.drop("labels").join(labels, Seq("vec_id"), "left")
+          .withColumn("labels",
+            coalesce(col("labels"), typedLit(Seq.empty[String])))),
+      centroidTrees)
+
+  /** Labeled arrivals `(vec_id, embedding, label)` as table rows: one
+    * per vec_id (its first embedding), `labels` the set of its non-NULL
+    * labels, hashed through `model` ([[LshModel.hashedRows]]). A
+    * multi-label arrival may come as one row per label. */
+  private[lsh] def arrivalRows(model: LshModel, arrivals: DataFrame): DataFrame =
+    model.hashedRows(
+      arrivals.groupBy("vec_id").agg(first("embedding").as("embedding"),
+        collect_set(col("label").cast("string")).as("labels")),
+      "vec_id", "embedding", "labels")
+
+  /** Reopen a saved store; a store in the two-table layout gets
+    * [[Lsh.load]]'s named error. */
+  def load(spark: SparkSession, path: String): LabeledLshIndex = {
+    val index = Lsh.load(spark, path)
+    val at = graft.ann.LsmStore.baseDir(spark, path)
+    new LabeledLshIndex(index,
+      spark.read.parquet(at("labeled_meta")).head().getAs[Int]("centroid_trees"),
+      Some(spark.read.parquet(at("centroids"))))
   }
 }

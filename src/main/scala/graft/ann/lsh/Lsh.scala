@@ -1,6 +1,6 @@
 package graft.ann.lsh
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -120,12 +120,14 @@ final class LshModel(val config: LshConfig, val trees: Array[TreeNode])
       .select(col(idCol), col("pos").as("tree_id"), col("col").as("hash"))
 
   /** The LSH table's rows `(vec_id, embedding, hashes)` for every input
-    * vector: one map-side pass, `hashes` the native [[LshHashesExpr]]
+    * vector, then the `keep` columns as they are (a labeled store's
+    * `labels`): one map-side pass, `hashes` the native [[LshHashesExpr]]
     * (NULL for a vector of the wrong length, which is then in no
     * bucket). */
-  def hashedRows(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"),
-      LshExpressions.lshHashes(this, col(vecCol)).as("hashes"))
+  def hashedRows(df: DataFrame, idCol: String, vecCol: String,
+                 keep: String*): DataFrame =
+    df.select(Seq(col(idCol).as("vec_id"), col(vecCol).as("embedding"),
+      LshExpressions.lshHashes(this, col(vecCol)).as("hashes")) ++ keep.map(col): _*)
 
   /** (query-id, tree_id, hash) probe rows: two per tree per query. */
   def probeRows(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
@@ -287,11 +289,22 @@ final class LshIndex(
   def searchAll(queries: DataFrame, k: Int, distanceThreshold: Double,
                 metric: ExactNN.Metric = ExactNN.L2, roundTo: Int = 6,
                 maxCandidates: Option[Int] = None,
-                allowed: Option[DataFrame] = None): DataFrame = {
-    val probes = LshProbeMap.of(model, queries)
-    val probed = hashed
-      .select(explode(LshExpressions.lshProbeMatch(probes, col("hashes"))).as("q"),
-        col("vec_id"), col("embedding"))
+                allowed: Option[DataFrame] = None): DataFrame =
+    searchProbes(LshProbeMap.of(model, queries), k, distanceThreshold, metric,
+      roundTo, maxCandidates, allowed)
+
+  /** Steps 2-4 of [[searchAll]] for a built probe map; `keep`, over a
+    * table row and its matched query `q`, filters the matches (the
+    * label test of [[LabeledLshIndex.searchAllLabeled]]). */
+  private[lsh] def searchProbes(probes: LshProbeMap, k: Int,
+                                distanceThreshold: Double,
+                                metric: ExactNN.Metric, roundTo: Int,
+                                maxCandidates: Option[Int] = None,
+                                allowed: Option[DataFrame] = None,
+                                keep: Option[Column] = None): DataFrame = {
+    val matched = hashed.select(
+      explode(LshExpressions.lshProbeMatch(probes, col("hashes"))).as("q"), col("*"))
+    val probed = keep.fold(matched)(matched.where)
       .select(col("q.query_id").as("query_id"), col("q.qv").as("qv"),
         col("vec_id"), col("embedding"))
     // Constrained (metadata-filtered) search: the (vec_id) allow-list —
@@ -324,33 +337,28 @@ final class LshIndex(
   }
 
 
-  /** Label-partitioned view of this index — the IN-FAMILY remediation
-    * the density dispatch's `probe_starved` / bimodal warnings name
-    * (see [[LabeledLshIndex]]): the SAME fitted forest, the buckets
-    * table re-keyed by the composite `(label, tree_id, hash)`. One
-    * build-time join on vec_id; no refit. `labels` is `(vec_id,
-    * label)`; multi-label rows land in every partition their labels
-    * name (dup rows are collapsed, conflicting labels are both kept —
-    * the multi-label semantics). */
+  /** Labeled view of this index — the IN-FAMILY remediation the
+    * density dispatch's `probe_starved` / bimodal warnings name (see
+    * [[LabeledLshIndex]]): the SAME fitted forest and table, each row
+    * carrying the set of its labels. `labels` is `(vec_id, label)`;
+    * dup rows collapse, a multi-label row serves under each label,
+    * NULL labels are dropped and an unlabeled row has an empty set. */
   def withLabels(labels: DataFrame,
                  centroidTrees: Int =
                    LabeledLshIndex.DefaultCentroidTrees): LabeledLshIndex =
-    new LabeledLshIndex(model, vectors,
-      buckets.join(
-        labels.select(col("vec_id"), col("label").cast("string").as("label"))
-          .dropDuplicates("vec_id", "label"),
-        "vec_id")
-        .select("label", "tree_id", "hash", "vec_id"),
+    LabeledLshIndex.of(this,
+      labels.groupBy("vec_id")
+        .agg(collect_set(col("label").cast("string")).as("labels")),
       centroidTrees)
 
   /** Allow-list-SCOPED view of this index: the allow-list as a
-    * TRANSIENT single-label partition
-    * ([[graft.ann.FilteredSearch.ScopedLabel]]) of the SAME fitted
-    * forest — [[LabeledLshIndex]]'s label-conditional centroid ranking
-    * applied to an ARBITRARY predicate at serve time, where
-    * [[withLabels]] needs a label column and a store build. One join
-    * on vec_id; the centroid sidecar is the aggregate over the ALLOWED
-    * rows' tree-0 buckets (≤ the fitted forest's leaf count —
+    * TRANSIENT single label
+    * ([[graft.ann.FilteredSearch.ScopedLabel]]) on the allowed rows of
+    * the SAME fitted forest — [[LabeledLshIndex]]'s label-conditional
+    * centroid ranking applied to an ARBITRARY predicate at serve time,
+    * where [[withLabels]] needs a label column and a store build. One
+    * join on vec_id; the centroid sidecar is the aggregate over the
+    * ALLOWED rows' tree-0 buckets (≤ the fitted forest's leaf count —
     * corpus-independent), computed lazily on first serve. A serving
     * loop over a stable predicate should hold this view across
     * batches so the sidecar is paid once. */
@@ -364,16 +372,13 @@ final class LshIndex(
 
   /** [[scopedTo]] under the pre-deduped contract (the
     * `filteredDecisionDeduped` rule): `ids` is already distinct, so
-    * the labeled view is built directly and [[withLabels]]'
-    * `(vec_id, label)` dedup — a corpus-scale shuffle the caller
-    * already paid — is not repeated. Duplicate allow rows would skew
-    * the centroid MEANS (each dup counts twice), which is why the
-    * public paths dedup exactly once. */
+    * [[withLabels]]' per-vec_id aggregate — a corpus-scale shuffle the
+    * caller already paid — is not repeated. Duplicate allow rows would
+    * skew the centroid MEANS, which is why the public paths dedup once. */
   private[lsh] def scopedToPreDeduped(ids: DataFrame): LabeledLshIndex =
-    new LabeledLshIndex(model, vectors,
-      buckets.join(ids.select("vec_id"), "vec_id")
-        .withColumn("label", lit(graft.ann.FilteredSearch.ScopedLabel))
-        .select("label", "tree_id", "hash", "vec_id"))
+    LabeledLshIndex.of(this, ids.select(col("vec_id"),
+      array(lit(graft.ann.FilteredSearch.ScopedLabel)).as("labels")),
+      LabeledLshIndex.DefaultCentroidTrees)
 
   /** Allow-scoped centroid probing — the SERVE-TIME in-family
     * remediation for the starved/bimodal regimes
@@ -569,7 +574,7 @@ final class LshIndex(
     *    predicate, no rebuild; one extra centroid aggregate over the
     *    allowed rows' tree-0 buckets); at the default the probe path
     *    serves with a logged warning naming the measured risk and the
-    *    in-family fixes ([[searchAllScoped]], or the label-partitioned
+    *    in-family fixes ([[searchAllScoped]], or the labeled
     *    store [[withLabels]] → `searchAllLabeled` for stored
     *    label-equality predicates; "add trees" is measured-ineffective
     *    here, SCALE.md §filtered ANN: nTrees 20→40 moved 0.513→0.531).
@@ -642,14 +647,14 @@ final class LshIndex(
         "Serve with scopedFallback = true / LshIndex.searchAllScoped " +
           "(allow-scoped centroid probing — serve-time, any predicate, " +
           "no rebuild; the correlated arms recover at 1M, SCALE.md " +
-          "§filtered ANN), from the label-partitioned store for stored " +
+          "§filtered ANN), from the labeled store for stored " +
           "label-equality predicates (LshIndex.withLabels -> " +
           "searchAllLabeled), or raise maxAutoExactFraction when the " +
           "subset is scannable.",
         maxAutoExactFraction,
         bimodalRemediation = "Remediation: scopedFallback = true / " +
           "LshIndex.searchAllScoped (serve-time, any predicate), or " +
-          "the label-partitioned store keyed on the filter column " +
+          "the labeled store keyed on the filter column " +
           "(LshIndex.withLabels -> searchAllLabeled).")
         .foreach(log.warn)
     if (d.route.exact) exactSubset
@@ -854,8 +859,10 @@ object Lsh {
     if (!has("hashed") && has("buckets"))
       throw new IllegalStateException(s"LSH store '$path' has the two-table " +
         "layout (vectors/ + buckets/) of an earlier build; this build reads " +
-        "one table, hashed/ (vec_id, embedding, hashes). Rebuild the store " +
-        "from its vectors: Lsh.train(vectors, ...).save(spark, path).")
+        "one table, hashed/ (vec_id, embedding, hashes, and a labeled " +
+        "store's labels). Rebuild the store from its vectors: " +
+        "Lsh.train(vectors, ...).save(spark, path), or " +
+        "Lsh.train(vectors, ...).withLabels(labels).save(spark, path).")
   }
 
   /** Fit the forest over a (capped) sample of the vector column. The

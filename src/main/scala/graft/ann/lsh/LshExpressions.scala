@@ -111,8 +111,9 @@ case class LshProbesExpr(child: Expression, bcast: Broadcast[LshModel])
   * stored row which queries probe its buckets). For tree t, `keys(t)`
   * holds the probed hashes in ascending order and `slots(t)(i)` the
   * slots of the queries probing `keys(t)(i)`; `queries(slot)` is that
-  * query's `(query_id, qv)` row in Catalyst's internal form, typed
-  * `batchType`, so a match carries the query vector with it. */
+  * query's row (`query_id`, `qv`, and a labeled search's `label`) in
+  * Catalyst's internal form, typed `batchType`, so a match carries the
+  * query vector with it. */
 final class LshProbeMap private (keys: Array[Array[Long]],
                                  slots: Array[Array[Array[Int]]],
                                  queries: Array[InternalRow],
@@ -166,35 +167,46 @@ final class LshProbeMap private (keys: Array[Array[Long]],
 object LshProbeMap {
   private val NoMatch = new GenericArrayData(Array.empty[Any])
 
+  /** The one builder: `batch` holds one row per query, typed
+    * `batchType` (first field `query_id`, then what a match carries),
+    * each with the `(tree, hash)` buckets it probes. A query with a
+    * NULL id probes nothing, a repeated id keeps its first row, and a
+    * tree outside `[0, nTrees)` is no bucket. */
+  def apply(nTrees: Int, batchType: StructType,
+            batch: Seq[(Row, Iterable[(Int, Long)])]): LshProbeMap = {
+    val rows = batch.filterNot(_._1.isNullAt(0)).distinctBy(_._1.get(0))
+    val toRow = SparkShim.toCatalyst(batchType)
+    val perTree = Array.fill(nTrees)(
+      scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.LinkedHashSet[Int]])
+    for (((_, probes), slot) <- rows.zipWithIndex; (t, h) <- probes
+         if t >= 0 && t < nTrees)
+      perTree(t).getOrElseUpdate(h, scala.collection.mutable.LinkedHashSet.empty[Int]) += slot
+    val sorted = perTree.map(_.toArray.sortBy(_._1))
+    new LshProbeMap(sorted.map(_.map(_._1)), sorted.map(_.map(_._2.toArray)),
+      rows.map(r => toRow(r._1).asInstanceOf[InternalRow]).toArray, batchType)
+  }
+
   /** The probe map of a `(query_id, qv)` batch: the batch is collected
     * once (no job when it is local) with its probes, in
     * [[LshModel.probes]]' flat layout (2t = tree t's own bucket, 2t+1
-    * its neighbor). A query with a NULL id, or of the wrong length
-    * (NULL probes), probes nothing; a repeated id keeps its first row. */
+    * its neighbor). A query of the wrong length (NULL probes) probes
+    * nothing. */
   def of(model: LshModel, queries: DataFrame): LshProbeMap = {
     val q = queries.select(col("query_id"), col("qv"))
-    val toRow = SparkShim.toCatalyst(q.schema)
-    val rows = q.withColumn("probes", LshExpressions.lshProbes(model, col("qv")))
-      .collect().toSeq.filterNot(_.isNullAt(0)).distinctBy(_.get(0))
-    val nTrees = model.trees.length
-    val perTree = Array.fill(nTrees)(
-      scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.LinkedHashSet[Int]])
-    for ((r, slot) <- rows.zipWithIndex if !r.isNullAt(2); t <- 0 until nTrees) {
-      val probes = r.getSeq[Long](2)
-      for (h <- Seq(probes(2 * t), probes(2 * t + 1)))
-        perTree(t).getOrElseUpdate(h, scala.collection.mutable.LinkedHashSet.empty[Int]) += slot
-    }
-    val sorted = perTree.map(_.toArray.sortBy(_._1))
-    new LshProbeMap(sorted.map(_.map(_._1)), sorted.map(_.map(_._2.toArray)),
-      rows.map(r => toRow(Row(r.get(0), r.get(1))).asInstanceOf[InternalRow]).toArray,
-      q.schema)
+    val rows = q.withColumn("probes", LshExpressions.lshProbes(model, col("qv"))).collect()
+    apply(model.trees.length, q.schema, rows.toSeq.map { r =>
+      val probes = if (r.isNullAt(2)) Nil else r.getSeq[Long](2)
+      Row(r.get(0), r.get(1)) -> probes.zipWithIndex.map { case (h, i) => (i / 2, h) }
+    })
   }
 }
 
-/** The distinct `(query_id, qv)` rows whose probes match a stored row's
-  * `hashes` (ARRAY<BIGINT>, tree t's bucket at t): the candidate test of
-  * [[LshIndex.searchAll]] inside one pass over the LSH table. The probe
-  * map rides into the generated code as a reference object. */
+/** The distinct batch rows (`query_id`, `qv`, …) whose probes match a
+  * stored row's `hashes` (ARRAY<BIGINT>, tree t's bucket at t): the
+  * candidate test of [[LshIndex.searchAll]] and
+  * [[LabeledLshIndex.searchAllLabeled]] inside one pass over the LSH
+  * table. The probe map rides into the generated code as a reference
+  * object. */
 case class LshProbeMatchExpr(child: Expression, probes: LshProbeMap)
     extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "lsh_probe_match"
@@ -218,7 +230,7 @@ object LshExpressions {
   def lshProbes(model: LshModel, v: Column): Column =
     column(LshProbesExpr(expression(v), LshModelBroadcast.of(model)))
 
-  /** ARRAY of the `(query_id, qv)` rows of `probes` whose probes
+  /** ARRAY of the batch rows of `probes` whose probes
     * contain one of `hashes`' buckets; NULL for a NULL `hashes`. */
   def lshProbeMatch(probes: LshProbeMap, hashes: Column): Column =
     column(LshProbeMatchExpr(expression(hashes), probes))

@@ -360,21 +360,21 @@ object LshQueries extends QueryPack {
       decisions.join(recalls, "arm").orderBy("arm")
     }),
 
-    // Label-partitioned store under the oracle (LshIndex.withLabels →
+    // Labeled store under the oracle (LshIndex.withLabels →
     // LabeledLshIndex.searchAllLabeled — the round-17 in-family
     // remediation the probe_starved/bimodal warnings name; the bucket
     // twin of q_graph_filtered_labeled): every query searches a
     // CROSS-label subset (target label = (own label + 5) % 10 — a
     // per-query label-equality predicate, a shape the global
     // allow-list probe path cannot even express per query). The
-    // composite-key buckets and the centroid-ranked probe rows are
-    // dumped; DuckDB recomputes the label-conditional bucket centroids
-    // from the dumped store ITSELF, re-derives the probe ranking and
-    // asserts it equals the dumped probes (probes_ok), re-derives the
-    // served top-k from its own probes ⋈ buckets (same rounding, same
-    // (dist, vec_id) ties), and grades it against its own
-    // per-query-label exact ground truth — centroids, probe choice,
-    // and serve all cross-engine.
+    // store's (label, tree_id, hash, vec_id) rows and the
+    // centroid-ranked probe rows are dumped; DuckDB recomputes the
+    // label-conditional bucket centroids from the dumped store
+    // ITSELF, re-derives the probe ranking and asserts it equals the
+    // dumped probes (probes_ok), re-derives the served top-k from its
+    // own probes ⋈ buckets (same rounding, same (dist, vec_id) ties),
+    // and grades it against its own per-query-label exact ground
+    // truth — centroids, probe choice, and serve all cross-engine.
     "q_lsh_filtered_labeled" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
       val idx = lshIdx(s, dir, angular = false)
@@ -382,13 +382,15 @@ object LshQueries extends QueryPack {
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           pmod(col("label") + 5, lit(10)).cast("string").as("label"))
       val dump = s"$SearchDumpRoot/${sfName(dir)}"
-      // the serve runs over the DUMPED composite-key buckets, so the
-      // rows DuckDB re-derives from are bit-for-bit the served store
+      // the serve runs over the store rebuilt from the DUMPED
+      // (label, tree_id, hash, vec_id) rows (the one converter, which
+      // takes a bucket repeated per label as one, plus the dump's
+      // labels), so DuckDB re-derives from the served store itself
       val bk = dumpAndReload(s,
         idx.withLabels(e.select(col("vec_id"), col("label"))).labeledBuckets,
         s"$dump/lsh_labeled_buckets")
-      val store = new graft.ann.lsh.LabeledLshIndex(idx.model, idx.vectors,
-        bk)
+      val store = LshIndex.fromBuckets(idx.model, idx.vectors, bk)
+        .withLabels(bk.select("vec_id", "label"))
       val probes = dumpAndReload(s, store.scopedProbeRows(q),
         s"$dump/lsh_labeled_probes")
       // probes_ok (Spark side): the dump round-trips identical to a
@@ -446,8 +448,8 @@ object LshQueries extends QueryPack {
       val dump = s"$SearchDumpRoot/${sfName(dir)}"
       val bk = dumpAndReload(s, idx.scopedTo(allowed).labeledBuckets,
         s"$dump/lsh_scoped_buckets")
-      val store = new graft.ann.lsh.LabeledLshIndex(idx.model, idx.vectors,
-        bk)
+      val store = LshIndex.fromBuckets(idx.model, idx.vectors, bk)
+        .withLabels(bk.select("vec_id", "label"))
       val qs = q.withColumn("label",
         lit(graft.ann.FilteredSearch.ScopedLabel))
       val probes = dumpAndReload(s, store.scopedProbeRows(qs),

@@ -28,8 +28,8 @@ import graft.text.DedupGate
   *      deployment serving hybrid retrieval maintains it on the SAME
   *      admitted set in the same batch;
   *   5. [[graft.ann.lsh.LabeledLshMaintainer]] (optional sixth leg)
-  *      lands the admitted vectors in their label partitions of the
-  *      stored labeled index — the constrained-serving store
+  *      lands the admitted vectors, each row carrying its labels, in
+  *      the stored labeled index — the constrained-serving store
   *      (`searchAllLabeled`) maintained on the same admitted set,
   *      its centroid-sidecar refresh riding its compaction cadence;
   *   6. [[graft.ann.GraphMaintainer]] beam-inserts the admitted
@@ -62,7 +62,7 @@ import graft.text.DedupGate
   * collapse). Multi-label docs therefore ride the pipeline with one
   * PRIMARY label; extra labels go to the labeled maintainer directly
   * ([[graft.ann.lsh.LabeledLshMaintainer.onBatch]] accepts one row
-  * per label and dedups the vector row). The graph
+  * per label and groups them into one row per vector). The graph
   * maintainer must be constructed with
   * idCol = "vec_id" over `vecCol`; the codes/forest legs receive the
   * CANONICAL (vec_id, embedding) schema regardless of `vecCol` (their

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpecBase
 import graft.ann.ivf.{Ivf, IvfConfig}
-import graft.ann.lsh.{Lsh, LshConfig}
+import graft.ann.lsh.{LabeledLshIndex, Lsh, LshConfig}
 
 /** Plan-shape guard for the ANN search tails (mirrors VectorPlanSpec's
   * role for the vector queries): every search's result top-k is the
@@ -54,27 +54,45 @@ class SearchPlanSpec extends AnyFunSuite with SparkSpecBase {
       LshConfig(nTrees = 4, kMinVecs = 20, seed = 5L)).save(spark, path)
     val q = parquetCorpus.where($"vec_id" < 8)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    // the final (adaptive) plan, query stages included
+    def assertOneScan(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan
+      val helper = new AdaptiveSparkPlanHelper {}
+      val scans = helper.collect(plan) { case s: FileSourceScanExec => s }
+      assert(scans.size === 1 &&
+          scans.head.relation.location.rootPaths.forall(_.getName == "hashed"),
+        s"not one scan of the LSH table:\n$plan")
+      val shuffles = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size === 1, s"shuffles besides the top-k's:\n$plan")
+      shuffles.head.outputPartitioning match {
+        case HashPartitioning(Seq(key), _) =>
+          assert(key.references.map(_.name).toSeq === Seq("query_id"), plan)
+        case other => fail(s"top-k shuffle partitioned by $other:\n$plan")
+      }
+      // a broadcast (if any) is the collected query batch, not table-scale
+      val bcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
+      assert(bcasts.forall(b => helper.collect(b) {
+        case s: FileSourceScanExec => s }.isEmpty),
+        s"a broadcast reads a table:\n$plan")
+    }
     val df = Lsh.load(spark, path).searchAll(q, k = 5, distanceThreshold = 1e9)
     assert(df.count() === 40)
-    // the final (adaptive) plan, query stages included
-    val plan = df.queryExecution.executedPlan
-    val helper = new AdaptiveSparkPlanHelper {}
-    val scans = helper.collect(plan) { case s: FileSourceScanExec => s }
-    assert(scans.size === 1 &&
-        scans.head.relation.location.rootPaths.forall(_.getName == "hashed"),
-      s"not one scan of the LSH table:\n$plan")
-    val shuffles = helper.collect(plan) { case e: ShuffleExchangeExec => e }
-    assert(shuffles.size === 1, s"shuffles besides the top-k's:\n$plan")
-    shuffles.head.outputPartitioning match {
-      case HashPartitioning(Seq(key), _) =>
-        assert(key.references.map(_.name).toSeq === Seq("query_id"), plan)
-      case other => fail(s"top-k shuffle partitioned by $other:\n$plan")
-    }
-    // the one broadcast is the collected query batch, not table-scale
-    val bcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
-    assert(bcasts.forall(b => helper.collect(b) {
-      case s: FileSourceScanExec => s }.isEmpty),
-      s"a broadcast reads a table:\n$plan")
+    assertOneScan(df)
+    // the labeled store is the same one table plus `labels`: its at-rest
+    // search (probe rows collected from the centroid sidecar first) has
+    // the same plan — no centroid, vector or query scan in it, no probe
+    // join and no dedup shuffle
+    val lpath = java.nio.file.Files.createTempDirectory("lsh_plan_labeled").toString + "/idx"
+    Lsh.train(parquetCorpus, "vec_id", "embedding",
+        LshConfig(nTrees = 4, kMinVecs = 20, seed = 5L))
+      .withLabels(parquetCorpus.select($"vec_id", $"label")).save(spark, lpath)
+    val lq = parquetCorpus.where($"vec_id" < 8)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"),
+        $"label".cast("string").as("label"))
+    val ldf = LabeledLshIndex.load(spark, lpath)
+      .searchAllLabeled(lq, k = 5, distanceThreshold = 1e9)
+    assert(ldf.count() === 40)
+    assertOneScan(ldf)
   }
 
   test("maxCandidates cap keeps its (intentional) per-query Window, top-k stays aggregated") {

@@ -345,6 +345,11 @@ class LabeledBucketSpec extends AnyFunSuite with SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("labeled").toString
     val q = queriesWith("0")
     lidx6.save(spark, s"$dir/lsh")
+    // the one LSH table plus the sidecar: no per-label bucket table
+    assert(new java.io.File(s"$dir/lsh").list().filterNot(_.startsWith("."))
+      .sorted.toSeq === Seq("centroids", "hashed", "labeled_meta", "model"))
+    assert(spark.read.parquet(s"$dir/lsh/hashed").columns.toSeq ===
+      Seq("vec_id", "embedding", "hashes", "labels"))
     val lshBack = LabeledLshIndex.load(spark, s"$dir/lsh")
     assert(lshBack.centroidTrees === lidx6.centroidTrees)
     assert(rows(lshBack.searchAllLabeled(q, K, Double.MaxValue,

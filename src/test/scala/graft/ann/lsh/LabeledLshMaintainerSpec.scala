@@ -16,18 +16,22 @@ import graft.ann.ExactNN
   *     candidates are total) == exact top-k over each label's live
   *     subset;
   *   - a same-batch delete+re-add is an upsert even when the RE-ADD
-  *     CHANGES THE LABEL: the old label's composite rows die, the new
+  *     CHANGES THE LABEL: the old row dies with its labels, the new
   *     label's row serves — the strictly-earlier tombstone rule on the
-  *     composite store;
+  *     labeled table;
   *   - the sidecar-staleness boundary is the compaction cadence: an
   *     arrival OPENING a (label, bucket) pair is unreachable until the
   *     compaction that refreshes the persisted sidecar, an arrival
   *     into an already-probed pair serves immediately (the
   *     [[LabeledLshIndex.append]] directory rule, made crash-safe);
   *   - a reconstructed maintainer recovers the LSM seq;
-  *   - [[LabeledLshMaintainer.refitNow]] retrains the forest, rebuilds
-  *     the label partitions from the live (vec_id, label) pairs, and
-  *     the refit store serves each label's live subset exactly.
+  *   - [[LabeledLshMaintainer.refitNow]] retrains the forest, rehashes
+  *     the live rows with their labels, and the refit store serves
+  *     each label's live subset exactly;
+  *   - malformed labels (NULL or unknown query labels, NULL stored
+  *     labels, a NULL labels array) serve empty or leave the row
+  *     unlabeled, never an error, and a multi-label arrival is one row
+  *     serving under each of its labels.
   */
 class LabeledLshMaintainerSpec extends AnyFunSuite with SparkSpecBase {
 
@@ -192,5 +196,86 @@ class LabeledLshMaintainerSpec extends AnyFunSuite with SparkSpecBase {
     m.onBatch(None, None)
     assert(!new java.io.File(s"$path/tombstones").exists(),
       "logs survived the commit after the refit")
+  }
+
+  test("malformed labels: one table over withLabels, append, onBatch and searchAllLabeled") {
+    val base = emb.where($"vec_id" < 480)
+    // vec 0 has a NULL label; vec 1 two labels, "1" and "0"
+    val labels = base.select($"vec_id",
+        when($"vec_id" === 0L, lit(null).cast("string")).otherwise(labelOf)
+          .as("label"))
+      .unionByName(Seq((1L, "0")).toDF("vec_id", "label"))
+    val built = Lsh.train(base, "vec_id", "embedding", cfg).withLabels(labels)
+    val path = java.nio.file.Files
+      .createTempDirectory("labeled_malformed").toString + "/idx"
+    built.save(spark, path)
+    val m = new LabeledLshMaintainer(spark, path, compactEvery = 100)
+    def vecOf(id: Long) = emb.where($"vec_id" === id)
+      .select($"embedding").as[Seq[Float]].head()
+    // 900 arrives with a NULL label (at vec 480's embedding); 901 is a
+    // multi-label arrival, one row per label (at vec 481's)
+    val arrivals = Seq((900L, vecOf(480L), null: String),
+        (901L, vecOf(481L), "0"), (901L, vecOf(481L), "2"))
+      .toDF("vec_id", "embedding", "label")
+    val appended = built.append(arrivals)
+    m.onBatch(Some(arrivals), None)
+    val viaBatch = m.index
+    // a NULL labels array on vec 2 (label "2")
+    val nullArray = new LabeledLshIndex(
+      new LshIndex(built.model, built.index.hashed.withColumn("labels",
+        when($"vec_id" === 2L, lit(null)).otherwise($"labels"))),
+      built.centroidTrees, Some(built.bucketCentroids))
+
+    // a query at a vector's embedding: if that vector is a candidate,
+    // it is served (distance 0; the single-leaf forest makes every row
+    // of the label a candidate)
+    def at(vec: Long, label: String): DataFrame = emb.where($"vec_id" === vec)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"),
+        lit(label).cast("string").as("label"))
+    def labeledIds(s: LabeledLshIndex, q: DataFrame): Set[Long] =
+      s.searchAllLabeled(q, 5, 1e9, ExactNN.L2)
+        .select("vec_id").as[Long].collect().toSet
+    def unlabeledIds(s: LabeledLshIndex, q: DataFrame): Set[Long] =
+      s.index.searchAll(q.drop("label"), 5, 1e9, ExactNN.L2)
+        .select("vec_id").as[Long].collect().toSet
+
+    val stores = Seq("withLabels" -> built, "append" -> appended,
+      "onBatch" -> viaBatch)
+    // (case, stores, query at, query label, id, served under the label)
+    val table: Seq[(String, Seq[(String, LabeledLshIndex)], Long, String,
+        Long, Boolean)] = Seq(
+      ("labeled row (control)", stores, 3L, "0", 3L, true),
+      ("NULL query label", stores, 3L, null, 3L, false),
+      ("label the store does not have", stores, 3L, "zz", 3L, false),
+      ("NULL stored label", stores, 0L, "0", 0L, false),
+      ("multi-label row, first label", stores, 1L, "1", 1L, true),
+      ("multi-label row, second label", stores, 1L, "0", 1L, true),
+      ("NULL label arrival", stores.tail, 480L, "0", 900L, false),
+      ("multi-label arrival, first label", stores.tail, 481L, "0", 901L, true),
+      ("multi-label arrival, second label", stores.tail, 481L, "2", 901L, true),
+      ("multi-label arrival, a label it lacks", stores.tail, 481L, "1", 901L, false),
+      ("NULL labels array", Seq("nullArray" -> nullArray), 2L, "2", 2L, false),
+      ("NULL labels array (control)", Seq("nullArray" -> nullArray), 5L, "2", 5L, true))
+    for ((what, on, vec, label, id, served) <- table; (name, s) <- on) {
+      val got = labeledIds(s, at(vec, label))
+      assert(got.contains(id) === served, s"$what on $name: served $got")
+      // a query label no row carries serves empty, not an error
+      if (label == null || label == "zz")
+        assert(got.isEmpty, s"$what on $name: served $got")
+    }
+    // a row without labels is in no label's buckets but is still served
+    // by the unlabeled search over the same table
+    for ((name, s, vec, id) <- Seq(("withLabels", built, 0L, 0L),
+        ("append", appended, 480L, 900L), ("onBatch", viaBatch, 480L, 900L),
+        ("nullArray", nullArray, 2L, 2L))) {
+      assert(s.labeledBuckets.where($"vec_id" === id).isEmpty,
+        s"$name: row $id has label buckets")
+      assert(unlabeledIds(s, at(vec, "0")).contains(id),
+        s"$name: row $id not served by the unlabeled search")
+    }
+    // a multi-label arrival is one row of the table
+    for ((name, s) <- stores.tail)
+      assert(s.index.hashed.where($"vec_id" === 901L).count() === 1L,
+        s"$name: multi-label arrival is not one row")
   }
 }

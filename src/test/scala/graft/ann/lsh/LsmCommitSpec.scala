@@ -147,22 +147,40 @@ class LsmCommitSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("a two-table store gets a named error from Lsh.load and LshMaintainer, and is left as it was") {
-    val path = java.nio.file.Files.createTempDirectory("lsm_two_table").toString + "/idx"
+    val root = java.nio.file.Files.createTempDirectory("lsm_two_table").toString
     val idx = Lsh.train(emb.where($"vec_id" < 100), "vec_id", "embedding",
       LshConfig(nTrees = 2, kMinVecs = 40, seed = 7L))
     // the layout earlier builds wrote: model/, vectors/, buckets/
+    val path = s"$root/idx"
     idx.model.save(spark, s"$path/model")
     idx.vectors.write.parquet(s"$path/vectors")
     idx.buckets.write.partitionBy("tree_id").parquet(s"$path/buckets")
-    val listed = new java.io.File(path).list().sorted.toSeq
-    for (open <- Seq[() => Any](() => Lsh.load(spark, path),
-                                () => new LshMaintainer(spark, path))) {
-      val e = intercept[IllegalStateException](open())
-      assert(e.getMessage.contains("two-table layout") &&
-        e.getMessage.contains("hashed/"), e.getMessage)
+    // and its labeled layout: the same plus the (label, tree_id, hash,
+    // vec_id) buckets partitioned by label and tree, the label-partitioned
+    // centroid sidecar and labeled_meta/
+    val labeled = s"$root/labeled"
+    val lidx = idx.withLabels(emb.where($"vec_id" < 100)
+      .select($"vec_id", pmod($"vec_id", lit(3)).cast("string").as("label")))
+    idx.model.save(spark, s"$labeled/model")
+    idx.vectors.write.parquet(s"$labeled/vectors")
+    lidx.labeledBuckets.write.partitionBy("label", "tree_id")
+      .parquet(s"$labeled/buckets")
+    lidx.bucketCentroids.write.partitionBy("label").parquet(s"$labeled/centroids")
+    Seq(1).toDF("centroid_trees").write.parquet(s"$labeled/labeled_meta")
+    def listing(p: String) = new java.io.File(p).list().sorted.toSeq
+    for ((p, opens) <- Seq(
+        path -> Seq[() => Any](() => Lsh.load(spark, path),
+          () => new LshMaintainer(spark, path)),
+        labeled -> Seq[() => Any](() => LabeledLshIndex.load(spark, labeled),
+          () => new LabeledLshMaintainer(spark, labeled)))) {
+      val listed = listing(p)
+      for (open <- opens) {
+        val e = intercept[IllegalStateException](open())
+        assert(e.getMessage.contains("two-table layout") &&
+          e.getMessage.contains("hashed/"), e.getMessage)
+      }
+      assert(listing(p) === listed, s"opening the old store $p changed it")
     }
-    assert(new java.io.File(path).list().sorted.toSeq === listed,
-      "opening the old store changed it")
   }
 
   test("an unfinished rename-swap commit gets a named error") {

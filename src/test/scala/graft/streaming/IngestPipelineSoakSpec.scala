@@ -263,12 +263,12 @@ class IngestPipelineSoakSpec extends AnyFunSuite with SparkSpecBase {
     // dropped the LSM logs; the loose twin's are still on disk
     for (sub <- Seq("gate/bands_delta", "postings/tfs_delta",
         "codes/codes_delta", "forest/hashed_delta",
-        "labeled/buckets_delta")) {
+        "labeled/hashed_delta")) {
       assert(dirExists(s"$lRoot/$sub"), s"loose twin never logged $sub")
     }
     assert(!dirExists(s"$tRoot/gate/bands_delta"),
       "tight gate never compacted")
-    assert(!dirExists(s"$tRoot/labeled/buckets_delta"),
+    assert(!dirExists(s"$tRoot/labeled/hashed_delta"),
       "tight labeled store never compacted")
     assert(!dirExists(s"$tRoot/postings/tfs_delta"),
       "tight postings never compacted")
